@@ -8,9 +8,17 @@ the Spark-iteration necessity (lineage truncation) promoted to a feature.
 Preferred backend is an Iceberg table (snapshot per superstep); Iceberg
 jars are not present in this environment, so the default backend is a
 Parquet snapshot directory per iteration plus a JSON manifest recording
-iteration, per-partition row counts, wall time, and arbitrary metrics.
-The layout is append-only and atomic (manifest written last), so a crash
-mid-write leaves the previous iteration as the resume point.
+iteration, row counts per written Parquet file (each file is one writing
+task's partition), wall time, and arbitrary metrics. The layout is
+append-only and atomic (manifest written last), so a crash mid-write
+leaves the previous iteration as the resume point.
+
+A snapshot runs no Spark job besides the write. The read-back reuses
+the written frame's schema (no inference job), the row counts come from
+the Parquet footers of the written files (read on the driver, no count
+job), and aggregates the caller observed on the frame
+(``plans.state.observe``) are computed by the write job itself and land
+in the manifest's metrics.
 
 Layout:
     <root>/<name>/it=<k>/part-*.parquet
@@ -23,7 +31,10 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+
+from graphit_spark.plans.state import Observed
 
 try:  # Iceberg backend requires the spark-iceberg runtime jar.
     import pyiceberg  # noqa: F401  # pragma: no cover
@@ -47,23 +58,29 @@ class SnapshotStore:
         self, df: DataFrame, iteration: int, metrics: dict | None = None
     ) -> DataFrame:
         """Write snapshot for `iteration`, return the re-read DataFrame
-        (reading back truncates lineage — the plan no longer grows)."""
+        (reading back truncates lineage — the plan no longer grows).
+
+        `metrics` go into the manifest. A value that is an ``Observed``
+        (from ``plans.state.observe`` on `df`'s plan) records the
+        aggregate of the same name, as computed by the write job."""
         path = self._it_dir(iteration)
         t0 = time.time()
         df.write.mode("overwrite").parquet(path)
-        spark = df.sparkSession
-        back = spark.read.parquet(path)
-        part_rows = (
-            back.groupBy(F.spark_partition_id().alias("partition"))
-            .count()
-            .collect()
-        )
+        back = df.sparkSession.read.schema(df.schema).parquet(path)
+        part_rows = {
+            f: pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+            for f in sorted(os.listdir(path))
+            if f.startswith("part-")
+        }
         manifest = {
             "iteration": iteration,
-            "rows": int(sum(r["count"] for r in part_rows)),
-            "partitions": {int(r["partition"]): int(r["count"]) for r in part_rows},
+            "rows": sum(part_rows.values()),
+            "partitions": part_rows,
             "elapsed_write_sec": time.time() - t0,
-            "metrics": metrics or {},
+            "metrics": {
+                k: v[k] if isinstance(v, Observed) else v
+                for k, v in (metrics or {}).items()
+            },
         }
         tmp = os.path.join(path, "_MANIFEST.json.tmp")
         with open(tmp, "w") as f:

@@ -239,10 +239,7 @@ def _watch_dropped_mass(obs: "Observation", max_bucket: int) -> None:
                 return  # plan never ran: nothing dropped, nothing to log
             m = obs.get  # metrics are ready — returns immediately
         except Exception:  # session torn down / private API moved
-            try:
-                m = obs.get
-            except Exception:
-                return
+            return  # never fall back to the blocking get: it may never return
         if m["hot_buckets"]:
             logging.getLogger("graphit_spark.dedup").warning(
                 "lsh_candidate_pairs: dropped %d hot band bucket(s) "

@@ -17,6 +17,13 @@ Spark plan per round: frontier-restricted gather (min) + change-tracking
 join produces the next frontier (change_tracking_lower.cpp:38-75); the
 pointer-jump rounds are label⋈label self-joins that halve path lengths,
 turning O(diameter) propagation into O(log n) rounds on long chains.
+
+The numbers a round's driver decisions need — the next frontier's size
+and out-degree sum (direction choice, stopping rule) and the count of
+distinct labels (whether to pointer-jump) — are observed aggregates on
+the checkpoints that already materialize those rows (plans.state.observe):
+the label state carries each vertex's out-degree so the frontier degree
+sum is a plain sum, and a round launches no count or collect of its own.
 """
 
 from __future__ import annotations
@@ -24,10 +31,9 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, observe
 from graphit_spark.checkpoint import SnapshotStore
 from graphit_spark.plans.traversal import choose_direction
 
@@ -67,11 +73,13 @@ def connected_components(
     own_cache = g.ensure_persisted()
     num_edges = g.num_edges
 
+    # the label state carries the out-degree (deg) of the traversed graph,
+    # so a round's frontier degree sum is observed with its size
+    degrees = g.out_degrees().select("id", F.col("out_degree").alias("deg"))
     start_iter = 0
     if resume and store is not None and store.latest() is not None:
         start_iter = store.latest() + 1
-        labels = store.read(g.spark, store.latest())
-        frontier = labels.select("id")  # conservative: all active
+        labels = store.read(g.spark, store.latest()).join(degrees, "id")
     elif init_labels is not None:
         # Warm start for EDGE-ADDITION deltas: min-label propagation
         # from any per-vertex upper bound of the final component min
@@ -81,19 +89,28 @@ def connected_components(
         # answer, in rounds ~ the diameter of the merge graph, not the
         # full graph. NOT valid after edge removals (labels would be
         # stale lower... too-small values that nothing re-raises).
-        labels = (
-            graph.vertices()
-            .join(init_labels.select("id", "comp"), "id", "left")
-            .select("id", F.coalesce("comp", "id").alias("comp"))
-        )
-        frontier = labels.select("id")  # conservative: all active
+        labels = degrees.join(
+            init_labels.select("id", "comp"), "id", "left"
+        ).select("id", F.coalesce("comp", "id").alias("comp"), "deg")
     else:
-        labels = graph.vertices().select("id", F.col("id").alias("comp"))
-        frontier = labels.select("id")
+        labels = degrees.select("id", F.col("id").alias("comp"), "deg")
     labels = labels.transform(fresh_checkpoint)
+    frontier = labels.select("id")  # conservative: all active
     frontier_size = graph.num_vertices
     # degree sum of full frontier = num_edges (dense round 0)
     frontier_deg_sum = num_edges
+
+    changed = F.col("comp") != F.col("old_comp")
+
+    def checkpoint_round(df: DataFrame):
+        """Checkpoint a (id, comp, old_comp, deg) frame, observing the
+        size and out-degree sum of the frontier it would leave."""
+        df, seen = observe(
+            df,
+            changed=F.count(F.when(changed, 1)),
+            changed_deg=F.sum(F.when(changed, F.col("deg"))),
+        )
+        return df.transform(fresh_checkpoint), seen
 
     # same strategy choice as kernels/pagerank.py: the V-sized label side
     # joins the cached edge partitioning via per-partition hash build
@@ -136,13 +153,14 @@ def connected_components(
                     "comp"
                 ),
                 F.col("comp").alias("old_comp"),
+                "deg",
             )
         )
         # materialize the gather ONCE before pointer jumping: each jump
         # hop references new_labels twice (as parent map and as left
         # side), so a lazy chain would recompute the E-sized gather
         # several times per round
-        new_labels = new_labels.transform(fresh_checkpoint)
+        new_labels, seen = checkpoint_round(new_labels)
         round_cks = [new_labels]
         if pointer_jump:
             # Path-halving: comp[v] <- comp[comp[v]], repeated. A naive
@@ -151,12 +169,12 @@ def connected_components(
             # parent mapping is restricted to the DISTINCT label values
             # (they collapse geometrically) and broadcast, so each hop is
             # one narrow V-scan: no shuffle, no skewed key.
-            dcomp = (
-                new_labels.select(F.col("comp").alias("pid"))
-                .distinct()
-                .transform(fresh_checkpoint)
+            dcomp, dseen = observe(
+                new_labels.select(F.col("comp").alias("pid")).distinct(),
+                distinct=F.count(F.lit(1)),
             )
-            if dcomp.count() <= _PJ_BROADCAST_LIMIT:
+            dcomp = dcomp.transform(fresh_checkpoint)
+            if dseen["distinct"] <= _PJ_BROADCAST_LIMIT:
                 for _ in range(2):
                     parent = F.broadcast(
                         new_labels.join(
@@ -165,13 +183,16 @@ def connected_components(
                         ).select("pid", F.col("comp").alias("pcomp"))
                     )
                     left = new_labels.alias("l")
-                    new_labels = left.join(
-                        parent, F.col("l.comp") == F.col("pid"), "left"
-                    ).select(
-                        F.col("l.id").alias("id"),
-                        F.coalesce(F.col("pcomp"), F.col("l.comp")).alias("comp"),
-                        F.col("l.old_comp").alias("old_comp"),
-                    ).transform(fresh_checkpoint)
+                    new_labels, seen = checkpoint_round(
+                        left.join(
+                            parent, F.col("l.comp") == F.col("pid"), "left"
+                        ).select(
+                            F.col("l.id").alias("id"),
+                            F.coalesce(F.col("pcomp"), F.col("l.comp")).alias("comp"),
+                            F.col("l.old_comp").alias("old_comp"),
+                            F.col("l.deg").alias("deg"),
+                        )
+                    )
                     round_cks.append(new_labels)
             # else: labels haven't consolidated yet — plain propagation
             # continues and PJ kicks in once distinct labels fit a
@@ -179,21 +200,15 @@ def connected_components(
             dcomp.unpersist()
         for ck in round_cks[:-1]:
             ck.unpersist()
-        changed = new_labels.filter(F.col("comp") != F.col("old_comp")).select("id")
-        # next frontier = changed vertices (applyModified contract).
-        # The degree sum only decides sparse-vs-dense when the frontier
-        # SIZE alone is below the Ligra threshold — compute the V-sized
-        # degree join only then (the frontier is small, so the join is
-        # too); a big frontier is dense regardless.
-        frontier_size = changed.count()
+        # next frontier = changed vertices (applyModified contract). The
+        # degree sum only decides sparse-vs-dense when the frontier SIZE
+        # alone is below the Ligra threshold; a big frontier is dense
+        # regardless.
+        frontier_size = seen["changed"]
         if frontier_size > num_edges / 20:
             frontier_deg_sum = num_edges  # dense either way
         else:
-            frontier_deg_sum = int(
-                changed.join(g.out_degrees(), "id", "left")
-                .agg(F.coalesce(F.sum("out_degree"), F.lit(0)).alias("d"))
-                .collect()[0]["d"]
-            )
+            frontier_deg_sum = seen["changed_deg"]
         if store is not None:
             store.write(
                 new_labels.select("id", "comp"),
@@ -207,11 +222,10 @@ def connected_components(
             )
         # release the superseded V-sized checkpoint (bounded memory over
         # O(log n) rounds; same discipline as kernels/pagerank.py)
-        if prev_ck is not None:
-            prev_ck.unpersist()
+        prev_ck.unpersist()
         prev_ck = new_labels
-        labels = new_labels.select("id", "comp")
-        frontier = changed
+        labels = new_labels.select("id", "comp", "deg")
+        frontier = new_labels.filter(changed).select("id")
         if metrics_out is not None:
             metrics_out["iterations"] = i + 1 - start_iter
             metrics_out["final_frontier"] = frontier_size

@@ -18,9 +18,12 @@ shuffle — the analogue of GraphIt's NUMA merge-reduce
 (src/midend/merge_reduce_lower.cpp) and atomics, for free.
 
 The rank/degree state is V-sized; the edge table is never re-shuffled
-(partitioned once by src at graph build). Lineage is truncated every
-iteration via localCheckpoint, or durably via a SnapshotStore (which also
-makes the run resumable mid-algorithm).
+(partitioned once by src at graph build). Materialize once per superstep:
+the round's one job truncates lineage — via localCheckpoint, or durably
+via a SnapshotStore write, whose read-back makes the run resumable
+mid-algorithm — and the L1 error of the stopping rule rides that same
+job as an observed aggregate (plans.state.observe), so a round launches
+no follow-up driver action.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, observe
 from graphit_spark.checkpoint import SnapshotStore
 
 
@@ -98,7 +101,8 @@ def pagerank(
         )
     else:
         state = graph.out_degrees().withColumn("rank", F.lit(1.0 / n))
-    state = state.transform(fresh_checkpoint)
+    if start_iter == 0:  # a snapshot read has no lineage to truncate
+        state = state.transform(fresh_checkpoint)
 
     if use_adjacency:
         adj = graph.adjacency()
@@ -115,10 +119,8 @@ def pagerank(
         hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
     else:
         hint = join_strategy
-    prev_ck: DataFrame | None = state
 
     for i in range(start_iter, max_iters):
-        t0 = time.time()
         contrib_state = state.filter(F.col("out_degree") > 0).select(
             F.col("id").alias("src"),
             (F.col("rank") / F.col("out_degree")).alias("contrib"),
@@ -139,41 +141,32 @@ def pagerank(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("contrib").alias("gathered"))
             )
-        new_state = (
-            state.join(sums, "id", "left")
-            .select(
+        new_state, seen = observe(
+            state.join(sums, "id", "left").select(
                 "id",
                 "out_degree",
                 F.col("rank").alias("old_rank"),
                 (F.lit(beta) + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))).alias("rank"),
-            )
+            ),
+            l1_error=F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
         )
-        # Materialize once (truncates lineage); the error norm then reads
-        # the in-memory RDD instead of recomputing the superstep — the
+        # Materialize once: the checkpoint (or the snapshot write) is the
+        # round's only job, and the error norm is summed inside it — the
         # PR+error fusion GraphIt gets from fuseApplyFunctions.
-        new_state = new_state.transform(fresh_checkpoint)
-        if tol is not None:
-            err = new_state.agg(
-                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("e")
-            ).collect()[0]["e"]
-        else:
-            err = None
-        # the superseded checkpoint's blocks are dead — release them so
-        # long runs don't accumulate V-sized cached RDDs
-        if prev_ck is not None:
-            prev_ck.unpersist()
-        prev_ck = new_state
-        state = new_state.select("id", "out_degree", "rank")
-        if store is not None:
-            state = store.write(
-                state, i,
-                {"kernel": "pagerank", "elapsed_sec": time.time() - t0,
-                 "l1_error": err},
-            )
+        new_state = _truncate(
+            new_state.select("id", "out_degree", "rank"), store, i,
+            {"kernel": "pagerank", "l1_error": seen},
+        )
+        err = seen["l1_error"]
+        # the superseded state's blocks are dead — release them so long
+        # runs don't accumulate V-sized cached RDDs (with a store this
+        # frees the starting checkpoint; a Parquet read holds none)
+        state.unpersist()
+        state = new_state
         if metrics_out is not None:
             metrics_out["iterations"] = i + 1 - start_iter
             metrics_out["final_err"] = err
-        if tol is not None and err is not None and err <= tol:
+        if tol is not None and err <= tol:
             break
 
     result = state.select("id", "rank")

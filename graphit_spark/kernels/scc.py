@@ -254,7 +254,9 @@ def strongly_connected_components(
             # edgeless residue: every remaining vertex is a trivial SCC
             assigned_parts.append(
                 verts.select("id", F.col("id").alias("scc"))
+                .transform(fresh_checkpoint)
             )
+            verts.unpersist()
             verts = None
             n_active = 0
             break
@@ -288,9 +290,11 @@ def strongly_connected_components(
             num_cedges = cedges.count()
         if num_cedges == 0:
             # no intra-class edges anywhere: every remaining vertex is
-            # a trivial SCC (an SCC never spans classes)
+            # a trivial SCC (an SCC never spans classes); the part is
+            # checkpointed because verts, which it reads, is released
             assigned_parts.append(
                 verts.select("id", F.col("id").alias("scc"))
+                .transform(fresh_checkpoint)
             )
             if cedges is not edges:
                 cedges.unpersist()

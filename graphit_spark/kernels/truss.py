@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, observe
 
 
 def _full_support(und: DataFrame, deg: DataFrame | None = None) -> DataFrame:
@@ -237,20 +237,15 @@ def k_truss(
         driver action per round instead of a write plus a separate
         count job (at hundreds of tail rounds, job-scheduling latency
         is the dominant cost of the sparse phase)."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
         path = f"{work_dir}/state_{spill_seq[0] % 2}"
         spill_seq[0] += 1
-        df.observe(
-            obs,
-            F.count(F.lit(1)).alias("alive"),
-            F.sum(
-                F.when(F.col("support") < k - 2, 1).otherwise(0)
-            ).alias("peel"),
-        ).write.mode("overwrite").parquet(path)
-        got = obs.get
-        return spark.read.parquet(path), int(got["alive"]), int(got["peel"] or 0)
+        df, seen = observe(
+            df,
+            alive=F.count(F.lit(1)),
+            peel=F.count(F.when(F.col("support") < k - 2, 1)),
+        )
+        df.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path), seen["alive"], seen["peel"]
 
     sym = graph.symmetrize()
     und = sym.edges.filter(F.col("src") < F.col("dst")).select(

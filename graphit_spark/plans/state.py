@@ -50,11 +50,22 @@ localCheckpointed RDD makes it unrecomputable (Spark logs a warning we
 silence once), which is exactly the contract: kernels release only
 SUPERSEDED state, and every consumer of live state holds an EAGER
 checkpoint of its own.
+
+Round aggregates (``observe``): a superstep's stopping rule and
+direction choice need a few global numbers — an L1 error, a changed-row
+count, a frontier degree sum. Computing them with a ``count()`` or
+``collect()`` after the round's checkpoint costs one more job per number,
+each a full scan of rows the checkpoint just wrote. ``observe`` attaches
+them to the frame instead, so they are computed inside whatever job
+materializes it (``fresh_checkpoint``, a Parquet write, any action) and
+read back on the driver without another job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Mapping
+
+from pyspark.sql import Column, DataFrame, Observation
 
 _WARN_SILENCED = False
 
@@ -106,3 +117,50 @@ def fresh_checkpoint(df: DataFrame) -> DataFrame:
 
     out.unpersist = _unpersist
     return out
+
+
+class Observed(Mapping):
+    """The aggregates ``observe`` attached to a frame, read after the job
+    that materialized it.
+
+    Values are fetched on first access and never by waiting: if that job
+    has not run, or delivered no metrics, access raises instead of
+    parking the driver in ``Observation.get``. An aggregate that is null
+    (a sum over no rows) reads as 0."""
+
+    def __init__(self, obs: Observation, names: list[str]):
+        self._obs = obs
+        self._names = names
+        self._values: dict | None = None
+
+    def _get(self) -> dict:
+        if self._values is None:
+            # getRowOrEmpty waits at most ~100 ms; Observation.get forever
+            if not self._obs._jo.getRowOrEmpty().isDefined():
+                raise RuntimeError(
+                    f"observed aggregates {self._names} were not delivered: "
+                    "the observed frame has not been materialized by a job"
+                )
+            self._values = {
+                k: 0 if v is None else v for k, v in self._obs.get.items()
+            }
+        return self._values
+
+    def __getitem__(self, name: str):
+        return self._get()[name]
+
+    def __iter__(self):
+        return iter(self._names)
+
+    def __len__(self) -> int:
+        return len(self._names)
+
+
+def observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observed]:
+    """``df`` with the named aggregate expressions attached, and the
+    ``Observed`` mapping that reads their values once a job has
+    materialized the returned frame — e.g. ``fresh_checkpoint`` or
+    ``SnapshotStore.write``. The aggregates cost no job of their own."""
+    obs = Observation()
+    out = df.observe(obs, *(c.alias(k) for k, c in aggs.items()))
+    return out, Observed(obs, list(aggs))

@@ -6,6 +6,7 @@ across shuffle partitions is task-scheduling-dependent (the same run
 twice uninterrupted has the same wobble)."""
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from graphit_spark import LinkGraph, SnapshotStore
 from graphit_spark.kernels import connected_components, pagerank
@@ -22,13 +23,26 @@ def _edges():
 def test_snapshot_manifest_lineage(spark, tmp_path):
     g = LinkGraph.from_pairs(spark, _edges(), persist=False)
     store = SnapshotStore(str(tmp_path), "pr")
-    pagerank(g, max_iters=3, store=store)
+    metrics: dict = {}
+    pagerank(g, max_iters=3, store=store, metrics_out=metrics)
     assert store.complete_iterations() == [0, 1, 2]
     m = store.manifest(2)
     assert m["rows"] == g.num_vertices
     assert m["metrics"]["kernel"] == "pagerank"
     assert sum(m["partitions"].values()) == m["rows"]
     assert m["elapsed_write_sec"] > 0
+    # the L1 error observed on each round's write job is the real L1
+    # distance between consecutive snapshots
+    for it in (1, 2):
+        got = store.manifest(it)["metrics"]["l1_error"]
+        prev = store.read(spark, it - 1).select("id", F.col("rank").alias("r0"))
+        want = (
+            store.read(spark, it).join(prev, "id")
+            .agg(F.sum(F.abs(F.col("rank") - F.col("r0"))).alias("e"))
+            .first()["e"]
+        )
+        assert abs(got - want) <= 1e-12 * want, (it, got, want)
+    assert m["metrics"]["l1_error"] == metrics["final_err"]
 
 
 def test_pagerank_resume_identical(spark, tmp_path):
@@ -40,9 +54,12 @@ def test_pagerank_resume_identical(spark, tmp_path):
     # state through parquet, whose partitioning legitimately changes
     # float summation order vs a storeless run by ~1 ulp)
     store_full = SnapshotStore(str(tmp_path / "full"), "pr_full")
+    full_m: dict = {}
     full = {
         r["id"]: r["rank"]
-        for r in pagerank(g, max_iters=10, store=store_full).collect()
+        for r in pagerank(
+            g, max_iters=10, store=store_full, metrics_out=full_m
+        ).collect()
     }
 
     # storeless run agrees to float tolerance (different physical plan)
@@ -57,11 +74,24 @@ def test_pagerank_resume_identical(spark, tmp_path):
     store = SnapshotStore(str(tmp_path / "res"), "pr_resume")
     pagerank(g, max_iters=4, store=store)
     assert store.latest() == 3
+    res_m: dict = {}
     resumed = {
         r["id"]: r["rank"]
-        for r in pagerank(g, max_iters=10, store=store, resume=True).collect()
+        for r in pagerank(
+            g, max_iters=10, store=store, resume=True, metrics_out=res_m
+        ).collect()
     }
     assert store.latest() == 9
+    assert res_m["iterations"] == 6
+    # every round's manifest is whole, and the last one records the
+    # error the run reported
+    for st, m in ((store_full, full_m), (store, res_m)):
+        for it in st.complete_iterations():
+            man = st.manifest(it)
+            assert man["rows"] == sum(man["partitions"].values()) == len(full)
+            assert man["metrics"]["l1_error"] > 0
+        assert st.manifest(9)["metrics"]["l1_error"] == m["final_err"]
+    assert abs(res_m["final_err"] - full_m["final_err"]) <= 1e-12 * full_m["final_err"]
     for v in full:
         assert abs(resumed[v] - full[v]) <= 4 * abs(full[v]) * 2.3e-16, v
 
