@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 
 def betweenness_centrality(
@@ -40,16 +40,15 @@ def betweenness_centrality(
     visited = frontier.select("id")
 
     for _ in range(max_levels):
-        nxt = (
+        nxt, seen = counted_checkpoint(
             edges.join(
                 frontier.select(F.col("id").alias("src"), "sigma"), "src"
             )
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("sigma").alias("sigma"))
             .join(visited, "id", "left_anti")
-            .transform(fresh_checkpoint)
         )
-        if nxt.isEmpty():
+        if seen["rows"] == 0:
             break
         levels.append(nxt)
         visited = visited.unionByName(nxt.select("id")).localCheckpoint(
@@ -135,16 +134,15 @@ def edge_betweenness(
     levels: list[DataFrame] = [frontier]
     visited = frontier.select("id")
     for _ in range(max_levels):
-        nxt = (
+        nxt, seen = counted_checkpoint(
             edges.join(
                 frontier.select(F.col("id").alias("src"), "sigma"), "src"
             )
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("sigma").alias("sigma"))
             .join(visited, "id", "left_anti")
-            .transform(fresh_checkpoint)
         )
-        if nxt.isEmpty():
+        if seen["rows"] == 0:
             break
         levels.append(nxt)
         visited = visited.unionByName(nxt.select("id")).localCheckpoint(

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 EKEY_BASE = 1 << 31  # canonical edge key: min(u,v) * 2^31 + max(u,v)
 
@@ -157,9 +157,8 @@ def _bfs_tree(graph: LinkGraph, max_rounds: int, who: str):
             .groupBy(F.col("b").alias("id"))
             .agg((F.min("depth") + 1).alias("nd"))
         )
-        new_depth = (
-            depth.join(gathered, "id", "left")
-            .select(
+        new_depth, seen = counted_checkpoint(
+            depth.join(gathered, "id", "left").select(
                 "id",
                 F.when(
                     F.col("depth").isNull() & F.col("nd").isNotNull(),
@@ -167,13 +166,12 @@ def _bfs_tree(graph: LinkGraph, max_rounds: int, who: str):
                 )
                 .otherwise(F.col("depth"))
                 .alias("depth"),
-            )
-            .transform(fresh_checkpoint)
+            ),
+            remaining=F.count(F.when(F.col("depth").isNull(), 1)),
         )
-        remaining = new_depth.filter(F.col("depth").isNull()).limit(1).count()
         depth.unpersist()
         depth = new_depth
-        if remaining == 0:
+        if seen["remaining"] == 0:
             break
     else:
         raise RuntimeError(
@@ -299,11 +297,15 @@ def biconnected_components(
 
     # --- LCA climb: each non-tree edge walks both endpoints up,
     # emitting an aux star edge per tree edge on its fundamental cycle
-    state = nontree.select(
-        _ekey(F.col("u"), F.col("v")).alias("ek"),
-        F.col("u").alias("ca"),
-        F.col("v").alias("cb"),
-    ).transform(fresh_checkpoint)
+    # live climbers are counted on the checkpoint job that materializes
+    # them — no per-round emptiness action
+    state, seen = counted_checkpoint(
+        nontree.select(
+            _ekey(F.col("u"), F.col("v")).alias("ek"),
+            F.col("u").alias("ca"),
+            F.col("v").alias("cb"),
+        )
+    )
     emissions: list[DataFrame] = []
     na = npt.select(
         F.col("id").alias("ca"),
@@ -316,7 +318,7 @@ def biconnected_components(
         F.col("parent").alias("pb"),
     )
     for _ in range(2 * max_rounds):
-        if state.limit(1).count() == 0:
+        if seen["rows"] == 0:
             break
         joined = state.join(na, "ca").join(nb, "cb")
         climb_a = F.col("da") >= F.col("db")
@@ -332,7 +334,7 @@ def biconnected_components(
             .transform(fresh_checkpoint)
         )
         emissions.append(em)
-        new_state = (
+        new_state, seen = counted_checkpoint(
             joined.select(
                 "ek",
                 F.when(climb_a, F.col("pa")).otherwise(F.col("ca")).alias(
@@ -341,9 +343,7 @@ def biconnected_components(
                 F.when(climb_b, F.col("pb")).otherwise(F.col("cb")).alias(
                     "cb"
                 ),
-            )
-            .filter(F.col("ca") != F.col("cb"))
-            .transform(fresh_checkpoint)
+            ).filter(F.col("ca") != F.col("cb"))
         )
         state.unpersist()
         state = new_state

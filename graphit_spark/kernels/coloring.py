@@ -29,18 +29,17 @@ Spark plan (per round, uncolored set shrinking geometrically):
   - min free color: winners ⋈ sym ⋈ colored → used (winner, color)
     pairs; candidates = winners×{0} ∪ used.color+1; left-anti the used
     set; groupBy(min). Cost is Σ degree(winner) rows, never V².
-  - colored accumulates per-round checkpointed frames (BC frontier
-    stack); superseded uncolored checkpoints released.
+  - colored accumulates into one checkpointed frame (re-checkpointed
+    with each round's winners, partition count held fixed);
+    superseded uncolored and colored checkpoints released.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, observe
 from graphit_spark.kernels.mis import _priority_col
 
 COLOR_ROUNDS = 64
@@ -63,18 +62,21 @@ def greedy_coloring(
     )
     verts = graph.vertices().select("id").transform(fresh_checkpoint)
 
-    uncolored = verts.select(
-        "id", _priority_col().alias("pri")
-    ).transform(fresh_checkpoint)
-    colored_frames: list[DataFrame] = []
-
-    def colored_union() -> DataFrame | None:
-        if not colored_frames:
-            return None
-        return reduce(DataFrame.unionByName, colored_frames)
+    # the uncolored count is observed on the checkpoint job that
+    # materializes each round's uncolored set — no isEmpty() action
+    uncolored, left = observe(
+        verts.select("id", _priority_col().alias("pri")),
+        rows=F.count(F.lit(1)),
+    )
+    uncolored = uncolored.transform(fresh_checkpoint)
+    # every vertex colored so far, as ONE checkpointed frame: a union of
+    # the per-round frames would add a scan (and its tasks) per past
+    # round to each round's used-color join
+    colored: DataFrame | None = None
+    parts = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
 
     for _ in range(rounds):
-        if uncolored.isEmpty():
+        if left["rows"] == 0:
             break
         nbr_min = (
             sym.join(
@@ -90,7 +92,6 @@ def greedy_coloring(
             .filter(F.col("mn").isNull() | (F.col("pri") < F.col("mn")))
             .select("id")
         )
-        colored = colored_union()
         if colored is None:
             # first round: nothing is colored yet, everyone takes 0
             new_colored = winners.select(
@@ -121,20 +122,32 @@ def greedy_coloring(
                 .agg(F.min("x").alias("color"))
             )
         new_colored = new_colored.transform(fresh_checkpoint)
-        colored_frames.append(new_colored)
-        nxt = uncolored.join(new_colored, "id", "left_anti").localCheckpoint(
-            eager=True
+        nxt, left = observe(
+            uncolored.join(new_colored, "id", "left_anti"),
+            rows=F.count(F.lit(1)),
         )
+        nxt = nxt.localCheckpoint(eager=True)
         uncolored.unpersist()
         uncolored = nxt
-    if not uncolored.isEmpty():
+        if colored is None:
+            colored = new_colored
+        else:
+            merged = (
+                colored.unionByName(new_colored)
+                .coalesce(parts)
+                .transform(fresh_checkpoint)
+            )
+            colored.unpersist()
+            new_colored.unpersist()
+            colored = merged
+    if left["rows"] > 0:
         raise RuntimeError(
             f"coloring did not settle within rounds={rounds} — the "
             "Jones-Plassmann round count is the longest decreasing-"
             "priority path, O(log n) in expectation; raise the budget"
         )
     uncolored.unpersist()
-    out = colored_union()
+    out = colored
     if out is None:
         out = verts.select("id", F.lit(0).cast("long").alias("color")).limit(
             0

@@ -65,10 +65,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, observe
 from graphit_spark.functions.sketch import HASH_BITS, _alpha_m2
 
 
@@ -191,6 +191,12 @@ def _grow_one_hop(
     )
 
 
+def _changed() -> Column:
+    """Sketches that grew this round, observed on the round's checkpoint
+    job: the systolic stopping rule needs no action of its own."""
+    return F.count(F.when(F.col("chg"), 1))
+
+
 def _pick_join_strategy(
     graph: LinkGraph, join_strategy: str | None
 ) -> str | None:
@@ -224,12 +230,14 @@ def hyperball_harmonic(
     state = _init_state(graph, p).transform(fresh_checkpoint)
     prev = state
     for r in range(1, rounds + 1):
-        state = _grow_one_hop(
-            state, edges, p, r, join_strategy, systolic
-        ).transform(fresh_checkpoint)
+        state, seen = observe(
+            _grow_one_hop(state, edges, p, r, join_strategy, systolic),
+            changed=_changed(),
+        )
+        state = state.transform(fresh_checkpoint)
         prev.unpersist()
         prev = state
-        if systolic and state.filter(F.col("chg")).limit(1).count() == 0:
+        if systolic and seen["changed"] == 0:
             break  # every remaining round adds exactly 0
 
     out = state.select(
@@ -265,32 +273,34 @@ def neighborhood_function(
     integer sum of the per-vertex estimates floored at 4 decimals
     (see NF_SCALE note), divided back out — bit-identical to the twin.
 
-    One extra scalar aggregate action per round (the pagerank
-    error-norm discipline); the per-round state handling is exactly
-    hyperball_harmonic's."""
+    The per-round sum rides the round's checkpoint job as an observed
+    aggregate (the pagerank error-norm discipline); the per-round state
+    handling is exactly hyperball_harmonic's."""
     own_cache = graph.ensure_persisted()
     edges = graph.edges.select("src", "dst")
     join_strategy = _pick_join_strategy(graph, join_strategy)
     scale = F.lit(float(10**NF_SCALE))
     spark = graph.edges.sparkSession
 
-    def nf_row(r: int, st: DataFrame) -> tuple[int, int]:
-        row = st.agg(
-            F.sum(F.floor(F.col("est") * scale)).alias("s")
-        ).collect()[0]
-        return (r, int(row["s"]))
+    def checkpoint_round(st: DataFrame):
+        """Checkpoint a state, observing its scaled est sum and how
+        many sketches changed on the checkpoint job itself."""
+        st, seen = observe(
+            st, s=F.sum(F.floor(F.col("est") * scale)), changed=_changed()
+        )
+        return st.transform(fresh_checkpoint), seen
 
-    state = _init_state(graph, p).transform(fresh_checkpoint)
-    sums = [nf_row(0, state)]
+    state, seen = checkpoint_round(_init_state(graph, p))
+    sums = [(0, int(seen["s"]))]
     prev = state
     for r in range(1, rounds + 1):
-        state = _grow_one_hop(
-            state, edges, p, r, join_strategy, systolic
-        ).transform(fresh_checkpoint)
+        state, seen = checkpoint_round(
+            _grow_one_hop(state, edges, p, r, join_strategy, systolic)
+        )
         prev.unpersist()
         prev = state
-        sums.append(nf_row(r, state))
-        if systolic and state.filter(F.col("chg")).limit(1).count() == 0:
+        sums.append((r, int(seen["s"])))
+        if systolic and seen["changed"] == 0:
             # N(r) is at its fixpoint: every remaining round repeats
             # the same integer sum
             fix = sums[-1][1]

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 
 def k_core(graph: LinkGraph, k: int, *, max_rounds: int = 100) -> DataFrame:
@@ -95,9 +95,10 @@ def core_decomposition(
         # (removing a vertex can pull others down INTO bucket k —
         # never below, that's the clamp)
         while True:
-            peeled = state.filter(F.col("d") <= k).select("id")
-            peeled = peeled.transform(fresh_checkpoint)
-            if peeled.limit(1).count() == 0:
+            peeled, seen = counted_checkpoint(
+                state.filter(F.col("d") <= k).select("id")
+            )
+            if seen["rows"] == 0:
                 break
             cores.append(peeled.select("id", F.lit(k).alias("core")))
             remaining = state.join(peeled, "id", "left_anti")

@@ -54,7 +54,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 MATCH_ROUNDS = 24
 
@@ -80,18 +80,18 @@ def maximal_matching(
     unmatched vertices. Raises if the fixed round budget is exhausted
     with alive edges remaining (see module docstring)."""
     own_cache = graph.ensure_persisted()
-    alive = (
+    # the alive-edge count rides each round's checkpoint job
+    alive, seen = counted_checkpoint(
         graph.symmetrize()
         .edges.filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .withColumn("epri", _edge_priority())
-        .transform(fresh_checkpoint)
     )
     verts = graph.vertices().select("id").transform(fresh_checkpoint)
 
     matched_frames: list[DataFrame] = []
     for _ in range(rounds):
-        if alive.isEmpty():
+        if seen["rows"] == 0:
             break
         ends = alive.select(F.col("u").alias("x"), "epri").unionAll(
             alive.select(F.col("v").alias("x"), "epri")
@@ -116,14 +116,13 @@ def maximal_matching(
             .unionAll(matched.select(F.col("v").alias("x")))
             .distinct()
         )
-        nxt = (
+        nxt, seen = counted_checkpoint(
             alive.join(mverts.withColumnRenamed("x", "u"), "u", "left_anti")
             .join(mverts.withColumnRenamed("x", "v"), "v", "left_anti")
-            .transform(fresh_checkpoint)
         )
         alive.unpersist()
         alive = nxt
-    if not alive.isEmpty():
+    if seen["rows"] > 0:
         raise RuntimeError(
             f"maximal_matching did not settle within rounds={rounds} — "
             "alive edges remain; raise the budget (each round removes a "

@@ -45,7 +45,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 MIS_ROUNDS = 24
 
@@ -74,12 +74,13 @@ def maximal_independent_set(
     )
     verts = graph.vertices().select("id").transform(fresh_checkpoint)
 
-    active = verts.select("id", _priority_col().alias("pri")).localCheckpoint(
-        eager=True
+    # the active count rides each round's checkpoint job (no isEmpty())
+    active, seen = counted_checkpoint(
+        verts.select("id", _priority_col().alias("pri"))
     )
     winner_frames: list[DataFrame] = []
     for _ in range(rounds):
-        if active.isEmpty():
+        if seen["rows"] == 0:
             break
         # min active-neighbor priority per active vertex (both edge
         # endpoints restricted to the active set, as in the twin)
@@ -102,14 +103,13 @@ def maximal_independent_set(
             .select(F.col("dst").alias("id"))
             .distinct()
         )
-        nxt = (
+        nxt, seen = counted_checkpoint(
             active.join(winners, "id", "left_anti")
             .join(eliminated, "id", "left_anti")
-            .transform(fresh_checkpoint)
         )
         active.unpersist()
         active = nxt
-    if not active.isEmpty():
+    if seen["rows"] > 0:
         raise RuntimeError(
             f"MIS did not settle within rounds={rounds} — undecided "
             "vertices remain; raise the budget (the greedy peel removes "

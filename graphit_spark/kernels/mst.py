@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 _MAX_ROUNDS = 64  # > log2(any vertex count a long can index)
 
@@ -38,7 +38,7 @@ def _pointer_jump(ptr: DataFrame) -> DataFrame:
     on the component graph (<= one row per component).
     """
     while True:
-        hop = (
+        hop, seen = counted_checkpoint(
             ptr.alias("a")
             .join(
                 ptr.select(
@@ -46,11 +46,11 @@ def _pointer_jump(ptr: DataFrame) -> DataFrame:
                 ).alias("b"),
                 "p",
             )
-            .select("c", F.col("pp").alias("p"), (F.col("p") != F.col("pp")).alias("moved"))
-        ).transform(fresh_checkpoint)
-        moved = hop.filter("moved").limit(1).count()
+            .select("c", F.col("pp").alias("p"), (F.col("p") != F.col("pp")).alias("moved")),
+            moved=F.count(F.when(F.col("moved"), 1)),
+        )
         ptr = hop.select("c", "p")
-        if moved == 0:
+        if seen["moved"] == 0:
             return ptr
 
 
@@ -99,12 +99,11 @@ def minimum_spanning_forest(graph: LinkGraph) -> DataFrame:
             .groupBy("c")
             .agg(F.min("e").alias("e"))
         )
-        chosen = (
+        chosen, seen = counted_checkpoint(
             nominated.select("e.u", "e.v", "e.w", "e.cu", "e.cv")
             .dropDuplicates(["u", "v"])
-            .transform(fresh_checkpoint)
         )
-        if chosen.limit(1).count() == 0:
+        if seen["rows"] == 0:
             break
         forest_parts.append(chosen.select("u", "v", "w"))
 

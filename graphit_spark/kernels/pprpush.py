@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 PUSH_SCALE = 10**9  # nano-units of probability mass
 PUSH_ALPHA_NUM = 15  # alpha = 0.15, as a rational for integer math
@@ -99,8 +99,8 @@ def approximate_ppr_push(
             "push_total",
             F.expr("push_total div d").alias("per_nbr"),
         )
-        act = fresh_checkpoint(act)
-        if act.count() == 0:
+        act, seen = counted_checkpoint(act)
+        if seen["rows"] == 0:
             act.unpersist()
             break
 

@@ -123,20 +123,37 @@ class Observed(Mapping):
     """The aggregates ``observe`` attached to a frame, read after the job
     that materialized it.
 
-    Values are fetched on first access and never by waiting: if that job
-    has not run, or delivered no metrics, access raises instead of
-    parking the driver in ``Observation.get``. An aggregate that is null
-    (a sum over no rows) reads as 0."""
+    Values are fetched on first access and never by waiting forever.
+    They reach the driver through the asynchronous listener bus, so a
+    read that finds none waits (bounded) for the bus to drain the
+    events already posted — the materializing job's completion among
+    them — and raises if there are still none: that job has not run.
+    ``Observation.get`` would park the driver instead. An aggregate that
+    is null (a sum over no rows) reads as 0."""
 
-    def __init__(self, obs: Observation, names: list[str]):
+    # bound on waiting for the listener bus to deliver posted events
+    DRAIN_TIMEOUT_MS = 120_000
+
+    def __init__(self, obs: Observation, names: list[str], sc):
         self._obs = obs
         self._names = names
+        self._sc = sc
         self._values: dict | None = None
+
+    def _delivered(self) -> bool:
+        # getRowOrEmpty waits at most ~100 ms; Observation.get forever
+        return self._obs._jo.getRowOrEmpty().isDefined()
 
     def _get(self) -> dict:
         if self._values is None:
-            # getRowOrEmpty waits at most ~100 ms; Observation.get forever
-            if not self._obs._jo.getRowOrEmpty().isDefined():
+            if not self._delivered():
+                try:
+                    self._sc._jsc.sc().listenerBus().waitUntilEmpty(
+                        self.DRAIN_TIMEOUT_MS
+                    )
+                except Exception:  # bus still busy: decided below
+                    pass
+            if not self._delivered():
                 raise RuntimeError(
                     f"observed aggregates {self._names} were not delivered: "
                     "the observed frame has not been materialized by a job"
@@ -163,4 +180,16 @@ def observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observed]:
     ``SnapshotStore.write``. The aggregates cost no job of their own."""
     obs = Observation()
     out = df.observe(obs, *(c.alias(k) for k, c in aggs.items()))
-    return out, Observed(obs, list(aggs))
+    return out, Observed(obs, list(aggs), df.sparkSession.sparkContext)
+
+
+def counted_checkpoint(
+    df: DataFrame, **aggs: Column
+) -> tuple[DataFrame, Observed]:
+    """``fresh_checkpoint`` of ``df``, with its row count (``rows``) and
+    any further ``aggs`` observed on the checkpoint job — the emptiness
+    test of a fixpoint loop without an ``isEmpty()``/``count()`` job."""
+    from pyspark.sql import functions as F
+
+    df, seen = observe(df, rows=F.count(F.lit(1)), **aggs)
+    return df.transform(fresh_checkpoint), seen

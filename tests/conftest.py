@@ -20,6 +20,25 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def entry_query(spark):
+    """``entry_query(name, sf_dir)``: the registry query's DataFrame,
+    built once per session. The oracle mirror (test_entry) and the plan
+    audits (test_plans) inspect the same frames; a query's kernels run
+    at build time, so building it twice doubles that work."""
+    import __spark_entry__ as entrymod
+
+    built: dict = {}
+
+    def get(name: str, sf_dir: str):
+        if (name, sf_dir) not in built:
+            built[name, sf_dir] = entrymod.queries()[name](spark, sf_dir)
+        return built[name, sf_dir]
+
+    yield get
+    built.clear()
+
+
+@pytest.fixture(scope="session")
 def golden_edges():
     """The golden small graph (FIXTURES.md §5): 14 vertices, raw edge list
     WITH duplicates and self-loops (exercises squish), heavy hub vertex 0.

@@ -46,10 +46,9 @@ QUERY_NAMES = sorted(entrymod.queries().keys())
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, name):
-    q = entrymod.queries()[name]
+def test_query_matches_oracle(entry_query, name):
     oracles = entrymod.oracle_sql()
-    sdf = q(spark, SF_DIR)
+    sdf = entry_query(name, SF_DIR)
     spdf = sdf.toPandas()
     if name not in oracles:
         assert len(spdf) >= 0  # rows-only check (driver's weak path)

@@ -56,17 +56,16 @@ def _plan(df) -> str:
 
 
 @pytest.mark.parametrize("name", TEXT_QUERY_NAMES)
-def test_no_cartesian_outside_baselines(spark, name):
-    q = entrymod.queries()[name]
-    plan = _plan(q(spark, SF_DIR))
+def test_no_cartesian_outside_baselines(entry_query, name):
+    plan = _plan(entry_query(name, SF_DIR))
     assert "CartesianProduct" not in plan, name
     assert "BroadcastNestedLoop" not in plan, name
 
 
-def test_all_pairs_baselines_are_the_only_ones(spark):
+def test_all_pairs_baselines_are_the_only_ones(entry_query):
     """The baseline set is the exhaustive list — a new query that goes
     quadratic shows up here, not in production."""
-    for name, q in entrymod.queries().items():
+    for name in entrymod.queries():
         if name in ALL_PAIRS_BASELINES or name in TEXT_QUERY_NAMES:
             continue
         if not name.startswith(
@@ -74,7 +73,7 @@ def test_all_pairs_baselines_are_the_only_ones(spark):
              "cms_", "anchor_", "source_", "emb_")
         ):
             continue  # graph queries audited separately (BENCH/PLANS.md)
-        plan = _plan(q(spark, SF_DIR))
+        plan = _plan(entry_query(name, SF_DIR))
         assert "CartesianProduct" not in plan, name
 
 
