@@ -47,7 +47,10 @@ LINKPRED_MIN_CN = 2
 LINKPRED_TOPK = 5
 SALSA_ROUNDS = 6
 COOC_WINDOW = 2
-LAYER_ROUNDS = 24
+# scc_condensation's engine budget: 2x the condensation depth measured
+# at sf0.1 (94). It is a safety net — the kernel raises if layers still
+# change when it runs out, and the twin has no budget.
+LAYER_ROUNDS = 188
 
 _TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -560,13 +563,13 @@ ORDER BY vt.id
 """
 
 
-def scc_condensation_sql(rounds: int = LAYER_ROUNDS) -> str:
+def scc_condensation_sql() -> str:
     """Exact SCC labels via the recursive closure (scc_sql's CTEs, on
-    the bowtie edge builder), then the same monotone max-layer
-    recurrence as the kernel with the same round budget — identical
-    results even short of the fixpoint, exact at it (integer-only)."""
-    ctes = [
-        f"""{_SQL_BOWTIE.strip()},
+    the bowtie edge builder), then the exact longest-path layers with no
+    round budget: a recursive CTE collects the distinct (component,
+    path length) pairs over the condensation DAG — finite, since the DAG
+    has no cycle — and each component's layer is the longest."""
+    return f"""WITH RECURSIVE {_SQL_BOWTIE.strip()},
 reach(src, dst) AS (
   SELECT src, dst FROM edges
   UNION
@@ -586,27 +589,15 @@ cond AS MATERIALIZED (
   FROM edges e JOIN scc ls ON e.src = ls.id JOIN scc ld ON e.dst = ld.id
   WHERE ls.scc <> ld.scc
 ),
-l0 AS (SELECT DISTINCT scc AS c, CAST(0 AS BIGINT) AS layer FROM scc)"""
-    ]
-    for k in range(1, rounds + 1):
-        p = f"l{k - 1}"
-        ctes.append(
-            f"""l{k} AS MATERIALIZED (
-  SELECT l.c, greatest(l.layer, coalesce(u.cand, 0)) AS layer
-  FROM {p} l LEFT JOIN (
-    SELECT ce.cv AS c, max(pp.layer) + 1 AS cand
-    FROM cond ce JOIN {p} pp ON ce.cu = pp.c
-    GROUP BY ce.cv
-  ) u USING (c)
-)"""
-        )
-    return (
-        "WITH RECURSIVE " + ",\n".join(ctes)
-        + f"""
-SELECT s.id, CAST(s.scc AS BIGINT) AS scc, l.layer
-FROM scc s JOIN l{rounds} l ON s.scc = l.c
+lay(c, layer) AS (
+  SELECT DISTINCT scc, CAST(0 AS BIGINT) FROM scc
+  UNION
+  SELECT ce.cv, l.layer + 1 FROM lay l JOIN cond ce ON ce.cu = l.c
+)
+SELECT s.id, CAST(s.scc AS BIGINT) AS scc, m.layer
+FROM scc s JOIN (SELECT c, max(layer) AS layer FROM lay GROUP BY c) m
+  ON s.scc = m.c
 ORDER BY s.id"""
-    )
 
 
 def pseudo_diameter_sql(rounds: int = BFS_ROUNDS) -> str:

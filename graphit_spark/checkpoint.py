@@ -18,7 +18,7 @@ the written frame's schema (no inference job), the row counts come from
 the Parquet footers of the written files (read on the driver, no count
 job), and aggregates the caller observed on the frame
 (``plans.state.observe``) are computed by the write job itself and land
-in the manifest's metrics.
+in the manifest's metrics through callables read after that job.
 
 Layout:
     <root>/<name>/it=<k>/part-*.parquet
@@ -33,8 +33,6 @@ import time
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-
-from graphit_spark.plans.state import Observed
 
 try:  # Iceberg backend requires the spark-iceberg runtime jar.
     import pyiceberg  # noqa: F401  # pragma: no cover
@@ -60,9 +58,10 @@ class SnapshotStore:
         """Write snapshot for `iteration`, return the re-read DataFrame
         (reading back truncates lineage — the plan no longer grows).
 
-        `metrics` go into the manifest. A value that is an ``Observed``
-        (from ``plans.state.observe`` on `df`'s plan) records the
-        aggregate of the same name, as computed by the write job."""
+        `metrics` go into the manifest. A value that is callable is
+        called once the write job has run — e.g. ``lambda: seen["err"]``
+        records an aggregate ``plans.state.observe`` attached to `df`,
+        as computed by the write job."""
         path = self._it_dir(iteration)
         t0 = time.time()
         df.write.mode("overwrite").parquet(path)
@@ -78,7 +77,7 @@ class SnapshotStore:
             "partitions": part_rows,
             "elapsed_write_sec": time.time() - t0,
             "metrics": {
-                k: v[k] if isinstance(v, Observed) else v
+                k: v() if callable(v) else v
                 for k, v in (metrics or {}).items()
             },
         }

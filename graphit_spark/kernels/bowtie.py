@@ -31,8 +31,8 @@ DISCONNECTED = the rest, all over unclassified vertices only.
 Spark plan / 100 TB shape: the SCC peel dominates (see scc.py). Each
 reachability is a BFS-shaped frontier loop — per round one semi-join
 restricted edge scan, a distinct, an anti-join against the reached
-set, one localCheckpoint and ONE driver action (the new-frontier
-count); direction switches sparse/dense at the Ligra 1/20 threshold
+set, and one localCheckpoint whose job also counts the new frontier;
+direction switches sparse/dense at the Ligra 1/20 threshold
 with the frontier degree sum estimated as size x avg-degree (no extra
 scalar action per round, same rule as scc.py). Classification is five
 V-sized left joins producing one CASE column — no shuffle wider than
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, superstep
 from graphit_spark.kernels.scc import (
     _JUMP_FROM,
     strongly_connected_components,
@@ -55,7 +55,6 @@ from graphit_spark.plans.traversal import choose_direction
 def _reachable(
     edges: DataFrame,
     seeds: DataFrame,
-    seed_count: int,
     num_edges: int,
     num_verts: int,
     max_iters: int,
@@ -92,14 +91,14 @@ def _reachable(
         .unionByName(seeds.select("id"))
         .distinct()
     )
-    state = (
-        univ.join(seeds.select("id", F.lit(1).alias("seed")), "id", "left")
-        .select("id", key.alias("lab"))
-        .transform(fresh_checkpoint)
-    )
-    front = state
-    fsize = num_verts  # first round: everyone sends
-    for rnd in range(max_iters):
+    changed = F.col("lab") < F.col("olab")
+
+    def step(cur: DataFrame, rnd) -> DataFrame:
+        state = cur.select("id", "lab")
+        if rnd.seen is None:
+            front, fsize = state, num_verts  # first round: everyone sends
+        else:
+            front, fsize = cur.filter(changed).select("id"), rnd.seen["changed"]
         direction = choose_direction(fsize, int(fsize * avg_deg), num_edges)
         src_labels = state.select(
             F.col("id").alias("src"), F.col("lab").alias("slab")
@@ -128,45 +127,32 @@ def _reachable(
         # the gather), so the join side shrinks with the frontier; and
         # like the SCC fixpoint, jumps only engage past _JUMP_FROM
         # rounds, so shallow reaches never pay the extra join.
-        if rnd >= _JUMP_FROM:
-            jmp = gath.filter(F.col("lab") < F.col("olab")).select(
-                F.col("id").alias("jid"), F.col("lab").alias("jlab")
-            )
-            vertex_of = F.when(
-                F.col("lab") < 0, F.col("lab") + F.lit(num_verts)
-            ).otherwise(F.col("lab"))
-            new_state = (
-                gath.join(jmp, vertex_of == jmp["jid"], "left")
-                .select(
-                    "id",
-                    "olab",
-                    F.least(
-                        F.col("lab"), F.coalesce("jlab", F.col("lab"))
-                    ).alias("lab"),
-                )
-                .transform(fresh_checkpoint)
-            )
-        else:
-            new_state = gath.transform(fresh_checkpoint)
-        changed = new_state.filter(F.col("lab") < F.col("olab"))
-        fsize = changed.count()
-        if front is not state:
-            front.unpersist()
-        state.unpersist()
-        state = new_state.select("id", "lab")
-        front = new_state.filter(F.col("lab") < F.col("olab")).select("id")
-        if fsize == 0:
-            reached = (
-                state.filter(F.col("lab") < 0)
-                .select("id")
-                .transform(fresh_checkpoint)
-            )
-            new_state.unpersist()
-            return reached
-    raise RuntimeError(
-        f"reachability fixpoint did not converge within {max_iters} "
-        "rounds — raise max_iters above the graph's directed diameter"
+        if rnd.index < _JUMP_FROM:
+            return gath
+        jmp = gath.filter(changed).select(
+            F.col("id").alias("jid"), F.col("lab").alias("jlab")
+        )
+        vertex_of = F.when(
+            F.col("lab") < 0, F.col("lab") + F.lit(num_verts)
+        ).otherwise(F.col("lab"))
+        return gath.join(jmp, vertex_of == jmp["jid"], "left").select(
+            "id",
+            "olab",
+            F.least(F.col("lab"), F.coalesce("jlab", F.col("lab"))).alias(
+                "lab"
+            ),
+        )
+
+    state = superstep(
+        univ.join(seeds.select("id", F.lit(1).alias("seed")), "id", "left")
+        .select("id", key.alias("lab")),
+        step, max_rounds=max_iters, changed=changed,
     )
+    reached = (
+        state.filter(F.col("lab") < 0).select("id").transform(fresh_checkpoint)
+    )
+    state.unpersist()
+    return reached
 
 
 def bowtie_classes(
@@ -180,17 +166,13 @@ def bowtie_classes(
     num_edges = graph.num_edges
     num_verts = graph.num_vertices
 
-    scc = strongly_connected_components(graph, **scc_kw).localCheckpoint(
-        eager=True
-    )
-    core_row = (
+    scc = strongly_connected_components(graph, **scc_kw)
+    core_label = int(
         scc.groupBy("scc")
         .count()
         .orderBy(F.desc("count"), F.asc("scc"))
-        .first()
+        .first()["scc"]
     )
-    core_label = int(core_row["scc"])
-    core_size = int(core_row["count"])
     corev = (
         scc.filter(F.col("scc") == core_label)
         .select("id")
@@ -203,13 +185,12 @@ def bowtie_classes(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     ).transform(fresh_checkpoint)
 
-    fwd = _reachable(edges, corev, core_size, num_edges, num_verts, max_iters)
-    bwd = _reachable(tedges, corev, core_size, num_edges, num_verts, max_iters)
+    fwd = _reachable(edges, corev, num_edges, num_verts, max_iters)
+    bwd = _reachable(tedges, corev, num_edges, num_verts, max_iters)
     inn = bwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
     outt = fwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
-    n_in, n_out = inn.count(), outt.count()
-    fi = _reachable(edges, inn, n_in, num_edges, num_verts, max_iters)
-    bo = _reachable(tedges, outt, n_out, num_edges, num_verts, max_iters)
+    fi = _reachable(edges, inn, num_edges, num_verts, max_iters)
+    bo = _reachable(tedges, outt, num_edges, num_verts, max_iters)
 
     def flag(df: DataFrame, name: str) -> DataFrame:
         return df.select("id", F.lit(True).alias(name))

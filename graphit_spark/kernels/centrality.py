@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import superstep
 from graphit_spark.kernels.paths import bfs, sssp
 
 
@@ -38,10 +38,8 @@ def eigenvector_centrality(
     init ec = 1/n (eigenvector_centrality.gt:6)."""
     own_cache = graph.ensure_persisted()
     n = graph.num_vertices
-    state = graph.vertices().withColumn("ec", F.lit(1.0 / n))
-    state = state.transform(fresh_checkpoint)
-    prev = state
-    for _ in range(rounds):
+
+    def step(state: DataFrame, rnd) -> DataFrame:
         sums = (
             graph.edges.join(
                 state.select(F.col("id").alias("src"), "ec"), "src"
@@ -49,14 +47,17 @@ def eigenvector_centrality(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("ec").alias("s"))
         )
-        state = (
+        return (
             graph.vertices()
             .join(sums, "id", "left")
             .select("id", F.coalesce("s", F.lit(0.0)).alias("ec"))
-            .transform(fresh_checkpoint)
         )
-        prev.unpersist()
-        prev = state
+
+    state = superstep(
+        graph.vertices()
+        .withColumn("ec", F.lit(1.0 / n)),
+        step, rounds=rounds,
+    )
     if own_cache:
         graph.unpersist()
     return state
@@ -81,16 +82,12 @@ def katz_centrality(
     Spark plan: identical one-shuffle-pair gather per round as
     `eigenvector_centrality`/pagerank — edges ⋈ state on src (state is
     the V-sized side), map-side-combined groupBy(dst).sum, V-sized
-    left join back, localCheckpoint truncation, superseded caches
-    released. alpha < 1/λ_max keeps the series bounded; with a fixed
+    left join back, one checkpoint. alpha < 1/λ_max keeps the series bounded; with a fixed
     round count the output is a finite polynomial in A, so the DuckDB
     twin reproduces it exactly up to the rounding contract.
     """
     own_cache = graph.ensure_persisted()
-    state = graph.vertices().withColumn("katz", F.lit(float(beta)))
-    state = state.transform(fresh_checkpoint)
-    prev = state
-    for _ in range(rounds):
+    def step(state: DataFrame, rnd) -> DataFrame:
         sums = (
             graph.edges.join(
                 state.select(F.col("id").alias("src"), "katz"), "src"
@@ -98,7 +95,7 @@ def katz_centrality(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("katz").alias("s"))
         )
-        state = (
+        return (
             graph.vertices()
             .join(sums, "id", "left")
             .select(
@@ -108,10 +105,13 @@ def katz_centrality(
                     + F.lit(float(beta))
                 ).alias("katz"),
             )
-            .transform(fresh_checkpoint)
         )
-        prev.unpersist()
-        prev = state
+
+    state = superstep(
+        graph.vertices()
+        .withColumn("katz", F.lit(float(beta))),
+        step, rounds=rounds,
+    )
     if own_cache:
         graph.unpersist()
     return state

@@ -28,12 +28,10 @@ sum is a plain sum, and a round launches no count or collect of its own.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint, observe
+from graphit_spark.plans.state import bind_release, superstep
 from graphit_spark.checkpoint import SnapshotStore
 from graphit_spark.plans.traversal import choose_direction
 
@@ -79,7 +77,9 @@ def connected_components(
     start_iter = 0
     if resume and store is not None and store.latest() is not None:
         start_iter = store.latest() + 1
-        labels = store.read(g.spark, store.latest()).join(degrees, "id")
+        labels = store.read(g.spark, store.latest()).select(
+            "id", "comp"
+        ).join(degrees, "id")
     elif init_labels is not None:
         # Warm start for EDGE-ADDITION deltas: min-label propagation
         # from any per-vertex upper bound of the final component min
@@ -94,33 +94,35 @@ def connected_components(
         ).select("id", F.coalesce("comp", "id").alias("comp"), "deg")
     else:
         labels = degrees.select("id", F.col("id").alias("comp"), "deg")
-    labels = labels.transform(fresh_checkpoint)
-    frontier = labels.select("id")  # conservative: all active
-    frontier_size = graph.num_vertices
-    # degree sum of full frontier = num_edges (dense round 0)
-    frontier_deg_sum = num_edges
-
     changed = F.col("comp") != F.col("old_comp")
-
-    def checkpoint_round(df: DataFrame):
-        """Checkpoint a (id, comp, old_comp, deg) frame, observing the
-        size and out-degree sum of the frontier it would leave."""
-        df, seen = observe(
-            df,
-            changed=F.count(F.when(changed, 1)),
-            changed_deg=F.sum(F.when(changed, F.col("deg"))),
-        )
-        return df.transform(fresh_checkpoint), seen
-
     # same strategy choice as kernels/pagerank.py: the V-sized label side
     # joins the cached edge partitioning via per-partition hash build
     # (no E-sized sort, no driver broadcast build)
     big_v = graph.num_vertices > 500_000
-    prev_ck = labels
 
-    for i in range(start_iter, max_iters):
-        t0 = time.time()
+    def step(state: DataFrame, rnd) -> DataFrame:
+        """One propagation round over (id, comp, old_comp, deg); its
+        frontier is the rows the previous round changed (all rows in a
+        call's first round)."""
+        labels = state.select("id", "comp", "deg")
+        if rnd.seen is None:
+            frontier = labels.select("id")  # conservative: all active
+            frontier_size = graph.num_vertices
+            # degree sum of full frontier = num_edges (dense round 0)
+            frontier_deg_sum = num_edges
+        else:
+            # next frontier = changed vertices (applyModified contract).
+            # The degree sum only decides sparse-vs-dense when the
+            # frontier SIZE alone is below the Ligra threshold; a big
+            # frontier is dense regardless.
+            frontier = state.filter(changed).select("id")
+            frontier_size = rnd.seen["changed"]
+            if frontier_size > num_edges / 20:
+                frontier_deg_sum = num_edges  # dense either way
+            else:
+                frontier_deg_sum = rnd.seen["changed_deg"]
         direction = choose_direction(frontier_size, frontier_deg_sum, num_edges)
+        rnd.direction = direction
         src_labels = labels.select(F.col("id").alias("src"), "comp")
         # Frontier restriction lives on the V-sized LABEL side, never as a
         # separate E-sized semi-join: the inner gather join below already
@@ -156,82 +158,66 @@ def connected_components(
                 "deg",
             )
         )
+        if not pointer_jump:
+            return new_labels
         # materialize the gather ONCE before pointer jumping: each jump
         # hop references new_labels twice (as parent map and as left
         # side), so a lazy chain would recompute the E-sized gather
-        # several times per round
-        new_labels, seen = checkpoint_round(new_labels)
-        round_cks = [new_labels]
-        if pointer_jump:
-            # Path-halving: comp[v] <- comp[comp[v]], repeated. A naive
-            # self-join on comp shuffles the whole table keyed by the
-            # giant component's label — maximal key skew. Instead the
-            # parent mapping is restricted to the DISTINCT label values
-            # (they collapse geometrically) and broadcast, so each hop is
-            # one narrow V-scan: no shuffle, no skewed key.
-            dcomp, dseen = observe(
-                new_labels.select(F.col("comp").alias("pid")).distinct(),
-                distinct=F.count(F.lit(1)),
-            )
-            dcomp = dcomp.transform(fresh_checkpoint)
-            if dseen["distinct"] <= _PJ_BROADCAST_LIMIT:
-                for _ in range(2):
-                    parent = F.broadcast(
-                        new_labels.join(
-                            F.broadcast(dcomp),
-                            new_labels["id"] == dcomp["pid"],
-                        ).select("pid", F.col("comp").alias("pcomp"))
-                    )
-                    left = new_labels.alias("l")
-                    new_labels, seen = checkpoint_round(
-                        left.join(
-                            parent, F.col("l.comp") == F.col("pid"), "left"
-                        ).select(
-                            F.col("l.id").alias("id"),
-                            F.coalesce(F.col("pcomp"), F.col("l.comp")).alias("comp"),
-                            F.col("l.old_comp").alias("old_comp"),
-                            F.col("l.deg").alias("deg"),
-                        )
-                    )
-                    round_cks.append(new_labels)
-            # else: labels haven't consolidated yet — plain propagation
+        # several times per round; it observes the round's aggregates
+        # in case it is the round's state
+        new_labels, _ = rnd.checkpoint(new_labels, **rnd.aggs)
+        # Path-halving: comp[v] <- comp[comp[v]], repeated. A naive
+        # self-join on comp shuffles the whole table keyed by the
+        # giant component's label — maximal key skew. Instead the
+        # parent mapping is restricted to the DISTINCT label values
+        # (they collapse geometrically) and broadcast, so each hop is
+        # one narrow V-scan: no shuffle, no skewed key.
+        dcomp, dseen = rnd.checkpoint(
+            new_labels.select(F.col("comp").alias("pid")).distinct(),
+            distinct=F.count(F.lit(1)),
+        )
+        if dseen["distinct"] > _PJ_BROADCAST_LIMIT:
+            # labels haven't consolidated yet — plain propagation
             # continues and PJ kicks in once distinct labels fit a
             # broadcast (power-law graphs get there in 1-2 rounds).
-            dcomp.unpersist()
-        for ck in round_cks[:-1]:
-            ck.unpersist()
-        # next frontier = changed vertices (applyModified contract). The
-        # degree sum only decides sparse-vs-dense when the frontier SIZE
-        # alone is below the Ligra threshold; a big frontier is dense
-        # regardless.
-        frontier_size = seen["changed"]
-        if frontier_size > num_edges / 20:
-            frontier_deg_sum = num_edges  # dense either way
-        else:
-            frontier_deg_sum = seen["changed_deg"]
-        if store is not None:
-            store.write(
-                new_labels.select("id", "comp"),
-                i,
-                {
-                    "kernel": "cc",
-                    "elapsed_sec": time.time() - t0,
-                    "frontier_size": frontier_size,
-                    "direction": direction,
-                },
+            return new_labels
+        for hop in range(2):
+            if hop:
+                new_labels = rnd.checkpoint(new_labels)
+            parent = F.broadcast(
+                new_labels.join(
+                    F.broadcast(dcomp),
+                    new_labels["id"] == dcomp["pid"],
+                ).select("pid", F.col("comp").alias("pcomp"))
             )
-        # release the superseded V-sized checkpoint (bounded memory over
-        # O(log n) rounds; same discipline as kernels/pagerank.py)
-        prev_ck.unpersist()
-        prev_ck = new_labels
-        labels = new_labels.select("id", "comp", "deg")
-        frontier = new_labels.filter(changed).select("id")
-        if metrics_out is not None:
-            metrics_out["iterations"] = i + 1 - start_iter
-            metrics_out["final_frontier"] = frontier_size
-        if frontier_size == 0:
-            break
+            left = new_labels.alias("l")
+            new_labels = left.join(
+                parent, F.col("l.comp") == F.col("pid"), "left"
+            ).select(
+                F.col("l.id").alias("id"),
+                F.coalesce(F.col("pcomp"), F.col("l.comp")).alias("comp"),
+                F.col("l.old_comp").alias("old_comp"),
+                F.col("l.deg").alias("deg"),
+            )
+        return new_labels
+
+    log: list = []
+    labels = superstep(
+        labels, step,
+        rounds=max_iters, start=start_iter, changed=changed, log=log,
+        changed_deg=F.sum(F.when(changed, F.col("deg"))),
+        materialize=None if store is None else (
+            lambda df, rnd, seen: store.write(df, rnd.index, {
+                "kernel": "cc",
+                "frontier_size": lambda: seen["changed"],
+                "direction": rnd.direction,
+            })
+        ),
+    )
+    if metrics_out is not None and log:
+        metrics_out["iterations"] = len(log)
+        metrics_out["final_frontier"] = log[-1]["changed"]
 
     if own_cache:
         g.unpersist()
-    return labels.select("id", "comp")
+    return bind_release(labels.select("id", "comp"), labels)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, superstep
 from graphit_spark.plans.fusion import fused_gather
 
 
@@ -38,15 +38,9 @@ def fused_pr_eigenvector(
     n = graph.num_vertices
     beta = (1.0 - damp) / n
 
-    state = (
-        graph.out_degrees()
-        .withColumn("rank", F.lit(1.0 / n))
-        .withColumn("ec", F.lit(1.0 / n))
-        .transform(fresh_checkpoint)
-    )
     hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
-    prev = state
-    for _ in range(rounds):
+
+    def step(state: DataFrame, rnd) -> DataFrame:
         gathered = fused_gather(
             graph.edges,
             state,
@@ -56,22 +50,23 @@ def fused_pr_eigenvector(
             },
             hint=hint,
         )
-        state = (
-            state.join(gathered, "id", "left")
-            .select(
-                "id",
-                "out_degree",
-                (
-                    F.lit(beta)
-                    + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
-                ).alias("rank"),
-                F.coalesce("ec_acc", F.lit(0.0)).alias("ec"),
-            )
-            .transform(fresh_checkpoint)
+        return state.join(gathered, "id", "left").select(
+            "id",
+            "out_degree",
+            (
+                F.lit(beta)
+                + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
+            ).alias("rank"),
+            F.coalesce("ec_acc", F.lit(0.0)).alias("ec"),
         )
-        prev.unpersist()
-        prev = state
-    result = state.select("id", "rank", "ec")
+
+    state = superstep(
+        graph.out_degrees()
+        .withColumn("rank", F.lit(1.0 / n))
+        .withColumn("ec", F.lit(1.0 / n)),
+        step, rounds=rounds,
+    )
+    result = bind_release(state.select("id", "rank", "ec"), state)
     if own_cache:
         graph.unpersist()
     return result
@@ -127,14 +122,9 @@ def fused_trust_spam(
         )
         .select("id", F.coalesce("out_w", F.lit(0)).alias("out_w"))
     )
-    state = (
-        wdeg.withColumn("rank", F.lit(1.0 / n))
-        .withColumn("trust", seed)
-        .transform(fresh_checkpoint)
-    )
     hint = "shuffle_hash" if n > 500_000 else None
-    prev = state
-    for _ in range(rounds):
+
+    def step(state: DataFrame, rnd) -> DataFrame:
         gathered = fused_gather(
             graph.edges,
             state.filter(F.col("out_w") > 0),
@@ -144,31 +134,34 @@ def fused_trust_spam(
             },
             hint=hint,
         )
-        state = (
-            state.join(gathered, "id", "left")
-            .select(
-                "id",
-                "out_w",
-                (
-                    F.lit(pr_beta)
-                    + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
-                ).alias("rank"),
-                (
-                    F.lit(tr_beta) * seed
-                    + F.lit(damp) * F.coalesce("tr_acc", F.lit(0.0))
-                ).alias("trust"),
-            )
-            .transform(fresh_checkpoint)
+        return state.join(gathered, "id", "left").select(
+            "id",
+            "out_w",
+            (
+                F.lit(pr_beta)
+                + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
+            ).alias("rank"),
+            (
+                F.lit(tr_beta) * seed
+                + F.lit(damp) * F.coalesce("tr_acc", F.lit(0.0))
+            ).alias("trust"),
         )
-        prev.unpersist()
-        prev = state
-    result = state.select(
-        "id",
-        "rank",
-        "trust",
-        ((F.col("rank") - F.col("trust")) / F.col("rank")).alias(
-            "spam_mass"
+
+    state = superstep(
+        wdeg.withColumn("rank", F.lit(1.0 / n))
+        .withColumn("trust", seed),
+        step, rounds=rounds,
+    )
+    result = bind_release(
+        state.select(
+            "id",
+            "rank",
+            "trust",
+            ((F.col("rank") - F.col("trust")) / F.col("rank")).alias(
+                "spam_mass"
+            ),
         ),
+        state,
     )
     if own_cache:
         graph.unpersist()

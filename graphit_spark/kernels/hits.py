@@ -21,8 +21,7 @@ Spark plan per round: two gather joins (forward for authorities, the
 zero-cost transpose direction for hubs) each followed by a map-side-
 combined groupBy sum, two V-sized scalar aggregates for the
 normalizers (one driver action each, like PageRank's error norm —
-never an O(V) collect), checkpoint truncation, superseded state
-released.
+never an O(V) collect), one checkpoint.
 """
 
 from __future__ import annotations
@@ -30,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import superstep
 
 
 def hits(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
@@ -40,12 +39,9 @@ def hits(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
     division by zero; the SQL twin does the same)."""
     own_cache = graph.ensure_persisted()
     verts = graph.vertices()
-    state = verts.select(
-        "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-    ).transform(fresh_checkpoint)
-    prev = state
-    for _ in range(rounds):
-        auth_raw = (
+
+    def step(state: DataFrame, rnd) -> DataFrame:
+        auth_raw = rnd.checkpoint(
             verts.join(
                 graph.edges.join(
                     state.select(F.col("id").alias("src"), "hub"), "src"
@@ -54,13 +50,11 @@ def hits(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
                 .agg(F.sum("hub").alias("a")),
                 "id",
                 "left",
-            )
-            .select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
-            .transform(fresh_checkpoint)
+            ).select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
         )
         s_a = auth_raw.agg(F.sum("a")).collect()[0][0] or 1.0
         auth = auth_raw.select("id", (F.col("a") / F.lit(s_a)).alias("auth"))
-        hub_raw = (
+        hub_raw = rnd.checkpoint(
             verts.join(
                 graph.edges.join(
                     auth.select(F.col("id").alias("dst"), "auth"), "dst"
@@ -69,22 +63,21 @@ def hits(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
                 .agg(F.sum("auth").alias("h")),
                 "id",
                 "left",
-            )
-            .select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
-            .transform(fresh_checkpoint)
+            ).select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
         )
         s_h = hub_raw.agg(F.sum("h")).collect()[0][0] or 1.0
-        new_state = (
+        return (
             hub_raw.select("id", (F.col("h") / F.lit(s_h)).alias("hub"))
             .join(auth, "id")
             .select("id", "hub", "auth")
-            .transform(fresh_checkpoint)
         )
-        prev.unpersist()
-        auth_raw.unpersist()
-        hub_raw.unpersist()
-        prev = new_state
-        state = new_state
+
+    state = superstep(
+        verts.select(
+            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+        ),
+        step, rounds=rounds,
+    )
     if own_cache:
         graph.unpersist()
     return state

@@ -31,8 +31,7 @@ Spark plan (per superstep, the only loop):
     per register, then the estimator (exact-integer harmonic sum as in
     functions/sketch.py, same linear-counting branch) and the
     telescoping harmonic update — all whole-stage-codegen expressions.
-  - localCheckpoint(eager) truncates lineage; superseded checkpoints
-    are released (the pagerank discipline).
+  - one localCheckpoint(eager) per round truncates lineage.
 
 SYSTOLIC gather (Boldi-Vigna §5's "systolic computation", which is
 exactly the reference's applyModified change-tracking, SURVEY §2.3):
@@ -68,7 +67,7 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint, observe
+from graphit_spark.plans.state import bind_release, observe, superstep
 from graphit_spark.functions.sketch import HASH_BITS, _alpha_m2
 
 
@@ -191,10 +190,24 @@ def _grow_one_hop(
     )
 
 
-def _changed() -> Column:
-    """Sketches that grew this round, observed on the round's checkpoint
-    job: the systolic stopping rule needs no action of its own."""
-    return F.count(F.when(F.col("chg"), 1))
+def _grow(
+    graph: LinkGraph, state: DataFrame, p: int, rounds: int,
+    join_strategy: str | None, systolic: bool, log: list | None = None,
+    **aggs: Column,
+) -> DataFrame:
+    """``rounds`` HyperBall supersteps from ``state``. With ``systolic``,
+    the sketches that grew are counted on each round's checkpoint job,
+    and the loop stops once none did — every remaining round adds
+    exactly 0."""
+    edges = graph.edges.select("src", "dst")
+    return superstep(
+        state,
+        lambda st, rnd: _grow_one_hop(
+            st, edges, p, rnd.index, join_strategy, systolic
+        ),
+        start=1, rounds=rounds + 1, log=log,
+        changed=F.col("chg") if systolic else None, **aggs,
+    )
 
 
 def _pick_join_strategy(
@@ -225,25 +238,17 @@ def hyperball_harmonic(
     tests.
     """
     own_cache = graph.ensure_persisted()
-    edges = graph.edges.select("src", "dst")
-    join_strategy = _pick_join_strategy(graph, join_strategy)
-    state = _init_state(graph, p).transform(fresh_checkpoint)
-    prev = state
-    for r in range(1, rounds + 1):
-        state, seen = observe(
-            _grow_one_hop(state, edges, p, r, join_strategy, systolic),
-            changed=_changed(),
-        )
-        state = state.transform(fresh_checkpoint)
-        prev.unpersist()
-        prev = state
-        if systolic and seen["changed"] == 0:
-            break  # every remaining round adds exactly 0
-
-    out = state.select(
-        "id",
-        F.col("est").alias("ball"),
-        F.col("harm").alias("harmonic"),
+    state = _grow(
+        graph, _init_state(graph, p), p, rounds,
+        _pick_join_strategy(graph, join_strategy), systolic,
+    )
+    out = bind_release(
+        state.select(
+            "id",
+            F.col("est").alias("ball"),
+            F.col("harm").alias("harmonic"),
+        ),
+        state,
     )
     if own_cache:
         graph.unpersist()
@@ -277,39 +282,23 @@ def neighborhood_function(
     aggregate (the pagerank error-norm discipline); the per-round state
     handling is exactly hyperball_harmonic's."""
     own_cache = graph.ensure_persisted()
-    edges = graph.edges.select("src", "dst")
-    join_strategy = _pick_join_strategy(graph, join_strategy)
     scale = F.lit(float(10**NF_SCALE))
     spark = graph.edges.sparkSession
-
-    def checkpoint_round(st: DataFrame):
-        """Checkpoint a state, observing its scaled est sum and how
-        many sketches changed on the checkpoint job itself."""
-        st, seen = observe(
-            st, s=F.sum(F.floor(F.col("est") * scale)), changed=_changed()
-        )
-        return st.transform(fresh_checkpoint), seen
-
-    state, seen = checkpoint_round(_init_state(graph, p))
-    sums = [(0, int(seen["s"]))]
-    prev = state
-    for r in range(1, rounds + 1):
-        state, seen = checkpoint_round(
-            _grow_one_hop(state, edges, p, r, join_strategy, systolic)
-        )
-        prev.unpersist()
-        prev = state
-        sums.append((r, int(seen["s"])))
-        if systolic and seen["changed"] == 0:
-            # N(r) is at its fixpoint: every remaining round repeats
-            # the same integer sum
-            fix = sums[-1][1]
-            sums.extend((q, fix) for q in range(r + 1, rounds + 1))
-            break
+    est_sum = F.sum(F.floor(F.col("est") * scale))
+    state, seen = observe(_init_state(graph, p), s=est_sum)
+    log: list = []
+    state = _grow(
+        graph, state, p, rounds,
+        _pick_join_strategy(graph, join_strategy), systolic, log, s=est_sum,
+    )
+    sums = [int(s["s"]) for s in [seen, *log]]
+    # past an early stop N(r) is at its fixpoint: every remaining round
+    # repeats the same integer sum
+    sums += sums[-1:] * (rounds + 1 - len(sums))
     state.unpersist()
     if own_cache:
         graph.unpersist()
-    out = spark.createDataFrame(sums, "r INT, pairs_scaled LONG")
+    out = spark.createDataFrame(list(enumerate(sums)), "r INT, pairs_scaled LONG")
     return out.select(
         "r", (F.col("pairs_scaled") / scale).alias("pairs")
     )

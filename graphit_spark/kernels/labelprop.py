@@ -22,10 +22,9 @@ window over the full vertex set needed).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import superstep
 
 
 def label_propagation(
@@ -44,8 +43,6 @@ def label_propagation(
     only the remaining rounds — LPA is a fixed-round synchronous
     recurrence, so replaying from round k is byte-identical to an
     uninterrupted run (integer argmax, no float wobble)."""
-    import time as _time
-
     g = graph.symmetrize() if symmetrize else graph
     own_cache = g.ensure_persisted()
 
@@ -53,14 +50,10 @@ def label_propagation(
     if resume and store is not None and store.latest() is not None:
         start_round = store.latest() + 1
         labels = store.read(g.spark, store.latest()).select("id", "label")
-        labels = labels.transform(fresh_checkpoint)
     else:
         labels = graph.vertices().select("id", F.col("id").alias("label"))
-        labels = labels.transform(fresh_checkpoint)
-    prev = labels  # superseded checkpoints released per round
 
-    for it in range(start_round, rounds):
-        t0 = _time.time()
+    def step(labels: DataFrame, rnd) -> DataFrame:
         counts = (
             g.edges.join(
                 labels.select(F.col("id").alias("src"), "label"), "src"
@@ -74,21 +67,17 @@ def label_propagation(
                 "best_label"
             )
         )
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("best_label", "label").alias("label"))
-            .transform(fresh_checkpoint)
+        return labels.join(best, "id", "left").select(
+            "id", F.coalesce("best_label", "label").alias("label")
         )
-        labels = new_labels
-        if store is not None:
-            store.write(
-                labels,
-                it,
-                {"kernel": "lpa", "elapsed_sec": _time.time() - t0},
-            )
-        prev.unpersist()
-        prev = labels
 
+    labels = superstep(
+        labels, step,
+        rounds=rounds, start=start_round,
+        materialize=None if store is None else (
+            lambda df, rnd, seen: store.write(df, rnd.index, {"kernel": "lpa"})
+        ),
+    )
     if own_cache:
         g.unpersist()
     return labels
@@ -120,11 +109,7 @@ def weighted_label_propagation(
     g = graph.symmetrize() if symmetrize else graph
     own_cache = g.ensure_persisted()
 
-    labels = graph.vertices().select("id", F.col("id").alias("label"))
-    labels = labels.transform(fresh_checkpoint)
-    prev = labels  # superseded checkpoints released per round
-
-    for _ in range(rounds):
+    def step(labels: DataFrame, rnd) -> DataFrame:
         votes = (
             g.edges.join(
                 labels.select(F.col("id").alias("src"), "label"), "src"
@@ -138,15 +123,15 @@ def weighted_label_propagation(
                 F.struct(F.col("w"), (-F.col("label")).alias("neg")),
             ).alias("best_label")
         )
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("best_label", "label").alias("label"))
-            .transform(fresh_checkpoint)
+        return labels.join(best, "id", "left").select(
+            "id", F.coalesce("best_label", "label").alias("label")
         )
-        labels = new_labels
-        prev.unpersist()
-        prev = labels
 
+    labels = superstep(
+        graph.vertices()
+        .select("id", F.col("id").alias("label")),
+        step, rounds=rounds,
+    )
     if own_cache:
         g.unpersist()
     return labels
@@ -186,14 +171,7 @@ def label_spreading(
         F.col("id").cast("long").alias("id"),
         F.col("label").cast("long").alias("seed_label"),
     )
-    labels = (
-        graph.vertices()
-        .join(seed_map, "id", "left")
-        .select("id", F.col("seed_label").alias("label"))
-        .transform(fresh_checkpoint)
-    )
-    prev = labels
-    for _ in range(rounds):
+    def step(labels: DataFrame, rnd) -> DataFrame:
         counts = (
             g.edges.join(
                 labels.filter(F.col("label").isNotNull()).select(
@@ -210,7 +188,7 @@ def label_spreading(
                 F.struct(F.col("cnt"), (-F.col("label")).alias("neg")),
             ).alias("best_label")
         )
-        labels = (
+        return (
             labels.join(seed_map, "id", "left")
             .join(best, "id", "left")
             .select(
@@ -219,11 +197,14 @@ def label_spreading(
                     "label"
                 ),
             )
-            .transform(fresh_checkpoint)
         )
-        prev.unpersist()
-        prev = labels
 
+    labels = superstep(
+        graph.vertices()
+        .join(seed_map, "id", "left")
+        .select("id", F.col("seed_label").alias("label")),
+        step, rounds=rounds,
+    )
     if own_cache:
         g.unpersist()
     return labels

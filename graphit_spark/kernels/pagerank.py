@@ -28,21 +28,11 @@ no follow-up driver action.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint, observe
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 from graphit_spark.checkpoint import SnapshotStore
-
-
-def _truncate(df: DataFrame, store: SnapshotStore | None, iteration: int,
-              metrics: dict | None = None) -> DataFrame:
-    if store is not None:
-        return store.write(df, iteration, metrics)
-    return df.transform(fresh_checkpoint)
 
 
 def pagerank(
@@ -101,8 +91,6 @@ def pagerank(
         )
     else:
         state = graph.out_degrees().withColumn("rank", F.lit(1.0 / n))
-    if start_iter == 0:  # a snapshot read has no lineage to truncate
-        state = state.transform(fresh_checkpoint)
 
     if use_adjacency:
         adj = graph.adjacency()
@@ -120,7 +108,7 @@ def pagerank(
     else:
         hint = join_strategy
 
-    for i in range(start_iter, max_iters):
+    def step(state: DataFrame, rnd) -> DataFrame:
         contrib_state = state.filter(F.col("out_degree") > 0).select(
             F.col("id").alias("src"),
             (F.col("rank") / F.col("out_degree")).alias("contrib"),
@@ -141,35 +129,37 @@ def pagerank(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("contrib").alias("gathered"))
             )
-        new_state, seen = observe(
+        # the error norm reads the old rank, which the state drops
+        return rnd.observe(
             state.join(sums, "id", "left").select(
                 "id",
                 "out_degree",
                 F.col("rank").alias("old_rank"),
                 (F.lit(beta) + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))).alias("rank"),
-            ),
-            l1_error=F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
-        )
-        # Materialize once: the checkpoint (or the snapshot write) is the
-        # round's only job, and the error norm is summed inside it — the
-        # PR+error fusion GraphIt gets from fuseApplyFunctions.
-        new_state = _truncate(
-            new_state.select("id", "out_degree", "rank"), store, i,
-            {"kernel": "pagerank", "l1_error": seen},
-        )
-        err = seen["l1_error"]
-        # the superseded state's blocks are dead — release them so long
-        # runs don't accumulate V-sized cached RDDs (with a store this
-        # frees the starting checkpoint; a Parquet read holds none)
-        state.unpersist()
-        state = new_state
-        if metrics_out is not None:
-            metrics_out["iterations"] = i + 1 - start_iter
-            metrics_out["final_err"] = err
-        if tol is not None and err <= tol:
-            break
+            )
+        ).select("id", "out_degree", "rank")
 
-    result = state.select("id", "rank")
+    # Materialize once: the checkpoint (or the snapshot write) is the
+    # round's only job, and the error norm is summed inside it — the
+    # PR+error fusion GraphIt gets from fuseApplyFunctions.
+    log: list = []
+    state = superstep(
+        state, step, rounds=max_iters, start=start_iter, log=log,
+        # a snapshot read has no lineage to truncate
+        checkpoint_start=start_iter == 0,
+        l1_error=F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
+        until=None if tol is None else (lambda seen: seen["l1_error"] <= tol),
+        materialize=None if store is None else (
+            lambda df, rnd, seen: store.write(df, rnd.index, {
+                "kernel": "pagerank", "l1_error": lambda: seen["l1_error"],
+            })
+        ),
+    )
+    if metrics_out is not None and log:
+        metrics_out["iterations"] = len(log)
+        metrics_out["final_err"] = log[-1]["l1_error"]
+
+    result = bind_release(state.select("id", "rank"), state)
     if own_cache:
         graph.unpersist()
     return result
@@ -208,12 +198,9 @@ def weighted_pagerank(
         )
         .select("id", F.coalesce("out_wdeg", F.lit(0)).alias("out_wdeg"))
     )
-    state = wdeg.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(
-        eager=True
-    )
     hint = "shuffle_hash" if n > 500_000 else None
-    prev = state
-    for _ in range(max_iters):
+
+    def step(state: DataFrame, rnd) -> DataFrame:
         unit = state.filter(F.col("out_wdeg") > 0).select(
             F.col("id").alias("src"),
             (F.col("rank") / F.col("out_wdeg")).alias("unit"),
@@ -225,21 +212,20 @@ def weighted_pagerank(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(F.col("unit") * F.col("weight")).alias("gathered"))
         )
-        state = (
-            state.join(sums, "id", "left")
-            .select(
-                "id",
-                "out_wdeg",
-                (
-                    F.lit(beta)
-                    + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .transform(fresh_checkpoint)
+        return state.join(sums, "id", "left").select(
+            "id",
+            "out_wdeg",
+            (
+                F.lit(beta)
+                + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
+            ).alias("rank"),
         )
-        prev.unpersist()
-        prev = state
-    result = state.select("id", "rank")
+
+    state = superstep(
+        wdeg.withColumn("rank", F.lit(1.0 / n)),
+        step, rounds=max_iters,
+    )
+    result = bind_release(state.select("id", "rank"), state)
     if own_cache:
         graph.unpersist()
     return result
@@ -253,53 +239,14 @@ def personalized_pagerank(
     max_iters: int = 10,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass returns to `source` alone
-    (rank0 = e_source; rank' = (1-damp)·e_source + damp·gather). Same
-    superstep plan as pagerank — one shuffle-hash join + groupBy-sum per
-    iteration, lineage truncated — and, like the reference's PR, no
-    dangling redistribution. The score vector concentrates around the
-    seed, which is exactly what sweep_cut consumes for local clustering
-    (reference intrinsics.h:358-410 serialSweepCut's intended input)."""
-    own_cache = graph.ensure_persisted()
-    beta = 1.0 - damp
-    seed = F.when(F.col("id") == source, F.lit(1.0)).otherwise(F.lit(0.0))
-
-    state = graph.out_degrees().withColumn("rank", seed)
-    state = state.transform(fresh_checkpoint)
-    big_v = graph.num_vertices > 500_000
-    prev_ck: DataFrame = state
-
-    for _ in range(max_iters):
-        contrib_state = state.filter(F.col("out_degree") > 0).select(
-            F.col("id").alias("src"),
-            (F.col("rank") / F.col("out_degree")).alias("contrib"),
-        )
-        if big_v:
-            contrib_state = contrib_state.hint("shuffle_hash")
-        sums = (
-            graph.edges.join(contrib_state, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("gathered"))
-        )
-        new_state = (
-            state.join(sums, "id", "left")
-            .select(
-                "id",
-                "out_degree",
-                (
-                    F.lit(beta) * seed
-                    + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .transform(fresh_checkpoint)
-        )
-        prev_ck.unpersist()
-        prev_ck = new_state
-        state = new_state
-
-    result = state.select("id", "rank")
-    if own_cache:
-        graph.unpersist()
-    return result
+    (rank0 = e_source; rank' = (1-damp)·e_source + damp·gather) — the
+    single-seed `trustrank`, with the same per-row arithmetic and plan,
+    and like the reference's PR no dangling redistribution. The score
+    vector concentrates around the seed, which is exactly what sweep_cut
+    consumes for local clustering (reference intrinsics.h:358-410
+    serialSweepCut's intended input)."""
+    trust = trustrank(graph, [source], damp=damp, max_iters=max_iters)
+    return bind_release(trust.withColumnRenamed("trust", "rank"), trust)
 
 
 def trustrank(
@@ -315,8 +262,7 @@ def trustrank(
     seed neighborhood never reaches keep ≈0 trust even with high raw
     PageRank (the web-spam demotion signal).
 
-    Generalizes `personalized_pagerank` (single seed) to a seed set,
-    with the same contract: rank0 = the seed distribution (1/|S| on
+    `personalized_pagerank` is its single-seed case. The contract: rank0 = the seed distribution (1/|S| on
     each seed), rank' = (1-damp)·seed + damp·gather, no dangling
     redistribution. On a weighted graph (e.g. the host rollup, weight
     = page-level link count) contributions flow weight-proportionally
@@ -325,8 +271,8 @@ def trustrank(
     Plan per superstep — identical to pagerank's: one V-sized
     contribution projection, edges ⋈ state equi-join on src
     (shuffle-hash hinted at scale), map-side-combined groupBy(dst)
-    sum, V-sized left join back, localCheckpoint truncation with the
-    superseded snapshot released. The seed set ships as a literal IN
+    sum, V-sized left join back, one checkpoint. The seed set ships as
+    a literal IN
     list (seed sets are human-curated: hundreds, not millions).
     """
     if not seeds:
@@ -354,10 +300,9 @@ def trustrank(
         )
     else:
         deg = graph.out_degrees().withColumnRenamed("out_degree", "out_w")
-    state = deg.withColumn("rank", seed).transform(fresh_checkpoint)
     hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
-    prev = state
-    for _ in range(max_iters):
+
+    def step(state: DataFrame, rnd) -> DataFrame:
         unit = state.filter(F.col("out_w") > 0).select(
             F.col("id").alias("src"),
             (F.col("rank") / F.col("out_w")).alias("unit"),
@@ -374,21 +319,22 @@ def trustrank(
             .groupBy(F.col("dst").alias("id"))
             .agg(gathered.alias("gathered"))
         )
-        state = (
-            state.join(sums, "id", "left")
-            .select(
-                "id",
-                "out_w",
-                (
-                    F.lit(beta) * seed
-                    + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .transform(fresh_checkpoint)
+        return state.join(sums, "id", "left").select(
+            "id",
+            "out_w",
+            (
+                F.lit(beta) * seed
+                + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
+            ).alias("rank"),
         )
-        prev.unpersist()
-        prev = state
-    result = state.select("id", F.col("rank").alias("trust"))
+
+    state = superstep(
+        deg.withColumn("rank", seed),
+        step, rounds=max_iters,
+    )
+    result = bind_release(
+        state.select("id", F.col("rank").alias("trust")), state
+    )
     if own_cache:
         graph.unpersist()
     return result
@@ -414,17 +360,7 @@ def pagerank_delta(
     beta = (1.0 - damp) / n
     one_over_n = 1.0 / n
 
-    # state: id, out_degree, cur_rank, delta, in_frontier
-    state = (
-        graph.out_degrees()
-        .withColumn("cur_rank", F.lit(0.0))
-        .withColumn("delta", F.lit(one_over_n))
-        .withColumn("in_frontier", F.lit(True))
-    ).transform(fresh_checkpoint)
-    prev_ck: DataFrame = state
-
-    for i in range(1, max_iters + 1):
-        t0 = time.time()
+    def step(state: DataFrame, rnd) -> DataFrame:
         contribs = state.filter(
             F.col("in_frontier") & (F.col("out_degree") > 0)
         ).select(
@@ -439,7 +375,7 @@ def pagerank_delta(
         joined = state.join(sums, "id", "left").withColumn(
             "ngh_sum", F.coalesce("ngh_sum", F.lit(0.0))
         )
-        if i == 1:
+        if rnd.index == 1:
             # delta = damp*ngh_sum + beta; cur += delta; delta -= 1/n
             joined = (
                 joined.withColumn("new_delta0", F.lit(damp) * F.col("ngh_sum") + F.lit(beta))
@@ -450,7 +386,7 @@ def pagerank_delta(
             joined = joined.withColumn(
                 "new_delta", F.col("ngh_sum") * F.lit(damp)
             ).withColumn("new_rank", F.col("cur_rank") + F.col("new_delta"))
-        new_state = joined.select(
+        return joined.select(
             "id",
             "out_degree",
             F.col("new_rank").alias("cur_rank"),
@@ -459,20 +395,26 @@ def pagerank_delta(
                 "in_frontier"
             ),
         )
-        new_state = _truncate(
-            new_state, store, i, {"kernel": "pagerank_delta",
-                                  "elapsed_sec": time.time() - t0},
-        )
-        # release the superseded round's checkpointed blocks (same cache
-        # discipline as pagerank/personalized_pagerank) so a long run's
-        # cached-RDD footprint stays at one V-sized state, not O(iters)
-        prev_ck.unpersist()
-        prev_ck = new_state
-        state = new_state
+
+    # state: id, out_degree, cur_rank, delta, in_frontier
+    state = superstep(
+        graph.out_degrees()
+        .withColumn("cur_rank", F.lit(0.0))
+        .withColumn("delta", F.lit(one_over_n))
+        .withColumn("in_frontier", F.lit(True)),
+        step, start=1, rounds=max_iters + 1,
+        materialize=None if store is None else (
+            lambda df, rnd, seen: store.write(
+                df, rnd.index, {"kernel": "pagerank_delta"}
+            )
+        ),
+    )
 
     if own_cache_d:
         graph.unpersist()
-    return state.select("id", F.col("cur_rank").alias("rank"))
+    return bind_release(
+        state.select("id", F.col("cur_rank").alias("rank")), state
+    )
 
 
 def personalized_pagerank_batch(
@@ -502,7 +444,7 @@ def personalized_pagerank_batch(
     Scale shape: per round one edges⋈state equi-join on src (state is
     seed-replicated only where mass is nonzero) + one map-side-combined
     groupBy(seed, dst) + one full-outer join against the K-row seed
-    base. Lineage truncated per round, superseded checkpoints released.
+    base.
     """
     if not sources:
         raise ValueError("sources must be non-empty")
@@ -517,10 +459,9 @@ def personalized_pagerank_batch(
     deg_ck = fresh_checkpoint(
         graph.out_degrees().filter(F.col("out_degree") > 0)
     )
-    state = seeds_df.withColumn("rank", F.lit(1.0)).transform(fresh_checkpoint)
-    prev_ck = state
     base = seeds_df.withColumn("base", F.lit(beta))
-    for _ in range(max_iters):
+
+    def step(state: DataFrame, rnd) -> DataFrame:
         contrib = state.join(deg_ck, "id").select(
             "seed",
             F.col("id").alias("src"),
@@ -531,25 +472,23 @@ def personalized_pagerank_batch(
             .groupBy("seed", F.col("dst").alias("id"))
             .agg(F.sum("contrib").alias("gathered"))
         )
-        new_state = (
-            gather.join(base, ["seed", "id"], "full_outer")
-            .select(
-                "seed",
-                "id",
-                (
-                    F.lit(beta)
-                    * F.when(F.col("base").isNotNull(), F.lit(1.0)).otherwise(
-                        F.lit(0.0)
-                    )
-                    + F.lit(damp)
-                    * F.coalesce(F.col("gathered"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .transform(fresh_checkpoint)
+        return gather.join(base, ["seed", "id"], "full_outer").select(
+            "seed",
+            "id",
+            (
+                F.lit(beta)
+                * F.when(F.col("base").isNotNull(), F.lit(1.0)).otherwise(
+                    F.lit(0.0)
+                )
+                + F.lit(damp)
+                * F.coalesce(F.col("gathered"), F.lit(0.0))
+            ).alias("rank"),
         )
-        prev_ck.unpersist()
-        prev_ck = new_state
-        state = new_state
+
+    state = superstep(
+        seeds_df.withColumn("rank", F.lit(1.0)),
+        step, rounds=max_iters,
+    )
     deg_ck.unpersist()
     if own_cache:
         graph.unpersist()

@@ -15,10 +15,9 @@ distance fixpoints are exact and verifiable.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, superstep
 from graphit_spark.plans.traversal import choose_direction
 
 
@@ -39,8 +38,6 @@ def _min_distance_fixpoint(
     snapshot with a conservative frontier (every reached vertex
     re-relaxes once; min= is idempotent, so re-running a completed
     round is a no-change round, never a wrong one)."""
-    import time as _time
-
     own_cache = graph.ensure_persisted()
     num_edges = graph.num_edges
     inf = None  # represented as NULL = unreached
@@ -48,9 +45,6 @@ def _min_distance_fixpoint(
     if resume and store is not None and store.latest() is not None:
         start_iter = store.latest() + 1
         dist = store.read(graph.spark, store.latest()).select("id", "dist")
-        dist = dist.transform(fresh_checkpoint)
-        frontier = dist.filter(F.col("dist").isNotNull()).select("id")
-        frontier_size, frontier_deg = frontier.count(), num_edges
     else:
         dist = graph.vertices().select(
             "id",
@@ -58,20 +52,38 @@ def _min_distance_fixpoint(
                 F.lit(inf).cast("long")
             ).alias("dist"),
         )
-        dist = dist.transform(fresh_checkpoint)
-        frontier = dist.filter(F.col("dist").isNotNull()).select("id")
-        frontier_size, frontier_deg = 1, 0
-    prev_ck = dist  # superseded checkpoints are released each round
-    rounds_run = 0
+    changed = F.col("dist").isNotNull() & (
+        F.col("old").isNull() | (F.col("dist") < F.col("old"))
+    )
 
-    for it in range(start_iter, max_iters):
-        t0 = _time.time()
-        direction = choose_direction(
+    def step(state: DataFrame, rnd) -> DataFrame:
+        dist = state.select("id", "dist")
+        if rnd.seen is None:
+            frontier = dist.filter(F.col("dist").isNotNull()).select("id")
+            if start_iter:
+                frontier_size, frontier_deg = frontier.count(), num_edges
+            else:
+                frontier_size, frontier_deg = 1, 0
+        else:
+            frontier = state.filter(changed).select("id")
+            # degree sum only matters below the Ligra size threshold —
+            # the V-sized degree join is skipped on dense rounds (same
+            # rule as kernels/components.py)
+            frontier_size = rnd.seen["changed"]
+            if frontier_size > num_edges / threshold_fraction:
+                frontier_deg = num_edges
+            else:
+                frontier_deg = int(
+                    frontier.join(graph.out_degrees(), "id", "left")
+                    .agg(F.coalesce(F.sum("out_degree"), F.lit(0)).alias("d"))
+                    .collect()[0]["d"]
+                )
+        rnd.direction = choose_direction(
             frontier_size, frontier_deg, num_edges, threshold_fraction
         )
         f_src = frontier.select(F.col("id").alias("src"))
         active = graph.edges.join(
-            F.broadcast(f_src) if direction == "sparse" else f_src,
+            F.broadcast(f_src) if rnd.direction == "sparse" else f_src,
             "src",
             "left_semi",
         )
@@ -86,7 +98,7 @@ def _min_distance_fixpoint(
             .groupBy("id")
             .agg(F.min("cand").alias("cand"))
         )
-        new_dist = (
+        return (
             dist.join(cand, "id", "left")
             .select(
                 "id",
@@ -101,48 +113,26 @@ def _min_distance_fixpoint(
                 F.when(F.col("nd") < 2**62, F.col("nd")).alias("dist"),
                 "old",
             )
-            .transform(fresh_checkpoint)
         )
-        changed = new_dist.filter(
-            F.col("dist").isNotNull()
-            & (F.col("old").isNull() | (F.col("dist") < F.col("old")))
-        ).select("id")
-        # degree sum only matters below the Ligra size threshold — the
-        # V-sized degree join is skipped on dense rounds (same rule as
-        # kernels/components.py)
-        frontier_size = changed.count()
-        if frontier_size > num_edges / threshold_fraction:
-            frontier_deg = num_edges
-        else:
-            frontier_deg = int(
-                changed.join(graph.out_degrees(), "id", "left")
-                .agg(F.coalesce(F.sum("out_degree"), F.lit(0)).alias("d"))
-                .collect()[0]["d"]
-            )
-        dist = new_dist.select("id", "dist")
-        frontier = changed
-        rounds_run += 1
-        if store is not None:
-            store.write(
-                dist,
-                it,
-                {
-                    "kernel": kernel_name,
-                    "elapsed_sec": _time.time() - t0,
-                    "frontier_size": frontier_size,
-                    "direction": direction,
-                },
-            )
-        prev_ck.unpersist()
-        prev_ck = new_dist
-        if frontier_size == 0:
-            break
+
+    log: list = []
+    state = superstep(
+        dist, step,
+        rounds=max_iters, start=start_iter, changed=changed, log=log,
+        materialize=None if store is None else (
+            lambda df, rnd, seen: store.write(df, rnd.index, {
+                "kernel": kernel_name,
+                "frontier_size": lambda: seen["changed"],
+                "direction": rnd.direction,
+            })
+        ),
+    )
     if metrics_out is not None:
-        metrics_out["iterations"] = rounds_run
-        metrics_out["final_frontier"] = frontier_size
+        metrics_out["iterations"] = len(log)
+        metrics_out["final_frontier"] = log[-1]["changed"] if log else 0
     if own_cache:
         graph.unpersist()  # dist is checkpointed; cache no longer needed
-    return dist
+    return bind_release(state.select("id", "dist"), state)
 
 
 def bfs(

@@ -15,8 +15,8 @@ component is proportional to degree, not to eigenvector mass.
 
 Same engineering contract as kernels/hits.py: per round two gather
 joins + map-side-combined groupBy sums, an L1 normalizer per gather
-(plain sum — one scalar driver action, no O(V) collect), checkpoint
-truncation, superseded state released. The per-edge 1/degree weights
+(plain sum — one scalar driver action, no O(V) collect), one
+checkpoint. The per-edge 1/degree weights
 are attached ONCE up front (two V-sized joins onto the edge table,
 localCheckpointed) instead of per round. All divisions are by integer
 degrees and the recurrence is linear with no float-conditioned branch,
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, superstep
 
 
 def salsa(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
@@ -63,13 +63,10 @@ def salsa(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
         )
         .transform(fresh_checkpoint)
     )
-    state = verts.select(
-        "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-    ).transform(fresh_checkpoint)
-    prev = state
-    for _ in range(rounds):
+
+    def step(state: DataFrame, rnd) -> DataFrame:
         # backward step: hub[i] = Σ auth[j]/in_deg(j) over out-edges of i
-        hub_raw = (
+        hub_raw = rnd.checkpoint(
             verts.join(
                 eweights.join(
                     state.select(F.col("id").alias("dst"), "auth"), "dst"
@@ -78,14 +75,12 @@ def salsa(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
                 .agg(F.sum(F.col("auth") * F.col("inv_in")).alias("h")),
                 "id",
                 "left",
-            )
-            .select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
-            .transform(fresh_checkpoint)
+            ).select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
         )
         s_h = hub_raw.agg(F.sum("h")).collect()[0][0] or 1.0
         hub = hub_raw.select("id", (F.col("h") / F.lit(s_h)).alias("hub"))
         # forward step: auth[j] = Σ hub[i]/out_deg(i) over in-edges of j
-        auth_raw = (
+        auth_raw = rnd.checkpoint(
             verts.join(
                 eweights.join(
                     hub.select(F.col("id").alias("src"), "hub"), "src"
@@ -94,26 +89,20 @@ def salsa(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
                 .agg(F.sum(F.col("hub") * F.col("inv_out")).alias("a")),
                 "id",
                 "left",
-            )
-            .select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
-            .transform(fresh_checkpoint)
+            ).select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
         )
         s_a = auth_raw.agg(F.sum("a")).collect()[0][0] or 1.0
-        new_state = (
-            hub.join(
-                auth_raw.select(
-                    "id", (F.col("a") / F.lit(s_a)).alias("auth")
-                ),
-                "id",
-            )
-            .select("id", "hub", "auth")
-            .transform(fresh_checkpoint)
-        )
-        prev.unpersist()
-        hub_raw.unpersist()
-        auth_raw.unpersist()
-        prev = new_state
-        state = new_state
+        return hub.join(
+            auth_raw.select("id", (F.col("a") / F.lit(s_a)).alias("auth")),
+            "id",
+        ).select("id", "hub", "auth")
+
+    state = superstep(
+        verts.select(
+            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+        ),
+        step, rounds=rounds,
+    )
     eweights.unpersist()
     if own_cache:
         graph.unpersist()

@@ -27,8 +27,9 @@ round peels at least one SCC — the peel terminates and is exact.
 
 Spark plan: the F and B fixpoints run FUSED in one loop — both
 directions' frontier-restricted gathers land in the same superstep
-state, so each round pays ONE checkpoint and ONE driver action for
-both directions (the separate-loop form paid two of each), and the
+state, so each round pays ONE checkpoint for both directions, with
+both change counts observed on it (the separate-loop form paid two
+checkpoints and two count actions), and the
 F==B match at the end is a filter on the fused state instead of a
 V⋈V join. Each gather is the connected_components shape (direction
 switch at the Ligra 1/20 threshold — the frontier's degree sum is
@@ -46,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 from graphit_spark.plans.traversal import choose_direction
 
 
@@ -63,23 +64,16 @@ def _fw_bw_fixpoint(
     num_verts: int,
     big_v: bool,
     max_iters: int,
-) -> tuple[DataFrame, bool]:
-    """((id, flab, blab), converged): joint fixpoint of
+) -> DataFrame:
+    """(id, flab, blab, fchg, bchg): joint fixpoint of
     lab[dst] min= lab[src] over `edges` (flab) and `tedges` (blab),
-    both starting from lab = id. One checkpoint + one count action per
-    round covers both directions."""
+    both starting from lab = id. One checkpoint per round covers both
+    directions, with both change counts observed on it; raises if labels
+    still move after `max_iters` rounds."""
     avg_deg = max(num_edges / max(num_verts, 1), 1.0)
-    state = verts.select(
-        "id", F.col("id").alias("flab"), F.col("id").alias("blab")
-    ).transform(fresh_checkpoint)
-    ffront = state.select("id")
-    bfront = ffront
-    fsize = bsize = num_verts
-    f_done = b_done = False
-    prev = state
 
-    def gather(e: DataFrame, labcol: str, front: DataFrame, size: int,
-               tag: str) -> DataFrame:
+    def gather(state: DataFrame, e: DataFrame, labcol: str,
+               front: DataFrame, size: int, tag: str) -> DataFrame:
         direction = choose_direction(size, int(size * avg_deg), num_edges)
         src_labels = state.select(
             F.col("id").alias("src"), F.col(labcol).alias("lab")
@@ -102,15 +96,25 @@ def _fw_bw_fixpoint(
             .agg(F.min("lab").alias(f"{tag}cand"))
         )
 
-    for rnd in range(max_iters):
+    def step(cur: DataFrame, rnd) -> DataFrame:
+        state = cur.select("id", "flab", "blab")
+        if rnd.seen is None:
+            ffront = bfront = state.select("id")
+            fsize = bsize = num_verts
+        else:
+            ffront = cur.filter("fchg").select("id")
+            bfront = cur.filter("bchg").select("id")
+            fsize, bsize = rnd.seen["fc"], rnd.seen["bc"]
+        # a direction whose last round changed nothing has converged
+        f_done, b_done = fsize == 0, bsize == 0
         joined = state
         if not f_done:
             joined = joined.join(
-                gather(edges, "flab", ffront, fsize, "f"), "id", "left"
+                gather(state, edges, "flab", ffront, fsize, "f"), "id", "left"
             )
         if not b_done:
             joined = joined.join(
-                gather(tedges, "blab", bfront, bsize, "b"), "id", "left"
+                gather(state, tedges, "blab", bfront, bsize, "b"), "id", "left"
             )
         # gather step: fold the edge candidates into the labels, keep
         # the round's starting labels for the change test after jumps
@@ -143,7 +147,7 @@ def _fw_bw_fixpoint(
         # pays the extra join at all, while a deep chain switches to
         # the doubling regime after a constant prefix. A converged
         # direction skips its jump.
-        jumping = rnd >= _JUMP_FROM
+        jumping = rnd.index >= _JUMP_FROM
         jcols = [F.col("id"), F.col("oflab"), F.col("oblab")]
         for done, labcol in ((f_done, "flab"), (b_done, "blab")):
             if done or not jumping:
@@ -164,32 +168,23 @@ def _fw_bw_fixpoint(
                         F.coalesce(f"j_{labcol}", F.col(labcol)),
                     ).alias(labcol)
                 )
-        new_state = (
-            gath.select(*jcols)
-            .select(
-                "id",
-                "flab",
-                "blab",
-                (F.col("flab") < F.col("oflab")).alias("fchg"),
-                (F.col("blab") < F.col("oblab")).alias("bchg"),
-            )
-            .transform(fresh_checkpoint)
+        return gath.select(*jcols).select(
+            "id",
+            "flab",
+            "blab",
+            (F.col("flab") < F.col("oflab")).alias("fchg"),
+            (F.col("blab") < F.col("oblab")).alias("bchg"),
         )
-        row = new_state.agg(
-            F.sum(F.col("fchg").cast("int")).alias("fc"),
-            F.sum(F.col("bchg").cast("int")).alias("bc"),
-        ).collect()[0]
-        fsize, bsize = int(row["fc"] or 0), int(row["bc"] or 0)
-        prev.unpersist()
-        prev = new_state
-        state = new_state.select("id", "flab", "blab")
-        ffront = new_state.filter("fchg").select("id")
-        bfront = new_state.filter("bchg").select("id")
-        f_done = f_done or fsize == 0
-        b_done = b_done or bsize == 0
-        if f_done and b_done:
-            return state, True
-    return state, f_done and b_done
+
+    return superstep(
+        verts.select(
+            "id", F.col("id").alias("flab"), F.col("id").alias("blab")
+        ),
+        step, max_rounds=max_iters,
+        fc=F.sum(F.col("fchg").cast("int")),
+        bc=F.sum(F.col("bchg").cast("int")),
+        until=lambda seen: seen["fc"] == 0 and seen["bc"] == 0,
+    )
 
 
 def strongly_connected_components(
@@ -305,17 +300,10 @@ def strongly_connected_components(
         tedges = cedges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-        labs, converged = _fw_bw_fixpoint(
+        labs = _fw_bw_fixpoint(
             cedges, tedges, verts.select("id"), num_cedges, n_active,
             big_v, max_prop,
         )
-        if not converged:
-            labs.unpersist()
-            raise RuntimeError(
-                f"SCC fixpoint did not converge within max_prop={max_prop} "
-                "rounds — peeling an unconverged (partial) SCC would split "
-                "it; raise max_prop above the residual directed diameter"
-            )
         matched = (
             labs.filter(F.col("flab") == F.col("blab"))
             .select("id", F.col("flab").alias("scc"))
@@ -368,14 +356,14 @@ def strongly_connected_components(
     out = assigned_parts[0]
     for part in assigned_parts[1:]:
         out = out.unionByName(part)
-    return out
+    return bind_release(out, *assigned_parts)
 
 
 def condensation_layers(
     graph: LinkGraph,
     labels: DataFrame | None = None,
     *,
-    max_rounds: int = 24,
+    max_rounds: int = 200,
 ) -> DataFrame:
     """Condensation-DAG topological depth: (id, scc, layer) with
     layer = length of the longest SCC-chain leading into the vertex's
@@ -387,21 +375,26 @@ def condensation_layers(
         layer(c) = max(layer(c), 1 + max over predecessors)
 
     is monotone, idempotent past its fixpoint, and converges in
-    depth-of-DAG rounds. ``max_rounds`` is the shared round budget with
-    the SQL twin; the driver early-stops on no-change, which by
-    idempotence equals running the full budget.
+    depth-of-DAG rounds (plus one that observes no change). The layers
+    are exact only at that fixpoint, so ``max_rounds`` is a safety net:
+    running out of it with layers still changing raises rather than
+    returning truncated depths.
 
     Spark plan: two V-sized label joins project the edge table onto
     components once (distinct → the condensation is usually orders of
     magnitude smaller than E), then each round is one broadcast-sized
     join + map-side-combined groupBy(max) over the condensation — the
-    per-round cost scales with the DAG, not the graph. One scalar
-    action per round; superseded checkpoints released.
+    per-round cost scales with the DAG, not the graph. The state keeps
+    each component's previous layer, so the change count rides the
+    round's checkpoint job.
     """
     own_cache = graph.ensure_persisted()
+    scc = None
     if labels is None:
-        labels = strongly_connected_components(graph)
+        labels = scc = strongly_connected_components(graph)
     labels = labels.transform(fresh_checkpoint)
+    if scc is not None:
+        scc.unpersist()
     ls = labels.select(F.col("id").alias("src"), F.col("scc").alias("cu"))
     ld = labels.select(F.col("id").alias("dst"), F.col("scc").alias("cv"))
     cond = (
@@ -412,39 +405,28 @@ def condensation_layers(
         .distinct()
         .transform(fresh_checkpoint)
     )
-    layer = (
-        labels.select(F.col("scc").alias("c"))
-        .distinct()
-        .withColumn("layer", F.lit(0).cast("long"))
-        .transform(fresh_checkpoint)
-    )
-    for _ in range(max_rounds):
+
+    def step(layer: DataFrame, rnd) -> DataFrame:
         cand = (
             cond.join(layer, cond["cu"] == layer["c"])
             .groupBy(F.col("cv").alias("c"))
             .agg((F.max("layer") + 1).alias("cand"))
         )
-        new_layer = (
-            layer.join(cand, "c", "left")
-            .select(
-                "c",
-                F.greatest(
-                    F.col("layer"), F.coalesce("cand", F.lit(0))
-                ).alias("layer"),
-            )
-            .transform(fresh_checkpoint)
+        return layer.join(cand, "c", "left").select(
+            "c",
+            F.greatest(
+                F.col("layer"), F.coalesce("cand", F.lit(0))
+            ).alias("layer"),
+            F.col("layer").alias("old"),
         )
-        changed = (
-            new_layer.join(
-                layer.select("c", F.col("layer").alias("old")), "c"
-            )
-            .filter(F.col("layer") != F.col("old"))
-            .count()
-        )
-        layer.unpersist()
-        layer = new_layer
-        if changed == 0:
-            break
+
+    layer = superstep(
+        labels.select(F.col("scc").alias("c"))
+        .distinct()
+        .withColumn("layer", F.lit(0).cast("long")),
+        step, max_rounds=max_rounds,
+        changed=F.col("layer") != F.col("old"),
+    )
     out = (
         labels.join(layer, labels["scc"] == layer["c"])
         .select("id", "scc", "layer")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, superstep
 
 
 def simrank(
@@ -55,13 +55,12 @@ def simrank(
         F.col("id").alias("a"), F.col("id").alias("b"),
         F.lit(1.0).alias("s"),
     )
-    s_prev = diag.transform(fresh_checkpoint)
-
     ea = edges.select(F.col("src").alias("a"), F.col("dst").alias("na"))
     eb = edges.select(F.col("src").alias("b"), F.col("dst").alias("nb"))
-    for _ in range(rounds):
+
+    def step(sim: DataFrame, rnd) -> DataFrame:
         acc = (
-            s_prev.join(ea, "a")
+            sim.join(ea, "a")
             .join(eb, "b")
             .groupBy(F.col("na").alias("a"), F.col("nb").alias("b"))
             .agg(F.sum("s").alias("acc"))
@@ -78,15 +77,14 @@ def simrank(
                  / (F.col("da") * F.col("db"))).alias("s"),
             )
         )
-        s_new = off.unionByName(diag).transform(fresh_checkpoint)
-        s_prev.unpersist()
-        s_prev = s_new
+        return off.unionByName(diag)
 
+    s_last = superstep(diag, step, rounds=rounds)
     out = (
-        s_prev.filter(F.col("a") < F.col("b"))
+        s_last.filter(F.col("a") < F.col("b"))
         .transform(fresh_checkpoint)
     )
-    s_prev.unpersist()
+    s_last.unpersist()
     indeg.unpersist()
     if own_cache:
         graph.unpersist()

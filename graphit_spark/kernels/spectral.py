@@ -51,7 +51,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 
 SPECTRAL_ROUNDS = 8
 _INIT_MULT = 2654435761  # Knuth multiplicative hash constant
@@ -88,11 +88,9 @@ def spectral_bisection(
             / F.lit(float(_INIT_MOD))
             - F.lit(0.5)
         ).alias("x"),
-    ).transform(fresh_checkpoint)
-    base.unpersist()
+    )
 
-    prev = state
-    for _ in range(rounds):
+    def step(state: DataFrame, rnd) -> DataFrame:
         gathered = (
             und.edges.join(
                 state.select(F.col("id").alias("src"), "x"), "src"
@@ -120,24 +118,25 @@ def spectral_bisection(
         # identically (the SQL twin's CASE mirrors this line for line).
         var = s2 - s1 * s1 / n
         norm = math.sqrt(var) if var > 0 else 1.0
-        state = y.select(
+        return y.select(
             "id",
             "d",
             ((F.col("y") - F.lit(m)) / F.lit(norm)).alias("x"),
-        ).transform(fresh_checkpoint)
-        prev.unpersist()
-        prev = state
+        )
 
-    out = state.select(
-        "id",
-        (F.round(F.col("x"), 6) + F.lit(0.0)).alias("fiedler"),
-        F.when(F.round(F.col("x"), 6) > 0, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("side"),
+    state = superstep(state, step, rounds=rounds)
+    base.unpersist()
+    out = bind_release(
+        state.select(
+            "id",
+            (F.round(F.col("x"), 6) + F.lit(0.0)).alias("fiedler"),
+            F.when(F.round(F.col("x"), 6) > 0, F.lit(1))
+            .otherwise(F.lit(0))
+            .cast("int")
+            .alias("side"),
+        ),
+        state,
     )
-    out = out.transform(fresh_checkpoint)
-    state.unpersist()
     if own_cache:
         und.unpersist()
     return out
@@ -166,13 +165,10 @@ def spectral_partition(
     und = graph.symmetrize()
     own_cache = und.ensure_persisted()
 
-    part = (
-        und.vertices()
-        .select("id", F.lit(0).cast("long").alias("part"))
-        .transform(fresh_checkpoint)
-    )
-    for _lvl in range(levels):
-        pe = (
+    def level(part: DataFrame, rnd) -> DataFrame:
+        """One level: every part's deflated power iteration at once, then
+        each part split by the sign of its vector."""
+        pe = rnd.checkpoint(
             und.edges.join(
                 part.select(
                     F.col("id").alias("src"), F.col("part").alias("psrc")
@@ -187,7 +183,6 @@ def spectral_partition(
             )
             .filter(F.col("psrc") == F.col("pdst"))
             .select("src", "dst", F.col("psrc").alias("part"))
-            .transform(fresh_checkpoint)
         )
         deg = pe.groupBy(F.col("src").alias("id")).agg(
             F.count("*").alias("dd")
@@ -203,24 +198,20 @@ def spectral_partition(
         cmax = base.groupBy("part").agg(
             (F.lit(2) * F.max("d")).cast("long").alias("c")
         )
-        state = (
-            base.join(cmax, "part")
-            .select(
-                "id",
-                "part",
-                "d",
-                "c",
-                (
-                    ((F.col("id") * F.lit(_INIT_MULT)) % F.lit(_INIT_MOD))
-                    .cast("double")
-                    / F.lit(float(_INIT_MOD))
-                    - F.lit(0.5)
-                ).alias("x"),
-            )
-            .transform(fresh_checkpoint)
+        state = base.join(cmax, "part").select(
+            "id",
+            "part",
+            "d",
+            "c",
+            (
+                ((F.col("id") * F.lit(_INIT_MULT)) % F.lit(_INIT_MOD))
+                .cast("double")
+                / F.lit(float(_INIT_MOD))
+                - F.lit(0.5)
+            ).alias("x"),
         )
-        prev = state
-        for _ in range(rounds):
+
+        def step(state: DataFrame, rnd) -> DataFrame:
             gathered = (
                 pe.join(
                     state.select(
@@ -247,23 +238,19 @@ def spectral_partition(
                 F.count("*").alias("n"),
             )
             var = F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")
-            state = (
-                y.join(st, "part")
-                .select(
-                    "id",
-                    "part",
-                    "d",
-                    "c",
-                    (
-                        (F.col("y") - F.col("s1") / F.col("n"))
-                        / F.when(var > 0, F.sqrt(var)).otherwise(F.lit(1.0))
-                    ).alias("x"),
-                )
-                .transform(fresh_checkpoint)
+            return y.join(st, "part").select(
+                "id",
+                "part",
+                "d",
+                "c",
+                (
+                    (F.col("y") - F.col("s1") / F.col("n"))
+                    / F.when(var > 0, F.sqrt(var)).otherwise(F.lit(1.0))
+                ).alias("x"),
             )
-            prev.unpersist()
-            prev = state
-        new_part = part.join(
+
+        state = rnd.own(superstep(state, step, rounds=rounds))
+        return part.join(
             state.select(
                 "id",
                 F.when(F.round(F.col("x"), 6) > 0, F.lit(1))
@@ -276,11 +263,11 @@ def spectral_partition(
             "id",
             (F.col("part") * 2 + F.col("side")).cast("long").alias("part"),
         )
-        old_part = part
-        part = fresh_checkpoint(new_part)
-        old_part.unpersist()
-        state.unpersist()
-        pe.unpersist()
+
+    part = superstep(
+        und.vertices().select("id", F.lit(0).cast("long").alias("part")),
+        level, rounds=levels,
+    )
     if own_cache:
         und.unpersist()
     return part

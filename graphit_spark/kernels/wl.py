@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import superstep
 
 WL_ROUNDS = 3
 WL_SUM_MOD = 1000003  # prime; keeps the sum digest overflow-free
@@ -54,16 +54,7 @@ def wl_refinement(
     g = graph.symmetrize() if symmetrize else graph
     own_cache = g.ensure_persisted()
 
-    colors = (
-        g.out_degrees()
-        .select(
-            "id",
-            _h60(F.col("out_degree").cast("string")).alias("color"),
-        )
-        .transform(fresh_checkpoint)
-    )
-    prev = colors
-    for _ in range(rounds):
+    def step(colors: DataFrame, rnd) -> DataFrame:
         digest = (
             g.edges.join(
                 colors.select(F.col("id").alias("src"),
@@ -77,25 +68,27 @@ def wl_refinement(
                 F.sum(F.col("c") % WL_SUM_MOD).alias("s"),
             )
         )
-        colors = (
-            colors.join(digest, "id", "left")
-            .select(
-                "id",
-                _h60(
-                    F.concat_ws(
-                        "|",
-                        F.col("color").cast("string"),
-                        F.coalesce("cnt", F.lit(0)).cast("string"),
-                        F.coalesce("x", F.lit(0)).cast("string"),
-                        F.coalesce("s", F.lit(0)).cast("string"),
-                    )
-                ).alias("color"),
-            )
-            .transform(fresh_checkpoint)
+        return colors.join(digest, "id", "left").select(
+            "id",
+            _h60(
+                F.concat_ws(
+                    "|",
+                    F.col("color").cast("string"),
+                    F.coalesce("cnt", F.lit(0)).cast("string"),
+                    F.coalesce("x", F.lit(0)).cast("string"),
+                    F.coalesce("s", F.lit(0)).cast("string"),
+                )
+            ).alias("color"),
         )
-        prev.unpersist()
-        prev = colors
 
+    colors = superstep(
+        g.out_degrees()
+        .select(
+            "id",
+            _h60(F.col("out_degree").cast("string")).alias("color"),
+        ),
+        step, rounds=rounds,
+    )
     if own_cache:
         g.unpersist()
     return colors

@@ -59,13 +59,20 @@ each a full scan of rows the checkpoint just wrote. ``observe`` attaches
 them to the frame instead, so they are computed inside whatever job
 materializes it (``fresh_checkpoint``, a Parquet write, any action) and
 read back on the driver without another job.
+
+Superstep driver (``superstep``): a kernel states what one round
+computes — a ``step(state, rnd)`` that builds the next state lazily —
+and the driver owns how rounds execute: materialization, the round's
+observed aggregates, release of superseded state and round-scoped
+intermediates, the change count and the round budget. Its docstring is
+the one statement of that lifecycle contract.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 _WARN_SILENCED = False
 
@@ -189,7 +196,174 @@ def counted_checkpoint(
     """``fresh_checkpoint`` of ``df``, with its row count (``rows``) and
     any further ``aggs`` observed on the checkpoint job — the emptiness
     test of a fixpoint loop without an ``isEmpty()``/``count()`` job."""
-    from pyspark.sql import functions as F
-
     df, seen = observe(df, rows=F.count(F.lit(1)), **aggs)
     return df.transform(fresh_checkpoint), seen
+
+
+def bind_release(df: DataFrame, *owners: DataFrame) -> DataFrame:
+    """``df`` — a frame derived from the materialized ``owners`` (e.g. a
+    projection of a kernel's final state) — whose ``unpersist()``
+    releases the owners' blocks, so a kernel's caller can free what its
+    result reads."""
+    releases = [owner.unpersist for owner in owners]  # before rebinding
+
+    def _unpersist(blocking: bool = False):
+        for release in releases:
+            release(blocking)
+        return df
+
+    df.unpersist = _unpersist
+    return df
+
+
+class Round:
+    """One superstep, as its step function sees it.
+
+    ``index`` is the round number (counting from the driver's ``start``);
+    ``seen`` holds the aggregates observed on the previous round's
+    materialization (``None`` in a call's first round); ``aggs`` are the
+    aggregate expressions the driver observes on each round's state. A
+    step may set further attributes (e.g. the direction it chose) for a
+    ``materialize`` callback to record."""
+
+    def __init__(self, index: int, seen: Observed | None,
+                 aggs: dict[str, Column]):
+        self.index = index
+        self.seen = seen
+        self.aggs = aggs
+        self._cks: list[tuple[DataFrame, Observed | None]] = []
+        self._seen: Observed | None = None
+
+    def checkpoint(self, df: DataFrame, **aggs: Column):
+        """``fresh_checkpoint`` of an intermediate that lives only within
+        this round; the driver releases it once the round's state is
+        materialized. With ``aggs``, returns ``(frame, Observed)``. A
+        frame checkpointed with ``**rnd.aggs`` may be returned by the
+        step as the round's state: the driver adopts it without a
+        second job."""
+        seen = None
+        if aggs:
+            df, seen = observe(df, **aggs)
+        ck = fresh_checkpoint(df)
+        self._cks.append((ck, seen))
+        return (ck, seen) if aggs else ck
+
+    def own(self, df: DataFrame) -> DataFrame:
+        """Hand an already materialized intermediate (e.g. the result of
+        a nested ``superstep``) to the round: the driver releases it with
+        the round's checkpoints."""
+        self._cks.append((df, None))
+        return df
+
+    def observe(self, df: DataFrame) -> DataFrame:
+        """``df`` with the round's aggregates attached — for a step whose
+        state drops a column an aggregate reads (e.g. the old rank of an
+        error norm): the step projects after this, and the driver then
+        observes nothing more."""
+        df, self._seen = observe(df, **self.aggs)
+        return df
+
+    def _observed(self, df: DataFrame) -> tuple[bool, Observed | None]:
+        """(adopted, seen): whether ``df`` is one of this round's
+        checkpoints, and the round aggregates already attached."""
+        for ck, seen in self._cks:
+            if ck is df:
+                if self.aggs and (seen is None or set(self.aggs) - set(seen)):
+                    raise ValueError(
+                        "a step returned a round checkpoint that does not "
+                        "observe the round's aggregates (rnd.aggs)"
+                    )
+                return True, seen
+        return False, self._seen
+
+
+def superstep(
+    state: DataFrame,
+    step: Callable[[DataFrame, Round], DataFrame],
+    *,
+    rounds: int | None = None,
+    max_rounds: int | None = None,
+    start: int = 0,
+    checkpoint_start: bool = True,
+    changed: Column | None = None,
+    until: Callable[[Observed], bool] | None = None,
+    materialize: Callable[[DataFrame, Round, Observed | None], DataFrame]
+    | None = None,
+    log: list | None = None,
+    **aggs: Column,
+) -> DataFrame:
+    """Run ``step`` round after round and return the last materialized
+    state.
+
+    Lifecycle contract. The driver owns ``state`` from the call on: it
+    checkpoints it first (skip with ``checkpoint_start=False`` when it is
+    already materialized, e.g. a snapshot read). Then, per round ``i``
+    (from ``start``):
+
+    - ``step(state, rnd)`` builds the next state lazily from the current
+      one; ``rnd.checkpoint`` materializes intermediates the round reads
+      more than once, and ``rnd.own`` hands over ones made otherwise.
+    - The driver materializes the new state in one job —
+      ``fresh_checkpoint``, or ``materialize(df, rnd, seen)`` (e.g. a
+      ``SnapshotStore.write``) — with ``aggs`` observed on that job, plus
+      ``changed``: the count of rows where the boolean expression
+      ``changed`` holds. ``seen`` maps each name to its value; it is the
+      next round's ``rnd.seen`` and is appended to ``log``.
+    - Once the new state is materialized, the driver releases the
+      superseded state — the frame it holds, never one derived from it,
+      so the release is real — and every round checkpoint.
+    - The loop stops when ``until(seen)`` holds; with ``changed`` and no
+      ``until``, when ``changed`` counts 0.
+
+    The budget is one of two contracts, named by the keyword:
+
+    - ``rounds=N``: a fixed-iteration contract — at most N rounds
+      (counting from 0, so ``N - start`` in this call), an early stop
+      when the stop rule holds, never an error.
+    - ``max_rounds=N``: a fixpoint — the stop rule is the answer's
+      correctness condition, so running out of budget with changes still
+      pending raises instead of returning a truncated answer.
+
+    Returns the last materialized frame itself (``state`` if no round
+    ran), so the caller's ``unpersist()`` releases its blocks."""
+    if (rounds is None) == (max_rounds is None):
+        raise TypeError("superstep takes exactly one of rounds= / max_rounds=")
+    if changed is not None:
+        aggs = {"changed": F.count(F.when(changed, 1)), **aggs}
+        if until is None:
+            until = lambda seen: seen["changed"] == 0  # noqa: E731
+    if max_rounds is not None and until is None:
+        raise TypeError("a max_rounds= fixpoint needs changed= or until=")
+    if checkpoint_start:
+        start_ck = fresh_checkpoint(state)
+        state.unpersist()
+        state = start_ck
+    seen = None
+    for i in range(start, rounds if max_rounds is None else max_rounds):
+        rnd = Round(i, seen, aggs)
+        new = step(state, rnd)
+        adopted, seen = rnd._observed(new)
+        if seen is None and aggs:
+            new, seen = observe(new, **aggs)
+        if materialize is not None:
+            new = materialize(new, rnd, seen)
+        elif not adopted:
+            new = fresh_checkpoint(new)
+        state.unpersist()
+        for ck, _ in rnd._cks:
+            if ck is not new:
+                ck.unpersist()
+        state = new
+        if log is not None:
+            log.append(seen)
+        if until is not None and until(seen):
+            break
+    else:
+        if max_rounds is not None and max_rounds > start:
+            state.unpersist()
+            raise RuntimeError(
+                f"fixpoint did not converge within max_rounds={max_rounds} "
+                "rounds: changes are still pending, so the state is not "
+                "the answer — raise the budget above the graph's depth"
+            )
+    return state

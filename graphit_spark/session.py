@@ -15,6 +15,27 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+def build_zip(zpath: str) -> str:
+    """Zip the graphit_spark package's ``.py`` files into ``zpath`` (the
+    ``--py-files`` artifact) and return ``zpath``. The zip is written
+    next to ``zpath`` first and moved into place whole."""
+    import graphit_spark
+
+    pkg_dir = os.path.dirname(os.path.abspath(graphit_spark.__file__))
+    tmp = f"{zpath}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    arc = os.path.join(
+                        "graphit_spark", os.path.relpath(full, pkg_dir)
+                    )
+                    zf.write(full, arc)
+    os.replace(tmp, zpath)
+    return zpath
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship graphit_spark to executors (programmatic --py-files).
 
@@ -25,23 +46,12 @@ def _ship_package(spark: SparkSession) -> None:
     mechanism spark-submit --py-files uses."""
     import graphit_spark
 
-    pkg_dir = os.path.dirname(os.path.abspath(graphit_spark.__file__))
     zpath = os.path.join(
         tempfile.gettempdir(),
         f"graphit_spark-{graphit_spark.__version__}-{os.getpid()}.zip",
     )
     if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        arc = os.path.join(
-                            "graphit_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, arc)
-        os.replace(tmp, zpath)
+        build_zip(zpath)
     spark.sparkContext.addPyFile(zpath)
 
 

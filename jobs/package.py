@@ -1,27 +1,25 @@
 #!/usr/bin/env python
-"""Build dist/graphit_spark.zip for spark-submit --py-files."""
+"""Build the spark-submit --py-files artifact from the source tree.
+
+    python jobs/package.py [ZIP]    # default: dist/graphit_spark.zip
+"""
 
 import os
 import sys
-import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    zpath = os.path.join(dist, "graphit_spark.zip")
-    pkg = os.path.join(ROOT, "graphit_spark")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, ROOT))
-    print(zpath)
+def main(zpath: str | None = None) -> str:
+    sys.path.insert(0, ROOT)
+    from graphit_spark.session import build_zip
+
+    if zpath is None:
+        zpath = os.path.join(ROOT, "dist", "graphit_spark.zip")
+    os.makedirs(os.path.dirname(os.path.abspath(zpath)), exist_ok=True)
+    print(build_zip(zpath))
     return zpath
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])

@@ -3,7 +3,7 @@
 table — the data-pipeline twin of jobs/run_kernel.py.
 
 Cluster usage:
-    python jobs/package.py                       # builds dist/graphit_spark.zip
+    python jobs/package.py    # build first: writes dist/graphit_spark.zip
     spark-submit --py-files dist/graphit_spark.zip \\
         jobs/run_curation.py --stage dedup \\
         --documents s3://bucket/documents/ --output s3://bucket/corpus/

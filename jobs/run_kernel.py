@@ -2,7 +2,7 @@
 """spark-submit entry point: run a kernel over an edge/pages table.
 
 Cluster usage (the north-rule submission path):
-    python jobs/package.py                       # builds dist/graphit_spark.zip
+    python jobs/package.py    # build first: writes dist/graphit_spark.zip
     spark-submit --py-files dist/graphit_spark.zip \\
         jobs/run_kernel.py --kernel pagerank \\
         --edges s3://bucket/edges/ --output s3://bucket/ranks/ \\

@@ -4,7 +4,7 @@ the Structured-Streaming twin of jobs/run_kernel.py (kernels) and
 jobs/run_curation.py (batch curation).
 
 Cluster usage:
-    python jobs/package.py                       # builds dist/graphit_spark.zip
+    python jobs/package.py    # build first: writes dist/graphit_spark.zip
     spark-submit --py-files dist/graphit_spark.zip \\
         jobs/run_stream.py --mode sessionize \\
         --input s3://bucket/events/ --output s3://bucket/sessions/ \\

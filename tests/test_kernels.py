@@ -1607,6 +1607,28 @@ class TestCondensationLayers:
         }
         assert got == self._oracle(edges)
 
+    def test_budget_short_of_depth_raises(self, spark):
+        """A chain of 2-cycles 4 components deep needs 5 rounds (the last
+        observes no change). A smaller budget raises instead of returning
+        truncated layers; enough budget returns the exact ones."""
+        from graphit_spark.kernels.scc import (
+            condensation_layers, strongly_connected_components,
+        )
+
+        edges = [e for c in range(5) for e in
+                 ((2 * c, 2 * c + 1), (2 * c + 1, 2 * c))]
+        edges += [(2 * c + 1, 2 * c + 2) for c in range(4)]
+        g = LinkGraph.from_pairs(spark, edges, persist=False)
+        labels = strongly_connected_components(g)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            condensation_layers(g, labels, max_rounds=4)
+        got = {
+            r["id"]: (r["scc"], r["layer"])
+            for r in condensation_layers(g, labels, max_rounds=5).collect()
+        }
+        assert got == self._oracle(edges)
+        assert got[9] == (8, 4)
+
 
 
 class TestDirectedMotifs:

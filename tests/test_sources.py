@@ -284,36 +284,6 @@ class TestAstarBin:
         assert got == exp and got is not None
 
 
-def test_dist_zip_matches_source_tree():
-    """dist/graphit_spark.zip (the spark-submit --py-files artifact) must
-    carry the SAME bytes as the source tree — a stale zip means the
-    packaged library silently diverges from HEAD (round-2 advice)."""
-    import os
-    import zipfile
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(root, "dist", "graphit_spark.zip")
-    assert os.path.exists(zpath), "run jobs/package.py"
-    with zipfile.ZipFile(zpath) as zf:
-        names = [n for n in zf.namelist() if n.endswith(".py")]
-        assert names, "empty zip"
-        zipped = {n: zf.read(n) for n in names}
-    src = {}
-    pkg = os.path.join(root, "graphit_spark")
-    for r, _d, files in os.walk(pkg):
-        for fn in files:
-            if fn.endswith(".py"):
-                full = os.path.join(r, fn)
-                with open(full, "rb") as f:
-                    src[os.path.relpath(full, root)] = f.read()
-    assert set(zipped) == set(src), (
-        f"zip/source file sets differ: only-zip={set(zipped) - set(src)}, "
-        f"only-src={set(src) - set(zipped)}"
-    )
-    stale = [n for n in src if zipped[n] != src[n]]
-    assert not stale, f"stale files in dist zip (re-run jobs/package.py): {stale}"
-
-
 def test_gzipped_edge_list_reads_transparently(spark, tmp_path):
     """Crawl-scale edge dumps ship gzipped; Spark's text source infers
     the codec from the extension, so .el.gz loads through the same

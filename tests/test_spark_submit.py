@@ -1,12 +1,13 @@
 """The north-rule submission path, actually executed: `spark-submit
---py-files dist/graphit_spark.zip jobs/run_kernel.py` with NO source
-tree on the import path. The job script is copied into a temp dir and
+--py-files graphit_spark.zip jobs/run_kernel.py` with NO source
+tree on the import path. The zip is built from the source tree into the
+test's temp dir with the same builder as `jobs/package.py`. The job script is copied into a temp dir and
 PYTHONPATH is scrubbed, so every `graphit_spark` import — driver side
 AND executor side — must resolve from the shipped artifact alone. This
 is the exact mechanism a real multi-executor cluster submission uses
 (reference analogue: the generated GraphIt binary running standalone,
-SURVEY.md §3 entry point 3); a stale or incomplete zip fails here, not
-on the cluster.
+SURVEY.md §3 entry point 3); an incomplete zip fails here, not on the
+cluster.
 """
 
 import json
@@ -17,6 +18,8 @@ import sys
 
 import duckdb
 import pytest
+
+from graphit_spark.session import build_zip
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
@@ -39,7 +42,7 @@ def test_spark_submit_py_files_artifact(tmp_path):
             "--master", "local[2]",
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.ui.showConsoleProgress=false",
-            "--py-files", os.path.join(ROOT, "dist", "graphit_spark.zip"),
+            "--py-files", build_zip(str(tmp_path / "graphit_spark.zip")),
             str(job),
             "--kernel", "pagerank",
             "--synth-vertices", "2000",
@@ -93,7 +96,7 @@ def test_spark_submit_stream_job_artifact(tmp_path):
             "--master", "local[2]",
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.ui.showConsoleProgress=false",
-            "--py-files", os.path.join(ROOT, "dist", "graphit_spark.zip"),
+            "--py-files", build_zip(str(tmp_path / "graphit_spark.zip")),
             str(job),
             "--mode", "dedup",
             "--available-now",

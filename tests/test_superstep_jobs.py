@@ -1,10 +1,12 @@
-"""One materializing job per superstep.
+"""One materializing job per superstep, owned by one driver.
 
 PageRank's L1 error, CC's frontier size and degree sum, and a snapshot's
 manifest ride the job that materializes the round (``observe``), so a
 round launches no count or collect of its own. These tests pin that job
-shape, that reading observed metrics never waits forever, and that a
-durable run leaves no cached blocks behind."""
+shape, that reading observed metrics never waits forever, the round
+budget and release contract of ``plans.state.superstep``, and that no
+kernel on the driver leaves cached blocks behind once its result is
+released."""
 
 import random
 import re
@@ -14,7 +16,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphit_spark import LinkGraph, SnapshotStore
-from graphit_spark.kernels import connected_components, pagerank
+from graphit_spark import kernels as K
+from graphit_spark.kernels import connected_components, label_propagation, pagerank
+from graphit_spark.kernels.scc import condensation_layers
 from graphit_spark.plans.state import fresh_checkpoint, observe
 
 # a driver round trip started from a kernel or store call site
@@ -30,6 +34,9 @@ _ROUND_TRIP = re.compile(
 # jobs, 3 rounds); with frontier counts it was 23.3.
 PR_JOBS_PER_ROUND = 6.0
 CC_JOBS_PER_ROUND = 20.0
+# LPA, 5 rounds on _edges() and a collect of the labels: 8.0 (40 jobs)
+# before the superstep driver, measured the same way.
+LPA_JOBS_PER_ROUND = 8.0
 
 
 def _edges():
@@ -88,6 +95,16 @@ def test_cc_has_no_round_trips(spark):
     assert len(names) <= CC_JOBS_PER_ROUND * m["iterations"], (len(names), names)
 
 
+def test_lpa_jobs_per_round(spark):
+    g = LinkGraph.from_pairs(spark, _edges(), persist=False)
+    rounds = 5
+    names = _job_names(
+        spark, "lpa-jobs",
+        lambda: label_propagation(g, rounds=rounds).collect(),
+    )
+    assert len(names) <= LPA_JOBS_PER_ROUND * rounds, (len(names), names)
+
+
 def _finishes(fn, seconds: float = 120.0):
     """Run ``fn`` in a daemon thread; fail if it has not returned in time."""
     out: dict = {}
@@ -137,3 +154,164 @@ def test_observed_reads_never_block(spark):
     df.transform(fresh_checkpoint)
     # a sum over no rows reads as 0, not None
     assert dict(seen) == {"rows": 0, "total": 0}
+
+
+def _cached_ids(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _counter(spark):
+    """(id, v) with v = 0, checkpointed: a driver's starting state."""
+    return spark.range(6).select("id", F.lit(0).alias("v")).transform(
+        fresh_checkpoint
+    )
+
+
+def _bump(cap):
+    """A step: v <- min(v + 1, cap), keeping the old value for the change
+    count; it changes every row until v reaches ``cap``."""
+    def step(state, rnd):
+        return state.select(
+            "id", F.least(F.col("v") + 1, F.lit(cap)).alias("v"),
+            F.col("v").alias("old"),
+        )
+    return step
+
+
+def _changed():
+    return F.col("v") != F.col("old")
+
+
+def test_rounds_runs_exactly_n_and_never_raises(spark):
+    from graphit_spark.plans.state import superstep
+
+    log: list = []
+    out = superstep(_counter(spark), _bump(100), rounds=3,
+                    changed=_changed(), log=log)
+    assert [s["changed"] for s in log] == [6, 6, 6]
+    assert {r["v"] for r in out.collect()} == {3}
+    out.unpersist()
+    # a resumed run counts its rounds from `start`
+    log = []
+    superstep(_counter(spark), _bump(100), rounds=3, start=1,
+              changed=_changed(), log=log).unpersist()
+    assert len(log) == 2
+
+
+def test_rounds_stops_early_on_zero_changes(spark):
+    from graphit_spark.plans.state import superstep
+
+    log: list = []
+    out = superstep(_counter(spark), _bump(2), rounds=10,
+                    changed=_changed(), log=log)
+    assert [s["changed"] for s in log] == [6, 6, 0]
+    assert {r["v"] for r in out.collect()} == {2}
+    out.unpersist()
+
+
+def test_max_rounds_raises_with_changes_pending(spark):
+    from graphit_spark.plans.state import superstep
+
+    before = _cached_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        superstep(_counter(spark), _bump(100), max_rounds=3,
+                  changed=_changed())
+    assert _cached_ids(spark) <= before
+    log: list = []
+    superstep(_counter(spark), _bump(2), max_rounds=3, changed=_changed(),
+              log=log).unpersist()
+    assert len(log) == 3
+    with pytest.raises(TypeError):
+        superstep(_counter(spark), _bump(2), max_rounds=3)
+
+
+def test_superseded_and_round_checkpoints_are_released(spark):
+    from graphit_spark.plans.state import superstep
+
+    before = _cached_ids(spark)
+    seen_ids: list[set[int]] = []
+
+    def step(state, rnd):
+        # an intermediate read twice within the round
+        mid = rnd.checkpoint(state.select("id", (F.col("v") + 1).alias("v")))
+        seen_ids.append(_cached_ids(spark) - before)
+        return mid.join(mid.select("id", F.col("v").alias("w")), "id").select(
+            "id", "v"
+        )
+
+    out = superstep(_counter(spark), step, rounds=4)
+    # within a round: the live state and the round checkpoint, never more
+    assert all(len(ids) == 2 for ids in seen_ids), seen_ids
+    # after the run: only the returned state
+    assert len(_cached_ids(spark) - before) == 1
+    assert {r["v"] for r in out.collect()} == {4}
+    out.unpersist()
+    assert _cached_ids(spark) <= before
+
+
+@pytest.fixture(scope="module")
+def leak_graphs(spark):
+    """(unweighted, weighted): two 3-cycles joined by a bridge, a tail
+    and an isolated vertex; built once, each kernel caches and releases
+    them itself."""
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3),
+             (5, 6), (6, 7), (0, 8), (9, 9)]
+    weighted = [(s, d, 1 + (s + d) % 3) for s, d in edges]
+    return tuple(
+        LinkGraph.from_pairs(spark, e, persist=False) for e in (edges, weighted)
+    )
+
+
+_MIGRATED = {
+    "pagerank": lambda g, w: K.pagerank(g, max_iters=2),
+    "weighted_pagerank": lambda g, w: K.weighted_pagerank(w, max_iters=2),
+    "personalized_pagerank":
+        lambda g, w: K.personalized_pagerank(g, 0, max_iters=2),
+    "trustrank": lambda g, w: K.trustrank(w, [0, 3], max_iters=2),
+    "pagerank_delta": lambda g, w: K.pagerank_delta(g, max_iters=2),
+    "personalized_pagerank_batch":
+        lambda g, w: K.personalized_pagerank_batch(g, [0, 3], max_iters=2),
+    "connected_components": lambda g, w: K.connected_components(g),
+    "label_propagation": lambda g, w: K.label_propagation(g, rounds=2),
+    "weighted_label_propagation":
+        lambda g, w: K.weighted_label_propagation(w, rounds=2),
+    "label_spreading": lambda g, w: K.label_spreading(
+        g, g.spark.createDataFrame([(0, 1), (7, 2)], "id long, label long"),
+        rounds=2,
+    ),
+    "eigenvector_centrality":
+        lambda g, w: K.eigenvector_centrality(g, rounds=2),
+    "katz_centrality": lambda g, w: K.katz_centrality(g, rounds=2),
+    "fused_pr_eigenvector":
+        lambda g, w: K.fused_pr_eigenvector(g, rounds=2),
+    "fused_trust_spam": lambda g, w: K.fused_trust_spam(w, [0], rounds=2),
+    "hits": lambda g, w: K.hits(g, rounds=2),
+    "salsa": lambda g, w: K.salsa(g, rounds=2),
+    "wl_refinement": lambda g, w: K.wl_refinement(g, rounds=2),
+    "spectral_bisection": lambda g, w: K.spectral_bisection(g, rounds=2),
+    "spectral_partition":
+        lambda g, w: K.spectral_partition(g, levels=1, rounds=2),
+    "simrank": lambda g, w: K.simrank(g, rounds=2),
+    "hyperball_harmonic":
+        lambda g, w: K.hyperball_harmonic(g, p=2, rounds=2),
+    "neighborhood_function":
+        lambda g, w: K.neighborhood_function(g, p=2, rounds=2),
+    "bfs": lambda g, w: K.bfs(g, 0),
+    "sssp": lambda g, w: K.sssp(w, 0),
+    "condensation_layers": lambda g, w: condensation_layers(g),
+    "bowtie_classes": lambda g, w: K.bowtie_classes(g),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MIGRATED))
+def test_kernel_leaves_no_cached_blocks(spark, leak_graphs, name):
+    """After the call and the release of its result, block-manager
+    storage holds the RDDs it held before: superseded states, round
+    intermediates and the final state are all really released. (SCC's
+    result is released inside condensation_layers and bowtie_classes.)"""
+    g, w = leak_graphs
+    before = _cached_ids(spark)
+    out = _MIGRATED[name](g, w)
+    assert out.count() > 0
+    out.unpersist()
+    assert _cached_ids(spark) <= before, name
