@@ -5,8 +5,9 @@ source, the priority is `f_score[dst] + h(dst, target)` (g_score), and
 the bucket queue dequeues lowest-priority vertices until the target's
 bucket is finished (`pq.finishedNode(dst_vertex)`).
 
-Spark realization: identical bucket loop to kernels/delta_stepping.py,
-but bucketed on priority = dist + h instead of dist. The heuristic is a
+Spark realization: the bucket-relaxation superstep of
+kernels/delta_stepping.py, bucketed on priority = dist + h instead of
+dist. The heuristic is a
 caller-supplied `(id, h)` DataFrame of admissible lower bounds on the
 remaining distance to `target` (the reference computes haversine from
 loaded coordinates via an extern func — coordinates are input data, not
@@ -16,7 +17,9 @@ Termination: once the current bucket's lower bound exceeds the target's
 tentative distance, no remaining path can improve it (priority is an
 admissible lower bound on any completion through that vertex), so
 dist[target] is exact — vertices beyond the goal region are never
-relaxed, which is the entire point of A*.
+relaxed, which is the entire point of A*. The target's distance and
+the next bucket are observed on each round's checkpoint job, so a
+round runs no action of its own.
 """
 
 from __future__ import annotations
@@ -24,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.kernels.delta_stepping import bucket_relaxation
+from graphit_spark.plans.state import bind_release, counted_checkpoint, superstep
 
 
 def astar(
@@ -38,7 +42,9 @@ def astar(
 ) -> DataFrame:
     """(id, dist) tentative distances when the target settled; exact for
     `target` (NULL everywhere unreached/pruned). `heuristic` is (id, h)
-    with admissible long lower bounds; missing ids get h = 0."""
+    with admissible long lower bounds; missing ids get h = 0.
+    ``max_rounds`` is a safety net: running out of relaxation rounds
+    before the target settles raises."""
     if not graph.weighted:
         raise ValueError("astar requires a weighted graph")
     own_cache = graph.ensure_persisted()
@@ -50,85 +56,42 @@ def astar(
             verts.join(heuristic.select("id", "h"), "id", "left")
             .select("id", F.coalesce(F.col("h").cast("long"), F.lit(0)).alias("h"))
         )
-
-    state = (
-        h.withColumn(
-            "dist",
-            F.when(F.col("id") == source, F.lit(0).cast("long")),
-        )
-        .select("id", "h", "dist")
-        .transform(fresh_checkpoint)
-    )
     prio = F.col("dist") + F.col("h")
-    bucket_of = F.floor(prio / delta)
+    at_target = F.col("id") == target
+    # the target's tentative distance, observed with every round's state
+    tgt = {
+        "hit": F.count(F.when(at_target, F.col("dist"))),
+        "tgt": F.max(F.when(at_target, F.col("dist"))),
+    }
 
-    # Driver-tracked scalars (tgt = target's tentative distance, bucket =
-    # current priority bucket): ONE bootstrap aggregate, then exactly one
-    # action per relaxation round — the combined aggregate below reads the
-    # just-checkpointed state, so there is no per-round O(V) scan job for
-    # the target scalar (that was a full extra Spark job per round).
-    row = state.agg(
-        F.max(F.when(F.col("id") == target, F.col("dist"))).alias("tgt"),
-        F.min(F.when(F.col("dist").isNotNull(), bucket_of)).alias("nxt"),
-    ).collect()[0]
-    tgt, bucket = row["tgt"], row["nxt"]
+    def settled(bucket: int | None, seen) -> bool:
+        # queue exhausted (target unreachable), or finishedNode(target):
+        # no remaining priority can beat its tentative distance
+        return bucket is None or (seen["hit"] > 0 and bucket * delta > seen["tgt"])
 
-    rounds = 0
-    while rounds < max_rounds:
-        if bucket is None:
-            break  # queue exhausted — target unreachable
-        if tgt is not None and bucket * delta > tgt:
-            break  # finishedNode(target): no remaining priority can beat it
-        # bucket is always chosen as a non-empty bucket (min over actual
-        # priorities), so the frontier is never empty here
-        frontier = state.filter(
-            F.col("dist").isNotNull() & (bucket_of == bucket)
-        ).select(F.col("id").alias("src"), F.col("dist").alias("sdist"))
-        rounds += 1
-        cand = (
-            graph.edges.join(frontier, "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("sdist") + F.col("weight")).alias("cand"),
-            )
-            .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
+    # the first bucket (the source's) rides the starting checkpoint job
+    state, seen = counted_checkpoint(
+        h.select(
+            "id", "h",
+            F.when(F.col("id") == source, F.lit(0).cast("long")).alias("dist"),
+        ),
+        first=F.min(F.floor(prio / delta)),
+        reached=F.count("dist"),
+        **tgt,
+    )
+    first = seen["first"] if seen["reached"] else None
+    if not settled(first, seen):
+        step, next_bucket, aggs = bucket_relaxation(
+            graph.edges, delta, prio, first
         )
-        new_state = (
-            state.join(cand, "id", "left")
-            .select(
-                "id",
-                "h",
-                F.when(
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand") < F.col("dist"))),
-                    F.col("cand"),
-                )
-                .otherwise(F.col("dist"))
-                .alias("dist"),
-                F.col("dist").alias("old"),
-            )
-            .transform(fresh_checkpoint)
+        state = superstep(
+            state, step, max_rounds=max_rounds, checkpoint_start=False,
+            until=lambda seen: settled(next_bucket(seen), seen),
+            **aggs, **tgt,
         )
-        improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
-        row = new_state.agg(
-            F.sum(
-                F.when(improved & (bucket_of == bucket), 1).otherwise(0)
-            ).alias("imp"),
-            F.max(F.when(F.col("id") == target, F.col("dist"))).alias("tgt"),
-            F.min(
-                F.when(F.col("dist").isNotNull() & (bucket_of > bucket), bucket_of)
-            ).alias("nxt"),
-        ).collect()[0]
-        tgt = row["tgt"]
-        prev = state
-        state = new_state.select("id", "h", "dist")
-        prev.unpersist()
-        if not row["imp"]:
-            bucket = row["nxt"]  # drained: jump straight past empty buckets
     if own_cache:
         graph.unpersist()
-    return state.select("id", "dist")
+    return bind_release(state.select("id", "dist"), state)
 
 
 def ppsp(

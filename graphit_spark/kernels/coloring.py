@@ -29,9 +29,12 @@ Spark plan (per round, uncolored set shrinking geometrically):
   - min free color: winners ⋈ sym ⋈ colored → used (winner, color)
     pairs; candidates = winners×{0} ∪ used.color+1; left-anti the used
     set; groupBy(min). Cost is Σ degree(winner) rows, never V².
-  - colored accumulates into one checkpointed frame (re-checkpointed
-    with each round's winners, partition count held fixed);
-    superseded uncolored and colored checkpoints released.
+  - state: one (id, pri, color) frame over every vertex, color NULL
+    while uncolored — the colored set the used-color join reads is the
+    same checkpoint as the uncolored set, so a round materializes one
+    frame (a union of per-round colored frames would add a scan per
+    past round to each round's join). The superstep driver
+    (plans/state.py) owns its checkpoints and releases.
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint, observe
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 from graphit_spark.kernels.mis import _priority_col
 
 COLOR_ROUNDS = 64
@@ -60,98 +63,59 @@ def greedy_coloring(
         .filter(F.col("src") != F.col("dst"))
         .transform(fresh_checkpoint)
     )
-    verts = graph.vertices().select("id").transform(fresh_checkpoint)
+    uncolored = F.col("color").isNull()
 
-    # the uncolored count is observed on the checkpoint job that
-    # materializes each round's uncolored set — no isEmpty() action
-    uncolored, left = observe(
-        verts.select("id", _priority_col().alias("pri")),
-        rows=F.count(F.lit(1)),
-    )
-    uncolored = uncolored.transform(fresh_checkpoint)
-    # every vertex colored so far, as ONE checkpointed frame: a union of
-    # the per-round frames would add a scan (and its tasks) per past
-    # round to each round's used-color join
-    colored: DataFrame | None = None
-    parts = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
-
-    for _ in range(rounds):
-        if left["rows"] == 0:
-            break
+    def step(state: DataFrame, rnd) -> DataFrame:
+        open_ = state.filter(uncolored)
         nbr_min = (
-            sym.join(
-                uncolored.select(F.col("id").alias("dst"), "pri"), "dst"
-            )
-            .join(uncolored.select(F.col("id").alias("src")), "src")
+            sym.join(open_.select(F.col("id").alias("dst"), "pri"), "dst")
+            .join(open_.select(F.col("id").alias("src")), "src")
             .groupBy("src")
             .agg(F.min("pri").alias("mn"))
             .withColumnRenamed("src", "id")
         )
         winners = (
-            uncolored.join(nbr_min, "id", "left")
+            open_.join(nbr_min, "id", "left")
             .filter(F.col("mn").isNull() | (F.col("pri") < F.col("mn")))
             .select("id")
         )
-        if colored is None:
-            # first round: nothing is colored yet, everyone takes 0
-            new_colored = winners.select(
-                "id", F.lit(0).cast("long").alias("color")
+        used = (
+            sym.join(winners.withColumnRenamed("id", "src"), "src")
+            .join(
+                state.filter(~uncolored).select(
+                    F.col("id").alias("dst"), "color"
+                ),
+                "dst",
             )
-        else:
-            used = (
-                sym.join(winners.withColumnRenamed("id", "src"), "src")
-                .join(
-                    colored.select(F.col("id").alias("dst"), "color"),
-                    "dst",
-                )
-                .select(F.col("src").alias("id"), "color")
-                .distinct()
-            )
-            cand = winners.select(
-                "id", F.lit(0).cast("long").alias("x")
-            ).unionByName(
-                used.select("id", (F.col("color") + 1).alias("x"))
-            )
-            new_colored = (
-                cand.join(
-                    used,
-                    (cand["id"] == used["id"]) & (cand["x"] == used["color"]),
-                    "left_anti",
-                )
-                .groupBy("id")
-                .agg(F.min("x").alias("color"))
-            )
-        new_colored = new_colored.transform(fresh_checkpoint)
-        nxt, left = observe(
-            uncolored.join(new_colored, "id", "left_anti"),
-            rows=F.count(F.lit(1)),
+            .select(F.col("src").alias("id"), "color")
+            .distinct()
         )
-        nxt = nxt.localCheckpoint(eager=True)
-        uncolored.unpersist()
-        uncolored = nxt
-        if colored is None:
-            colored = new_colored
-        else:
-            merged = (
-                colored.unionByName(new_colored)
-                .coalesce(parts)
-                .transform(fresh_checkpoint)
+        cand = winners.select(
+            "id", F.lit(0).cast("long").alias("x")
+        ).unionByName(used.select("id", (F.col("color") + 1).alias("x")))
+        new = (
+            cand.join(
+                used,
+                (cand["id"] == used["id"]) & (cand["x"] == used["color"]),
+                "left_anti",
             )
-            colored.unpersist()
-            new_colored.unpersist()
-            colored = merged
-    if left["rows"] > 0:
-        raise RuntimeError(
-            f"coloring did not settle within rounds={rounds} — the "
-            "Jones-Plassmann round count is the longest decreasing-"
-            "priority path, O(log n) in expectation; raise the budget"
+            .groupBy("id")
+            .agg(F.min("x").alias("new"))
         )
-    uncolored.unpersist()
-    out = colored
-    if out is None:
-        out = verts.select("id", F.lit(0).cast("long").alias("color")).limit(
-            0
+        return state.join(new, "id", "left").select(
+            "id", "pri", F.coalesce("color", "new").alias("color")
         )
+
+    # the uncolored count rides each round's checkpoint job
+    state = superstep(
+        graph.vertices().select(
+            "id", _priority_col().alias("pri"),
+            F.lit(None).cast("long").alias("color"),
+        ),
+        step, max_rounds=rounds, until=lambda seen: seen["left"] == 0,
+        left=F.count(F.when(uncolored, 1)),
+    )
+    sym.unpersist()
     if own_cache:
         graph.unpersist()
-    return out
+    return bind_release(state.select("id", "color"), state)

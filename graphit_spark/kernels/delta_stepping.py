@@ -12,23 +12,88 @@ improved vertices into their new buckets, until the queue is exhausted.
 Spark realization (SURVEY §2.3 row `applyUpdatePriority`): there is no
 distributed priority queue — the bucket structure lives in the driver as
 a scalar `current bucket index`; membership is a `filter` on the distance
-column (`dist div delta == k`). Inner loop: relax edges out of the
-current bucket until it stops changing (light-edge re-relaxation);
-then advance k to the next non-empty bucket (one small `agg(min)` job).
-The fixpoint equals Bellman-Ford's exact distances — the ordered
-schedule only changes *work order*, which is the reference's claim too
-(CGO 2020). Every relaxation round is the same partition-pruned
-join + groupBy(min) superstep as kernels/paths.py, so scale behavior is
-identical; the win is touching each edge O(1) expected times instead of
-O(rounds).
+column (`dist div delta == k`). Each superstep relaxes the current
+bucket's out-edges; the next bucket is the same one if the round
+improved a distance inside it (light-edge re-relaxation), else the
+lowest non-empty higher bucket — both observed on the round's own
+materialization, so advancing costs no job. The fixpoint equals
+Bellman-Ford's exact distances — the ordered schedule only changes
+*work order*, which is the reference's claim too (CGO 2020). Every
+relaxation round is the same partition-pruned join + groupBy(min)
+superstep as kernels/paths.py, so scale behavior is identical; the win
+is touching each edge O(1) expected times instead of O(rounds).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import Observed, superstep
+
+
+def bucket_relaxation(
+    edges: DataFrame, delta: int, prio: Column, first: int
+) -> tuple[Callable, Callable[[Observed], int | None], dict[str, Column]]:
+    """``(step, next_bucket, aggs)`` of the Julienne lazy bucket queue as
+    a superstep over a state ``(id, ..., dist)``, bucketed on
+    floor(prio / delta) — shared by delta-stepping (prio = dist) and A*
+    (prio = dist + h).
+
+    ``step`` relaxes the out-edges of one bucket: ``first`` in a call's
+    first round, then ``next_bucket(seen)`` of the previous round —
+    that bucket again if the round improved a distance inside it, else
+    the lowest non-empty higher bucket, ``None`` once the queue is
+    exhausted. ``aggs`` (observed on each round's materialization, to
+    be passed to ``superstep``) are what ``next_bucket`` reads."""
+    bucket_of = F.floor(prio / delta)
+    improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
+    above = bucket_of > F.col("b")
+    aggs = {
+        "cur": F.max("b"),
+        "imp": F.count(F.when(improved & (bucket_of == F.col("b")), 1)),
+        "more": F.count(F.when(above, 1)),
+        "nxt": F.min(F.when(above, bucket_of)),
+    }
+
+    def next_bucket(seen: Observed) -> int | None:
+        if seen["imp"]:
+            return seen["cur"]
+        return seen["nxt"] if seen["more"] else None
+
+    def step(state: DataFrame, rnd) -> DataFrame:
+        b = first if rnd.seen is None else next_bucket(rnd.seen)
+        # frontier = current bucket's members (dequeue_ready_set)
+        frontier = state.filter(bucket_of == b).select(
+            F.col("id").alias("src"), F.col("dist").alias("sdist")
+        )
+        cand = (
+            edges.join(frontier, "src")
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("sdist") + F.col("weight")).alias("cand"),
+            )
+            .groupBy("id")
+            .agg(F.min("cand").alias("cand"))
+        )
+        relaxed = state.join(cand, "id", "left").select(
+            *[c for c in state.columns if c != "dist"],
+            F.when(
+                F.col("cand").isNotNull()
+                & (F.col("dist").isNull() | (F.col("cand") < F.col("dist"))),
+                F.col("cand"),
+            )
+            .otherwise(F.col("dist"))
+            .alias("dist"),
+            F.col("dist").alias("old"),
+            F.lit(b).alias("b"),
+        )
+        # the round's aggregates read old and b; the state drops them
+        return rnd.observe(relaxed).select(*state.columns)
+
+    return step, next_bucket, aggs
 
 
 def sssp_delta_stepping(
@@ -46,110 +111,49 @@ def sssp_delta_stepping(
     by schedule; weights here are small ints so a few weight-units wide
     is a good default).
 
+    max_rounds: a fixed-iteration budget of relaxation rounds — the run
+    stops early when the queue is exhausted and never raises.
+
     store/resume: the north-rule checkpoint contract extended to the
-    Julienne priority-bucket layer — each relaxation round snapshots
-    (id, dist) with the NEXT scalar bucket cursor in its manifest
-    metrics, so a killed run restarts inside the correct bucket.
+    Julienne priority-bucket layer — each relaxation round's (id, dist)
+    is materialized by its snapshot write, with the NEXT scalar bucket
+    cursor in the manifest metrics (``None`` once the queue is
+    exhausted), so a killed run restarts inside the correct bucket.
     Distances are integers and the relaxation is a min-fixpoint, so the
     resumed run is byte-identical to an uninterrupted one (same
-    argument as BFS/SSSP; bucket-advance scans between snapshots are
-    idempotent and simply replay)."""
+    argument as BFS/SSSP)."""
     if not graph.weighted:
         raise ValueError("delta-stepping requires a weighted graph")
-    import time as _time
-
     own_cache = graph.ensure_persisted()
 
-    bucket = 0
-    rounds = 0
+    bucket, start = 0, 0
     if resume and store is not None and store.latest() is not None:
         it = store.latest()
-        dist = (
-            store.read(graph.spark, it)
-            .select("id", "dist")
-            .transform(fresh_checkpoint)
-        )
-        meta = store.manifest(it).get("metrics") or {}
-        bucket = int(meta.get("bucket", 0))
-        rounds = it + 1
+        dist = store.read(graph.spark, it).select("id", "dist")
+        bucket = (store.manifest(it).get("metrics") or {}).get("bucket", 0)
+        start = it + 1
     else:
         dist = graph.vertices().select(
             "id",
             F.when(F.col("id") == source, F.lit(0).cast("long")).alias(
                 "dist"
             ),
-        ).transform(fresh_checkpoint)
-
-    while rounds < max_rounds:
-        # frontier = current bucket's members (dequeue_ready_set)
-        frontier = dist.filter(
-            F.col("dist").isNotNull()
-            & (F.floor(F.col("dist") / delta) == bucket)
-        ).select(F.col("id").alias("src"), F.col("dist").alias("sdist"))
-        if frontier.limit(1).count() == 0:
-            nxt = (
-                dist.filter(
-                    F.col("dist").isNotNull()
-                    & (F.floor(F.col("dist") / delta) > bucket)
-                )
-                .agg(F.min(F.floor(F.col("dist") / delta)).alias("b"))
-                .collect()[0]["b"]
-            )
-            if nxt is None:
-                break  # pq.finished()
-            bucket = int(nxt)
-            continue
-        rounds += 1
-        t0 = _time.time()
-        cand = (
-            graph.edges.join(frontier, "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("sdist") + F.col("weight")).alias("cand"),
-            )
-            .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
         )
-        new_dist = (
-            dist.join(cand, "id", "left")
-            .select(
-                "id",
-                F.when(
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand") < F.col("dist"))),
-                    F.col("cand"),
-                )
-                .otherwise(F.col("dist"))
-                .alias("dist"),
-                F.col("dist").alias("old"),
-            )
-            .transform(fresh_checkpoint)
+    if bucket is not None:  # else the snapshot's queue was exhausted
+        step, next_bucket, aggs = bucket_relaxation(
+            graph.edges, delta, F.col("dist"), bucket
         )
-        # did this round improve anything still landing in the current
-        # bucket? (light edges -> re-relax; otherwise bucket is settled)
-        improved_in_bucket = (
-            new_dist.filter(
-                (F.col("old").isNull() | (F.col("dist") < F.col("old")))
-                & (F.floor(F.col("dist") / delta) == bucket)
-            )
-            .limit(1)
-            .count()
-        )
-        prev = dist
-        dist = new_dist.select("id", "dist")
-        prev.unpersist()
-        if improved_in_bucket == 0:
-            bucket += 1
-        if store is not None:
-            store.write(
-                dist,
-                rounds - 1,
-                {
+        dist = superstep(
+            dist, step, rounds=max_rounds, start=start,
+            until=lambda seen: next_bucket(seen) is None,
+            materialize=None if store is None else (
+                lambda df, rnd, seen: store.write(df, rnd.index, {
                     "kernel": "sssp_delta_stepping",
-                    "bucket": bucket,
-                    "elapsed_sec": _time.time() - t0,
-                },
-            )
+                    "bucket": lambda: next_bucket(seen),
+                })
+            ),
+            **aggs,
+        )
     if own_cache:
         graph.unpersist()
     return dist

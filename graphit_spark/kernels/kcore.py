@@ -10,40 +10,40 @@ number of rounds is the peeling depth (small on web-like graphs).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.plans.state import (
+    bind_release, fresh_checkpoint, observe, superstep,
+)
 
 
 def k_core(graph: LinkGraph, k: int, *, max_rounds: int = 100) -> DataFrame:
     """Vertices of the k-core of the symmetrized graph: (id), every vertex
-    with >= k neighbors inside the core."""
+    with >= k neighbors inside the core. ``max_rounds`` is a safety net:
+    a peel still dropping vertices when it runs out raises."""
     g = graph.symmetrize()
     own_cache = g.ensure_persisted()
-    keep = graph.vertices()
-    keep = keep.transform(fresh_checkpoint)
-    n_old = keep.count()
 
-    for _ in range(max_rounds):
+    def step(keep: DataFrame, rnd) -> DataFrame:
         alive = g.edges.join(
             keep.select(F.col("id").alias("src")), "src", "left_semi"
         ).join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
         deg = alive.groupBy(F.col("src").alias("id")).agg(
             F.count("*").alias("d")
         )
-        new_keep = (
+        # the dropped vertices are counted before the filter drops them
+        scored = rnd.observe(
             keep.join(deg, "id", "left")
-            .filter(F.coalesce("d", F.lit(0)) >= k)
-            .select("id")
-            .transform(fresh_checkpoint)
+            .select("id", F.coalesce("d", F.lit(0)).alias("d"))
         )
-        n_new = new_keep.count()
-        keep.unpersist()
-        keep = new_keep
-        if n_new == n_old:
-            break
-        n_old = n_new
+        return scored.filter(F.col("d") >= k).select("id")
+
+    keep = superstep(
+        graph.vertices(), step, max_rounds=max_rounds, changed=F.col("d") < k
+    )
     if own_cache:
         g.unpersist()
     return keep
@@ -57,16 +57,19 @@ def core_decomposition(
     priorities clamped at k via `pq.updatePrioritySum(dst, -1, k)`; a
     vertex's priority when dequeued IS its core number).
 
-    Spark realization (SURVEY §2.3 `applyUpdatePriority`): the bucket
-    index k is a driver scalar; "dequeue" is a filter on the residual
-    degree column; the decrement is a join of the peeled frontier's
-    edges against the remaining set — only the peeled vertices' edges
-    are touched per round (the Julienne work bound), never a full
-    rescan. Returns (id, core).
+    Spark realization (SURVEY §2.3 `applyUpdatePriority`): the state is
+    the remaining (id, d); each round dequeues the bucket k = min(d),
+    observed on the previous round's materialization, as a filter on
+    the residual degree column; the decrement is a join of the peeled
+    frontier's edges against the remaining set — only the peeled
+    vertices' edges are touched per round (the Julienne work bound),
+    never a full rescan. Decrements clamp at k, so min(d) never falls
+    below the bucket being drained (removing a vertex can pull others
+    down INTO bucket k, never below) and one flat loop peels k until it
+    drains, then moves to the next bucket. Returns (id, core).
     """
     g = graph.symmetrize()
     own_cache = g.ensure_persisted()
-    spark = g.spark
 
     # universe from the ORIGINAL graph: the symmetrized copy re-derives
     # num_vertices from its squished edges, which loses isolated ids
@@ -75,56 +78,48 @@ def core_decomposition(
     sym_deg = g.edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("sd")
     )
-    state = (
+    # the first bucket rides the starting checkpoint job
+    state, first = observe(
         graph.vertices()
         .join(sym_deg, "id", "left")
-        .select("id", F.coalesce("sd", F.lit(0)).cast("long").alias("d"))
-        .transform(fresh_checkpoint)
+        .select("id", F.coalesce("sd", F.lit(0)).cast("long").alias("d")),
+        k=F.min("d"),
     )
+    state = fresh_checkpoint(state)
     cores: list[DataFrame] = []
-    prev = state
 
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        k_row = state.agg(F.min("d").alias("k")).collect()[0]
-        if k_row["k"] is None:
-            break  # pq.finished(): everything dequeued
-        k = int(k_row["k"])
-        # inner loop: peel at priority k until the bucket drains
-        # (removing a vertex can pull others down INTO bucket k —
-        # never below, that's the clamp)
-        while True:
-            peeled, seen = counted_checkpoint(
-                state.filter(F.col("d") <= k).select("id")
+    def step(state: DataFrame, rnd) -> DataFrame:
+        k = (first if rnd.seen is None else rnd.seen)["k"]
+        peeled = (
+            state.filter(F.col("d") <= k)
+            .select("id", F.lit(k).cast("long").alias("core"))
+            .transform(fresh_checkpoint)
+        )
+        cores.append(peeled)
+        dec = (
+            g.edges.join(
+                peeled.select(F.col("id").alias("src")), "src", "left_semi"
             )
-            if seen["rows"] == 0:
-                break
-            cores.append(peeled.select("id", F.lit(k).alias("core")))
-            remaining = state.join(peeled, "id", "left_anti")
-            dec = (
-                g.edges.join(
-                    peeled.select(F.col("id").alias("src")), "src", "left_semi"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.count("*").alias("dec"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.count("*").alias("dec"))
+        )
+        return (
+            state.join(peeled, "id", "left_anti")
+            .join(dec, "id", "left")
+            .select(
+                "id",
+                F.greatest(
+                    F.col("d") - F.coalesce("dec", F.lit(0)), F.lit(k)
+                ).alias("d"),
             )
-            state = (
-                remaining.join(dec, "id", "left")
-                .select(
-                    "id",
-                    (F.col("d") - F.coalesce("dec", F.lit(0))).alias("d"),
-                )
-                .transform(fresh_checkpoint)
-            )
-            prev.unpersist()
-            prev = state
+        )
 
+    # pq.finished(): everything dequeued (an empty graph peels nothing)
+    superstep(
+        state, step, max_rounds=max_rounds, checkpoint_start=False,
+        until=lambda seen: seen["rows"] == 0,
+        rows=F.count(F.lit(1)), k=F.min("d"),
+    ).unpersist()
     if own_cache:
         g.unpersist()
-    if not cores:
-        return spark.createDataFrame([], "id long, core long")
-    out = cores[0]
-    for part in cores[1:]:
-        out = out.unionByName(part)
-    return out.select("id", F.col("core").cast("long").alias("core"))
+    return bind_release(reduce(DataFrame.unionByName, cores), *cores)

@@ -14,10 +14,12 @@ Scale shape: state is the SPARSE set of reached (id, landmark, dist)
 rows — never a dense V x K matrix — so memory tracks actual reach. Per
 round: one equi-join of the cached edge table against the frontier
 (src), a map-side-combined groupBy (dst, landmark) min, and a
-full-state merge keyed (id, landmark); localCheckpoint truncates the
-plan each round and superseded checkpoints are released. Landmark
-selection is a K-row driver action (top out-degree, ties by id) —
-bounded by K, not V.
+full-state merge keyed (id, landmark). The state keeps each pair's
+previous distance, so the next frontier is a filter on it and the
+change count rides the round's checkpoint job; the superstep driver
+(plans/state.py) owns the checkpoints and their release. Landmark
+selection (top out-degree, ties by id) is a K-row ordered limit inside
+the starting checkpoint — no driver action.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, superstep
 
 
 def landmark_distances(
@@ -39,33 +41,37 @@ def landmark_distances(
 
     Returns (id, landmark, dist) for reached pairs only — unreachable
     pairs are absent, mirroring the sparse frontier contract of
-    apps/bfs.gt rather than padding a dense matrix.
+    apps/bfs.gt rather than padding a dense matrix. ``max_iters`` is a
+    fixed-iteration budget shared with the twin: the searches stop
+    early once no distance changes and never raise.
     """
     own_cache = graph.ensure_persisted()
-    seeds = [
-        int(r["id"])
-        for r in graph.out_degrees()
+    seeds = (
+        graph.out_degrees()
         .orderBy(F.desc("out_degree"), F.asc("id"))
         .limit(n_landmarks)
-        .collect()
-    ]
-    spark = graph.spark
-    state = spark.createDataFrame(
-        [(s, s, 0) for s in seeds], "id long, landmark long, dist long"
-    ).transform(fresh_checkpoint)
-    frontier = state
+        .select(
+            "id", F.col("id").alias("landmark"),
+            F.lit(0).cast("long").alias("dist"),
+            F.lit(None).cast("long").alias("old"),
+        )
+    )
+    changed = F.col("old").isNull() | (F.col("dist") < F.col("old"))
 
-    for _ in range(max_iters):
+    def step(state: DataFrame, rnd) -> DataFrame:
         cand = (
             graph.edges.join(
-                frontier.select(F.col("id").alias("src"), "landmark", "dist"),
+                state.filter(changed).select(
+                    F.col("id").alias("src"), "landmark", "dist"
+                ),
                 "src",
             )
             .groupBy(F.col("dst").alias("id"), F.col("landmark"))
             .agg((F.min("dist") + 1).alias("cand"))
         )
-        merged = (
-            state.join(cand, ["id", "landmark"], "full")
+        return (
+            state.select("id", "landmark", "dist")
+            .join(cand, ["id", "landmark"], "full")
             .select(
                 "id",
                 "landmark",
@@ -75,16 +81,9 @@ def landmark_distances(
                 ).alias("dist"),
                 F.col("dist").alias("old"),
             )
-            .transform(fresh_checkpoint)
         )
-        frontier = merged.filter(
-            F.col("old").isNull() | (F.col("dist") < F.col("old"))
-        ).select("id", "landmark", "dist")
-        n_changed = frontier.count()
-        prev, state = state, merged.select("id", "landmark", "dist")
-        prev.unpersist()
-        if n_changed == 0:
-            break
+
+    state = superstep(seeds, step, rounds=max_iters, changed=changed)
     if own_cache:
         graph.unpersist()
-    return state
+    return bind_release(state.select("id", "landmark", "dist"), state)

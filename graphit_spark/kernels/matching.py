@@ -42,9 +42,10 @@ Spark plan (per round, alive edge set shrinking geometrically):
   - eliminate: alive(r+1) = alive(r) minus any edge sharing an
     endpoint with a matched edge (two left-anti joins on the matched
     vertex set).
-  - matched frames are localCheckpointed per round and unioned once
-    (the BC frontier-stack pattern); superseded alive checkpoints are
-    released.
+  - matched frames are checkpointed per round (they outlive the
+    round's state) and unioned once; the result's ``unpersist()``
+    releases them. The superstep driver (plans/state.py) owns the alive
+    set's checkpoints and releases.
 """
 
 from __future__ import annotations
@@ -54,7 +55,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 
 MATCH_ROUNDS = 24
 
@@ -80,24 +81,14 @@ def maximal_matching(
     unmatched vertices. Raises if the fixed round budget is exhausted
     with alive edges remaining (see module docstring)."""
     own_cache = graph.ensure_persisted()
-    # the alive-edge count rides each round's checkpoint job
-    alive, seen = counted_checkpoint(
-        graph.symmetrize()
-        .edges.filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .withColumn("epri", _edge_priority())
-    )
-    verts = graph.vertices().select("id").transform(fresh_checkpoint)
+    matched: list[DataFrame] = []
 
-    matched_frames: list[DataFrame] = []
-    for _ in range(rounds):
-        if seen["rows"] == 0:
-            break
+    def step(alive: DataFrame, rnd) -> DataFrame:
         ends = alive.select(F.col("u").alias("x"), "epri").unionAll(
             alive.select(F.col("v").alias("x"), "epri")
         )
         vmin = ends.groupBy("x").agg(F.min("epri").alias("mn"))
-        matched = (
+        pairs = (
             alive.join(
                 vmin.select(F.col("x").alias("u"), F.col("mn").alias("mu")),
                 "u",
@@ -110,39 +101,32 @@ def maximal_matching(
             .select("u", "v")
             .transform(fresh_checkpoint)
         )
-        matched_frames.append(matched)
+        matched.append(pairs)
         mverts = (
-            matched.select(F.col("u").alias("x"))
-            .unionAll(matched.select(F.col("v").alias("x")))
+            pairs.select(F.col("u").alias("x"))
+            .unionAll(pairs.select(F.col("v").alias("x")))
             .distinct()
         )
-        nxt, seen = counted_checkpoint(
-            alive.join(mverts.withColumnRenamed("x", "u"), "u", "left_anti")
-            .join(mverts.withColumnRenamed("x", "v"), "v", "left_anti")
-        )
-        alive.unpersist()
-        alive = nxt
-    if seen["rows"] > 0:
-        raise RuntimeError(
-            f"maximal_matching did not settle within rounds={rounds} — "
-            "alive edges remain; raise the budget (each round removes a "
-            "constant fraction of edges in expectation, so O(log E) "
-            "rounds suffice)"
-        )
-    alive.unpersist()
+        return alive.join(
+            mverts.withColumnRenamed("x", "u"), "u", "left_anti"
+        ).join(mverts.withColumnRenamed("x", "v"), "v", "left_anti")
 
-    if matched_frames:
-        m = reduce(DataFrame.unionByName, matched_frames)
-    else:
-        m = verts.limit(0).select(
-            F.col("id").alias("u"), F.col("id").alias("v")
-        )
+    # the alive-edge count rides each round's checkpoint job
+    superstep(
+        graph.symmetrize()
+        .edges.filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .withColumn("epri", _edge_priority()),
+        step, max_rounds=rounds, until=lambda seen: seen["rows"] == 0,
+        rows=F.count(F.lit(1)),
+    ).unpersist()
+    if own_cache:
+        graph.unpersist()
+    m = reduce(DataFrame.unionByName, matched)
     pairs = m.select(F.col("u").alias("id"), F.col("v").alias("mate")).unionAll(
         m.select(F.col("v").alias("id"), F.col("u").alias("mate"))
     )
-    out = verts.join(pairs, "id", "left").select(
+    out = graph.vertices().join(pairs, "id", "left").select(
         "id", F.coalesce(F.col("mate"), F.lit(-1)).cast("long").alias("mate")
     )
-    if own_cache:
-        graph.unpersist()
-    return out
+    return bind_release(out, *matched)

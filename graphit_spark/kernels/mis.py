@@ -33,9 +33,10 @@ Spark plan (per round, active set shrinking geometrically):
     neighbor or own priority < min.
   - eliminate: winners' neighbors via one more edge join; active(r+1) =
     active(r) minus winners minus eliminated (two left-anti joins).
-  - winners are localCheckpointed per round (the BC frontier-stack
-    pattern, kernels/bc.py) and unioned once at the end; superseded
-    active checkpoints are released.
+  - winners are checkpointed per round (they outlive the round's
+    state) and unioned once at the end; the result's ``unpersist()``
+    releases them. The superstep driver (plans/state.py) owns the
+    active set's checkpoints and releases.
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 
 MIS_ROUNDS = 24
 
@@ -72,16 +73,10 @@ def maximal_independent_set(
         .filter(F.col("src") != F.col("dst"))
         .transform(fresh_checkpoint)
     )
-    verts = graph.vertices().select("id").transform(fresh_checkpoint)
+    verts = graph.vertices()
+    winners: list[DataFrame] = []
 
-    # the active count rides each round's checkpoint job (no isEmpty())
-    active, seen = counted_checkpoint(
-        verts.select("id", _priority_col().alias("pri"))
-    )
-    winner_frames: list[DataFrame] = []
-    for _ in range(rounds):
-        if seen["rows"] == 0:
-            break
+    def step(active: DataFrame, rnd) -> DataFrame:
         # min active-neighbor priority per active vertex (both edge
         # endpoints restricted to the active set, as in the twin)
         nbr_min = (
@@ -91,42 +86,33 @@ def maximal_independent_set(
             .agg(F.min("pri").alias("mn"))
             .withColumnRenamed("src", "id")
         )
-        winners = (
+        won = (
             active.join(nbr_min, "id", "left")
             .filter(F.col("mn").isNull() | (F.col("pri") < F.col("mn")))
             .select("id")
             .transform(fresh_checkpoint)
         )
-        winner_frames.append(winners)
+        winners.append(won)
         eliminated = (
-            sym.join(winners.withColumnRenamed("id", "src"), "src")
+            sym.join(won.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"))
             .distinct()
         )
-        nxt, seen = counted_checkpoint(
-            active.join(winners, "id", "left_anti")
-            .join(eliminated, "id", "left_anti")
+        return active.join(won, "id", "left_anti").join(
+            eliminated, "id", "left_anti"
         )
-        active.unpersist()
-        active = nxt
-    if seen["rows"] > 0:
-        raise RuntimeError(
-            f"MIS did not settle within rounds={rounds} — undecided "
-            "vertices remain; raise the budget (the greedy peel removes "
-            "a constant fraction of edges per round, so O(log E) rounds "
-            "suffice in expectation)"
-        )
-    active.unpersist()
 
-    if winner_frames:
-        mis = reduce(DataFrame.unionByName, winner_frames).withColumn(
-            "w", F.lit(True)
-        )
-    else:
-        mis = verts.limit(0).withColumn("w", F.lit(True))
+    # the active count rides each round's checkpoint job
+    superstep(
+        verts.select("id", _priority_col().alias("pri")), step,
+        max_rounds=rounds, until=lambda seen: seen["rows"] == 0,
+        rows=F.count(F.lit(1)),
+    ).unpersist()
+    sym.unpersist()
+    if own_cache:
+        graph.unpersist()
+    mis = reduce(DataFrame.unionByName, winners).withColumn("w", F.lit(True))
     out = verts.join(mis, "id", "left").select(
         "id", F.coalesce(F.col("w"), F.lit(False)).alias("in_mis")
     )
-    if own_cache:
-        graph.unpersist()
-    return out
+    return bind_release(out, *winners)

@@ -23,10 +23,12 @@ Prim oracle (tests/test_kernels.py).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 
 _MAX_ROUNDS = 64  # > log2(any vertex count a long can index)
 
@@ -35,23 +37,18 @@ def _pointer_jump(ptr: DataFrame) -> DataFrame:
     """Collapse a pseudo-forest (c, p) to roots: p = p[p] until fixpoint.
 
     Same shortcutting as kernels/components.py (apps/cc_lp_pj.gt:21-28),
-    on the component graph (<= one row per component).
-    """
-    while True:
-        hop, seen = counted_checkpoint(
-            ptr.alias("a")
-            .join(
-                ptr.select(
-                    F.col("c").alias("p"), F.col("p").alias("pp")
-                ).alias("b"),
-                "p",
-            )
-            .select("c", F.col("pp").alias("p"), (F.col("p") != F.col("pp")).alias("moved")),
-            moved=F.count(F.when(F.col("moved"), 1)),
-        )
-        ptr = hop.select("c", "p")
-        if seen["moved"] == 0:
-            return ptr
+    on the component graph (<= one row per component). Returns the
+    materialized (c, p, old) state; its ``unpersist()`` releases it."""
+
+    def hop(ptr: DataFrame, rnd) -> DataFrame:
+        ptr = ptr.select("c", "p")
+        return ptr.join(
+            ptr.select(F.col("c").alias("p"), F.col("p").alias("pp")), "p"
+        ).select("c", F.col("pp").alias("p"), F.col("p").alias("old"))
+
+    return superstep(
+        ptr, hop, max_rounds=_MAX_ROUNDS, changed=F.col("p") != F.col("old")
+    )
 
 
 def minimum_spanning_forest(graph: LinkGraph) -> DataFrame:
@@ -64,7 +61,6 @@ def minimum_spanning_forest(graph: LinkGraph) -> DataFrame:
     if not graph.weighted:
         raise ValueError("minimum_spanning_forest requires a weighted graph")
 
-    spark = graph.edges.sparkSession
     # undirected view with one canonical row per {u,v}: min weight wins,
     # matching Prim on the symmetrized multigraph
     und = (
@@ -77,12 +73,10 @@ def minimum_spanning_forest(graph: LinkGraph) -> DataFrame:
         .agg(F.min("w").alias("w"))
         .persist()
     )
-    comp = graph.vertices().select("id", F.col("id").alias("comp"))
-    comp = comp.transform(fresh_checkpoint)
-    prev_comp = comp  # superseded checkpoints released per round
+    forest: list[DataFrame] = []
 
-    forest_parts: list[DataFrame] = []
-    for _ in range(_MAX_ROUNDS):
+    def step(comp: DataFrame, rnd) -> DataFrame:
+        comp = comp.select("id", "comp")
         cu = comp.select(F.col("id").alias("u"), F.col("comp").alias("cu"))
         cv = comp.select(F.col("id").alias("v"), F.col("comp").alias("cv"))
         cross = (
@@ -99,18 +93,17 @@ def minimum_spanning_forest(graph: LinkGraph) -> DataFrame:
             .groupBy("c")
             .agg(F.min("e").alias("e"))
         )
-        chosen, seen = counted_checkpoint(
-            nominated.select("e.u", "e.v", "e.w", "e.cu", "e.cv")
+        forest.append(
+            nominated.select("e.u", "e.v", F.col("e.w").alias("weight"))
             .dropDuplicates(["u", "v"])
+            .transform(fresh_checkpoint)
         )
-        if seen["rows"] == 0:
-            break
-        forest_parts.append(chosen.select("u", "v", "w"))
 
         # contract: every component points along its own nominated edge.
         # The functional graph is a pseudo-forest whose only cycles are
         # 2-cycles (two components nominating the same strictly-minimum
         # edge); break them toward the smaller id, then pointer-jump.
+        # No nomination (the forest is complete) moves no component.
         ptr0 = nominated.select(
             "c",
             F.when(F.col("e.cu") == F.col("c"), F.col("e.cv"))
@@ -136,21 +129,14 @@ def minimum_spanning_forest(graph: LinkGraph) -> DataFrame:
                 .alias("p"),
             )
         )
-        roots = _pointer_jump(ptr)
-        comp = (
-            comp.join(roots, comp.comp == roots.c)
-            .select("id", F.col("p").alias("comp"))
-            .transform(fresh_checkpoint)
+        roots = rnd.own(_pointer_jump(ptr)).select("c", "p")
+        return comp.join(roots, comp.comp == roots.c).select(
+            "id", F.col("p").alias("comp"), F.col("comp").alias("old")
         )
-        prev_comp.unpersist()
-        prev_comp = comp
 
+    superstep(
+        graph.vertices().select("id", F.col("id").alias("comp")), step,
+        max_rounds=_MAX_ROUNDS, changed=F.col("comp") != F.col("old"),
+    ).unpersist()
     und.unpersist()
-    if not forest_parts:
-        return spark.createDataFrame(
-            [], "u long, v long, weight long"
-        )
-    out = forest_parts[0]
-    for p in forest_parts[1:]:
-        out = out.union(p)
-    return out.select("u", "v", F.col("w").alias("weight"))
+    return bind_release(reduce(DataFrame.union, forest), *forest)

@@ -30,10 +30,11 @@ knife-edges included.
 
 Scale shape per round: one scan of the cached symmetrized edge table
 joined against the (small) active set, one map-side-combined
-groupBy(dst) BIGINT sum, three small joins to merge state, one driver
-count. State is sparse: rows exist only for vertices that ever held
-mass (all kept rows provably have r >= 1, see `_r_stays_positive` note
-in the twin builder).
+groupBy(dst) BIGINT sum, three small joins to merge state; the next
+round's active count is observed on the state's checkpoint job, so a
+round runs no action of its own. State is sparse: rows exist only for
+vertices that ever held mass (all kept rows provably have r >= 1, see
+`_r_stays_positive` note in the twin builder).
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.plans.state import bind_release, superstep
 
 PUSH_SCALE = 10**9  # nano-units of probability mass
 PUSH_ALPHA_NUM = 15  # alpha = 0.15, as a rational for integer math
@@ -63,47 +64,33 @@ def approximate_ppr_push(
     settled mass p and residual r in integer nano-units (exact), plus
     ppr = p / 1e9 as a convenience double (exact integer / exact power
     of ten — deterministic). Rows are exactly the vertices with r > 0;
-    every returned row has r >= 1 by the floor arithmetic."""
+    every returned row has r >= 1 by the floor arithmetic.
+    ``max_rounds`` is a fixed-iteration budget shared with the twin: the
+    push stops early once no vertex is active and never raises."""
     und = graph.symmetrize()
     own_cache = und.ensure_persisted()
     degs = und.out_degrees()  # persisted V-sized (id, out_degree)
+    active = (F.col("r") > F.lit(eps_units) * F.col("d")) & (F.col("d") > 0)
 
-    spark = und.spark
-    src_deg = (
-        degs.filter(F.col("id") == source).collect()[0]["out_degree"]
-        if source < und.num_vertices
-        else 0
-    )
-    state = spark.createDataFrame(
-        [(int(source), int(src_deg), 0, int(PUSH_SCALE))],
-        "id long, d long, p long, r long",
-    ).transform(fresh_checkpoint)
-
-    prev = state
-    for _ in range(max_rounds):
-        act = state.filter(
-            (F.col("r") > F.lit(eps_units) * F.col("d")) & (F.col("d") > 0)
-        ).select(
-            "id",
-            "d",
-            "r",
-            F.expr(f"(r * {alpha_num}) div {alpha_den}").alias("gain"),
-        ).select(
-            "id",
-            "d",
-            "gain",
-            F.expr("(r - gain) div 2").alias("push_total"),
-        ).select(
-            "id",
-            "gain",
-            "push_total",
-            F.expr("push_total div d").alias("per_nbr"),
+    def step(state: DataFrame, rnd) -> DataFrame:
+        act = rnd.checkpoint(
+            state.filter(active).select(
+                "id",
+                "d",
+                "r",
+                F.expr(f"(r * {alpha_num}) div {alpha_den}").alias("gain"),
+            ).select(
+                "id",
+                "d",
+                "gain",
+                F.expr("(r - gain) div 2").alias("push_total"),
+            ).select(
+                "id",
+                "gain",
+                "push_total",
+                F.expr("push_total div d").alias("per_nbr"),
+            )
         )
-        act, seen = counted_checkpoint(act)
-        if seen["rows"] == 0:
-            act.unpersist()
-            break
-
         recv = (
             und.edges.join(
                 act.filter(F.col("per_nbr") > 0).select(
@@ -119,7 +106,7 @@ def approximate_ppr_push(
             .join(recv, "id", "full_outer")
             .join(degs, "id", "left")
         )
-        state = merged.select(
+        return merged.select(
             "id",
             F.coalesce("d", "out_degree", F.lit(0)).cast("long").alias("d"),
             (F.coalesce("p", F.lit(0)) + F.coalesce("gain", F.lit(0)))
@@ -136,19 +123,25 @@ def approximate_ppr_push(
             )
             .cast("long")
             .alias("r"),
-        ).transform(fresh_checkpoint)
-        act.unpersist()
-        prev.unpersist()
-        prev = state
+        )
 
+    seed = und.spark.createDataFrame(
+        [(int(source), 0, int(PUSH_SCALE))], "id long, p long, r long"
+    ).join(degs, "id", "left")
+    state = superstep(
+        seed.select(
+            "id", F.coalesce("out_degree", F.lit(0)).cast("long").alias("d"),
+            "p", "r",
+        ),
+        step, rounds=max_rounds, until=lambda seen: seen["active"] == 0,
+        active=F.count(F.when(active, 1)),
+    )
+    if own_cache:
+        und.unpersist()
     out = state.filter(F.col("r") > 0).select(
         "id",
         F.col("p").alias("ppr_units"),
         F.col("r").alias("r_units"),
         (F.col("p") / F.lit(float(PUSH_SCALE))).alias("ppr"),
     )
-    out = fresh_checkpoint(out)
-    state.unpersist()
-    if own_cache:
-        und.unpersist()
-    return out
+    return bind_release(out, state)

@@ -348,6 +348,19 @@ class TestKCore:
                 keep -= drop
             assert got == sorted(keep), f"k={k}"
 
+    def test_budget_short_of_peel_depth_raises(self, spark):
+        """At k = 2 a triangle with a 5-vertex tail peels one tail vertex
+        per round: 6 rounds, the last observing no drop. A 1-round
+        budget raises instead of returning the part-peeled tail; with
+        the default budget the core is the triangle."""
+        from graphit_spark.kernels import k_core
+
+        edges = [(0, 1), (1, 2), (2, 0)] + [(v, v + 1) for v in range(2, 7)]
+        g = LinkGraph.from_pairs(spark, edges, persist=False)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            k_core(g, 2, max_rounds=1)
+        assert sorted(r["id"] for r in k_core(g, 2).collect()) == [0, 1, 2]
+
 
 class TestBetweenness:
     @pytest.mark.parametrize("seed", [6, 21])

@@ -10,6 +10,7 @@ released."""
 
 import random
 import re
+import sys
 import threading
 
 import pytest
@@ -59,7 +60,30 @@ def _job_names(spark, group: str, fn) -> list[str]:
     return [store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup(group)]
 
 
-def test_durable_pagerank_has_no_round_trips(spark, tmp_path):
+@pytest.fixture
+def named_counts(monkeypatch):
+    """``DataFrame.count()`` jobs named after their Python call site,
+    "count at <file>:<line>", as PySpark already names ``collect`` and
+    ``take`` jobs (its ``count`` leaves the name to the JVM)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    count = DataFrame.count
+
+    def named(self):
+        caller = sys._getframe(1)
+        jsc = self.sparkSession.sparkContext._jsc
+        jsc.setCallSite(
+            f"count at {caller.f_code.co_filename}:{caller.f_lineno}"
+        )
+        try:
+            return count(self)
+        finally:
+            jsc.setCallSite(None)
+
+    monkeypatch.setattr(DataFrame, "count", named)
+
+
+def test_durable_pagerank_has_no_round_trips(spark, tmp_path, named_counts):
     """No follow-up action per round, and the run leaves block-manager
     storage at its level before (the starting checkpoint is released)."""
     sc = spark.sparkContext
@@ -81,7 +105,7 @@ def test_durable_pagerank_has_no_round_trips(spark, tmp_path):
     assert cached_ids() <= before
 
 
-def test_cc_has_no_round_trips(spark):
+def test_cc_has_no_round_trips(spark, named_counts):
     # a chain keeps CC going for several sparse and dense rounds
     edges = [(v, v + 1) for v in range(40)] + _edges()
     g = LinkGraph.from_pairs(spark, edges, persist=False)
@@ -300,6 +324,21 @@ _MIGRATED = {
     "sssp": lambda g, w: K.sssp(w, 0),
     "condensation_layers": lambda g, w: condensation_layers(g),
     "bowtie_classes": lambda g, w: K.bowtie_classes(g),
+    # fixpoints under a max_rounds= safety net run to convergence;
+    # fixed-iteration kernels get 2 rounds
+    "maximal_independent_set": lambda g, w: K.maximal_independent_set(g),
+    "greedy_coloring": lambda g, w: K.greedy_coloring(g),
+    "maximal_matching": lambda g, w: K.maximal_matching(g),
+    "k_core": lambda g, w: K.k_core(g, 2),
+    "core_decomposition": lambda g, w: K.core_decomposition(g),
+    "minimum_spanning_forest": lambda g, w: K.minimum_spanning_forest(w),
+    "sssp_delta_stepping":
+        lambda g, w: K.sssp_delta_stepping(w, 0, max_rounds=2),
+    "landmark_distances":
+        lambda g, w: K.landmark_distances(g, 2, max_iters=2),
+    "astar": lambda g, w: K.astar(w, 0, 4),
+    "approximate_ppr_push":
+        lambda g, w: K.approximate_ppr_push(g, 0, max_rounds=2),
 }
 
 
@@ -315,3 +354,33 @@ def test_kernel_leaves_no_cached_blocks(spark, leak_graphs, name):
     assert out.count() > 0
     out.unpersist()
     assert _cached_ids(spark) <= before, name
+
+
+# a driver round trip started from a peel or bucket kernel's own module
+_KERNEL_ROUND_TRIP = re.compile(
+    r"^(collect|count|first|take|head) at "
+    r"\S*(kcore|landmarks|astar|delta_stepping)\.py:\d+$"
+)
+
+
+def test_peel_and_bucket_kernels_have_no_round_trips(
+    spark, leak_graphs, named_counts
+):
+    """Their stopping numbers — k-core's dropped count, core
+    decomposition's next bucket, the landmark frontier size, A*'s
+    target distance and both bucket cursors — are observed on each
+    round's materialization: no kernel call runs an action of its own."""
+    g, w = leak_graphs
+    calls = {
+        "k_core": lambda: K.k_core(g, 2),
+        "core_decomposition": lambda: K.core_decomposition(g),
+        "landmark_distances": lambda: K.landmark_distances(g, 2, max_iters=2),
+        "astar": lambda: K.astar(w, 0, 4),
+        "sssp_delta_stepping":
+            lambda: K.sssp_delta_stepping(w, 0, max_rounds=2),
+    }
+    trips = {}
+    for name, call in calls.items():
+        names = _job_names(spark, f"{name}-jobs", lambda: call().unpersist())
+        trips[name] = sorted({n for n in names if _KERNEL_ROUND_TRIP.match(n)})
+    assert not any(trips.values()), trips
