@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from graphit_spark.graph import local_frame
+
 # language-ID marker substrings: (lang, [markers]) — order = tie-break
 # priority (first wins on equal score). Pure substring counting, so the
 # SQL twin is exact.
@@ -755,7 +757,8 @@ def _bpe_learn(words: DataFrame, rounds: int, top_words: int) -> list[tuple]:
 
 
 def _bpe_learn_df(spark, words, rounds, top_words) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _bpe_learn(words, rounds, top_words),
         "merge_round INT, lhs STRING, rhs STRING, merged STRING, "
         "pair_count BIGINT",

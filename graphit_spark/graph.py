@@ -31,6 +31,31 @@ from pyspark.storagelevel import StorageLevel
 SRC, DST, WEIGHT = "src", "dst", "weight"
 
 
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for small driver-side rows
+    (tuples), built as a local relation through Arrow.
+
+    ``createDataFrame`` on a Python list parallelizes the pickled rows,
+    so every job that scans the frame starts Python workers to unpickle
+    them again (~1 s per scan at local[8] on a 4-core host). An Arrow
+    table becomes a LocalRelation that the JVM scans by itself."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
+
+
 class LinkGraph:
     """A simple directed graph backed by a squished Spark edge DataFrame."""
 
@@ -157,7 +182,7 @@ class LinkGraph:
         """Small-graph constructor for tests: list of (src, dst[, weight])."""
         weighted = bool(pairs) and len(pairs[0]) == 3
         schema = "src long, dst long" + (", weight long" if weighted else "")
-        return cls(spark.createDataFrame(pairs, schema=schema), **kw)
+        return cls(local_frame(spark, pairs, schema), **kw)
 
     # -- cardinalities -----------------------------------------------------
 

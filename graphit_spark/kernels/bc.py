@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graphit_spark.graph import LinkGraph
+from graphit_spark.graph import LinkGraph, local_frame
 from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 
@@ -33,8 +33,8 @@ def betweenness_centrality(
     edges = graph.edges
 
     # ---- forward phase: levels + path counts --------------------------
-    frontier = spark.createDataFrame(
-        [(source, 1.0)], "id long, sigma double"
+    frontier = local_frame(
+        spark, [(source, 1.0)], "id long, sigma double"
     ).transform(fresh_checkpoint)
     levels: list[DataFrame] = [frontier]
     visited = frontier.select("id")
@@ -128,8 +128,8 @@ def edge_betweenness(
     own_cache = graph.ensure_persisted()
     edges = graph.edges
 
-    frontier = spark.createDataFrame(
-        [(source, 1.0)], "id long, sigma double"
+    frontier = local_frame(
+        spark, [(source, 1.0)], "id long, sigma double"
     ).transform(fresh_checkpoint)
     levels: list[DataFrame] = [frontier]
     visited = frontier.select("id")

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graphit_spark.graph import LinkGraph
+from graphit_spark.graph import LinkGraph, local_frame
 from graphit_spark.plans.state import fresh_checkpoint
 
 
@@ -39,7 +39,7 @@ def ego_subgraph(
     own_cache = graph.ensure_persisted()
     spark = graph.spark
     reach = (
-        spark.createDataFrame([(int(s),) for s in seeds], "id long")
+        local_frame(spark, [(int(s),) for s in seeds], "id long")
         .distinct()
         .transform(fresh_checkpoint)
     )

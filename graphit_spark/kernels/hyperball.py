@@ -66,7 +66,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from graphit_spark.graph import LinkGraph
+from graphit_spark.graph import LinkGraph, local_frame
 from graphit_spark.plans.state import bind_release, observe, superstep
 from graphit_spark.functions.sketch import HASH_BITS, _alpha_m2
 
@@ -84,8 +84,29 @@ def linear_counting_table(p: int) -> list[float]:
     return [m * math.log(m / z) for z in range(1, m + 1)]
 
 
+def _estimate_parts(p: int) -> list[Column]:
+    """The two register reductions the estimate reads, as columns
+    ``_sum`` (the exact-integer scaled harmonic sum) and ``_zeros``
+    (empty registers). Projected once, below ``_estimate_expr``: the
+    estimate reads ``_zeros`` 17 times at p=4, and a reduction inlined
+    into every read made one round's generated code ~360 KB."""
+    w1 = HASH_BITS - p + 1
+    cols = _reg_cols(p)
+    return [
+        F.expr(
+            " + ".join(
+                f"shiftleft(CAST(1 AS BIGINT), CAST({w1} - {c} AS INT))"
+                for c in cols
+            )
+        ).alias("_sum"),
+        F.expr(
+            " + ".join(f"CAST({c} = 0 AS BIGINT)" for c in cols)
+        ).alias("_zeros"),
+    ]
+
+
 def _estimate_expr(p: int) -> F.Column:
-    """HLL estimate from m register columns r0..r{m-1} — the
+    """HLL estimate from the ``_estimate_parts`` columns — the
     functions/sketch.py estimator inlined as one row expression
     (exact-integer scaled harmonic sum, linear-counting small-range
     branch via the precomputed lookup). Every op is IEEE-deterministic
@@ -93,17 +114,8 @@ def _estimate_expr(p: int) -> F.Column:
     SQL twin's."""
     m = 1 << p
     w1 = HASH_BITS - p + 1
-    cols = _reg_cols(p)
-    sum_scaled = None
-    zeros = None
-    for c in cols:
-        # F.shiftleft's python wrapper takes only a literal int shift;
-        # the SQL form accepts a column shift.
-        term = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({w1} - {c} AS INT))")
-        z = (F.col(c) == 0).cast("long")
-        sum_scaled = term if sum_scaled is None else sum_scaled + term
-        zeros = z if zeros is None else zeros + z
-    raw = F.lit(_alpha_m2(m)) * F.lit(float(1 << w1)) / sum_scaled
+    zeros = F.col("_zeros")
+    raw = F.lit(_alpha_m2(m)) * F.lit(float(1 << w1)) / F.col("_sum")
     lc = None
     for z, v in enumerate(linear_counting_table(p), start=1):
         clause = F.when(zeros == z, F.lit(v))
@@ -123,18 +135,42 @@ def _init_state(graph: LinkGraph, p: int) -> DataFrame:
         16,
         10,
     ).cast("long")
-    rho = F.instr(F.lpad(F.bin(F.shiftright(h, p)), w, "0"), "1")
-    rho = F.when(rho == 0, F.lit(w + 1)).otherwise(rho).cast("long")
-    bucket = h.bitwiseAND(F.lit(m - 1))
-    state = graph.vertices().select(
-        "id",
-        *[
-            F.when(bucket == i, rho).otherwise(F.lit(0).cast("long")).alias(c)
-            for i, c in enumerate(cols)
-        ],
+    # hash, rho and bucket are projected once each: every register
+    # reads them, and inlined into all m registers they made the
+    # largest generated class of the kernel (~140 KB of source)
+    first_one = F.instr(
+        F.lpad(F.bin(F.shiftright(F.col("_h"), p)), w, "0"), "1"
+    )
+    state = (
+        graph.vertices()
+        .select("id", h.alias("_h"))
+        .select(
+            "id",
+            first_one.alias("_r"),
+            F.col("_h").bitwiseAND(F.lit(m - 1)).alias("_bucket"),
+        )
+        .select(
+            "id",
+            F.when(F.col("_r") == 0, F.lit(w + 1))
+            .otherwise(F.col("_r"))
+            .cast("long")
+            .alias("_rho"),
+            "_bucket",
+        )
+        .select(
+            "id",
+            *[
+                F.when(F.col("_bucket") == i, F.col("_rho"))
+                .otherwise(F.lit(0).cast("long"))
+                .alias(c)
+                for i, c in enumerate(cols)
+            ],
+        )
     )
     return (
-        state.withColumn("est", _estimate_expr(p))
+        state.select("*", *_estimate_parts(p))
+        .withColumn("est", _estimate_expr(p))
+        .drop("_sum", "_zeros")
         .withColumn("harm", F.lit(0.0))
         .withColumn("chg", F.lit(True))
     )
@@ -177,15 +213,15 @@ def _grow_one_hop(
             .alias(c)
             for c in cols
         ],
-    )
-    new_est = _estimate_expr(p)
+    ).select("*", *_estimate_parts(p))
+    # the new estimate is projected once; est and harm both read it
+    merged = merged.withColumn("_est", _estimate_expr(p))
     return merged.select(
         "id",
         *cols,
-        new_est.alias("est"),
-        (F.col("harm") + (new_est - F.col("est")) / F.lit(float(r))).alias(
-            "harm"
-        ),
+        F.col("_est").alias("est"),
+        (F.col("harm") + (F.col("_est") - F.col("est")) / F.lit(float(r)))
+        .alias("harm"),
         "chg",
     )
 
@@ -298,7 +334,7 @@ def neighborhood_function(
     state.unpersist()
     if own_cache:
         graph.unpersist()
-    out = spark.createDataFrame(list(enumerate(sums)), "r INT, pairs_scaled LONG")
+    out = local_frame(spark, list(enumerate(sums)), "r INT, pairs_scaled LONG")
     return out.select(
         "r", (F.col("pairs_scaled") / scale).alias("pairs")
     )

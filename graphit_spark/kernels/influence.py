@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graphit_spark.graph import LinkGraph
+from graphit_spark.graph import LinkGraph, local_frame
 from graphit_spark.plans.state import fresh_checkpoint
 
 IM_SEEDS = 5
@@ -108,7 +108,8 @@ def influence_max(
     state.unpersist()
     if own_cache:
         und.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(s, r, round(dd, 6)) for s, r, dd in chosen],
         "seed bigint, round int, dd double",
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graphit_spark.graph import LinkGraph
+from graphit_spark.graph import LinkGraph, local_frame
 from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 from graphit_spark.checkpoint import SnapshotStore
 
@@ -452,8 +452,8 @@ def personalized_pagerank_batch(
     spark = graph.spark
     beta = 1.0 - damp
     seeds_df = (
-        spark.createDataFrame(
-            [(int(s), int(s)) for s in sources], "seed long, id long"
+        local_frame(
+            spark, [(int(s), int(s)) for s in sources], "seed long, id long"
         ).distinct()
     )
     deg_ck = fresh_checkpoint(

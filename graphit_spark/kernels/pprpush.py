@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graphit_spark.graph import LinkGraph
+from graphit_spark.graph import LinkGraph, local_frame
 from graphit_spark.plans.state import bind_release, superstep
 
 PUSH_SCALE = 10**9  # nano-units of probability mass
@@ -125,8 +125,10 @@ def approximate_ppr_push(
             .alias("r"),
         )
 
-    seed = und.spark.createDataFrame(
-        [(int(source), 0, int(PUSH_SCALE))], "id long, p long, r long"
+    seed = local_frame(
+        und.spark,
+        [(int(source), 0, int(PUSH_SCALE))],
+        "id long, p long, r long",
     ).join(degs, "id", "left")
     state = superstep(
         seed.select(

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from graphit_spark.graph import local_frame
+
 
 def ordered_prefix_sum(
     df: DataFrame,
@@ -62,7 +64,7 @@ def ordered_prefix_sum(
     off_schema = "__pid int, " + ", ".join(
         f"__off_{v} long" for v in value_cols
     )
-    off_df = spark.createDataFrame(offsets, off_schema)
+    off_df = local_frame(spark, offsets, off_schema)
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)
@@ -107,7 +109,7 @@ def dense_rank_ids(
     for pid in range(num_partitions):
         offsets.append((pid, acc))
         acc += counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+    off_df = local_frame(spark, offsets, "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     return (
         with_pid.join(F.broadcast(off_df), "__pid")

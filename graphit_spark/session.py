@@ -93,6 +93,16 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # PySpark 4 otherwise records the Python call site of every
+        # Column/functions call in the JVM: ~5 extra py4j round trips
+        # per call, and kernels build plans from thousands of calls
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # generated classes are cached by source text; the default 100
+        # entries thrash once a superstep's stages, their broadcasts and
+        # the caller's own queries exceed it, and every miss is a Janino
+        # compile (~20 ms) on the query's critical path. 14 kernel tests
+        # compiled 1,882 classes with 100 entries and 753 with 5,000.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphit_spark.benchqueries import load
+from graphit_spark.graph import local_frame
 from graphit_spark.functions import dedup as D
 from graphit_spark.functions import similarity as S
 from graphit_spark.functions import textops as T
@@ -4456,9 +4457,7 @@ def q_token_percentiles(spark, sf_dir):
     cum = ordered_prefix_sum(
         counts, [F.col("v").asc()], ["c"], release=release
     )
-    pcts = spark.createDataFrame(
-        [(float(p),) for p in PCTS], "pct double"
-    )
+    pcts = local_frame(spark, [(float(p),) for p in PCTS], "pct double")
     out = (
         cum.crossJoin(F.broadcast(pcts))
         .filter(

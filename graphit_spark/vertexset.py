@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from graphit_spark.graph import local_frame
+
 
 def empty_vertexset(spark: SparkSession) -> DataFrame:
     return spark.range(0).select(F.col("id").cast("long").alias("id"))
@@ -26,7 +28,7 @@ def full_vertexset(spark: SparkSession, n: int) -> DataFrame:
 
 def add_vertex(vset: DataFrame, v: int) -> DataFrame:
     """frontier.addVertex(v) (intrinsics.h:474-477); idempotent."""
-    one = vset.sparkSession.createDataFrame([(int(v),)], "id long")
+    one = local_frame(vset.sparkSession, [(int(v),)], "id long")
     return vset.unionByName(one).dropDuplicates(["id"])
 
 
