@@ -1990,7 +1990,9 @@ BICONN_CLIMB = 40  # = the kernel's own climb cap (2 x BRIDGE_ROUNDS):
 # tree either converges identically in both engines or raises in the
 # kernel — never a silent twin truncation (measured max need at sf0.1
 # is 24; rounds beyond the actual depth are empty no-ops)
-BICONN_CC = 12  # gather + two doubling hops per round: covers 2^12
+BICONN_CC = 12  # twin's unrolled aux-CC rounds (gather + two doubling
+# hops each: covers 2^12); the kernel's aux CC stops at convergence
+# under its max_rounds=BRIDGE_ROUNDS budget, so rounds past it are no-ops
 
 
 def q_biconnected(spark, sf_dir):
@@ -2001,8 +2003,7 @@ def q_biconnected(spark, sf_dir):
     from graphit_spark.kernels import biconnected_components
 
     return biconnected_components(
-        _sparse_cut_graph(spark, sf_dir),
-        max_rounds=BRIDGE_ROUNDS, cc_rounds=BICONN_CC,
+        _sparse_cut_graph(spark, sf_dir), max_rounds=BRIDGE_ROUNDS
     )
 
 
@@ -2012,8 +2013,7 @@ def q_articulation(spark, sf_dir):
     from graphit_spark.kernels import articulation_points
 
     return articulation_points(
-        _sparse_cut_graph(spark, sf_dir),
-        max_rounds=BRIDGE_ROUNDS, cc_rounds=BICONN_CC,
+        _sparse_cut_graph(spark, sf_dir), max_rounds=BRIDGE_ROUNDS
     )
 
 

@@ -2,18 +2,21 @@
 
 The reference keeps a *list of frontiers* (list{vertexset}, SURVEY.md §1)
 and walks it backwards using the transposed edge set (bc.gt:74). The
-Spark formulation is the same two-phase plan:
+Spark formulation is the same two-phase plan, both phases supersteps on
+one V-sized state (id, sigma, depth, ...) that holds the whole frontier
+stack: a level is the rows of one depth.
 
   forward:  BFS levels; num_paths σ[v] = Σ σ[u] over same-level-minus-one
-            in-neighbors (one join+sum per level; each level DataFrame is
-            checkpointed and kept — the driver-side frontier stack);
+            in-neighbors (one join+sum per level), until a level is
+            empty;
   backward: dependency δ[v] = Σ (σ[v]/σ[w]) · (1 + δ[w]) over successors
             w one level deeper — the same join against the transposed
-            direction, walked from the deepest level.
+            direction, one level per round from the deepest.
 
-bc[v] = δ[v] for v ≠ source (unnormalized, like the reference verifier).
-Levels are O(diameter) — small on web graphs; every per-level DataFrame
-is V-sized or smaller.
+bc[v] = δ[v] for v ≠ source (unnormalized, like the reference verifier);
+the per-edge credits of `edge_betweenness` read the same final state.
+Levels are O(diameter) — small on web graphs; every state is V-sized or
+smaller.
 """
 
 from __future__ import annotations
@@ -21,56 +24,65 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph, local_frame
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 
 
-def betweenness_centrality(
-    graph: LinkGraph, source: int = 0, *, max_levels: int = 200
-) -> DataFrame:
-    """(id, bc) for every vertex; 0.0 for vertices off any shortest path."""
-    spark = graph.spark
-    own_cache = graph.ensure_persisted()
+def _brandes(graph: LinkGraph, source: int, max_levels: int) -> DataFrame:
+    """Materialized (id, sigma, depth, delta) for every vertex reachable
+    from ``source``; its ``unpersist()`` releases it. The forward BFS is
+    a fixpoint under ``max_levels`` (raises if a level is still
+    non-empty), the backward walk one exact round per level."""
     edges = graph.edges
 
-    # ---- forward phase: levels + path counts --------------------------
-    frontier = local_frame(
-        spark, [(source, 1.0)], "id long, sigma double"
-    ).transform(fresh_checkpoint)
-    levels: list[DataFrame] = [frontier]
-    visited = frontier.select("id")
-
-    for _ in range(max_levels):
-        nxt, seen = counted_checkpoint(
+    def forward(state: DataFrame, rnd) -> DataFrame:
+        """Level rnd.index + 1: path counts into unvisited vertices."""
+        nxt = (
             edges.join(
-                frontier.select(F.col("id").alias("src"), "sigma"), "src"
+                state.filter("front").select(
+                    F.col("id").alias("src"), "sigma"
+                ),
+                "src",
             )
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(visited, "id", "left_anti")
+            .join(state, "id", "left_anti")
         )
-        if seen["rows"] == 0:
-            break
-        levels.append(nxt)
-        visited = visited.unionByName(nxt.select("id")).localCheckpoint(
-            eager=True
+        return state.withColumn("front", F.lit(False)).unionByName(
+            nxt.select(
+                "id", "sigma",
+                F.lit(rnd.index + 1).cast("long").alias("depth"),
+                F.lit(True).alias("front"),
+            )
         )
-        frontier = nxt
 
-    # ---- backward phase: dependency accumulation ----------------------
-    # delta of the deepest level = 0
-    delta = levels[-1].select("id", "sigma", F.lit(0.0).alias("delta"))
-    acc = [delta]
-    for lvl in range(len(levels) - 2, -1, -1):
-        cur = levels[lvl]
-        # successors = next-level vertices reachable by one edge
-        succ = delta.select(
+    log: list = []
+    levels = superstep(
+        local_frame(
+            graph.spark, [(source, 1.0, 0, True)],
+            "id long, sigma double, depth long, front boolean",
+        ),
+        forward,
+        max_rounds=max_levels, checkpoint_start=False, log=log,
+        changed=F.col("front"), depth=F.max("depth"),
+    )
+    deepest = int(log[-1]["depth"])
+
+    def backward(state: DataFrame, rnd) -> DataFrame:
+        """delta of level deepest - 1 - rnd.index from the level below."""
+        lvl = deepest - 1 - rnd.index
+        succ = state.filter(F.col("depth") == lvl + 1).select(
             F.col("id").alias("dst"),
             (F.lit(1.0) + F.col("delta")).alias("w_term"),
             F.col("sigma").alias("sigma_w"),
         )
         contrib = (
             edges.join(succ, "dst")
-            .join(cur.select(F.col("id").alias("src"), "sigma"), "src")
+            .join(
+                state.filter(F.col("depth") == lvl).select(
+                    F.col("id").alias("src"), "sigma"
+                ),
+                "src",
+            )
             .select(
                 F.col("src").alias("id"),
                 (F.col("sigma") / F.col("sigma_w") * F.col("w_term")).alias(
@@ -78,33 +90,41 @@ def betweenness_centrality(
                 ),
             )
             .groupBy("id")
-            .agg(F.sum("part").alias("delta"))
+            .agg(F.sum("part").alias("part"))
         )
-        delta = (
-            cur.join(contrib, "id", "left")
-            .select(
-                "id",
-                "sigma",
-                F.coalesce("delta", F.lit(0.0)).alias("delta"),
-            )
-            .transform(fresh_checkpoint)
+        return state.join(contrib, "id", "left").select(
+            "id", "sigma", "depth", F.coalesce("part", "delta").alias("delta")
         )
-        acc.append(delta)
 
-    all_delta = acc[0].select("id", "delta")
-    for d in acc[1:]:
-        all_delta = all_delta.unionByName(d.select("id", "delta"))
+    return superstep(
+        bind_release(
+            levels.select("id", "sigma", "depth", F.lit(0.0).alias("delta")),
+            levels,
+        ),
+        backward,
+        rounds=deepest, checkpoint_start=False,
+    )
+
+
+def betweenness_centrality(
+    graph: LinkGraph, source: int = 0, *, max_levels: int = 200
+) -> DataFrame:
+    """(id, bc) for every vertex; 0.0 for vertices off any shortest path.
+    Raises if the BFS from ``source`` is deeper than ``max_levels``."""
+    own_cache = graph.ensure_persisted()
+    state = _brandes(graph, source, max_levels)
     if own_cache:
         graph.unpersist()
-    return (
+    return bind_release(
         graph.vertices()
-        .join(all_delta, "id", "left")
+        .join(state, "id", "left")
         .select(
             "id",
             F.when(F.col("id") == source, F.lit(0.0))
             .otherwise(F.coalesce("delta", F.lit(0.0)))
             .alias("bc"),
-        )
+        ),
+        state,
     )
 
 
@@ -118,77 +138,15 @@ def edge_betweenness(
     detection peels on. Returns the sparse (src, dst, credit) table —
     edges on no shortest path from `source` are absent (credit 0).
 
-    Same two-phase plan as `betweenness_centrality` (reference
-    apps/bc.gt forward frontier stack + backward transpose walk); the
+    Same two-phase Brandes state as `betweenness_centrality`; the
     per-edge credit is exactly the backward pass's join term BEFORE its
     groupBy(src), emitted once from a final edge join against the
-    assembled (id, sigma, delta, depth) state — one extra E-sized join,
+    final (id, sigma, depth, delta) state — one extra E-sized join,
     no extra supersteps."""
-    spark = graph.spark
     own_cache = graph.ensure_persisted()
-    edges = graph.edges
-
-    frontier = local_frame(
-        spark, [(source, 1.0)], "id long, sigma double"
-    ).transform(fresh_checkpoint)
-    levels: list[DataFrame] = [frontier]
-    visited = frontier.select("id")
-    for _ in range(max_levels):
-        nxt, seen = counted_checkpoint(
-            edges.join(
-                frontier.select(F.col("id").alias("src"), "sigma"), "src"
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(visited, "id", "left_anti")
-        )
-        if seen["rows"] == 0:
-            break
-        levels.append(nxt)
-        visited = visited.unionByName(nxt.select("id")).localCheckpoint(
-            eager=True
-        )
-        frontier = nxt
-
-    delta = levels[-1].select("id", "sigma", F.lit(0.0).alias("delta"))
-    tagged = [delta.withColumn("depth", F.lit(len(levels) - 1))]
-    for lvl in range(len(levels) - 2, -1, -1):
-        cur = levels[lvl]
-        succ = delta.select(
-            F.col("id").alias("dst"),
-            (F.lit(1.0) + F.col("delta")).alias("w_term"),
-            F.col("sigma").alias("sigma_w"),
-        )
-        contrib = (
-            edges.join(succ, "dst")
-            .join(cur.select(F.col("id").alias("src"), "sigma"), "src")
-            .select(
-                F.col("src").alias("id"),
-                (F.col("sigma") / F.col("sigma_w") * F.col("w_term")).alias(
-                    "part"
-                ),
-            )
-            .groupBy("id")
-            .agg(F.sum("part").alias("delta"))
-        )
-        delta = (
-            cur.join(contrib, "id", "left")
-            .select(
-                "id",
-                "sigma",
-                F.coalesce("delta", F.lit(0.0)).alias("delta"),
-            )
-            .transform(fresh_checkpoint)
-        )
-        tagged.append(delta.withColumn("depth", F.lit(lvl)))
-
-    state = tagged[0]
-    for t in tagged[1:]:
-        state = state.unionByName(t)
-    state = fresh_checkpoint(state)
-
-    credits = (
-        edges.join(
+    state = _brandes(graph, source, max_levels)
+    credits = fresh_checkpoint(
+        graph.edges.join(
             state.select(
                 F.col("id").alias("src"),
                 F.col("sigma").alias("sv"),
@@ -214,7 +172,6 @@ def edge_betweenness(
             ).alias("credit"),
         )
     )
-    credits = fresh_checkpoint(credits)
     state.unpersist()
     if own_cache:
         graph.unpersist()

@@ -7,11 +7,11 @@ distributed engine cannot run. Both kernels here build on the same
 distributed primitive: a rooted BFS spanning tree (depth bounded by
 graph diameter, where an arbitrary spanning tree need not be).
 
-Shared machinery (`_bfs_tree`): components by synchronous min-label
-propagation (root = component min id), multi-source BFS depths, and
-the BFS-tree parent = min neighbor one level up (unique by total
-order). Every phase is the standard frontier ⋈ edges gather; each
-convergence cap RAISES rather than return silently wrong cuts.
+Shared machinery (`_bfs_tree`): components from `connected_components`
+(root = component min id), multi-source BFS depths, and the BFS-tree
+parent = min neighbor one level up (unique by total order). Every phase
+is the standard frontier ⋈ edges gather on the superstep driver; each
+fixpoint's budget RAISES rather than return silently wrong cuts.
 
 bridges — spanning tree + XOR cut-coverage (the Ahn-Guha-McGregor
 linear-sketch idea on a static graph): every non-tree edge gets a
@@ -33,9 +33,9 @@ EDGE keys (cycle space is spanned by fundamental cycles; two edges
 share a biconnected component iff they are linked through overlapping
 fundamental cycles), computed by min-label gather + two
 pointer-doubling hops per round (the Girvan-Newman CC pattern — log
-convergence, asserted). Tree edges on no cycle stay singleton classes:
-exactly the bridges, which `tests` cross-check against the sketch
-kernel.
+convergence), run until a round changes no label. Tree edges on no
+cycle stay singleton classes: exactly the bridges, which `tests`
+cross-check against the sketch kernel.
 
 articulation_points — a vertex is a cut vertex iff its incident edges
 fall into ≥ 2 distinct biconnected components (degree-1 vertices and
@@ -48,10 +48,18 @@ every shuffle keys on a vertex or edge id.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.kernels.components import connected_components
+from graphit_spark.plans.state import (
+    bind_release,
+    counted_checkpoint,
+    fresh_checkpoint,
+    superstep,
+)
 
 EKEY_BASE = 1 << 31  # canonical edge key: min(u,v) * 2^31 + max(u,v)
 
@@ -90,7 +98,7 @@ def _check_ekey_domain(graph: LinkGraph, who: str) -> None:
 def _bfs_tree(graph: LinkGraph, max_rounds: int, who: str):
     """(und, sym, depth, parent): canonical undirected edges, both
     directions, BFS depth from each component's min id, and the
-    BFS-tree parent. und/sym are persisted and depth checkpointed —
+    BFS-tree parent. und/sym are persisted and depth materialized —
     the caller releases them."""
     und = (
         graph.edges.select(
@@ -104,52 +112,21 @@ def _bfs_tree(graph: LinkGraph, max_rounds: int, who: str):
         und.select(F.col("v").alias("a"), F.col("u").alias("b"))
     ).persist()
 
-    verts = sym.select(F.col("a").alias("id")).distinct()
-
-    labels = verts.select("id", F.col("id").alias("label")).transform(
-        fresh_checkpoint
-    )
-    for _ in range(max_rounds):
-        gathered = (
-            sym.join(labels.select(F.col("id").alias("a"), "label"), "a")
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("label").alias("nl"))
-        )
-        new_labels = (
-            labels.join(gathered, "id", "left")
-            .select(
-                "id",
-                F.least("label", F.coalesce("nl", "label")).alias("label"),
-            )
-            .transform(fresh_checkpoint)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "id")
-            .filter(F.col("label") != F.col("old"))
-            .limit(1)
-            .count()
-        )
+    cc: dict = {}
+    labels = connected_components(graph, max_iters=max_rounds, metrics_out=cc)
+    if cc.get("final_frontier") != 0:
         labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
         raise RuntimeError(
             f"{who}: labeling did not converge in {max_rounds} rounds — "
             "raise max_rounds"
         )
 
-    depth = labels.select(
-        "id",
-        F.when(F.col("id") == F.col("label"), F.lit(0).cast("long")).alias(
-            "depth"
-        ),
-    ).transform(fresh_checkpoint)
-    labels.unpersist()
-    for _ in range(max_rounds):
-        gathered = (
+    def deepen(depth: DataFrame, rnd) -> DataFrame:
+        # level rnd.index is the frontier: every earlier level's
+        # neighbors are already reached
+        nd = (
             sym.join(
-                depth.filter(F.col("depth").isNotNull()).select(
+                depth.filter(F.col("depth") == rnd.index).select(
                     F.col("id").alias("a"), "depth"
                 ),
                 "a",
@@ -157,27 +134,24 @@ def _bfs_tree(graph: LinkGraph, max_rounds: int, who: str):
             .groupBy(F.col("b").alias("id"))
             .agg((F.min("depth") + 1).alias("nd"))
         )
-        new_depth, seen = counted_checkpoint(
-            depth.join(gathered, "id", "left").select(
-                "id",
-                F.when(
-                    F.col("depth").isNull() & F.col("nd").isNotNull(),
-                    F.col("nd"),
-                )
-                .otherwise(F.col("depth"))
-                .alias("depth"),
-            ),
-            remaining=F.count(F.when(F.col("depth").isNull(), 1)),
+        return depth.join(nd, "id", "left").select(
+            "id", F.coalesce("depth", "nd").alias("depth")
         )
-        depth.unpersist()
-        depth = new_depth
-        if seen["remaining"] == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"{who}: BFS depth exceeds {max_rounds} rounds — raise "
-            "max_rounds (results would be silently wrong otherwise)"
-        )
+
+    # the roots start the BFS straight from the CC result, which the
+    # first round's materialization releases
+    roots = labels.select(
+        "id",
+        F.when(F.col("id") == F.col("comp"), F.lit(0).cast("long")).alias(
+            "depth"
+        ),
+    )
+    depth = superstep(
+        bind_release(roots, labels), deepen,
+        max_rounds=max_rounds, checkpoint_start=False,
+        until=lambda seen: seen["remaining"] == 0,
+        remaining=F.count(F.when(F.col("depth").isNull(), 1)),
+    )
 
     d_a = depth.select(F.col("id").alias("a"), F.col("depth").alias("da"))
     d_b = depth.select(F.col("id").alias("b"), F.col("depth").alias("db"))
@@ -193,8 +167,9 @@ def _bfs_tree(graph: LinkGraph, max_rounds: int, who: str):
 
 def bridges(graph: LinkGraph, *, max_rounds: int = 24) -> DataFrame:
     """(u, v) with u < v — the bridge edges of the symmetrized simple
-    graph. max_rounds bounds each phase (label propagation, BFS depth,
-    bottom-up fold) and must exceed the graph diameter."""
+    graph. max_rounds bounds each fixpoint (labeling, BFS depth) and
+    must exceed the graph diameter; the bottom-up fold runs one round
+    per BFS level."""
     own_cache = graph.ensure_persisted()
     und, sym, depth, parent = _bfs_tree(graph, max_rounds, "bridges")
 
@@ -212,80 +187,67 @@ def bridges(graph: LinkGraph, *, max_rounds: int = 24) -> DataFrame:
     )
     hv = h_rows.groupBy("id").agg(F.bit_xor("h").alias("h"))
 
-    state = (
-        depth.join(parent, "id", "left")
-        .join(hv, "id", "left")
-        .select(
-            "id",
-            "depth",
-            "parent",
-            F.coalesce("h", F.lit(0)).alias("s"),
-        )
-        .transform(fresh_checkpoint)
-    )
-    depth.unpersist()
-    max_depth = state.agg(F.max("depth").alias("m")).collect()[0]["m"] or 0
-
-    for d in range(int(max_depth), 0, -1):
-        fold = (
-            state.filter(F.col("depth") == d)
+    def fold(state: DataFrame, rnd) -> DataFrame:
+        """XOR level max_depth - rnd.index into the parents above it."""
+        child_x = (
+            state.filter(F.col("depth") == max_depth - rnd.index)
             .groupBy(F.col("parent").alias("id"))
             .agg(F.bit_xor("s").alias("child_x"))
         )
-        new_state = (
-            state.join(fold, "id", "left")
-            .select(
-                "id",
-                "depth",
-                "parent",
-                F.when(
-                    F.col("child_x").isNotNull(),
-                    F.col("s").bitwiseXOR(F.col("child_x")),
-                )
-                .otherwise(F.col("s"))
-                .alias("s"),
+        return state.join(child_x, "id", "left").select(
+            "id",
+            "depth",
+            "parent",
+            F.when(
+                F.col("child_x").isNotNull(),
+                F.col("s").bitwiseXOR(F.col("child_x")),
             )
-            .transform(fresh_checkpoint)
+            .otherwise(F.col("s"))
+            .alias("s"),
         )
-        state.unpersist()
-        state = new_state
 
-    out = state.filter(
-        F.col("parent").isNotNull() & (F.col("s") == 0)
-    ).select(
-        F.least("parent", "id").alias("u"),
-        F.greatest("parent", "id").alias("v"),
+    # the fold's start observes the deepest level: one round per level
+    state, seen = counted_checkpoint(
+        depth.join(parent, "id", "left")
+        .join(hv, "id", "left")
+        .select("id", "depth", "parent", F.coalesce("h", F.lit(0)).alias("s")),
+        max_depth=F.max("depth"),
     )
-    result = out.transform(fresh_checkpoint)
+    depth.unpersist()
+    max_depth = int(seen["max_depth"])
+    state = superstep(state, fold, rounds=max_depth, checkpoint_start=False)
     und.unpersist()
     sym.unpersist()
-    state.unpersist()
     if own_cache:
         graph.unpersist()
-    return result
+    return bind_release(
+        state.filter(F.col("parent").isNotNull() & (F.col("s") == 0)).select(
+            F.least("parent", "id").alias("u"),
+            F.greatest("parent", "id").alias("v"),
+        ),
+        state,
+    )
 
 
 def biconnected_components(
-    graph: LinkGraph, *, max_rounds: int = 24, cc_rounds: int = 12
+    graph: LinkGraph, *, max_rounds: int = 24
 ) -> DataFrame:
     """(u, v, comp) for every undirected edge — comp is the minimum
     canonical edge key (min(u,v)·2³¹ + max(u,v)) of the edge's
     biconnected component. Bridges are exactly the singleton classes.
 
-    max_rounds bounds the tree phases and the LCA climb (≤ 2·depth
-    rounds); cc_rounds bounds the pointer-doubled aux-graph CC (each
-    round = one min-label gather + two doubling hops, log convergence,
-    asserted converged)."""
+    max_rounds bounds the tree phases and the pointer-doubled aux-graph
+    CC (each round = one min-label gather + two doubling hops, log
+    convergence); the LCA climb gets 2·max_rounds (≤ 2·depth rounds)."""
     _check_ekey_domain(graph, "biconnected_components")
     own_cache = graph.ensure_persisted()
     und, sym, depth, parent = _bfs_tree(graph, max_rounds, "biconnected")
 
-    npt = (
-        depth.join(parent, "id", "left")
-        .select("id", "depth", "parent")
-        .transform(fresh_checkpoint)
+    npt = fresh_checkpoint(
+        depth.join(parent, "id", "left").select("id", "depth", "parent")
     )
     depth.unpersist()
+    sym.unpersist()
 
     # tree/nontree derive from the CHECKPOINTED node table — the lazy
     # `parent` frame would recompute through the released depth blocks
@@ -297,16 +259,6 @@ def biconnected_components(
 
     # --- LCA climb: each non-tree edge walks both endpoints up,
     # emitting an aux star edge per tree edge on its fundamental cycle
-    # live climbers are counted on the checkpoint job that materializes
-    # them — no per-round emptiness action
-    state, seen = counted_checkpoint(
-        nontree.select(
-            _ekey(F.col("u"), F.col("v")).alias("ek"),
-            F.col("u").alias("ca"),
-            F.col("v").alias("cb"),
-        )
-    )
-    emissions: list[DataFrame] = []
     na = npt.select(
         F.col("id").alias("ca"),
         F.col("depth").alias("da"),
@@ -317,13 +269,13 @@ def biconnected_components(
         F.col("depth").alias("db"),
         F.col("parent").alias("pb"),
     )
-    for _ in range(2 * max_rounds):
-        if seen["rows"] == 0:
-            break
+    emissions: list[DataFrame] = []
+
+    def climb(state: DataFrame, rnd) -> DataFrame:
         joined = state.join(na, "ca").join(nb, "cb")
         climb_a = F.col("da") >= F.col("db")
         climb_b = F.col("db") >= F.col("da")
-        em = (
+        emissions.append(
             joined.filter(climb_a)
             .select("ek", _ekey(F.col("ca"), F.col("pa")).alias("tek"))
             .unionByName(
@@ -333,130 +285,86 @@ def biconnected_components(
             )
             .transform(fresh_checkpoint)
         )
-        emissions.append(em)
-        new_state, seen = counted_checkpoint(
-            joined.select(
-                "ek",
-                F.when(climb_a, F.col("pa")).otherwise(F.col("ca")).alias(
-                    "ca"
-                ),
-                F.when(climb_b, F.col("pb")).otherwise(F.col("cb")).alias(
-                    "cb"
-                ),
-            ).filter(F.col("ca") != F.col("cb"))
-        )
-        state.unpersist()
-        state = new_state
-    else:
-        raise RuntimeError(
-            f"biconnected: LCA climb exceeds {2 * max_rounds} rounds — "
-            "raise max_rounds"
-        )
-    state.unpersist()
+        return joined.select(
+            "ek",
+            F.when(climb_a, F.col("pa")).otherwise(F.col("ca")).alias("ca"),
+            F.when(climb_b, F.col("pb")).otherwise(F.col("cb")).alias("cb"),
+        ).filter(F.col("ca") != F.col("cb"))
 
-    nodes = (
-        tree.select(_ekey(F.col("u"), F.col("v")).alias("id"))
-        .unionByName(
-            nontree.select(_ekey(F.col("u"), F.col("v")).alias("id"))
-        )
-        .distinct()
-    )
-    if not emissions:
-        # forest: no cycles at all — every edge is its own singleton
-        # biconnected component (and therefore a bridge)
-        out = und.select(
-            "u", "v", _ekey(F.col("u"), F.col("v")).alias("comp")
-        )
-        result = out.transform(fresh_checkpoint)
-        npt.unpersist()
-        und.unpersist()
-        sym.unpersist()
-        if own_cache:
-            graph.unpersist()
-        return result
-    aux = emissions[0]
-    for em in emissions[1:]:
-        aux = aux.unionByName(em)
+    superstep(
+        nontree.select(
+            _ekey(F.col("u"), F.col("v")).alias("ek"),
+            F.col("u").alias("ca"),
+            F.col("v").alias("cb"),
+        ),
+        climb,
+        max_rounds=2 * max_rounds,
+        until=lambda seen: seen["climbers"] == 0,
+        climbers=F.count(F.lit(1)),
+    ).unpersist()
+
+    # the aux edges; releasing them releases every round's emissions
+    aux = bind_release(reduce(DataFrame.unionByName, emissions), *emissions)
     auxsym = aux.select(F.col("ek").alias("x"), F.col("tek").alias("y")).unionByName(
         aux.select(F.col("tek").alias("x"), F.col("ek").alias("y"))
     )
 
-    # --- aux CC: min-label gather + two pointer-doubling hops/round ---
-    comp = nodes.select("id", F.col("id").alias("comp")).transform(
-        fresh_checkpoint
-    )
-    for _ in range(cc_rounds):
+    def jump(lab: DataFrame) -> DataFrame:
+        return lab.join(
+            lab.select(F.col("id").alias("comp"), F.col("comp").alias("c2")),
+            "comp",
+        ).select("id", F.col("c2").alias("comp"), "old")
+
+    def merge(comp: DataFrame, rnd) -> DataFrame:
+        """Aux CC round: min-label gather + two pointer-doubling hops."""
+        comp = comp.select("id", "comp")
         gathered = (
             auxsym.join(comp.select(F.col("id").alias("x"), "comp"), "x")
             .groupBy(F.col("y").alias("id"))
             .agg(F.min("comp").alias("mn"))
         )
-        la = comp.join(gathered, "id", "left").select(
-            "id", F.least("comp", F.coalesce("mn", "comp")).alias("comp")
-        )
-        lb = la.alias("a").join(
-            la.select(F.col("id").alias("comp"), F.col("comp").alias("c2")),
-            "comp",
-        ).select("id", F.col("c2").alias("comp"))
-        lc = (
-            lb.alias("a")
-            .join(
-                lb.select(
-                    F.col("id").alias("comp"), F.col("comp").alias("c2")
-                ),
-                "comp",
+        return jump(jump(
+            comp.join(gathered, "id", "left").select(
+                "id",
+                F.least("comp", F.coalesce("mn", "comp")).alias("comp"),
+                F.col("comp").alias("old"),
             )
-            .select("id", F.col("c2").alias("comp"))
-            .transform(fresh_checkpoint)
-        )
-        comp.unpersist()
-        comp = lc
-    # converged? one more gather must change nothing
-    check = (
-        auxsym.join(comp.select(F.col("id").alias("x"), "comp"), "x")
-        .groupBy(F.col("y").alias("id"))
-        .agg(F.min("comp").alias("mn"))
-        .join(comp, "id")
-        .filter(F.col("mn") < F.col("comp"))
-        .limit(1)
-        .count()
-    )
-    if check:
-        raise RuntimeError(
-            f"biconnected: aux CC not converged after {cc_rounds} "
-            "doubling rounds — raise cc_rounds"
-        )
+        ))
 
-    out = (
-        und.withColumn("__k", _ekey(F.col("u"), F.col("v")))
-        .join(comp, F.col("__k") == F.col("id"))
-        .select("u", "v", "comp")
+    # every undirected edge is an aux node, labelled by its own key
+    ek = _ekey(F.col("u"), F.col("v"))
+    comp = superstep(
+        und.select(ek.alias("id"), ek.alias("comp")), merge,
+        max_rounds=max_rounds, changed=F.col("comp") != F.col("old"),
     )
-    result = out.transform(fresh_checkpoint)
+    aux.unpersist()
     npt.unpersist()
     und.unpersist()
-    sym.unpersist()
-    comp.unpersist()
-    for em in emissions:
-        em.unpersist()
     if own_cache:
         graph.unpersist()
-    return result
+    # the edge key packs (u, v): min·2^31 + max
+    return bind_release(
+        comp.select(
+            F.shiftright("id", 31).alias("u"),
+            F.col("id").bitwiseAND(F.lit(EKEY_BASE - 1)).alias("v"),
+            "comp",
+        ),
+        comp,
+    )
 
 
 def articulation_points(
-    graph: LinkGraph, *, max_rounds: int = 24, cc_rounds: int = 12
+    graph: LinkGraph, *, max_rounds: int = 24
 ) -> DataFrame:
     """(id, n_components) — vertices incident to ≥ 2 distinct
     biconnected components: exactly the cut vertices."""
-    bc = biconnected_components(
-        graph, max_rounds=max_rounds, cc_rounds=cc_rounds
-    )
+    bc = biconnected_components(graph, max_rounds=max_rounds)
     ends = bc.select(F.col("u").alias("id"), "comp").unionByName(
         bc.select(F.col("v").alias("id"), "comp")
     )
-    return (
+    return bind_release(
         ends.groupBy("id")
         .agg(F.countDistinct("comp").alias("n_components"))
-        .filter(F.col("n_components") >= 2)
+        .filter(F.col("n_components") >= 2),
+        bc,
     )

@@ -15,8 +15,11 @@ the §2.3 `applyUpdatePriority` bucket pattern (like apps/k_core.gt)
 with a global, density-dependent bucket threshold instead of a fixed k.
 
 Scale shape: each round is one degree aggregation over the induced
-subgraph (map-side combined) plus a semi-join — no collect, no
-driver-side vertex loop. The threshold test is integer-exact
+subgraph (map-side combined) plus a semi-join, on one V-sized state
+that records the round each vertex was peeled in — so every prefix
+stays readable from the last state, and a round's n and m are observed
+on its own checkpoint job: no count, no collect, no driver-side vertex
+loop. The threshold test is integer-exact
 (``deg * n <= 3 * m`` for eps = 1/2, i.e. deg <= 3·density), so the
 peel sequence is bit-reproducible and SQL-twinnable. Every round
 removes more than 1/3 of the surviving vertices (sum of degrees = 2m,
@@ -29,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, superstep
 
 
 def densest_subgraph(
@@ -45,58 +48,69 @@ def densest_subgraph(
     g = graph.symmetrize()
     own_cache = g.ensure_persisted()
 
-    keep = graph.vertices().transform(fresh_checkpoint)
-    n = keep.count()
-    rounds: list[tuple[int, int, int, DataFrame]] = []  # (r, n, m, keep)
-
-    for r in range(max_rounds + 1):
-        alive = g.edges.join(
-            keep.select(F.col("id").alias("src")), "src", "left_semi"
-        ).join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
-        m = alive.count() // 2  # sym holds both directions
-        if n == 0:
-            keep.unpersist()  # empty tail checkpoint, never recorded
-            break
-        rounds.append((r, n, m, keep))
-        if r == max_rounds or m == 0:
-            break
-        deg = alive.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").alias("d")
-        )
-        new_keep = (
-            keep.join(deg, "id", "left")
+    def peel(state: DataFrame, rnd) -> DataFrame:
+        """Round r: peel with the previous round's n and m (none in
+        round 0), then degrees within the survivors; a vertex peeled
+        here gets gone = r, so prefix r is {gone is null or gone > r}."""
+        if rnd.seen is not None:
+            n, m = rnd.seen["n"], rnd.seen["m2"] // 2
             # integer-exact peel: survive iff deg > 3 * density
-            .filter(F.coalesce("d", F.lit(0)) * F.lit(n) > F.lit(3 * m))
-            .select("id")
-            .transform(fresh_checkpoint)
+            peeled = F.col("gone").isNull() & (
+                F.col("d") * F.lit(n) <= F.lit(3 * m)
+            )
+            state = state.select(
+                "id",
+                F.when(peeled, F.lit(rnd.index)).otherwise(F.col("gone"))
+                .alias("gone"),
+            )
+        keep = state.filter(F.col("gone").isNull()).select("id")
+        deg = (
+            g.edges.join(
+                keep.select(F.col("id").alias("src")), "src", "left_semi"
+            )
+            .join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.count("*").alias("d"))
         )
-        n = new_keep.count()
-        keep = new_keep
+        return state.select("id", "gone").join(deg, "id", "left").select(
+            "id", "gone", F.coalesce("d", F.lit(0)).alias("d")
+        )
 
+    log: list = []
+    alive = F.col("gone").isNull()
+    state = superstep(
+        graph.vertices().select("id", F.lit(None).cast("long").alias("gone")),
+        peel,
+        rounds=max_rounds + 1, checkpoint_start=False, log=log,
+        until=lambda seen: seen["n"] == 0 or seen["m2"] == 0,
+        n=F.count(F.when(alive, 1)),
+        m2=F.sum(F.when(alive, F.col("d"))),  # sym holds both directions
+    )
+    if own_cache:
+        g.unpersist()
+    # densest round: compare m/n as exact fractions (no float), ties to
+    # the earliest round — a pure driver scalar pass over <= max_rounds
+    # observed pairs, never data-sized
+    rounds = [
+        (r, seen["n"], seen["m2"] // 2)
+        for r, seen in enumerate(log) if seen["n"]
+    ]
     if not rounds:  # vertexless graph: nothing to peel
-        if own_cache:
-            g.unpersist()
+        state.unpersist()
         return graph.spark.createDataFrame(
             [], "id long, best_round long, density double"
         )
-    # densest round: compare m/n as exact fractions (no float), ties to
-    # the earliest round — a pure driver scalar pass over <= max_rounds
-    # tuples, never data-sized
-    best_r, best_n, best_m, best_df = rounds[0]
-    for r, nn, mm, df in rounds[1:]:
+    best_r, best_n, best_m = rounds[0]
+    for r, nn, mm in rounds[1:]:
         if mm * best_n > best_m * nn:
-            best_r, best_n, best_m, best_df = r, nn, mm, df
-    out = best_df.select(
-        "id",
-        F.lit(best_r).cast("long").alias("best_round"),
-        F.round(
-            F.lit(float(best_m)) / F.lit(float(best_n)), 6
-        ).alias("density"),
+            best_r, best_n, best_m = r, nn, mm
+    return bind_release(
+        state.filter(alive | (F.col("gone") > best_r)).select(
+            "id",
+            F.lit(best_r).cast("long").alias("best_round"),
+            F.round(
+                F.lit(float(best_m)) / F.lit(float(best_n)), 6
+            ).alias("density"),
+        ),
+        state,
     )
-    for r, _nn, _mm, df in rounds:
-        if df is not best_df:
-            df.unpersist()
-    # best_df's checkpoint stays alive — `out` reads from it lazily
-    if own_cache:
-        g.unpersist()
-    return out

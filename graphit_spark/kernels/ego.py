@@ -11,8 +11,10 @@ the crawl around this URL" query.
 Scale shape: ``hops`` bounded frontier rounds over the cached edge
 table — each round is one src-keyed semi-join (broadcast while the
 frontier is small, the common case for ego balls) plus an anti-join
-against the reached set; the final induced-edge step is two semi-joins
-of the edge table against the V'-sized ball. No driver-side vertex
+against the reached set, whose frontier flag carries the next
+frontier's size to the driver as an observed count; the final
+induced-edge step is two semi-joins of the edge table against the
+V'-sized ball. No driver-side vertex
 lists, no O(V) collects; cost per round is proportional to the
 frontier's out-edges, exactly like bfs (kernels/paths.py).
 """
@@ -22,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph, local_frame
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import fresh_checkpoint, superstep
 
 
 def ego_subgraph(
@@ -37,49 +39,43 @@ def ego_subgraph(
     if not seeds:
         raise ValueError("seeds must be non-empty")
     own_cache = graph.ensure_persisted()
-    spark = graph.spark
-    reach = (
-        local_frame(spark, [(int(s),) for s in seeds], "id long")
-        .distinct()
-        .transform(fresh_checkpoint)
-    )
-    frontier, frontier_size = reach, reach.count()
-    release = [reach]
+    seeds = sorted({int(s) for s in seeds})
     # explicit broadcast while the frontier is provably tiny (ego balls
     # usually are); past the bound, fall back to a shuffle semi-join —
     # the bfs-style scale path for runaway hub balls.
     broadcast_bound = 1_000_000
-    for _ in range(hops):
-        f_src = frontier.select(F.col("id").alias("src"))
-        if frontier_size <= broadcast_bound:
+
+    def expand(reach: DataFrame, rnd) -> DataFrame:
+        """Reached set (id, front): front marks the last hop's vertices."""
+        f_src = reach.filter("front").select(F.col("id").alias("src"))
+        size = len(seeds) if rnd.seen is None else rnd.seen["changed"]
+        if size <= broadcast_bound:
             f_src = F.broadcast(f_src)
         nxt = (
             graph.edges.join(f_src, "src", "left_semi")
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(reach, "id", "left_anti")
-            .transform(fresh_checkpoint)
         )
-        release.append(nxt)
-        frontier_size = nxt.count()
-        if frontier_size == 0:
-            break
-        reach = reach.unionByName(nxt).transform(fresh_checkpoint)
-        release.append(reach)
-        frontier = nxt
-    induced = (
+        return reach.withColumn("front", F.lit(False)).unionByName(
+            nxt.withColumn("front", F.lit(True))
+        )
+
+    reach = superstep(
+        local_frame(
+            graph.spark, [(s, True) for s in seeds], "id long, front boolean"
+        ),
+        expand,
+        rounds=hops, checkpoint_start=False, changed=F.col("front"),
+    )
+    out = fresh_checkpoint(
         graph.edges.join(
             reach.select(F.col("id").alias("src")), "src", "left_semi"
         )
         .join(reach.select(F.col("id").alias("dst")), "dst", "left_semi")
         .select("src", "dst")
     )
-    out = fresh_checkpoint(induced)
-    for df in release:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    reach.unpersist()
     if own_cache:
         graph.unpersist()
     return out

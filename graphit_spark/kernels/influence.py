@@ -10,15 +10,17 @@ serial greedy is re-expressed as driver-scalar rounds over distributed
 V-sized state.
 
 Scale shape (100 TB):
-- state is one V-sized DataFrame ``(id, d, t)`` (degree, chosen-neighbor
-  count), localCheckpointed per round so lineage stays flat;
+- state is one V-sized DataFrame ``(id, d, t, round, dd)`` (degree,
+  chosen-neighbor count, and the round and score of a chosen seed), one
+  superstep per seed so lineage stays flat;
 - the argmax is one global aggregate (``max(struct(dd, -id))`` — a
-  map-side-combinable scalar, never a sort or a Window);
+  map-side-combinable scalar, never a sort or a Window) observed on the
+  checkpoint job that materializes the previous round's state;
 - the per-round update touches ONLY the chosen seed's adjacency: a
   filter ``src = seed`` on the cached symmetrized edge table (partition
   pruning on the hash-partitioned edges) joined into the V-sized state;
-- k rounds → k scalar actions + k small joins. No step is O(E) beyond
-  the initial degree aggregation.
+- k rounds → k checkpoint jobs with small joins and no action of their
+  own. No step is O(E) beyond the initial degree aggregation.
 
 Determinism: ties in the discount score break toward the SMALLEST
 vertex id on both engines (max over struct(dd, -id) ≡ ORDER BY dd DESC,
@@ -30,8 +32,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graphit_spark.graph import LinkGraph, local_frame
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.graph import LinkGraph
+from graphit_spark.plans.state import (
+    bind_release,
+    counted_checkpoint,
+    superstep,
+)
 
 IM_SEEDS = 5
 IM_PROB = 0.05
@@ -51,65 +57,68 @@ def influence_max(
     """
     und = graph.symmetrize()
     own_cache = und.ensure_persisted()
-    spark = und.edges.sparkSession
 
     deg = und.edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("d")
     )
-    state = (
+    dd_col = (
+        F.col("d").cast("double")
+        - 2.0 * F.col("t")
+        - (F.col("d") - F.col("t")) * F.col("t") * F.lit(float(p))
+    )
+    # the argmax over unchosen vertices; null (observed as 0) once none
+    # is left
+    best = F.max(
+        F.when(
+            F.col("round").isNull(),
+            F.struct(dd_col.alias("dd"), (-F.col("id")).alias("nid")),
+        )
+    )
+    state, first = counted_checkpoint(
         und.vertices()
         .join(deg, "id", "left")
         .select(
             "id",
             F.coalesce("d", F.lit(0)).cast("long").alias("d"),
             F.lit(0).cast("long").alias("t"),
-        )
-        .transform(fresh_checkpoint)
+            F.lit(None).cast("int").alias("round"),
+            F.lit(None).cast("double").alias("dd"),
+        ),
+        best=best,
     )
 
-    dd_col = (
-        F.col("d").cast("double")
-        - 2.0 * F.col("t")
-        - (F.col("d") - F.col("t")) * F.col("t") * F.lit(float(p))
-    )
-    chosen: list[tuple[int, int, float]] = []  # (seed, round, dd)
-    for r in range(1, k + 1):
-        cand = state
-        if chosen:
-            cand = cand.filter(
-                ~F.col("id").isin([s for s, _, _ in chosen])
-            )
-        row = cand.agg(
-            F.max(
-                F.struct(dd_col.alias("dd"), (-F.col("id")).alias("nid"))
-            ).alias("m")
-        ).collect()[0]["m"]
-        if row is None:
-            break  # fewer than k vertices
-        seed, dd = -int(row["nid"]), float(row["dd"])
-        chosen.append((seed, r, dd))
-        if r == k:
-            break  # last round: no one consumes the update
+    def choose(state: DataFrame, rnd) -> DataFrame:
+        """Seed rnd.index + 1 is the observed argmax; bump ``t`` for its
+        neighbors."""
+        top = (first if rnd.seen is None else rnd.seen)["best"]
+        seed = -int(top["nid"])
         nbrs = und.edges.filter(F.col("src") == seed).select(
             F.col("dst").alias("id"), F.lit(1).alias("inc")
         )
-        prev = state
-        state = (
-            state.join(nbrs, "id", "left")
-            .select(
-                "id",
-                "d",
-                (F.col("t") + F.coalesce("inc", F.lit(0))).alias("t"),
-            )
-            .transform(fresh_checkpoint)
+        is_seed = F.col("id") == seed
+        return state.join(nbrs, "id", "left").select(
+            "id",
+            "d",
+            (F.col("t") + F.coalesce("inc", F.lit(0))).alias("t"),
+            F.when(is_seed, F.lit(rnd.index + 1)).otherwise(F.col("round"))
+            .alias("round"),
+            F.when(is_seed, F.lit(round(float(top["dd"]), 6)))
+            .otherwise(F.col("dd"))
+            .alias("dd"),
         )
-        prev.unpersist()
 
-    state.unpersist()
+    if first["rows"]:  # an empty graph has no seed to pick
+        # fewer than k vertices: stop once none is left unchosen
+        state = superstep(
+            state, choose,
+            rounds=k, checkpoint_start=False,
+            until=lambda seen: not seen["best"], best=best,
+        )
     if own_cache:
         und.unpersist()
-    return local_frame(
-        spark,
-        [(s, r, round(dd, 6)) for s, r, dd in chosen],
-        "seed bigint, round int, dd double",
+    return bind_release(
+        state.filter(F.col("round").isNotNull()).select(
+            F.col("id").alias("seed"), "round", "dd"
+        ),
+        state,
     )

@@ -28,7 +28,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
+from graphit_spark.plans.state import (
+    bind_release,
+    counted_checkpoint,
+    superstep,
+)
 
 _MAX_ROUNDS = 64  # > log2(any vertex count a long can index)
 
@@ -93,11 +97,13 @@ def minimum_spanning_forest(graph: LinkGraph) -> DataFrame:
             .groupBy("c")
             .agg(F.min("e").alias("e"))
         )
-        forest.append(
+        picked, seen = counted_checkpoint(
             nominated.select("e.u", "e.v", F.col("e.w").alias("weight"))
             .dropDuplicates(["u", "v"])
-            .transform(fresh_checkpoint)
         )
+        forest.append(picked)
+        if seen["rows"] == 0:  # the forest is complete: no component moves
+            return comp.withColumn("old", F.col("comp"))
 
         # contract: every component points along its own nominated edge.
         # The functional graph is a pseudo-forest whose only cycles are

@@ -10,12 +10,13 @@ but run to FULL resolution, with hop counts, and with cycle detection
 
 Spark plan per doubling round: one self-equi-join of the pointer table
 on (ptr = src) — the classic f <- f∘f halving, so a chain of length L
-resolves in ceil(log2 L) rounds — followed by one scalar count action
-for the convergence test. State is localCheckpointed each round and the
-superseded snapshot released, same discipline as pagerank. No driver-
-side iteration over rows; cycles are detected distributively (a row
-whose accumulated hop count exceeds the table size can only be looping)
-rather than by driver walks.
+resolves in ceil(log2 L) rounds — run as a superstep whose convergence
+count (rows still pointing into the redirect domain) is observed on the
+round's own checkpoint job: each row carries whether its pointer is a
+redirect source, so the count needs no join and no action of its own.
+No driver-side iteration over rows; cycles are detected distributively
+(a row whose accumulated hop count exceeds the table size can only be
+looping) rather than by driver walks.
 
 At 100 TB: the table shuffles on hashed url ids only (never strings —
 callers map urls through the engine's url dictionary first), each round
@@ -27,7 +28,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import (
+    bind_release,
+    counted_checkpoint,
+    superstep,
+)
 
 
 def resolve_redirects(
@@ -46,6 +51,9 @@ def resolve_redirects(
         itself a redirect source, hops = exact chain length,
         cycle = false;
       - rows trapped in a redirect loop: target/hops NULL, cycle = true.
+
+    Raises if ``max_rounds`` doubling rounds leave rows unresolved
+    (a chain longer than 2^max_rounds).
     """
     r = (
         redirects.select(
@@ -55,60 +63,56 @@ def resolve_redirects(
         .groupBy("src")
         .agg(F.min("dst").alias("dst"))
     )
-    n = r.count()  # also materializes the deduped map
-    state = r.select(
-        "src",
-        F.col("dst").alias("ptr"),
-        F.lit(1).cast("long").alias("hops"),
-    ).transform(fresh_checkpoint)
-    for _ in range(max_rounds):
+    # live: the pointer is itself a redirect source (not yet terminal);
+    # the starting checkpoint observes the table size n, the hop bound
+    # past which a live row can only be looping
+    state, seen = counted_checkpoint(
+        r.join(
+            r.select(F.col("src").alias("dst"), F.lit(True).alias("live")),
+            "dst", "left",
+        ).select(
+            "src",
+            F.col("dst").alias("ptr"),
+            F.lit(1).cast("long").alias("hops"),
+            F.coalesce("live", F.lit(False)).alias("live"),
+        )
+    )
+
+    def double(state: DataFrame, rnd) -> DataFrame:
         jump = state.select(
             F.col("src").alias("j_src"),
             F.col("ptr").alias("j_ptr"),
             F.col("hops").alias("j_hops"),
+            F.col("live").alias("j_live"),
         )
-        new = (
-            state.join(jump, state["ptr"] == jump["j_src"], "left")
-            .select(
-                "src",
-                F.coalesce("j_ptr", "ptr").alias("ptr"),
-                (F.col("hops") + F.coalesce("j_hops", F.lit(0))).alias(
-                    "hops"
-                ),
-            )
-            .transform(fresh_checkpoint)
+        return state.join(jump, state["ptr"] == jump["j_src"], "left").select(
+            "src",
+            F.coalesce("j_ptr", "ptr").alias("ptr"),
+            (F.col("hops") + F.coalesce("j_hops", F.lit(0))).alias("hops"),
+            F.coalesce("j_live", F.lit(False)).alias("live"),
         )
-        # unresolved = rows still pointing INTO the redirect domain that
-        # cannot yet be written off as loops (hops bound: any genuine
-        # chain has at most n hops)
-        unresolved = (
-            new.join(
-                new.select(F.col("src").alias("ptr")).distinct(), "ptr"
-            )
-            .filter(F.col("hops") <= n)
-            .count()
-        )
-        state.unpersist()
-        state = new
-        if unresolved == 0:
-            break
-    dom = (
-        state.select(F.col("src").alias("ptr"))
-        .distinct()
-        .withColumn("in_dom", F.lit(True))
-    )
-    out = state.join(dom, "ptr", "left")
-    is_cycle = F.coalesce("in_dom", F.lit(False))
-    resolved = out.select(
-        "src",
-        F.when(is_cycle, F.lit(None)).otherwise(F.col("ptr")).alias(
-            "target"
+
+    # unresolved = rows still pointing INTO the redirect domain that
+    # cannot yet be written off as loops (any genuine chain has at most
+    # n hops)
+    state = superstep(
+        state, double,
+        max_rounds=max_rounds, checkpoint_start=False,
+        until=lambda seen: seen["unresolved"] == 0,
+        unresolved=F.count(
+            F.when(F.col("live") & (F.col("hops") <= seen["rows"]), 1)
         ),
-        F.when(is_cycle, F.lit(None)).otherwise(F.col("hops")).alias(
-            "hops"
-        ),
-        is_cycle.alias("cycle"),
     )
-    final = resolved.transform(fresh_checkpoint)
-    state.unpersist()
-    return final
+    return bind_release(
+        state.select(
+            "src",
+            F.when(F.col("live"), F.lit(None)).otherwise(F.col("ptr")).alias(
+                "target"
+            ),
+            F.when(F.col("live"), F.lit(None)).otherwise(F.col("hops")).alias(
+                "hops"
+            ),
+            F.col("live").alias("cycle"),
+        ),
+        state,
+    )

@@ -13,8 +13,11 @@ residual degree. This yields the standard (1+eps)-factor-of-greedy
 approximation while exposing bucket-level parallelism.
 
 Spark realization (SURVEY §2.3 `applyUpdatePriority` row): no
-distributed PQ — the current priority is a driver scalar; "dequeue the
-top bucket" is a filter on residual degree, the writeMin competition is
+distributed PQ — the superstep state is the uncovered (set, element)
+pairs with each set's residual degree, and the next top bucket is the
+max bucket observed on the round's own checkpoint job, so the current
+priority reaches the driver with no action; "dequeue the top bucket" is
+a filter on residual degree, the writeMin competition is
 `groupBy(element).agg(min(set))`, and win-counting is one more groupBy.
 All shuffles key on element id or set id (the same gather-scatter shape
 as PageRank), so hub elements are absorbed by map-side partial
@@ -25,11 +28,16 @@ reproducible across cluster sizes (the reference's CAS races are not).
 from __future__ import annotations
 
 import math
+from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import (
+    bind_release,
+    counted_checkpoint,
+    superstep,
+)
 
 EPSILON = 0.01
 
@@ -42,63 +50,70 @@ def set_cover(
 ) -> DataFrame:
     """Greedy-bucketed set cover: sets are src vertices, the universe is
     every vertex that appears as a dst. Returns (set_id, round) — the
-    chosen cover, with the superstep that admitted each set.
+    chosen cover, with the superstep that admitted each set. Raises if
+    elements are still uncovered after ``max_rounds`` rounds.
     """
     x = 1.0 / math.log1p(epsilon)
+    bucket = F.floor(F.lit(x) * F.log(F.col("rdeg").cast("double")))
+    per_set = Window.partitionBy("s")
+
+    def residual(live: DataFrame) -> DataFrame:
+        """Uncovered (s, e) pairs with each set's residual degree."""
+        return live.withColumn("rdeg", F.count(F.lit(1)).over(per_set))
 
     # sets -> elements (out-adjacency after squish, like the reference's
-    # packed CSR); persists for the whole run
-    elems = graph.edges.select(
-        F.col("src").alias("s"), F.col("dst").alias("e")
-    ).persist()
-    spark = elems.sparkSession
-
-    covered = spark.createDataFrame([], "e long").transform(fresh_checkpoint)
-    prev_cov = covered  # superseded checkpoints released per round
+    # packed CSR); the start observes the first top bucket
+    live, first = counted_checkpoint(
+        residual(
+            graph.edges.select(
+                F.col("src").alias("s"), F.col("dst").alias("e")
+            )
+        ),
+        top=F.max(bucket),
+    )
     cover_parts: list[DataFrame] = []
-    bucket_of = F.floor(F.lit(x) * F.log(F.col("rdeg").cast("double")))
 
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        live = elems.join(covered, "e", "left_anti")
-        rdeg = live.groupBy("s").agg(F.count("*").alias("rdeg"))
-        top = rdeg.agg(F.max(bucket_of).alias("p")).collect()[0]["p"]
-        if top is None:
-            break  # pq.finished(): every set's residual degree is 0
-        p = int(top)
+    def admit(live: DataFrame, rnd) -> DataFrame:
+        """Dequeue the top bucket; admitted sets cover the elements they
+        win. pq.finished() is an empty state: no set has residual degree."""
+        p = int((first if rnd.seen is None else rnd.seen)["top"])
         threshold = math.ceil((1.0 + epsilon) ** p)
         low = max(math.ceil((1.0 + epsilon) ** (p - 1)), 1)
-
-        active = rdeg.filter(F.col("rdeg") >= threshold).select("s")
         # writeMin competition: min set id acquires each uncovered element
-        contested = live.join(active, "s")
         winners = (
-            contested.groupBy("e").agg(F.min("s").alias("s"))
+            live.filter(F.col("rdeg") >= threshold)
+            .groupBy("e")
+            .agg(F.min("s").alias("s"))
         )
-        wins = winners.groupBy("s").agg(F.count("*").alias("won"))
-        admitted = wins.filter(F.col("won") >= low).select("s")
-        admitted = admitted.transform(fresh_checkpoint)
-        n_admitted = admitted.count()
-        if n_admitted > 0:
-            cover_parts.append(
-                admitted.select("s", F.lit(rounds).alias("round"))
-            )
-            newly = winners.join(admitted, "s").select("e")
-            covered = covered.union(newly).transform(fresh_checkpoint)
-            prev_cov.unpersist()
-            prev_cov = covered
-        else:
+        admitted, seen = counted_checkpoint(
+            winners.groupBy("s")
+            .agg(F.count("*").alias("won"))
+            .filter(F.col("won") >= low)
+            .select("s", F.lit(rnd.index + 1).alias("round"))
+        )
+        cover_parts.append(admitted)
+        if seen["rows"] == 0:
             # unreachable given integer degrees: p = floor(x*ln(rdeg))
             # implies ceil((1+eps)^p) <= max rdeg, so the top bucket is
             # never empty, and the globally-smallest active set id wins
-            # ALL of its own >= threshold >= low elements. Defensive
-            # break so a float-boundary surprise cannot livelock.
-            break
-    out_schema = "set_id long, round int"
-    if not cover_parts:
-        return spark.createDataFrame([], out_schema)
-    out = cover_parts[0]
-    for part in cover_parts[1:]:
-        out = out.union(part)
-    return out.select(F.col("s").alias("set_id"), "round")
+            # ALL of its own >= threshold >= low elements. A
+            # float-boundary surprise would otherwise livelock.
+            raise RuntimeError(f"set_cover: bucket {p} admitted no set")
+        newly = winners.join(admitted, "s").select("e")
+        return residual(live.select("s", "e").join(newly, "e", "left_anti"))
+
+    if not first["rows"]:  # no edges: the empty cover
+        live.unpersist()
+        return graph.spark.createDataFrame([], "set_id long, round int")
+    superstep(
+        live, admit,
+        max_rounds=max_rounds, checkpoint_start=False,
+        until=lambda seen: seen["rows"] == 0,
+        rows=F.count(F.lit(1)), top=F.max(bucket),
+    ).unpersist()
+    return bind_release(
+        reduce(DataFrame.union, cover_parts).select(
+            F.col("s").alias("set_id"), "round"
+        ),
+        *cover_parts,
+    )

@@ -363,6 +363,23 @@ class TestKCore:
 
 
 class TestBetweenness:
+    def test_budget_short_of_bfs_depth_raises(self, spark):
+        """The forward BFS of the path 0→1→2→3→4 needs 4 levels. A
+        1-level budget raises instead of returning the dependencies of
+        a truncated level stack (all zeros); the default budget walks
+        every level."""
+        from graphit_spark.kernels.bc import betweenness_centrality
+
+        g = LinkGraph.from_pairs(
+            spark, [(v, v + 1) for v in range(4)], persist=False
+        )
+        with pytest.raises(RuntimeError, match="did not converge"):
+            betweenness_centrality(g, 0, max_levels=1)
+        got = {
+            r["id"]: r["bc"] for r in betweenness_centrality(g, 0).collect()
+        }
+        assert {v: b for v, b in got.items() if b} == {1: 3.0, 2: 2.0, 3: 1.0}
+
     @pytest.mark.parametrize("seed", [6, 21])
     def test_matches_brandes_oracle(self, spark, seed):
         from graphit_spark.kernels.bc import betweenness_centrality

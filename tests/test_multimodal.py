@@ -2,6 +2,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphit_spark.functions import multimodal as M
+from graphit_spark.graph import local_frame
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +29,7 @@ def test_features_deterministic(spark, docs):
 
 
 def test_features_unknown_format_raises(spark):
-    df = spark.createDataFrame([(1, b"REALJPEG....")], "doc_id long, image binary")
+    df = local_frame(spark, [(1, b"REALJPEG....")], "doc_id long, image binary")
     with pytest.raises(Exception) as ei:
         M.image_features(df).collect()
     assert "NotImplementedError" in str(ei.value) or isinstance(
@@ -38,7 +39,7 @@ def test_features_unknown_format_raises(spark):
 
 def test_frame_sample_fanout(spark):
     rows = [(i, M.fake_video(i, frames=6)) for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id long, video binary")
+    df = local_frame(spark, rows, "doc_id long, video binary")
     frames = M.frame_sample(df, every_n=2).collect()
     # 6 frames, every 2nd -> 3 per video
     assert len(frames) == 8 * 3
@@ -53,7 +54,7 @@ def test_image_resize_roundtrips_through_metadata(spark):
         attach_fake_images, image_metadata, image_resize, image_features,
     )
 
-    docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
+    docs = local_frame(spark, [(i,) for i in range(6)], "doc_id long")
     imgs = attach_fake_images(docs)
     resized = image_resize(imgs, 8, 10)
     meta = {r["doc_id"]: (r["width"], r["height"])
@@ -67,7 +68,7 @@ def test_image_resize_roundtrips_through_metadata(spark):
 def test_image_resize_deterministic(spark):
     from graphit_spark.functions.multimodal import attach_fake_images, image_resize
 
-    docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
+    docs = local_frame(spark, [(i,) for i in range(4)], "doc_id long")
     a = {r["doc_id"]: bytes(r["image"])
          for r in image_resize(attach_fake_images(docs), 5, 5).collect()}
     b = {r["doc_id"]: bytes(r["image"])
@@ -78,7 +79,7 @@ def test_image_resize_deterministic(spark):
 def test_audio_features(spark):
     from graphit_spark.functions.multimodal import attach_fake_audio, audio_features
 
-    docs = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    docs = local_frame(spark, [(i,) for i in range(5)], "doc_id long")
     rows = audio_features(attach_fake_audio(docs)).collect()
     assert len(rows) == 5
     for r in rows:
@@ -134,7 +135,8 @@ class TestRealCodecs:
 
         gray = np.arange(48, dtype=np.uint8).reshape(6, 8) * 5
         white = [[(255, 255, 255)] * 3] * 2
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(encode_bmp_gray(gray))),
              (1, bytearray(self._bmp24(3, 2, white)))],
             "doc_id long, image binary",
@@ -157,7 +159,8 @@ class TestRealCodecs:
         )
 
         gray = np.full((10, 10), 77, dtype=np.uint8)
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(encode_bmp_gray(gray)))], "doc_id long, image binary"
         )
         resized = image_resize(df, 4, 3)
@@ -207,7 +210,8 @@ class TestRealCodecs:
         from graphit_spark.functions.multimodal import audio_features
 
         samples = [1000, -1000] * 400  # 800 samples of a square wave
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(self._wav(8000, samples)))],
             "doc_id long, audio binary",
         )
@@ -221,7 +225,8 @@ class TestRealCodecs:
 
         from graphit_spark.functions.multimodal import image_features
 
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(b"II*\x00 tiff not supported"))],
             "doc_id long, image binary",
         )
@@ -337,7 +342,8 @@ class TestPngCodec:
         )
 
         img = (np.arange(96, dtype=np.uint8).reshape(8, 12) * 2)
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(encode_png_gray(img)))],
             "doc_id long, image binary",
         )
@@ -349,7 +355,7 @@ class TestPngCodec:
         arr = _decode_png(bytes(resized))
         assert arr.shape == (4, 6)
         m2 = image_metadata(
-            spark.createDataFrame([(0, bytearray(bytes(resized)))],
+            local_frame(spark, [(0, bytearray(bytes(resized)))],
                                   "doc_id long, image binary")
         ).collect()[0]
         assert (m2["format"], m2["width"], m2["height"]) == ("png", 6, 4)
@@ -436,7 +442,8 @@ class TestGifPnmCodecs:
         )
 
         img = (np.arange(60, dtype=np.uint8).reshape(6, 10) * 4)
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(encode_pgm_gray(img)))],
             "doc_id long, image binary",
         )
@@ -458,7 +465,8 @@ class TestGifPnmCodecs:
         )
 
         img = np.arange(96, dtype=np.uint8).reshape(8, 12) * 2
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(encode_gif_gray(img)))],
             "doc_id long, image binary",
         )
@@ -564,7 +572,8 @@ class TestAviCodec:
         w, h, frames, bpp, comp, pal, movi = _avi_headers(raw)
         assert (w, h, frames, bpp, comp) == (9, 3, 4, 8, 0)
         assert pal is not None and movi is not None
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(raw))], "doc_id long, video binary"
         )
         meta = image_metadata(df, bin_col="video").collect()[0]
@@ -581,7 +590,8 @@ class TestAviCodec:
         )
 
         frames = self._frames(6, 5, 7)
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(encode_avi_gray(frames)))],
             "doc_id long, video binary",
         )
@@ -590,7 +600,8 @@ class TestAviCodec:
         for r in out:
             arr = _decode_bmp(bytes(r["frame"]))
             assert (arr == frames[r["frame_idx"]]).all()
-        fr_df = spark.createDataFrame(
+        fr_df = local_frame(
+            spark,
             [(r["frame_idx"], bytearray(r["frame"])) for r in out],
             "frame_idx long, image binary",
         )
@@ -694,7 +705,8 @@ class TestJpegCodec:
             ).astype(np.uint8)
             for i in range(3)
         ]
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(i, bytearray(encode_jpeg_gray(img))) for i, img in
              enumerate(imgs)],
             "doc_id long, image binary",
@@ -739,7 +751,8 @@ class TestMjpgAvi:
         for d, f in zip(dec, frames):
             assert np.abs(d.astype(int) - f.astype(int)).max() <= 4
 
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, bytearray(raw))], "doc_id long, video binary"
         )
         meta = image_metadata(df, bin_col="video").collect()[0]

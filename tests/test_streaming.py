@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphit_spark.datagen import gen_pages
+from graphit_spark.graph import local_frame
 from graphit_spark.streaming import (
     stream_pages_to_edges,
     windowed_event_counts,
@@ -98,7 +99,8 @@ class TestStatefulSessionize:
             (eid, uid, dt.datetime.utcfromtimestamp(base + sec), "view", 1.0)
             for eid, uid, sec in rows
         ]
-        spark.createDataFrame(
+        local_frame(
+            spark,
             data, "event_id long, user_id long, ts timestamp, "
             "event_type string, value double"
         ).coalesce(1).write.mode(mode).parquet(path)
@@ -179,7 +181,8 @@ def test_windowed_append_drops_late_rows(spark, tmp_path):
             (i, 1, dt.datetime.utcfromtimestamp(base + sec), "view", 1.0)
             for i, sec in enumerate(rows)
         ]
-        spark.createDataFrame(
+        local_frame(
+            spark,
             data, "event_id long, user_id long, ts timestamp, "
             "event_type string, value double"
         ).coalesce(1).write.mode(mode).parquet(d)
@@ -358,7 +361,7 @@ class TestIncrementalKernels:
     SnapshotStore batch snapshots with lineage + metrics."""
 
     def _write_edges(self, spark, pairs, edges_dir, mode):
-        df = spark.createDataFrame(pairs, "src long, dst long").coalesce(1)
+        df = local_frame(spark, pairs, "src long, dst long").coalesce(1)
         df.write.mode(mode).parquet(edges_dir)
 
     def test_incremental_pagerank_matches_cold(self, spark, tmp_path):
@@ -502,7 +505,8 @@ class TestStreamingDedup:
 
     @staticmethod
     def _write(spark, path, rows, mode):
-        spark.createDataFrame(
+        local_frame(
+            spark,
             rows, "doc_id long, text string"
         ).coalesce(1).write.mode(mode).parquet(path)
 
@@ -596,7 +600,7 @@ class TestStreamingDedup:
             q.stop()
         batch = {
             (r["doc_hash"], r["keep_id"])
-            for r in spark.createDataFrame(rows, "doc_id long, text string")
+            for r in local_frame(spark, rows, "doc_id long, text string")
             .groupBy(F.md5(F.col("text").cast("binary")).alias("doc_hash"))
             .agg(F.min("doc_id").alias("keep_id"))
             .collect()
@@ -616,7 +620,7 @@ class TestCmsStream:
     ]
 
     def _write_docs(self, spark, rows, docs_dir, mode):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+        local_frame(spark, rows, "doc_id long, text string").coalesce(
             1
         ).write.mode(mode).parquet(docs_dir)
 
@@ -644,7 +648,7 @@ class TestCmsStream:
         assert store.latest() == 1
 
         words = (
-            spark.createDataFrame(self.DOCS, "doc_id long, text string")
+            local_frame(spark, self.DOCS, "doc_id long, text string")
             .select(
                 F.explode(
                     F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -689,7 +693,7 @@ class TestCmsStream:
 
 class TestHllStream:
     def _write_docs(self, spark, rows, docs_dir, mode):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+        local_frame(spark, rows, "doc_id long, text string").coalesce(
             1
         ).write.mode(mode).parquet(docs_dir)
 
@@ -713,7 +717,8 @@ class TestHllStream:
             q.stop()
         assert store.latest() == 1
 
-        both = spark.createDataFrame(
+        both = local_frame(
+            spark,
             wave1 + wave2, "doc_id long, text string"
         )
         want = {
@@ -738,7 +743,8 @@ class TestIncrementalLshDedup:
 
     @staticmethod
     def _write(spark, path, rows, mode):
-        spark.createDataFrame(
+        local_frame(
+            spark,
             rows, "doc_id long, text string"
         ).coalesce(1).write.mode(mode).parquet(path)
 
@@ -813,7 +819,7 @@ class TestIncrementalLshDedup:
         assert kept_total == len(streamed)
         assert suppressed == len(rows) - len(streamed)
 
-        batch_df = spark.createDataFrame(rows, "doc_id long, text string")
+        batch_df = local_frame(spark, rows, "doc_id long, text string")
         dup_b = {
             r["doc_b"]
             # the pinned contract is explicitly the UNCAPPED batch rule
@@ -872,7 +878,8 @@ class TestIncrementalDeletes:
 
     @staticmethod
     def _write(spark, path, rows, mode):
-        spark.createDataFrame(
+        local_frame(
+            spark,
             rows, "src long, dst long, op string"
         ).coalesce(1).write.mode(mode).parquet(path)
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from graphit_spark import LinkGraph, SnapshotStore
 from graphit_spark import kernels as K
 from graphit_spark.kernels import connected_components, label_propagation, pagerank
+from graphit_spark.kernels.bc import edge_betweenness
 from graphit_spark.kernels.scc import condensation_layers
 from graphit_spark.plans.state import fresh_checkpoint, observe
 
@@ -339,6 +340,16 @@ _MIGRATED = {
     "astar": lambda g, w: K.astar(w, 0, 4),
     "approximate_ppr_push":
         lambda g, w: K.approximate_ppr_push(g, 0, max_rounds=2),
+    "bridges": lambda g, w: K.bridges(g),
+    "biconnected_components": lambda g, w: K.biconnected_components(g),
+    "articulation_points": lambda g, w: K.articulation_points(g),
+    "betweenness_centrality": lambda g, w: K.betweenness_centrality(g, 0),
+    "edge_betweenness": lambda g, w: edge_betweenness(g, 0),
+    "resolve_redirects": lambda g, w: K.resolve_redirects(g.edges),
+    "densest_subgraph": lambda g, w: K.densest_subgraph(g, max_rounds=2),
+    "ego_subgraph": lambda g, w: K.ego_subgraph(g, [0], hops=2),
+    "set_cover": lambda g, w: K.set_cover(g),
+    "influence_max": lambda g, w: K.influence_max(g, k=2),
 }
 
 
@@ -356,10 +367,12 @@ def test_kernel_leaves_no_cached_blocks(spark, leak_graphs, name):
     assert _cached_ids(spark) <= before, name
 
 
-# a driver round trip started from a peel or bucket kernel's own module
+# a driver round trip started from a peel, bucket or frontier kernel's
+# own module
 _KERNEL_ROUND_TRIP = re.compile(
     r"^(collect|count|first|take|head) at "
-    r"\S*(kcore|landmarks|astar|delta_stepping)\.py:\d+$"
+    r"\S*(kcore|landmarks|astar|delta_stepping|bridges|redirects|densest"
+    r"|ego|setcover|influence)\.py:\d+$"
 )
 
 
@@ -368,8 +381,11 @@ def test_peel_and_bucket_kernels_have_no_round_trips(
 ):
     """Their stopping numbers — k-core's dropped count, core
     decomposition's next bucket, the landmark frontier size, A*'s
-    target distance and both bucket cursors — are observed on each
-    round's materialization: no kernel call runs an action of its own."""
+    target distance, both bucket cursors, the bridges BFS's unreached
+    count and depth, the unresolved redirects, densest's n and m, the
+    ego frontier, set cover's top bucket and admitted count, and the
+    influence argmax — are observed on each round's materialization:
+    no kernel call runs an action of its own."""
     g, w = leak_graphs
     calls = {
         "k_core": lambda: K.k_core(g, 2),
@@ -378,6 +394,13 @@ def test_peel_and_bucket_kernels_have_no_round_trips(
         "astar": lambda: K.astar(w, 0, 4),
         "sssp_delta_stepping":
             lambda: K.sssp_delta_stepping(w, 0, max_rounds=2),
+        "biconnected_components": lambda: K.biconnected_components(g),
+        "bridges": lambda: K.bridges(g),
+        "resolve_redirects": lambda: K.resolve_redirects(g.edges),
+        "densest_subgraph": lambda: K.densest_subgraph(g, max_rounds=2),
+        "ego_subgraph": lambda: K.ego_subgraph(g, [0], hops=2),
+        "set_cover": lambda: K.set_cover(g),
+        "influence_max": lambda: K.influence_max(g, k=2),
     }
     trips = {}
     for name, call in calls.items():

@@ -12,10 +12,11 @@ from graphit_spark.functions.textops import (
     top_ngrams,
     word_ngrams,
 )
+from graphit_spark.graph import local_frame
 
 
 def _grams(spark, text, n=2):
-    df = spark.createDataFrame([(text,)], "text string")
+    df = local_frame(spark, [(text,)], "text string")
     return df.select(word_ngrams(F.col("text"), n).alias("g")).first()["g"]
 
 
@@ -33,7 +34,7 @@ def test_word_ngrams_short_texts(spark):
 
 def test_top_ngrams_counts_and_tiebreak(spark):
     rows = [(1, "a b a b"), (2, "a b z z"), (3, "m m")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     got = [tuple(r) for r in top_ngrams(df, k=3).collect()]
     # "a b": doc1 twice-windowed ("a b","b a","a b") + doc2 once = 3
     assert got[0] == ("a b", 3, 2)
@@ -47,7 +48,7 @@ def test_repetition_gate(spark):
         (2, "one two three four five six seven eight nine ten"),  # clean
         (3, "solo"),                          # single token, no bigrams
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     out = {r.doc_id: r for r in repetition_stats(df).collect()}
     d = out[1]
     assert (d.n_words, d.n_distinct_words) == (4, 1)
@@ -69,7 +70,7 @@ def test_tfidf_ranks_distinctive_terms(spark):
         (2, "shared banana"),
         (3, "shared cherry"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     out = tfidf_top_terms(df, k=2).collect()
     by_doc = {}
     for r in out:
@@ -88,7 +89,7 @@ def test_pii_stats_counts_and_redaction(spark):
         (1, "mail a.b+c@ex-ample.org or call 555-123-4567 from 10.0.0.1"),
         (2, "nothing sensitive here"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     out = {r.doc_id: r for r in pii_stats(df).collect()}
     hit = out[1]
     assert (hit.n_email, hit.n_phone, hit.n_ipv4) == (1, 1, 1)
@@ -192,7 +193,8 @@ class TestDuplicateSpans:
         from graphit_spark.functions.dedup import duplicate_spans
 
         shared = "a b c d e f g"
-        docs = spark.createDataFrame(
+        docs = local_frame(
+            spark,
             [
                 (1, shared + " h1 i1 j1 k1"),
                 (2, shared + " h2 i2 j2 k2"),
@@ -216,7 +218,8 @@ class TestDuplicateSpans:
         from graphit_spark.functions.dedup import duplicate_spans
 
         text = "p q r s t u1 u2 u3 u4 u5 u6 p q r s t"
-        docs = spark.createDataFrame(
+        docs = local_frame(
+            spark,
             [(7, text)], "doc_id long, text string"
         )
         rows = sorted(
@@ -231,7 +234,8 @@ def test_readability_hand_checked(spark):
     flesch = 206.835 - 1.015*(5/2) - 84.6*(5/5)."""
     from graphit_spark.functions.textops import readability
 
-    docs = spark.createDataFrame(
+    docs = local_frame(
+        spark,
         [(1, "The cat sat. It ran!")], "doc_id long, text string"
     )
     r = readability(docs).first()
@@ -249,7 +253,7 @@ def test_bigram_lm_score_hand_checked(spark):
     #   doc2 "a b c":   bigrams (a b),(b c)        -> a:1, b:1
     # c1[a]=3, c1[b]=2; c2[(a,b)]=3, c2[(b,a)]=1, c2[(b,c)]=1
     rows = [(1, "a b a b"), (2, "a b c"), (3, "solo")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     got = {r["doc_id"]: r for r in bigram_lm_scores(df).collect()}
     assert set(got) == {1, 2}  # doc 3 has no bigrams
     # doc1: p(a b)=3/3=1 (x2), p(b a)=1/2 -> mean (1+1+0.5)/3
@@ -272,7 +276,7 @@ def test_quality_probe_learns_separable_signal(spark):
     rows = [(i, clean + f" extra{i}", "en") for i in range(20)] + [
         (100 + i, noisy + f" {i}", "zh") for i in range(20)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    df = local_frame(spark, rows, "doc_id long, text string, lang string")
     out = {r["doc_id"]: r for r in quality_probe(df).collect()}
     en_preds = [out[i]["pred"] for i in range(20)]
     zh_preds = [out[100 + i]["pred"] for i in range(20)]
@@ -323,7 +327,7 @@ def test_bpe_matches_python_reference(spark):
         (2, "new newer newest low low"),
         (3, "wide wider widest new newer"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     wf = {}
     for _, text in rows:
         for w in text.split():
@@ -343,7 +347,7 @@ def test_bpe_overlapping_run_merges_left_to_right(spark):
     greedy merge produces [aa, aa] — the island parity rule."""
     from graphit_spark.functions.textops import bpe_merges
 
-    df = spark.createDataFrame([(1, "aaaa bb")], "doc_id long, text string")
+    df = local_frame(spark, [(1, "aaaa bb")], "doc_id long, text string")
     got = [
         tuple(r)
         for r in bpe_merges(df, rounds=2, top_words=10)
@@ -359,7 +363,8 @@ def test_bpe_overlapping_run_merges_left_to_right(spark):
 def test_bpe_top_words_cap_is_deterministic(spark):
     from graphit_spark.functions.textops import bpe_merges
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(1, "zz zz aa aa qq")], "doc_id long, text string"
     )
     # cap 2 keeps (aa, zz): freq ties broken by word asc drop 'qq'
@@ -383,7 +388,7 @@ def test_dsir_target_like_docs_score_higher(spark):
         (100, "good clean prose here too"),    # raw, target-like
         (101, "zq xv jk wp qy zz"),            # raw, alien bigrams
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_grams"], r["dsir_score"])
         for r in dsir_weights(df).collect()
@@ -400,7 +405,8 @@ def test_dsir_target_like_docs_score_higher(spark):
 def test_dsir_short_docs_absent(spark):
     from graphit_spark.functions.textops import dsir_weights
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(1, "a b c"), (100, "solo"), (101, "a b")],
         "doc_id long, text string",
     )
@@ -420,7 +426,7 @@ def test_bpe_tokenize_matches_python_reference(spark):
         (2, "new newer newest low low"),
         (3, "wide wider widest new newer xyzzy"),  # xyzzy: out-of-cap word
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
 
     def words_of(text):
         return re.findall("[a-z]+", text.lower())
@@ -473,7 +479,7 @@ def test_pmi_pairs_matches_python_oracle(spark):
         "the dog sat on the cat",
     ] * 3  # repeat so several pairs clear min_count
     rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
 
     window, min_count, k = 2, 3, 20
     pair_c, uni = Counter(), Counter()
@@ -507,7 +513,7 @@ def test_pmi_pairs_short_and_empty_docs(spark):
     from graphit_spark.functions.textops import pmi_pairs
 
     rows = [(1, "solo"), (2, ""), (3, "x y x y x y x y x y")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     got = pmi_pairs(df, window=3, min_count=2, k=10).collect()
     # only doc 3 produces pairs; singleton/empty docs contribute
     # unigrams only and must not crash the pair expression
@@ -522,7 +528,7 @@ class TestPrioritySample:
         from graphit_spark.functions.sampling import priority_sample
 
         rows = [(i, (i * 37) % 101 + 1) for i in range(300)]
-        df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+        df = local_frame(spark, rows, "doc_id long, n_tokens long")
         k = 25
         got = {r["doc_id"]: (r["n_tokens"], r["est_n_tokens"])
                for r in priority_sample(df, k).collect()}
@@ -539,7 +545,8 @@ class TestPrioritySample:
     def test_small_corpus_keeps_all(self, spark):
         from graphit_spark.functions.sampling import priority_sample
 
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(1, 10), (2, 20)], "doc_id long, n_tokens long"
         )
         got = priority_sample(df, 5).collect()
@@ -563,7 +570,7 @@ class TestLexicalTopk:
             (4, "u1 u2 u3 c"),
             (5, "u4 u5 u6 u7"),
         ]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
+        df = local_frame(spark, docs, "doc_id long, text string")
         got = lexical_topk(df, k=3, n_queries=1, df_cap=2).collect()
         by_rank = [r["doc_id"] for r in sorted(got, key=lambda r: -r["score"])]
         assert by_rank == [1, 3]  # two rare shared terms beat one;
@@ -574,7 +581,8 @@ class TestLexicalTopk:
     def test_identical_docs_score_one(self, spark):
         from graphit_spark.functions.textops import lexical_topk
 
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(0, "alpha beta gamma"), (1, "alpha beta gamma"),
              (2, "delta epsilon zeta"), (3, "eta theta iota"),
              (4, "kappa lambda mu"), (5, "nu xi omicron")],
