@@ -4579,7 +4579,7 @@ def q_community_conductance(spark, sf_dir):
     from graphit_spark.kernels import label_propagation
 
     und = graph(spark, sf_dir, "blocked").symmetrize()
-    und.ensure_persisted()
+    own = und.ensure_persisted()
     labels = label_propagation(
         graph(spark, sf_dir, "blocked"), rounds=LPA_ROUNDS
     ).localCheckpoint(eager=True)
@@ -4621,7 +4621,8 @@ def q_community_conductance(spark, sf_dir):
         )
         .localCheckpoint(eager=True)
     )
-    und.unpersist()
+    if own:
+        und.unpersist()
     return out
 
 

@@ -14,8 +14,10 @@ src/runtime_lib/infra_gapbs/builder.h):
 - ``transpose`` flips edge direction (intrinsics.h:525-529) — zero-cost
   column swap here;
 - ``relabel`` renumbers vertices by decreasing degree
-  (intrinsics.h:237-264, builder.h RelabelByDegree) — used by triangle
-  counting.
+  (intrinsics.h:237-264, builder.h RelabelByDegree) — triangle counting
+  orients its edges by the same (degree, id) order without renumbering;
+- ``symmetrize`` is the undirected view CC/LPA/TC run on; a persisted
+  graph builds it once and owns it.
 
 Physically the edge table is hash-partitioned by ``src`` and persisted so
 every superstep join reuses the partitioning (the analogue of GraphIt's
@@ -114,6 +116,11 @@ class LinkGraph:
         self._out_degrees: DataFrame | None = None
         self._adjacency: DataFrame | None = None
         self._vertices: DataFrame | None = None
+        # the memoized undirected view of a persisted graph, and frames
+        # a derivation persisted for this graph (relabel's range frame):
+        # both are released by unpersist()
+        self._undirected: LinkGraph | None = None
+        self._owned: list[DataFrame] = []
 
     # -- construction -----------------------------------------------------
 
@@ -276,7 +283,17 @@ class LinkGraph:
 
     def symmetrize(self) -> "LinkGraph":
         """Undirected view: E ∪ Eᵀ, re-deduplicated (GAPBS ``-s`` flag —
-        CC/LPA/TC semantics are defined on the symmetrized graph)."""
+        CC/LPA/TC semantics are defined on the symmetrized graph).
+
+        A persisted graph builds its view once: every call returns the
+        same persisted view, which this graph owns — kernels see it as
+        already persisted and leave it (and its memoized degree table)
+        cached, and ``unpersist()`` releases it with the graph. An
+        unpersisted graph returns a fresh, unpersisted view per call,
+        owned by the caller (``ensure_persisted``/``unpersist``)."""
+        view = self._undirected
+        if view is not None and view._persisted:
+            return view
         back = [F.col(DST).alias(SRC), F.col(SRC).alias(DST)]
         if self.weighted:
             back.append(F.col(WEIGHT))
@@ -284,10 +301,13 @@ class LinkGraph:
         # Forward the universe: E ∪ Eᵀ is built from squished edges, so
         # a max id that was self-loop-only (or a serialized header's
         # trailing isolated vertices) would otherwise vanish here.
-        return LinkGraph(
+        view = LinkGraph(
             both, squished=False, num_partitions=self.num_partitions,
-            persist=False, num_vertices=self.num_vertices,
+            persist=self._persisted, num_vertices=self.num_vertices,
         )
+        if self._persisted:
+            self._undirected = view
+        return view
 
     def contract(self, mapping: DataFrame) -> DataFrame:
         """Quotient/rollup edge table: map each endpoint through
@@ -369,13 +389,17 @@ class LinkGraph:
         highest-degree vertex. Scale notes: the rank is computed as a
         range-partitioned distributed sort (plans/ranking.py), not a
         single-partition global Window; the V-sized mapping then joins the
-        edge table with Catalyst/AQE picking broadcast vs shuffle."""
+        edge table with Catalyst/AQE picking broadcast vs shuffle. The
+        returned graph owns the sort's persisted range frame: its
+        ``unpersist()`` releases it."""
         from graphit_spark.plans.ranking import dense_rank_ids
 
+        ranged: list[DataFrame] = []
         mapping = dense_rank_ids(
             self.out_degrees(),
             [F.desc("out_degree"), F.asc("id")],
             out_col="new_id",
+            release=ranged,
         ).select("id", "new_id")
         e = (
             self.edges.join(mapping.withColumnRenamed("id", SRC), SRC)
@@ -388,10 +412,12 @@ class LinkGraph:
         # New ids are a dense rank over the FULL vertex universe
         # (out_degrees() spans vertices()), so the universe size is
         # preserved exactly — forward it.
-        return LinkGraph(
+        relabeled = LinkGraph(
             e, squished=True, num_partitions=self.num_partitions,
             persist=False, num_vertices=self.num_vertices,
         )
+        relabeled._owned = ranged
+        return relabeled
 
     def save_bucketed(
         self, table: str, buckets: int | None = None, path: str | None = None
@@ -436,12 +462,17 @@ class LinkGraph:
         return True
 
     def unpersist(self) -> None:
-        for df in (self.edges, self._out_degrees, self._adjacency):
+        """Release the edge cache, the memoized derived tables and the
+        undirected view this graph owns."""
+        for df in (self.edges, self._out_degrees, self._adjacency, *self._owned):
             if df is not None:
                 try:
                     df.unpersist()
                 except Exception:
                     pass
+        if self._undirected is not None:
+            self._undirected.unpersist()
+            self._undirected = None
         # let a later ensure_persisted() re-cache (the DataFrames stay
         # valid — only their cached blocks are dropped)
         self._persisted = False

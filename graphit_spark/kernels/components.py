@@ -13,17 +13,23 @@ symmetrizing undirected inputs (-s); we symmetrize explicitly so
 components are the weakly-connected fixpoint — cc_verifier.cpp checks only
 the converged state, and BSP vs async iteration order doesn't change it.
 
-Spark plan per round: frontier-restricted gather (min) + change-tracking
-join produces the next frontier (change_tracking_lower.cpp:38-75); the
-pointer-jump rounds are label⋈label self-joins that halve path lengths,
-turning O(diameter) propagation into O(log n) rounds on long chains.
-
-The numbers a round's driver decisions need — the next frontier's size
-and out-degree sum (direction choice, stopping rule) and the count of
-distinct labels (whether to pointer-jump) — are observed aggregates on
-the checkpoints that already materialize those rows (plans.state.observe):
-the label state carries each vertex's out-degree so the frontier degree
-sum is a plain sum, and a round launches no count or collect of its own.
+Spark plan per round, two materializations:
+    gather: one groupBy(id) with min over the union of the neighbour
+        candidates (edges ⋈ frontier labels, dst as id) and each vertex's
+        own (comp, old_comp, deg) row — one exchange; it is checkpointed
+        and observes the change count, frontier degree sum and an
+        approximate distinct-label count (the broadcast guard)
+    jump: comp ← P(P(P(comp))), P(l) = comp[l] over the distinct labels
+        l — the two path-halving hops of cc_lp_pj.gt as one broadcast
+        lookup, turning O(diameter) propagation into O(log n) rounds on
+        long chains; a symmetrized round whose gather changed nothing is
+        the last, and runs no jump (every label is its component's min,
+        so P is the identity).
+The frontier-restricted gather is change_tracking_lower.cpp:38-75. The
+label state carries each vertex's out-degree so the next frontier's size
+and degree sum (direction choice, stopping rule) are observed aggregates
+on the round's own materialization (plans.state.observe): a round
+launches no count or collect of its own.
 """
 
 from __future__ import annotations
@@ -142,64 +148,54 @@ def connected_components(
                 )
             if big_v:
                 src_labels = src_labels.hint("shuffle_hash")
-        mins = (
-            active_edges.join(src_labels, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr_min"))
-        )
+        # gather: one groupBy(id) over the neighbour candidates and each
+        # vertex's own row, so comp = least(own, min over neighbours) and
+        # old_comp/deg pass through (min over the one non-null value)
         new_labels = (
-            labels.join(mins, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("nbr_min", F.col("comp"))).alias(
-                    "comp"
-                ),
-                F.col("comp").alias("old_comp"),
-                "deg",
-            )
+            active_edges.join(src_labels, "src")
+            .select(F.col("dst").alias("id"), "comp")
+            .unionByName(labels.withColumn("old_comp", F.col("comp")),
+                         allowMissingColumns=True)
+            .groupBy("id")
+            .agg(*(F.min(c).alias(c) for c in ("comp", "old_comp", "deg")))
         )
         if not pointer_jump:
             return new_labels
-        # materialize the gather ONCE before pointer jumping: each jump
-        # hop references new_labels twice (as parent map and as left
-        # side), so a lazy chain would recompute the E-sized gather
-        # several times per round; it observes the round's aggregates
-        # in case it is the round's state
-        new_labels, _ = rnd.checkpoint(new_labels, **rnd.aggs)
-        # Path-halving: comp[v] <- comp[comp[v]], repeated. A naive
-        # self-join on comp shuffles the whole table keyed by the
-        # giant component's label — maximal key skew. Instead the
-        # parent mapping is restricted to the DISTINCT label values
-        # (they collapse geometrically) and broadcast, so each hop is
-        # one narrow V-scan: no shuffle, no skewed key.
-        dcomp, dseen = rnd.checkpoint(
-            new_labels.select(F.col("comp").alias("pid")).distinct(),
-            distinct=F.count(F.lit(1)),
+        # materialize the gather ONCE before pointer jumping: the jump
+        # reads it as left side, label set and parent map; it observes
+        # the round's aggregates in case it is the round's state, and an
+        # estimate of the distinct-label count for the broadcast guard
+        new_labels, gseen = rnd.checkpoint(
+            new_labels, distinct=F.approx_count_distinct("comp"), **rnd.aggs
         )
-        if dseen["distinct"] > _PJ_BROADCAST_LIMIT:
+        if symmetrize and gseen["changed"] == 0:
+            # converged: every component carries its min id, P is identity
+            return new_labels
+        if gseen["distinct"] > _PJ_BROADCAST_LIMIT:
             # labels haven't consolidated yet — plain propagation
             # continues and PJ kicks in once distinct labels fit a
             # broadcast (power-law graphs get there in 1-2 rounds).
             return new_labels
-        for hop in range(2):
-            if hop:
-                new_labels = rnd.checkpoint(new_labels)
-            parent = F.broadcast(
-                new_labels.join(
-                    F.broadcast(dcomp),
-                    new_labels["id"] == dcomp["pid"],
-                ).select("pid", F.col("comp").alias("pcomp"))
-            )
-            left = new_labels.alias("l")
-            new_labels = left.join(
-                parent, F.col("l.comp") == F.col("pid"), "left"
-            ).select(
-                F.col("l.id").alias("id"),
-                F.coalesce(F.col("pcomp"), F.col("l.comp")).alias("comp"),
-                F.col("l.old_comp").alias("old_comp"),
-                F.col("l.deg").alias("deg"),
-            )
-        return new_labels
+        # Pointer jump comp <- P(P(P(comp))), P(l) = comp[l] over the
+        # DISTINCT labels l — what two path-halving hops comp[v] <-
+        # comp[comp[v]] compute. A self-join on comp would shuffle the
+        # whole table keyed by the giant component's label (maximal key
+        # skew); the label set collapses geometrically, so P∘P∘P is a
+        # broadcast map and the jump one narrow V-scan.
+        pids = new_labels.select(F.col("comp").alias("pid")).distinct()
+        parent = new_labels.join(
+            F.broadcast(pids), new_labels["id"] == pids["pid"]
+        ).select("pid", F.col("comp").alias("hop"))
+        jump = parent
+        for _ in range(2):
+            jump = jump.join(F.broadcast(parent.select(
+                F.col("pid").alias("hop"), F.col("hop").alias("nxt")
+            )), "hop", "left").select("pid", F.coalesce("nxt", "hop").alias("hop"))
+        return new_labels.alias("l").join(
+            F.broadcast(jump), F.col("l.comp") == F.col("pid"), "left"
+        ).select(
+            "l.id", F.coalesce("hop", "l.comp").alias("comp"), "l.old_comp", "l.deg"
+        )
 
     log: list = []
     labels = superstep(

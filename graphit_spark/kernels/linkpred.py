@@ -73,10 +73,10 @@ def link_prediction(
     # persist the symmetrized graph: sym feeds the wedge self-join
     # (both sides), the adjacency anti-join, AND the degree table —
     # without the cache the E∪Eᵀ squish shuffle re-runs ~4×. The result
-    # is checkpointed below, so the cache is released before returning.
+    # is checkpointed below, so a cache made here is released before
+    # returning (a persisted graph's own undirected view stays cached).
     und = graph.symmetrize()
-    if materialize:
-        und.ensure_persisted()
+    own = materialize and und.ensure_persisted()
     sym = und.edges.select("src", "dst")
     deg = und.out_degrees().select(
         F.col("id").alias("w"), F.col("out_degree").alias("w_deg")
@@ -140,5 +140,6 @@ def link_prediction(
     if not materialize:
         return scored
     out = scored.transform(fresh_checkpoint)
-    und.unpersist()
+    if own:
+        und.unpersist()
     return out

@@ -9,11 +9,13 @@ sorted arrays). The verifier counts every closed triple and divides by 6
 (test/verifiers/tc_verifier.cpp:13-32) — equal to our oriented count.
 
 Spark plan (node-iterator++ on the oriented DAG):
-    1. symmetrize + squish → simple undirected graph
-    2. orient edges low-degree → high-degree (degree relabel makes the
-       orientation "new_id asc", so every hub has small *oriented*
-       out-degree — this is what kills the skew, same reason GraphIt
-       relabels)
+    1. symmetrize + squish → simple undirected graph (the graph's
+       memoized undirected view when it is persisted)
+    2. orient u→v iff (deg(u), -u) < (deg(v), -v): two joins with the
+       view's degree table. That order reverses the degree-desc relabel,
+       so the DAG is the relabelled one up to ids (no relabel, range sort
+       or collect), and every hub has small *oriented* out-degree — what
+       kills the skew, the reason GraphIt relabels
     3. adjacency blocks on the oriented DAG, sorted arrays
     4. oriented_edges ⋈ A(src) ⋈ A(dst) → Σ size(array_intersect)
 
@@ -26,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
+from graphit_spark.plans.state import bind_release
 
 
 def triangle_count(
@@ -33,17 +36,21 @@ def triangle_count(
 ) -> DataFrame:
     """Global triangle count. Returns a 1-row DataFrame (triangles: long).
 
-    relabel=True (default) always degree-relabels — deterministic plan,
-    the right call on power-law web graphs. relabel="auto" mirrors the
-    reference's builtin_relabel guard (intrinsics.h:239-258): the
-    orientation/relabel step is skipped when `worth_relabelling` says the
-    degree distribution is too flat to pay for it. The count itself is
-    relabel-invariant either way.
+    relabel=True (default) always orients by degree — deterministic
+    plan, the right call on power-law web graphs. relabel="auto" mirrors
+    the reference's builtin_relabel guard (intrinsics.h:239-258): the
+    degree orientation is skipped (edges point to the smaller id) when
+    `worth_relabelling` says the degree distribution is too flat to pay
+    for it. The count itself is orientation-invariant either way.
     """
-    per_edge = _per_edge_intersections(graph, relabel)
-    return per_edge.agg(
+    und = graph.symmetrize()
+    total = _per_edge_intersections(und, relabel).agg(
         F.coalesce(F.sum("tri"), F.lit(0)).cast("long").alias("triangles")
     )
+    if not und._persisted and und._out_degrees is not None:
+        # a fresh view (of an unpersisted graph) is this call's own
+        bind_release(total, und._out_degrees)
+    return total
 
 
 def triangle_count_approx(
@@ -77,15 +84,8 @@ def triangle_count_approx(
     )
     h = F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
     kept = oriented.filter(h < F.lit(2 ** (32 - sample_exp)))
-    adj = kept.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("nbrs")
-    )
-    a_src = adj.select(F.col("src").alias("e_src"), F.col("nbrs").alias("nbrs_s"))
-    a_dst = adj.select(F.col("src").alias("e_dst"), F.col("nbrs").alias("nbrs_d"))
-    per_edge = (
-        kept.join(a_src, kept["src"] == a_src["e_src"])
-        .join(a_dst, kept["dst"] == a_dst["e_dst"])
-        .select(F.size(F.array_intersect("nbrs_s", "nbrs_d")).alias("tri"))
+    per_edge = _with_adjacency(kept).select(
+        F.size(F.array_intersect("nbrs_s", "nbrs_d")).alias("tri")
     )
     sampled = F.coalesce(F.sum("tri"), F.lit(0)).cast("long")
     return per_edge.agg(
@@ -144,19 +144,9 @@ def triangle_count_per_vertex(graph: LinkGraph, *, relabel: bool = False) -> Dat
     ids stay in the caller's space."""
     und = graph.symmetrize()
     oriented = und.edges.filter(F.col("src") > F.col("dst"))
-    adj = oriented.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("nbrs")
-    )
-    a_src = adj.select(F.col("src").alias("e_src"), F.col("nbrs").alias("nbrs_s"))
-    a_dst = adj.select(F.col("src").alias("e_dst"), F.col("nbrs").alias("nbrs_d"))
-    tri_nodes = (
-        oriented.join(a_src, oriented["src"] == a_src["e_src"])
-        .join(a_dst, oriented["dst"] == a_dst["e_dst"])
-        .select(
-            "src",
-            "dst",
-            F.explode(F.array_intersect("nbrs_s", "nbrs_d")).alias("third"),
-        )
+    tri_nodes = _with_adjacency(oriented).select(
+        "src", "dst",
+        F.explode(F.array_intersect("nbrs_s", "nbrs_d")).alias("third"),
     )
     corners = (
         tri_nodes.select(F.col("src").alias("id"))
@@ -171,31 +161,39 @@ def triangle_count_per_vertex(graph: LinkGraph, *, relabel: bool = False) -> Dat
     )
 
 
-def _per_edge_intersections(graph: LinkGraph, relabel: bool | str) -> DataFrame:
-    und = graph.symmetrize()
+def _per_edge_intersections(und: LinkGraph, relabel: bool | str) -> DataFrame:
     if relabel == "auto":
         relabel = worth_relabelling(und)
+    oriented, keep = und.edges, F.col("src") > F.col("dst")
     if relabel:
-        und = und.relabel_by_degree()
-    # Orient low-degree -> high-degree. After degree-desc relabel, larger
-    # new_id == smaller degree, so src > dst points each edge away from
-    # its lower-degree endpoint and forward-degree is O(sqrt(E))-bounded
-    # (arboricity argument) — the hub's huge neighbor list is never the
-    # src side of the intersection join.
-    oriented = und.edges.filter(F.col("src") > F.col("dst"))
+        # Orient low-degree -> high-degree, ties to the smaller id (the
+        # degree-desc relabel's order): each edge points away from its
+        # lower-degree endpoint and forward-degree is O(sqrt(E))-bounded
+        # (arboricity argument) — the hub's huge neighbor list is never
+        # the src side of the intersection join.
+        deg = und.out_degrees()
+        for end in ("src", "dst"):
+            oriented = oriented.join(deg.select(
+                F.col("id").alias(end), F.col("out_degree").alias(f"d_{end}")
+            ), end)
+        keep = (F.col("d_src") < F.col("d_dst")) | (
+            (F.col("d_src") == F.col("d_dst")) & keep
+        )
+    return _with_adjacency(oriented.filter(keep).select("src", "dst")).select(
+        "src", "dst", F.size(F.array_intersect("nbrs_s", "nbrs_d")).alias("tri")
+    )
+
+
+def _with_adjacency(oriented: DataFrame) -> DataFrame:
+    """Each oriented edge with both endpoints' sorted oriented
+    neighbour arrays (``nbrs_s``, ``nbrs_d``)."""
     adj = oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
     a_src = adj.select(F.col("src").alias("e_src"), F.col("nbrs").alias("nbrs_s"))
     a_dst = adj.select(F.col("src").alias("e_dst"), F.col("nbrs").alias("nbrs_d"))
-    return (
-        oriented.join(a_src, oriented["src"] == a_src["e_src"])
-        .join(a_dst, oriented["dst"] == a_dst["e_dst"])
-        .select(
-            "src",
-            "dst",
-            F.size(F.array_intersect("nbrs_s", "nbrs_d")).alias("tri"),
-        )
+    return oriented.join(a_src, oriented["src"] == a_src["e_src"]).join(
+        a_dst, oriented["dst"] == a_dst["e_dst"]
     )
 
 

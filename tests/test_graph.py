@@ -71,15 +71,51 @@ def test_transforms_preserve_vertex_universe(spark):
     assert h.symmetrize().vertices().count() == 6
 
 
+def _cached_ids(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_symmetrize_is_memoized_on_persisted_graph(spark):
+    """A persisted graph owns one persisted undirected view: every call
+    returns it, and the graph's unpersist() releases it with its degree
+    table."""
+    before = _cached_ids(spark)
+    g = LinkGraph.from_pairs(spark, [(0, 1), (1, 2), (5, 5)])
+    und = g.symmetrize()
+    assert g.symmetrize() is und
+    assert und.num_vertices == 6
+    assert und.num_edges == 4 and und.out_degrees().count() == 6
+    assert len(_cached_ids(spark) - before) == 3  # edges, view, degrees
+    g.unpersist()
+    assert _cached_ids(spark) <= before
+
+
+def test_symmetrize_is_fresh_on_unpersisted_graph(spark):
+    """An unpersisted graph returns a new, unpersisted view per call,
+    each forwarding the vertex universe."""
+    g = LinkGraph.from_pairs(
+        spark, [(0, 1), (1, 2)], persist=False, num_vertices=7
+    )
+    a, b = g.symmetrize(), g.symmetrize()
+    assert a is not b
+    assert not a._persisted and not b._persisted
+    assert a.num_vertices == b.num_vertices == 7
+
+
 def test_relabel_by_degree(spark):
     # vertex 2 has out-degree 3 -> new id 0; ties broken by old id asc
     g = LinkGraph.from_pairs(
         spark, [(2, 0), (2, 1), (2, 3), (0, 1), (1, 0)], persist=False
     )
+    before = _cached_ids(spark)
     rl = g.relabel_by_degree()
     # degrees: v2:3, v0:1, v1:1, v3:0 -> new ids: 2->0, 0->1, 1->2, 3->3
     got = sorted((r["src"], r["dst"]) for r in rl.edges.collect())
     assert got == sorted([(0, 1), (0, 2), (0, 3), (1, 2), (2, 1)])
+    # the range sort's persisted frame goes with the relabelled graph
+    rl.unpersist()
+    g.unpersist()
+    assert _cached_ids(spark) <= before
 
 
 def test_weighted_squish_min_weight(spark):

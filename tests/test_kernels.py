@@ -188,6 +188,23 @@ class TestConnectedComponents:
             assert warm[v] == c, f"vertex {v}"
 
 
+def test_undirected_kernels_twice_on_persisted_graph(spark):
+    """CC, LPA and TC on one persisted graph share its memoized
+    undirected view; called twice in a row they still match the
+    oracles."""
+    edges = _multi_component_graph()
+    g = LinkGraph.from_pairs(spark, edges)
+    for _ in range(2):
+        cc = {r["id"]: r["comp"] for r in connected_components(g).collect()}
+        assert [cc[v] for v in range(len(cc))] == list(cc_oracle(edges))
+        lpa = {r["id"]: r["label"] for r in label_propagation(g, rounds=3).collect()}
+        assert [lpa[v] for v in range(len(lpa))] == list(lpa_oracle(edges, rounds=3))
+        for relabel in (True, "auto", False):
+            got = triangle_count(g, relabel=relabel).first()["triangles"]
+            assert got == triangle_oracle(edges), relabel
+    g.unpersist()
+
+
 class TestLabelPropagation:
     @pytest.mark.parametrize("seed", [5])
     def test_fixed_rounds_match_oracle(self, spark, seed):

@@ -32,10 +32,11 @@ _ROUND_TRIP = re.compile(
 # shuffle partitions (most are the shuffle stages adaptive execution
 # submits as jobs of their own). Durable PageRank, 10 rounds on
 # _edges(): 5.0 (50 jobs); with a follow-up error collect and a manifest
-# count per round it was 11.0. CC on the chain graph below: 19.0 (57
-# jobs, 3 rounds); with frontier counts it was 23.3.
+# count per round it was 11.0. CC on the chain graph below: 12.3 (37
+# jobs, 3 rounds) with one gather and one jump materialization per
+# round; it was 19.0 with four, and 23.3 with frontier counts.
 PR_JOBS_PER_ROUND = 6.0
-CC_JOBS_PER_ROUND = 20.0
+CC_JOBS_PER_ROUND = 13.0
 # LPA, 5 rounds on _edges() and a collect of the labels: 8.0 (40 jobs)
 # before the superstep driver, measured the same way.
 LPA_JOBS_PER_ROUND = 8.0
@@ -116,6 +117,7 @@ def test_cc_has_no_round_trips(spark, named_counts):
         lambda: connected_components(g, metrics_out=m),
     )
     assert m["final_frontier"] == 0
+    assert m["iterations"] == 3
     assert not [n for n in names if _ROUND_TRIP.match(n)], names
     assert len(names) <= CC_JOBS_PER_ROUND * m["iterations"], (len(names), names)
 
@@ -350,6 +352,7 @@ _MIGRATED = {
     "ego_subgraph": lambda g, w: K.ego_subgraph(g, [0], hops=2),
     "set_cover": lambda g, w: K.set_cover(g),
     "influence_max": lambda g, w: K.influence_max(g, k=2),
+    "triangle_count": lambda g, w: K.triangle_count(g),
 }
 
 
@@ -407,3 +410,13 @@ def test_peel_and_bucket_kernels_have_no_round_trips(
         names = _job_names(spark, f"{name}-jobs", lambda: call().unpersist())
         trips[name] = sorted({n for n in names if _KERNEL_ROUND_TRIP.match(n)})
     assert not any(trips.values()), trips
+
+
+def test_triangle_count_has_no_ranking_collect(spark, leak_graphs):
+    """The degree orientation is two joins with the degree table: no
+    relabel, so no range sort and no collect of its bucket counts."""
+    g, _ = leak_graphs
+    names = _job_names(spark, "tc-jobs", lambda: K.triangle_count(g).collect())
+    assert not [
+        n for n in names if re.match(r"^collect at \S*ranking\.py:\d+$", n)
+    ], names
