@@ -120,6 +120,7 @@ class LinkGraph:
         # a derivation persisted for this graph (relabel's range frame):
         # both are released by unpersist()
         self._undirected: LinkGraph | None = None
+        self._symmetric = False  # built by symmetrize(): E = Eᵀ
         self._owned: list[DataFrame] = []
 
     # -- construction -----------------------------------------------------
@@ -290,7 +291,10 @@ class LinkGraph:
         already persisted and leave it (and its memoized degree table)
         cached, and ``unpersist()`` releases it with the graph. An
         unpersisted graph returns a fresh, unpersisted view per call,
-        owned by the caller (``ensure_persisted``/``unpersist``)."""
+        owned by the caller (``ensure_persisted``/``unpersist``). A view
+        is its own symmetrization: it returns itself."""
+        if self._symmetric:
+            return self
         view = self._undirected
         if view is not None and view._persisted:
             return view
@@ -305,6 +309,7 @@ class LinkGraph:
             both, squished=False, num_partitions=self.num_partitions,
             persist=self._persisted, num_vertices=self.num_vertices,
         )
+        view._symmetric = True
         if self._persisted:
             self._undirected = view
         return view

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import superstep
 
 K = 20
 STEP = 0.00000035
@@ -37,11 +37,7 @@ def collaborative_filtering(
     own_cache = graph.ensure_persisted()
     edges = graph.edges  # (src, dst, weight)
 
-    latent = graph.vertices().select(
-        "id", F.array(*[F.lit(0.5) for _ in range(k)]).alias("latent")
-    ).transform(fresh_checkpoint)
-
-    for _ in range(iters):
+    def gd_round(latent: DataFrame, rnd) -> DataFrame:
         src_l = latent.select(F.col("id").alias("src"), F.col("latent").alias("l_src"))
         dst_l = latent.select(F.col("id").alias("dst"), F.col("latent").alias("l_dst"))
         est = F.aggregate(
@@ -63,27 +59,30 @@ def collaborative_filtering(
                 *[F.sum(F.element_at("ev", i + 1)) for i in range(k)]
             ).alias("errv")
         )
-        latent = (
-            latent.join(errv, "id", "left")
-            .select(
-                "id",
-                F.when(
-                    F.col("errv").isNull(),
-                    F.transform(
-                        "latent", lambda x: x + F.lit(step) * (-F.lit(lam) * x)
-                    ),
-                )
-                .otherwise(
-                    F.zip_with(
-                        "latent",
-                        "errv",
-                        lambda x, e: x + F.lit(step) * (-F.lit(lam) * x + e),
-                    )
-                )
-                .alias("latent"),
+        return latent.join(errv, "id", "left").select(
+            "id",
+            F.when(
+                F.col("errv").isNull(),
+                F.transform(
+                    "latent", lambda x: x + F.lit(step) * (-F.lit(lam) * x)
+                ),
             )
-            .transform(fresh_checkpoint)
+            .otherwise(
+                F.zip_with(
+                    "latent",
+                    "errv",
+                    lambda x, e: x + F.lit(step) * (-F.lit(lam) * x + e),
+                )
+            )
+            .alias("latent"),
         )
+
+    latent = superstep(
+        graph.vertices().select(
+            "id", F.array(*[F.lit(0.5) for _ in range(k)]).alias("latent")
+        ),
+        gd_round, rounds=iters,
+    )
     if own_cache:
         graph.unpersist()
     return latent

@@ -44,9 +44,9 @@ way.
 Spark plan per round (the LPA shape, one extra V-sized join): one
 E-sized edge ⋈ community join feeding a map-side-combined
 groupBy(dst, c) count, one V-sized community-degree aggregate, V-sized
-candidate joins, and a max_by argmax — every aggregate partial, no
-driver action but the round counter, state localCheckpointed and the
-superseded checkpoint released.
+candidate joins, and a max_by argmax — every aggregate partial and
+no driver action: each round is a step on the superstep driver, which
+materializes the new state and releases the superseded one.
 """
 
 from __future__ import annotations
@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 
 
 def _move_rounds(
@@ -63,12 +63,13 @@ def _move_rounds(
     two_m: int,
     rounds: int,
 ) -> DataFrame:
-    """The move-phase loop over an explicit symmetric weighted edge
-    table (src, dst, w — self-loops excluded; self-loop weight belongs
-    in k, not in e_ic) and a community state (id, c, k). Returns the
-    final (id, c, k) state, localCheckpointed; the input `comm` must be
-    checkpointed by the caller and is released here when superseded."""
-    for r in range(1, rounds + 1):
+    """The move phase over an explicit symmetric weighted edge table
+    (src, dst, w — self-loops excluded; self-loop weight belongs in k,
+    not in e_ic) and a starting community state (id, c, k), lazy or
+    materialized. Returns the final (id, c, k) state, materialized; the
+    caller releases it."""
+
+    def step(comm: DataFrame, rnd) -> DataFrame:
         tot = comm.groupBy("c").agg(F.sum("k").alias("tot"))
         # e_ic: total edge weight from i into community c
         e_ic = (
@@ -103,23 +104,45 @@ def _move_rounds(
                 "c", F.struct(F.col("score"), (-F.col("c")).alias("neg"))
             ).alias("new_c")
         )
-        new_comm = (
-            comm.join(best, "id", "left")
-            .select(
-                "id",
-                F.when(
-                    F.col("id") % 2 == F.lit(r % 2),
-                    F.coalesce("new_c", F.col("c")),
-                )
-                .otherwise(F.col("c"))
-                .alias("c"),
-                "k",
+        # round r = rnd.index + 1 moves the vertices with id % 2 == r % 2
+        return comm.join(best, "id", "left").select(
+            "id",
+            F.when(
+                F.col("id") % 2 == F.lit((rnd.index + 1) % 2),
+                F.coalesce("new_c", F.col("c")),
             )
-            .transform(fresh_checkpoint)
+            .otherwise(F.col("c"))
+            .alias("c"),
+            "k",
         )
-        comm.unpersist()
-        comm = new_comm
-    return comm
+
+    return superstep(comm, step, rounds=rounds)
+
+
+def _level1(graph: LinkGraph, symmetrize: bool, rounds: int):
+    """(g, own_cache, two_m, lvl1): the symmetrized graph, whether this
+    call cached it, 2m, and the level-1 move phase's final (id, c, k)
+    state from singleton communities."""
+    g = graph.symmetrize() if symmetrize else graph
+    own_cache = g.ensure_persisted()
+    two_m = g.num_edges  # sym rows = 2m undirected edges
+    # vertex universe from the ORIGINAL graph — symmetrize() keeps
+    # num_vertices, but the degree join below must still cover every
+    # vertex (isolated ones get k = 0 and stay in their singleton)
+    comm0 = (
+        graph.vertices()
+        .select("id")
+        .join(g.out_degrees(), "id", "left")
+        .select(
+            "id",
+            F.col("id").alias("c"),
+            F.coalesce(F.col("out_degree"), F.lit(0))
+            .cast("long")
+            .alias("k"),
+        )
+    )
+    edges_w = g.edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
+    return g, own_cache, two_m, _move_rounds(edges_w, comm0, two_m, rounds)
 
 
 def louvain_move(
@@ -131,37 +154,10 @@ def louvain_move(
     """Returns (id, community) after `rounds` synchronous Louvain move
     rounds over the symmetrized simple graph; community ids are vertex
     ids (each vertex starts in its own singleton)."""
-    g = graph.symmetrize() if symmetrize else graph
-    own_cache = g.ensure_persisted()
-    two_m = g.num_edges  # sym rows = 2m undirected edges
-
-    # vertex universe from the ORIGINAL graph — symmetrize() keeps
-    # num_vertices, but the degree join below must still cover every
-    # vertex (isolated ones get k = 0 and stay in their singleton)
-    deg = (
-        graph.vertices()
-        .select("id")
-        .join(g.out_degrees(), "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("out_degree"), F.lit(0))
-            .cast("long")
-            .alias("k"),
-        )
-    )
-    deg = deg.transform(fresh_checkpoint)
-
-    comm = deg.select("id", F.col("id").alias("c"), "k")
-    comm = comm.transform(fresh_checkpoint)
-
-    edges_w = g.edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
-    comm = _move_rounds(edges_w, comm, two_m, rounds)
-
-    out = comm.select("id", F.col("c").alias("community"))
-    deg.unpersist()
+    g, own_cache, _, comm = _level1(graph, symmetrize, rounds)
     if own_cache:
         g.unpersist()
-    return out
+    return bind_release(comm.select("id", F.col("c").alias("community")), comm)
 
 
 def louvain_communities(
@@ -191,27 +187,7 @@ def louvain_communities(
     host_graph_rollup shape); level 2 runs on a |communities|-sized
     table. At crawl scale level 2 is orders of magnitude smaller than
     level 1 — the classic Louvain speedup."""
-    g = graph.symmetrize() if symmetrize else graph
-    own_cache = g.ensure_persisted()
-    two_m = g.num_edges
-
-    deg = (
-        graph.vertices()
-        .select("id")
-        .join(g.out_degrees(), "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("out_degree"), F.lit(0))
-            .cast("long")
-            .alias("k"),
-        )
-        .transform(fresh_checkpoint)
-    )
-    comm0 = deg.select("id", F.col("id").alias("c"), "k").localCheckpoint(
-        eager=True
-    )
-    edges_w = g.edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
-    lvl1 = _move_rounds(edges_w, comm0, two_m, rounds_per_level)
+    g, own_cache, two_m, lvl1 = _level1(graph, symmetrize, rounds_per_level)
 
     # coarsen: communities become vertices, parallel edges sum to
     # weights, intra-community rows dropped (their weight lives in tot)
@@ -222,20 +198,16 @@ def louvain_communities(
         .select("src", "dst", F.col("weight").cast("long").alias("w"))
         .transform(fresh_checkpoint)
     )
-    tot1 = lvl1.groupBy("c").agg(F.sum("k").alias("k"))
-    comm1 = tot1.select(
-        F.col("c").alias("id"), F.col("c").alias("c"), "k"
-    ).transform(fresh_checkpoint)
+    comm1 = lvl1.groupBy("c").agg(F.sum("k").alias("k")).select(
+        F.col("c").alias("id"), "c", "k"
+    )
     lvl2 = _move_rounds(coarse_edges, comm1, two_m, rounds_per_level)
-
+    coarse_edges.unpersist()
+    if own_cache:
+        g.unpersist()
     out = (
         lvl1.select("id", F.col("c").alias("c1"))
         .join(lvl2.select(F.col("id").alias("c1"), "c"), "c1")
         .select("id", F.col("c").alias("community"))
-        .transform(fresh_checkpoint)
     )
-    for df in (deg, lvl1, coarse_edges, lvl2):
-        df.unpersist()
-    if own_cache:
-        g.unpersist()
-    return out
+    return bind_release(out, lvl1, lvl2)

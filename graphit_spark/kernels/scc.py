@@ -35,19 +35,25 @@ V⋈V join. Each gather is the connected_components shape (direction
 switch at the Ligra 1/20 threshold — the frontier's degree sum is
 estimated as size x avg-degree here to avoid a per-round scalar
 action; shuffle-hash V-side build on big graphs; one E-scan per
-direction per round). Per outer round two semi-joins shrink the
-checkpointed edge table to the unassigned subgraph, so later rounds
-rescan only the residual graph (the FW-BW work bound), never the full
-crawl. A direction that converges early stops gathering while the
-other finishes.
+direction per round). Per outer round two joins of the edge table
+with the unassigned vertices' partition keys checkpoint the
+intra-class edges, so the fixpoint rounds rescan only the residual
+classes (the FW-BW work bound), never the full crawl; that
+checkpoint's job also observes their count, and the new state's job
+the number still unassigned. A direction that converges early stops
+gathering while the other finishes.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
+from graphit_spark.plans.state import (
+    bind_release, counted_checkpoint, fresh_checkpoint, superstep,
+)
 from graphit_spark.plans.traversal import choose_direction
 
 
@@ -233,109 +239,55 @@ def strongly_connected_components(
     # singleton classes after one refinement and finishes in 2-3. A
     # 64-bit hash collision merging two classes costs rounds, never
     # correctness (a merged class still contains only whole SCCs).
-    verts = (
-        graph.vertices()
-        .select("id", F.lit(0).cast("long").alias("pk"))
-        .transform(fresh_checkpoint)
-    )
-    edges = graph.edges.select("src", "dst").transform(fresh_checkpoint)
-    n_active = graph.num_vertices
-    assigned_parts: list[DataFrame] = []
-    outer = 0
-    first = True
-    while n_active > 0:
-        num_edges = edges.count()
-        if num_edges == 0:
-            # edgeless residue: every remaining vertex is a trivial SCC
-            assigned_parts.append(
-                verts.select("id", F.col("id").alias("scc"))
-                .transform(fresh_checkpoint)
-            )
-            verts.unpersist()
-            verts = None
-            n_active = 0
-            break
-        if max_outer is not None and outer >= max_outer:
-            raise RuntimeError(
-                f"SCC did not finish within max_outer={max_outer} rounds "
-                f"({n_active} vertices unassigned)"
-            )
-        big_v = n_active > 500_000
-        if first:
-            # single class — the unrestricted residual IS the class
-            cedges, num_cedges = edges, num_edges
-        else:
-            cedges = (
-                edges.join(
-                    verts.select(
-                        F.col("id").alias("src"), F.col("pk").alias("pks")
-                    ),
-                    "src",
-                )
-                .join(
-                    verts.select(
-                        F.col("id").alias("dst"), F.col("pk").alias("pkd")
-                    ),
-                    "dst",
-                )
-                .filter(F.col("pks") == F.col("pkd"))
-                .select("src", "dst")
-                .transform(fresh_checkpoint)
-            )
-            num_cedges = cedges.count()
-        if num_cedges == 0:
-            # no intra-class edges anywhere: every remaining vertex is
-            # a trivial SCC (an SCC never spans classes); the part is
-            # checkpointed because verts, which it reads, is released
-            assigned_parts.append(
-                verts.select("id", F.col("id").alias("scc"))
-                .transform(fresh_checkpoint)
-            )
-            if cedges is not edges:
-                cedges.unpersist()
-            verts.unpersist()
-            verts = None
-            n_active = 0
-            break
-        tedges = cedges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-        labs = _fw_bw_fixpoint(
-            cedges, tedges, verts.select("id"), num_cedges, n_active,
-            big_v, max_prop,
-        )
-        matched = (
-            labs.filter(F.col("flab") == F.col("blab"))
-            .select("id", F.col("flab").alias("scc"))
-            .transform(fresh_checkpoint)
-        )
-        assigned_parts.append(matched)
-        new_verts = (
-            verts.join(labs, "id")
-            .join(matched.select("id"), "id", "left_anti")
-            .select(
-                "id", F.xxhash64("pk", "flab", "blab").alias("pk")
-            )
-            .transform(fresh_checkpoint)
-        )
-        new_edges = (
+    # The state is the unassigned vertices (id, pk); the intra-class
+    # edges are derived from the base edges each round (an edge with
+    # an assigned endpoint joins no state row).
+    edges = graph.edges.select("src", "dst")
+    parts: list[DataFrame] = []
+    fixpoints: list[int] = []  # rounds that ran a fixpoint
+
+    def peel(verts: DataFrame, rnd) -> DataFrame:
+        n_active = graph.num_vertices if rnd.seen is None else rnd.seen["rows"]
+        cedges, counted = rnd.checkpoint(
             edges.join(
-                new_verts.select(F.col("id").alias("src")), "src", "left_semi"
+                verts.select(F.col("id").alias("src"), F.col("pk").alias("pks")),
+                "src",
             )
             .join(
-                new_verts.select(F.col("id").alias("dst")), "dst", "left_semi"
+                verts.select(F.col("id").alias("dst"), F.col("pk").alias("pkd")),
+                "dst",
             )
-            .select("src", "dst")
-            .transform(fresh_checkpoint)
+            .filter(F.col("pks") == F.col("pkd"))
+            .select("src", "dst"),
+            rows=F.count(F.lit(1)),
         )
-        if cedges is not edges:
-            cedges.unpersist()
-        for df in (verts, edges, labs):
-            df.unpersist()
-        verts, edges = new_verts, new_edges
-        prev_active = n_active
-        n_active = verts.count()
-        if n_active == prev_active:
+        num_cedges = counted["rows"]
+        if num_cedges == 0:
+            # no intra-class edges anywhere: every remaining vertex is
+            # a trivial SCC (an SCC never spans classes)
+            labs = verts.select(
+                "id", F.col("id").alias("flab"), F.col("id").alias("blab")
+            )
+        else:
+            if max_outer is not None and len(fixpoints) >= max_outer:
+                raise RuntimeError(
+                    f"SCC did not finish within max_outer={max_outer} "
+                    f"rounds ({n_active} vertices unassigned)"
+                )
+            fixpoints.append(rnd.index)
+            tedges = cedges.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
+            )
+            labs = rnd.own(_fw_bw_fixpoint(
+                cedges, tedges, verts.select("id"), num_cedges, n_active,
+                n_active > 500_000, max_prop,
+            ))
+        matched, got = counted_checkpoint(
+            labs.filter(F.col("flab") == F.col("blab"))
+            .select("id", F.col("flab").alias("scc"))
+        )
+        parts.append(matched)
+        if got["rows"] == 0 and n_active > 0:
             # every class's converged fixpoint matches at least the
             # class-minimum's SCC, so zero progress means a broken
             # fixpoint, never a deep graph — fail instead of spinning
@@ -343,20 +295,21 @@ def strongly_connected_components(
                 "SCC peel made no progress in a converged round "
                 f"({n_active} vertices unassigned)"
             )
-        outer += 1
-        first = False
-    if edges is not None:
-        edges.unpersist()
-    if verts is not None:
-        verts.unpersist()
+        return verts.join(labs.filter(F.col("flab") != F.col("blab")), "id").select(
+            "id", F.xxhash64("pk", "flab", "blab").alias("pk")
+        )
+
+    # every round assigns at least one vertex, so n + 1 rounds suffice
+    superstep(
+        graph.vertices().select("id", F.lit(0).cast("long").alias("pk")),
+        peel, max_rounds=graph.num_vertices + 1,
+        until=lambda seen: seen["rows"] == 0, rows=F.count(F.lit(1)),
+    ).unpersist()
     if own_cache:
         graph.unpersist()
     if metrics_out is not None:
-        metrics_out["outer_rounds"] = outer
-    out = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        out = out.unionByName(part)
-    return bind_release(out, *assigned_parts)
+        metrics_out["outer_rounds"] = len(fixpoints)
+    return bind_release(reduce(DataFrame.unionByName, parts), *parts)
 
 
 def condensation_layers(

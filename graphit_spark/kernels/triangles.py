@@ -288,7 +288,7 @@ def scan_statistics(graph: LinkGraph) -> DataFrame:
         3_000_000_000_000_000_000
     ).cast(dec)
     flag = F.when((dev > 0) & (dev * dev > var_term), 1).otherwise(0)
-    return per.crossJoin(F.broadcast(stats)).select(
+    out = per.crossJoin(F.broadcast(stats)).select(
         "id",
         "degree",
         "tri_count",
@@ -304,3 +304,7 @@ def scan_statistics(graph: LinkGraph) -> DataFrame:
         .cast("int")
         .alias("is_anomaly"),
     )
+    if not und._persisted:
+        # a fresh view (of an unpersisted graph) is this call's own
+        bind_release(out, und._out_degrees)
+    return out

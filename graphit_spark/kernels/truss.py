@@ -33,11 +33,13 @@ rounds' triangle work is proportional to the peel frontier's degree
 sum, not to the residual subgraph (the full-recount form pays ~6
 E-scans plus an E-sized collect_list + intersect EVERY round; at web
 scale, with hundreds of peel rounds, that recount is the whole cost).
-Two driver actions per round; each round's state is checkpointed and
-the superseded checkpoint released. The pure-decrement form without
-the dense branch was measured pathological on the sf0.1 power-law
-graph: the round-1 avalanche makes candidate generation quadratic in
-hub degree.
+The scoring pass and the peel rounds are the rounds of one fixpoint on
+the superstep driver: each round is one materializing job, which also
+observes the alive and peel counts the next round's dense/sparse
+choice reads, and the superseded state is released. The pure-decrement
+form without the dense branch was measured pathological on the sf0.1
+power-law graph: the round-1 avalanche makes candidate generation
+quadratic in hub degree.
 """
 
 from __future__ import annotations
@@ -45,28 +47,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint, observe
+from graphit_spark.plans.state import bind_release, superstep
 
 
-def _full_support(und: DataFrame, deg: DataFrame | None = None) -> DataFrame:
+def _degree_keys(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """``edges`` (u, v, ...) with each endpoint's degree as du, dv."""
+    return edges.join(
+        deg.select(F.col("id").alias("u"), F.col("out_degree").alias("du")),
+        "u",
+    ).join(
+        deg.select(F.col("id").alias("v"), F.col("out_degree").alias("dv")),
+        "v",
+    )
+
+
+def _full_support(und: DataFrame, deg: DataFrame) -> DataFrame:
     """(u, v, support) for every undirected edge (u < v) of ``und`` —
     one degree-oriented sorted-adjacency triangle enumeration, each
     triangle crediting its three edges (map-side combined count).
 
-    ``deg`` (a, d) is the orientation key table; when supplied it may be
+    ``deg`` (id, out_degree) is the orientation key table; it may be
     STALE (degrees of a supergraph): orientation only needs a fixed
     total order on vertices — (d, id) with any consistent d is acyclic,
     so every triangle is still enumerated exactly once. Passing the
     initial graph's cached degrees lets the peel loop skip an E-scan +
     groupBy per dense round."""
-    both = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    if deg is None:
-        deg = both.groupBy("a").agg(F.count("*").alias("d"))
-    du = deg.select(F.col("a").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("a").alias("v"), F.col("d").alias("dv"))
-    keyed = und.join(du, "u").join(dv, "v")
+    keyed = _degree_keys(und, deg)
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
@@ -131,14 +137,7 @@ def _decrement_round(
     ).unionAll(alive.select(F.col("v").alias("a"), F.col("u").alias("b")))
     # orient each peeled edge (p, q) so deg(p) <= deg(q): proposals walk
     # p's adjacency, membership of (q, w) is a hash-join lookup
-    keyed = (
-        peel.join(
-            deg.select(F.col("a").alias("u"), F.col("d").alias("du")), "u"
-        )
-        .join(
-            deg.select(F.col("a").alias("v"), F.col("d").alias("dv")), "v"
-        )
-    )
+    keyed = _degree_keys(peel, deg)
     low_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
@@ -188,109 +187,53 @@ def k_truss(
     *,
     max_rounds: int = 24,
     metrics_out: dict | None = None,
-    work_dir: str | None = None,
 ) -> DataFrame:
     """Returns (src, dst, support) for the edges of the k-truss of the
     symmetrized simple graph, src < dst, support = triangles per edge
-    within the truss (all >= k-2). Raises if the peel has not reached
-    its fixpoint within max_rounds.
-
-    Round state is spilled to parquet under ``work_dir`` (the engine's
-    SnapshotStore discipline) instead of localCheckpoint: an iterated
-    localCheckpoint chain in THIS loop shape was measured to degrade
-    superlinearly past ~10 rounds (execution time x4 per round with
-    flat plans, bounded storage, and constant job counts). Root cause
-    found later (see plans/state.py): localCheckpoint INHERITS the
-    plan's Statistics, and because each round joins the state against
-    a peel set derived FROM that state, the inherited sizeInBytes
-    product doubles its bit-length every round — stats computation
-    becomes BigInteger multiplication on geometrically-growing
-    integers. The parquet roundtrip stays flat because file-backed
-    reads reset sizeInBytes to the real file size. The spill is kept
-    here (it doubles as the resume surface); the rest of the engine
-    uses plans/state.py fresh_checkpoint, which strips the inherited
-    stats from the checkpointed frame directly. work_dir
-    defaults to the SparkContext checkpoint dir when set, else a
-    driver-local temp dir (fine on local[N]; pass a shared path on a
-    real cluster). A temp dir the kernel created itself is removed on
-    success; a caller-supplied or checkpoint-dir path is left as-is
-    (its two state files are the resume surface)."""
-    import shutil
-    import tempfile
-
-    spark = graph.spark
+    within the truss (all >= k-2). ``max_rounds`` counts the scoring
+    pass as round 1 (it always runs); raises if the peel has not reached
+    its fixpoint within it. ``metrics_out["rounds"]`` is the number of
+    rounds run, the scoring pass included."""
     own_cache = graph.ensure_persisted()
-    cleanup = False
-    if work_dir is None:
-        work_dir = spark.sparkContext.getCheckpointDir()
-        if work_dir is not None:
-            work_dir = work_dir + "/ktruss_spill"
-        else:
-            work_dir = tempfile.mkdtemp(prefix="ktruss_spill_")
-            cleanup = True
-
-    spill_seq = [0]  # alternate two slots; never write the slot in use
-
-    def spill(df: DataFrame) -> tuple[DataFrame, int, int]:
-        """Write the round's state and return (state, n_alive, n_peel).
-        The counts ride the write job as Observation metrics — one
-        driver action per round instead of a write plus a separate
-        count job (at hundreds of tail rounds, job-scheduling latency
-        is the dominant cost of the sparse phase)."""
-        path = f"{work_dir}/state_{spill_seq[0] % 2}"
-        spill_seq[0] += 1
-        df, seen = observe(
-            df,
-            alive=F.count(F.lit(1)),
-            peel=F.count(F.when(F.col("support") < k - 2, 1)),
-        )
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path), seen["alive"], seen["peel"]
-
     sym = graph.symmetrize()
     und = sym.edges.filter(F.col("src") < F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
-    # orientation key table, computed ONCE on the initial graph and
-    # reused every round (see _decrement_round/_full_support: any fixed
-    # total order is correct; currency only tunes constant factors)
-    both0 = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    deg0 = both0.groupBy("a").agg(F.count("*").alias("d")).persist()
-    scored, n_alive, n_peel = spill(_full_support(und, deg0))
-    rounds = 1  # the full scoring pass
-    while n_peel > 0:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"k_truss did not converge within max_rounds={max_rounds}"
-            )
-        # peel is a filter over the parquet-backed state — cheap to
-        # re-evaluate, no checkpoint needed
-        peel = scored.filter(F.col("support") < k - 2).select("u", "v")
-        if n_peel * DENSE_FRACTION >= n_alive:
+    # orientation key table: the initial graph's memoized degrees, reused
+    # every round (see _decrement_round/_full_support: any fixed total
+    # order is correct; currency only tunes constant factors)
+    deg0 = sym.out_degrees()
+
+    def step(scored: DataFrame, rnd) -> DataFrame:
+        if rnd.seen is None:
+            # round 1, the scoring pass: every edge's support
+            return _full_support(und, deg0)
+        if rnd.seen["peel"] * DENSE_FRACTION >= rnd.seen["alive"]:
             # dense round: recount on the survivor set (one full
             # enumeration of the residual graph — the avalanche regime)
             surv_edges = scored.filter(F.col("support") >= k - 2).select(
                 "u", "v"
             )
-            new_scored = _full_support(surv_edges, deg0)
-        else:
-            new_scored = _decrement_round(scored, peel, k, deg0)
-        scored, n_alive, n_peel = spill(new_scored)
-    deg0.unpersist()
+            return _full_support(surv_edges, deg0)
+        # peel is a filter over the materialized state — cheap to
+        # re-evaluate, no checkpoint needed
+        peel = scored.filter(F.col("support") < k - 2).select("u", "v")
+        return _decrement_round(scored, peel, k, deg0)
+
+    log: list = []
+    # the unscored edge table is only read by round 1: nothing to
+    # materialize before it
+    scored = superstep(
+        und, step, max_rounds=max(max_rounds, 1), checkpoint_start=False,
+        log=log, until=lambda seen: seen["peel"] == 0,
+        alive=F.count(F.lit(1)),
+        peel=F.count(F.when(F.col("support") < k - 2, 1)),
+    )
     if own_cache:
         graph.unpersist()
     if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-    out = scored.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), "support"
+        metrics_out["rounds"] = len(log)
+    return bind_release(
+        scored.select(F.col("u").alias("src"), F.col("v").alias("dst"), "support"),
+        scored,
     )
-    if cleanup:
-        # the result still reads from the spill dir — one final eager
-        # localCheckpoint detaches it (a single checkpoint is fine; it
-        # is the ITERATED chain that degrades), then drop the files
-        out = out.transform(fresh_checkpoint)
-        shutil.rmtree(work_dir, ignore_errors=True)
-    return out

@@ -20,10 +20,12 @@ vertices cost one wide array row rather than a degree-sized explosion.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.state import bind_release, fresh_checkpoint, superstep
 
 
 def _hash_mod(entity, step: int, seed: int, size) -> F.Column:
@@ -36,6 +38,91 @@ def _hash_mod(entity, step: int, seed: int, size) -> F.Column:
     )
     h = F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
     return F.pmod(h, size)
+
+
+def _starts(graph: LinkGraph, starts: DataFrame | None) -> DataFrame:
+    """(walk_id, v): one walk per vertex, or per row of ``starts``
+    (its first column), each starting at its own id."""
+    if starts is None:
+        return graph.vertices().select(
+            F.col("id").alias("walk_id"), F.col("id").alias("v")
+        )
+    first = F.col(starts.columns[0])
+    return starts.select(first.alias("walk_id"), first.alias("v"))
+
+
+def _walk(graph: LinkGraph, own_cache: bool, start: DataFrame,
+          walk_len: int, draw, scratch=()) -> DataFrame:
+    """The walk loop every sampler shares: (walk_id, step, vertex) rows
+    for steps 0..walk_len. ``start`` holds step 0's positions
+    (walk_id, v, ...); ``draw(positions, rnd)`` builds step
+    ``rnd.index``'s positions from the previous step's, lazily — it is
+    the sampler's superstep step. A walk ends early where its draw
+    yields no row.
+
+    Each step's positions are materialized once and kept for the
+    result; the driver holds a view of each that is bound to no owner,
+    so its release of the superseded step frees nothing. The result's
+    ``unpersist()`` releases every step. Once the walk has run, the
+    ``scratch`` frames its draws read are released, and the graph's
+    cache if ``own_cache``."""
+    steps = [fresh_checkpoint(start)]
+
+    def keep(df: DataFrame, rnd, seen) -> DataFrame:
+        steps.append(fresh_checkpoint(df))
+        return steps[-1].select("*")
+
+    superstep(
+        steps[0].select("*"), draw, start=1, rounds=walk_len + 1,
+        checkpoint_start=False, materialize=keep,
+    )
+    for df in scratch:
+        df.unpersist()
+    if own_cache:
+        graph.unpersist()
+    out = reduce(DataFrame.unionByName, [
+        df.select("walk_id", F.lit(t).alias("step"), F.col("v").alias("vertex"))
+        for t, df in enumerate(steps)
+    ])
+    return bind_release(out, *steps)
+
+
+def _uniform_hop(cur: DataFrame, adj: DataFrame, t: int, seed: int,
+                 *keep) -> DataFrame:
+    """(walk_id, *keep, v): each walk's step-t draw nbrs[H mod degree]
+    over its current vertex's sorted adjacency block."""
+    idx = _hash_mod(F.col("walk_id"), t, seed, F.size("nbrs"))
+    return cur.join(adj, cur["v"] == adj["src"]).select(
+        "walk_id", *keep,
+        F.element_at("nbrs", (idx + 1).cast("int")).alias("v"),
+    )
+
+
+#: the float precision of a uniform draw in [0, 1)
+_PREC = (1 << 31) - 1
+
+
+def _alias_pick(t: int, seed: int) -> F.Column:
+    """The step-t alias draw over a joined block (nbrs, prob, alias):
+    two INDEPENDENT hashes per (walk, step) — the entity is suffixed so
+    the slot and accept draws differ."""
+    slot = _hash_mod(
+        F.concat(F.col("walk_id").cast("string"), F.lit("i")), t, seed,
+        F.size("nbrs"),
+    )
+    u = _hash_mod(
+        F.concat(F.col("walk_id").cast("string"), F.lit("u")), t, seed,
+        F.lit(_PREC),
+    ) / F.lit(float(_PREC))
+    keep = u < F.element_at("prob", (slot + 1).cast("int"))
+    return F.when(
+        keep, F.element_at("nbrs", (slot + 1).cast("int"))
+    ).otherwise(
+        F.element_at(
+            "nbrs",
+            (F.element_at("alias", (slot + 1).cast("int")) + 1).cast("int"),
+        )
+    )
 
 
 def random_out_neighbor(
@@ -110,39 +197,19 @@ def weighted_random_walks(
         .withColumn("totw", F.sum("weight").over(Window.partitionBy("src")))
         .transform(fresh_checkpoint)
     )
-    if starts is None:
-        cur = graph.vertices().select(
-            F.col("id").alias("walk_id"), F.col("id").alias("v")
-        )
-    else:
-        cur = starts.select(
-            F.col(starts.columns[0]).alias("walk_id"),
-            F.col(starts.columns[0]).alias("v"),
-        )
-    cur = cur.transform(fresh_checkpoint)
-    parts = [cur.select("walk_id", F.lit(0).alias("step"),
-                        F.col("v").alias("vertex"))]
-    for t in range(1, walk_len + 1):
-        target = _hash_mod(F.col("walk_id"), t, seed, F.col("totw"))
-        nxt = (
+
+    def draw(cur: DataFrame, rnd) -> DataFrame:
+        target = _hash_mod(F.col("walk_id"), rnd.index, seed, F.col("totw"))
+        return (
             cur.join(cum_edges, cur["v"] == cum_edges["src"])
             .filter(F.col("cumw") > target)
             .groupBy("walk_id")
             .agg(F.min(F.struct("cumw", "dst")).alias("pick"))
             .select("walk_id", F.col("pick.dst").alias("v"))
-            .transform(fresh_checkpoint)
         )
-        cur = nxt
-        parts.append(
-            cur.select("walk_id", F.lit(t).alias("step"),
-                       F.col("v").alias("vertex"))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if own_cache:
-        graph.unpersist()
-    return out
+
+    return _walk(graph, own_cache, _starts(graph, starts), walk_len, draw,
+                 [cum_edges])
 
 
 def node2vec_walks(
@@ -179,44 +246,21 @@ def node2vec_walks(
     prev_edges = graph.edges.select(
         F.col("src").alias("prev"), F.col("dst"), F.lit(1).alias("conn")
     ).dropDuplicates(["prev", "dst"])
-    if starts is None:
-        cur = graph.vertices().select(
-            F.col("id").alias("walk_id"), F.col("id").alias("v")
-        )
-    else:
-        cur = starts.select(
-            F.col(starts.columns[0]).alias("walk_id"),
-            F.col(starts.columns[0]).alias("v"),
-        )
-    cur = cur.transform(fresh_checkpoint)
-    parts = [cur.select("walk_id", F.lit(0).alias("step"),
-                        F.col("v").alias("vertex"))]
-
-    # step 1: uniform draw (no previous vertex yet) — same as random_walks
-    idx = _hash_mod(F.col("walk_id"), 1, seed, F.size("nbrs"))
-    state = (
-        cur.join(adj, cur["v"] == adj["src"])
-        .select(
-            "walk_id",
-            F.col("v").alias("prev"),
-            F.element_at("nbrs", (idx + 1).cast("int")).alias("v"),
-        )
-        .transform(fresh_checkpoint)
-    )
-    parts.append(state.select("walk_id", F.lit(1).alias("step"),
-                              F.col("v").alias("vertex")))
-
-    prec = (1 << 31) - 1
     wtot = Window.partitionBy("walk_id")
     wcum = wtot.orderBy("dst").rowsBetween(Window.unboundedPreceding, 0)
-    for t in range(2, walk_len + 1):
-        frac = _hash_mod(F.col("walk_id"), t, seed, F.lit(prec)) / F.lit(
-            float(prec)
-        )
-        bias = (
-            F.when(F.col("dst") == F.col("prev"), F.lit(1.0 / p))
-            .when(F.col("conn").isNotNull(), F.lit(1.0))
-            .otherwise(F.lit(1.0 / q))
+    bias = (
+        F.when(F.col("dst") == F.col("prev"), F.lit(1.0 / p))
+        .when(F.col("conn").isNotNull(), F.lit(1.0))
+        .otherwise(F.lit(1.0 / q))
+    )
+
+    def draw(state: DataFrame, rnd) -> DataFrame:
+        t = rnd.index
+        if t == 1:
+            # uniform draw (no previous vertex yet) — same as random_walks
+            return _uniform_hop(state, adj, 1, seed, F.col("v").alias("prev"))
+        frac = _hash_mod(F.col("walk_id"), t, seed, F.lit(_PREC)) / F.lit(
+            float(_PREC)
         )
         cand = (
             state.join(graph.edges, state["v"] == graph.edges["src"])
@@ -224,7 +268,7 @@ def node2vec_walks(
             .select("walk_id", F.col("v").alias("newprev"), "dst",
                     bias.alias("bias"))
         )
-        nxt = (
+        return (
             cand.withColumn("cumw", F.sum("bias").over(wcum))
             .withColumn("target", frac * F.sum("bias").over(wtot))
             .filter(F.col("cumw") > F.col("target"))
@@ -235,17 +279,9 @@ def node2vec_walks(
                 F.col("pick.newprev").alias("prev"),
                 F.col("pick.dst").alias("v"),
             )
-            .transform(fresh_checkpoint)
         )
-        state = nxt
-        parts.append(state.select("walk_id", F.lit(t).alias("step"),
-                                  F.col("v").alias("vertex")))
-    out = parts[0]
-    for pt in parts[1:]:
-        out = out.unionByName(pt)
-    if own_cache:
-        graph.unpersist()
-    return out
+
+    return _walk(graph, own_cache, _starts(graph, starts), walk_len, draw)
 
 
 def random_walks(
@@ -266,41 +302,10 @@ def random_walks(
     walk-count-sized, never edge-sized."""
     own_cache = graph.ensure_persisted()
     adj = graph.adjacency()
-    if starts is None:
-        cur = graph.vertices().select(
-            F.col("id").alias("walk_id"), F.col("id").alias("v")
-        )
-    else:
-        cur = starts.select(
-            F.col(starts.columns[0]).alias("walk_id"),
-            F.col(starts.columns[0]).alias("v"),
-        )
-    cur = cur.transform(fresh_checkpoint)
-    parts = [cur.select("walk_id", F.lit(0).alias("step"),
-                        F.col("v").alias("vertex"))]
-    for t in range(1, walk_len + 1):
-        idx = _hash_mod(F.col("walk_id"), t, seed, F.size("nbrs"))
-        nxt = (
-            cur.join(adj, cur["v"] == adj["src"])
-            .select(
-                "walk_id",
-                F.element_at("nbrs", (idx + 1).cast("int")).alias("v"),
-            )
-            .transform(fresh_checkpoint)
-        )
-        # every step's checkpoint feeds the final union — none can be
-        # unpersisted here; ContextCleaner frees them with the result
-        cur = nxt
-        parts.append(
-            cur.select("walk_id", F.lit(t).alias("step"),
-                       F.col("v").alias("vertex"))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if own_cache:
-        graph.unpersist()
-    return out
+    return _walk(
+        graph, own_cache, _starts(graph, starts), walk_len,
+        lambda cur, rnd: _uniform_hop(cur, adj, rnd.index, seed),
+    )
 
 
 def _alias_build(dsts, weights):
@@ -480,88 +485,41 @@ def node2vec_walks_alias(
     sum exact), so the query gets a real DuckDB twin."""
     own_cache = graph.ensure_persisted()
     adj = graph.adjacency()
-    if starts is None:
-        cur = graph.vertices().select(
-            F.col("id").alias("walk_id"), F.col("id").alias("v")
-        )
-    else:
-        cur = starts.select(
-            F.col(starts.columns[0]).alias("walk_id"),
-            F.col(starts.columns[0]).alias("v"),
-        )
-    cur = cur.transform(fresh_checkpoint)
-    parts = [cur.select("walk_id", F.lit(0).alias("step"),
-                        F.col("v").alias("vertex"))]
+    memo: list[DataFrame] = []  # the blocks built so far, materialized
 
-    # step 1: uniform draw (no previous vertex yet) — same as node2vec_walks
-    idx = _hash_mod(F.col("walk_id"), 1, seed, F.size("nbrs"))
-    state = (
-        cur.join(adj, cur["v"] == adj["src"])
-        .select(
-            "walk_id",
-            F.col("v").alias("prev"),
-            F.element_at("nbrs", (idx + 1).cast("int")).alias("v"),
-        )
-        .transform(fresh_checkpoint)
-    )
-    parts.append(state.select("walk_id", F.lit(1).alias("step"),
-                              F.col("v").alias("vertex")))
-
-    prec = (1 << 31) - 1
-    cache = alias_tables
-    for t in range(2, walk_len + 1):
-        if alias_tables is None:
+    def draw(state: DataFrame, rnd) -> DataFrame:
+        t = rnd.index
+        if t == 1:
+            # uniform draw (no previous vertex yet) — same as node2vec_walks
+            return _uniform_hop(state, adj, 1, seed, F.col("v").alias("prev"))
+        at = alias_tables
+        if at is None:
             pairs = state.select(
                 "prev", F.col("v").alias("cur")
             ).dropDuplicates(["prev", "cur"])
-            if cache is None:
-                built = build_node2vec_alias_tables(graph, pairs, p=p, q=q)
-                cache = built.transform(fresh_checkpoint)
-            else:
-                missing = pairs.join(
-                    cache.select("prev", "cur"), ["prev", "cur"], "left_anti"
+            # the superseded memo is released with the round
+            old = rnd.own(memo.pop()) if memo else None
+            if old is not None:
+                pairs = pairs.join(
+                    old.select("prev", "cur"), ["prev", "cur"], "left_anti"
                 )
-                built = build_node2vec_alias_tables(graph, missing, p=p, q=q)
-                old = cache
-                cache = cache.unionByName(built).transform(fresh_checkpoint)
-                old.unpersist()  # superseded memo — new one is materialized
-        at = cache.select(
+            built = build_node2vec_alias_tables(graph, pairs, p=p, q=q)
+            memo.append(fresh_checkpoint(
+                built if old is None else old.unionByName(built)
+            ))
+            at = memo[0]
+        at = at.select(
             F.col("prev").alias("aprev"), F.col("cur").alias("acur"),
             "nbrs", "prob", "alias",
         )
-        slot = _hash_mod(
-            F.concat(F.col("walk_id").cast("string"), F.lit("i")), t, seed,
-            F.size("nbrs"),
+        return state.join(
+            at, (state["prev"] == at["aprev"]) & (state["v"] == at["acur"]),
+        ).select(
+            "walk_id", F.col("v").alias("prev"), _alias_pick(t, seed).alias("v")
         )
-        u = _hash_mod(
-            F.concat(F.col("walk_id").cast("string"), F.lit("u")), t, seed,
-            F.lit(prec),
-        ) / F.lit(float(prec))
-        keep = u < F.element_at("prob", (slot + 1).cast("int"))
-        picked = F.when(
-            keep, F.element_at("nbrs", (slot + 1).cast("int"))
-        ).otherwise(
-            F.element_at(
-                "nbrs",
-                (F.element_at("alias", (slot + 1).cast("int")) + 1).cast("int"),
-            )
-        )
-        state = (
-            state.join(
-                at,
-                (state["prev"] == at["aprev"]) & (state["v"] == at["acur"]),
-            )
-            .select("walk_id", F.col("v").alias("prev"), picked.alias("v"))
-            .transform(fresh_checkpoint)
-        )
-        parts.append(state.select("walk_id", F.lit(t).alias("step"),
-                                  F.col("v").alias("vertex")))
-    out = parts[0]
-    for pt in parts[1:]:
-        out = out.unionByName(pt)
-    if own_cache:
-        graph.unpersist()
-    return out
+
+    return _walk(graph, own_cache, _starts(graph, starts), walk_len, draw,
+                 memo)
 
 
 def random_walks_alias(
@@ -585,53 +543,13 @@ def random_walks_alias(
         if alias_tables is not None
         else build_alias_tables(graph).transform(fresh_checkpoint)
     )
-    prec = (1 << 31) - 1
-    if starts is None:
-        cur = graph.vertices().select(
-            F.col("id").alias("walk_id"), F.col("id").alias("v")
-        )
-    else:
-        cur = starts.select(
-            F.col(starts.columns[0]).alias("walk_id"),
-            F.col(starts.columns[0]).alias("v"),
-        )
-    cur = cur.transform(fresh_checkpoint)
-    parts = [cur.select("walk_id", F.lit(0).alias("step"),
-                        F.col("v").alias("vertex"))]
-    for t in range(1, walk_len + 1):
-        # two INDEPENDENT draws per (walk, step): suffix the entity so
-        # the slot and accept hashes differ
-        slot = _hash_mod(
-            F.concat(F.col("walk_id").cast("string"), F.lit("i")), t, seed,
-            F.size("nbrs"),
-        )
-        u = _hash_mod(
-            F.concat(F.col("walk_id").cast("string"), F.lit("u")), t, seed,
-            F.lit(prec),
-        ) / F.lit(float(prec))
-        keep = u < F.element_at("prob", (slot + 1).cast("int"))
-        picked = F.when(
-            keep, F.element_at("nbrs", (slot + 1).cast("int"))
-        ).otherwise(
-            F.element_at(
-                "nbrs",
-                (F.element_at("alias", (slot + 1).cast("int")) + 1).cast("int"),
-            )
-        )
-        nxt = (
-            cur.join(at, cur["v"] == at["src"])
-            .select("walk_id", picked.alias("v"))
-            .transform(fresh_checkpoint)
-        )
-        cur = nxt
-        parts.append(cur.select("walk_id", F.lit(t).alias("step"),
-                                F.col("v").alias("vertex")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if own_cache:
-        graph.unpersist()
-    return out
+    return _walk(
+        graph, own_cache, _starts(graph, starts), walk_len,
+        lambda cur, rnd: cur.join(at, cur["v"] == at["src"]).select(
+            "walk_id", _alias_pick(rnd.index, seed).alias("v")
+        ),
+        [] if alias_tables is not None else [at],
+    )
 
 
 def walk_cooccurrence(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -695,62 +613,30 @@ def montecarlo_pagerank(
     100 TB plan: step t materializes only the walks still alive —
     expected (17/20)^t * V * R rows, geometrically shrinking; each step
     is one frontier ⋈ adjacency equi-join (the same shape as every
-    other kernel's superstep, hub rows stay one wide array row). The
-    final visit count is a map-side-combined groupBy on vertex. Total
-    cost ~ V*R/(1-alpha) walk-rows — independent of iteration-to-
-    convergence, which is the point of the MC path at crawl scale."""
+    other kernel's superstep, hub rows stay one wide array row), on the
+    walk loop the other samplers share. The final visit count is a
+    map-side-combined groupBy on vertex over every step's positions
+    (~V*R/(1-alpha) rows in all), which the result reads and its
+    ``unpersist()`` releases. Total cost ~ V*R/(1-alpha) walk-rows —
+    independent of iteration-to-convergence, which is the point of the
+    MC path at crawl scale."""
     R = walks_per_vertex
     own_cache = graph.ensure_persisted()
     adj = graph.adjacency()
     n = graph.num_vertices
-    cur = (
-        graph.vertices()
-        .select(
-            F.explode(F.sequence(F.lit(0), F.lit(R - 1))).alias("r"),
-            F.col("id").alias("v"),
-        )
-        .select(
-            (F.col("v") * R + F.col("r")).alias("walk_id"), "v"
-        )
-        .transform(fresh_checkpoint)
-    )
-    # per-step VISIT COUNTS (V-bounded), not per-step positions: the
-    # frontier checkpoint is released as soon as its successor
-    # materializes, so only one walk-count-sized table is ever pinned —
-    # at V·R walks the retained-positions alternative holds
-    # walk_len+1 frontiers in the block manager simultaneously
-    parts = [
-        cur.groupBy(F.col("v").alias("vertex"))
-        .agg(F.count("*").alias("c"))
-        .transform(fresh_checkpoint)
-    ]
-    for t in range(1, walk_len + 1):
+    start = graph.vertices().select(
+        F.explode(F.sequence(F.lit(0), F.lit(R - 1))).alias("r"),
+        F.col("id").alias("v"),
+    ).select((F.col("v") * R + F.col("r")).alias("walk_id"), "v")
+
+    def draw(cur: DataFrame, rnd) -> DataFrame:
         alive = cur.filter(
-            _hash_mod(F.col("walk_id"), t, seed + 101, F.lit(20)) < 17
+            _hash_mod(F.col("walk_id"), rnd.index, seed + 101, F.lit(20)) < 17
         )
-        idx = _hash_mod(F.col("walk_id"), t, seed, F.size("nbrs"))
-        nxt = (
-            alive.join(adj, alive["v"] == adj["src"])
-            .select(
-                "walk_id",
-                F.element_at("nbrs", (idx + 1).cast("int")).alias("v"),
-            )
-            .transform(fresh_checkpoint)
-        )
-        cur.unpersist()
-        cur = nxt
-        parts.append(
-            cur.groupBy(F.col("v").alias("vertex"))
-            .agg(F.count("*").alias("c"))
-            .transform(fresh_checkpoint)
-        )
-    cur.unpersist()
-    visits = parts[0]
-    for p in parts[1:]:
-        visits = visits.unionByName(p)
-    counts = visits.groupBy("vertex").agg(
-        F.sum("c").cast("long").alias("visits")
-    )
+        return _uniform_hop(alive, adj, rnd.index, seed)
+
+    walks = _walk(graph, own_cache, start, walk_len, draw)
+    counts = walks.groupBy("vertex").agg(F.count("*").cast("long").alias("visits"))
     out = (
         graph.vertices()
         .join(counts, F.col("id") == F.col("vertex"), "left")
@@ -764,6 +650,4 @@ def montecarlo_pagerank(
             ).alias("rank_est"),
         )
     )
-    if own_cache:
-        graph.unpersist()
-    return out
+    return bind_release(out, walks)

@@ -102,6 +102,26 @@ def test_symmetrize_is_fresh_on_unpersisted_graph(spark):
     assert a.num_vertices == b.num_vertices == 7
 
 
+def test_view_is_its_own_symmetrization(spark):
+    """E ∪ Eᵀ is symmetric, so a view's symmetrize() returns the view,
+    persisted or not; label propagation on a persisted view (which
+    symmetrizes its input) caches no second undirected copy."""
+    g = LinkGraph.from_pairs(spark, [(0, 1), (1, 2), (2, 0), (2, 3)])
+    v = g.symmetrize()
+    assert v.symmetrize() is v
+    free = LinkGraph.from_pairs(spark, [(0, 1)], persist=False).symmetrize()
+    assert free.symmetrize() is free
+    from graphit_spark.kernels import label_propagation
+
+    assert v.num_edges == 8  # the view's edge cache is materialized
+    before = _cached_ids(spark)
+    labels = label_propagation(v, rounds=2)
+    assert labels.count() == 4
+    labels.unpersist()
+    assert _cached_ids(spark) <= before
+    g.unpersist()
+
+
 def test_relabel_by_degree(spark):
     # vertex 2 has out-degree 3 -> new id 0; ties broken by old id asc
     g = LinkGraph.from_pairs(

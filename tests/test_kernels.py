@@ -1111,6 +1111,27 @@ class TestKTruss:
         assert got == truss_oracle(edges, k)
         assert m["rounds"] >= 1
 
+    def test_budget_short_of_peel_depth_raises(self, spark):
+        """Two 4-cliques joined by a bridge, with a pendant edge, at
+        k = 4: the scoring pass (round 1) finds the bridge and the
+        pendant without support, and one peel round (round 2) removes
+        them and observes nothing left to peel. The budget counts the
+        scoring pass, so 1 round raises and 2 rounds return the
+        cliques."""
+        from graphit_spark.kernels import k_truss
+
+        k4a = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+        k4b = [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
+        g = LinkGraph.from_pairs(
+            spark, k4a + k4b + [(3, 10), (13, 20)], persist=False
+        )
+        with pytest.raises(RuntimeError, match="did not converge"):
+            k_truss(g, k=4, max_rounds=1)
+        m = {}
+        got = k_truss(g, k=4, max_rounds=2, metrics_out=m).collect()
+        assert m["rounds"] == 2
+        assert {(r["src"], r["dst"]) for r in got} == set(k4a) | set(k4b)
+
     def test_triangle_free_truss_is_empty(self, spark):
         from graphit_spark.kernels import k_truss
 

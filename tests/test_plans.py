@@ -786,10 +786,10 @@ def test_source_mirror_plan_shape(spark):
 
 
 def test_montecarlo_pagerank_plan_shape(spark):
-    """Every MC step is a frontier ⋈ adjacency equi-join reduced to a
-    V-bounded per-step count (checkpoint-truncated so the superseded
-    frontier can be released); the visible tail re-aggregates those
-    counts with a map-side-combined sum. No nested loop, no cartesian."""
+    """Every MC step is a frontier ⋈ adjacency equi-join whose
+    positions are checkpointed once; the visible tail counts visits over
+    those steps with a map-side-combined aggregate. No nested loop, no
+    cartesian."""
     from graphit_spark.benchqueries import q_pagerank_montecarlo
 
     plan = _plan(q_pagerank_montecarlo(spark, SF_DIR))

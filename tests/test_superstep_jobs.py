@@ -353,6 +353,22 @@ _MIGRATED = {
     "set_cover": lambda g, w: K.set_cover(g),
     "influence_max": lambda g, w: K.influence_max(g, k=2),
     "triangle_count": lambda g, w: K.triangle_count(g),
+    "scan_statistics": lambda g, w: K.scan_statistics(g),
+    "random_walks": lambda g, w: K.random_walks(g, 2),
+    "weighted_random_walks": lambda g, w: K.weighted_random_walks(w, 2),
+    "node2vec_walks": lambda g, w: K.node2vec_walks(g, 2),
+    "node2vec_walks_alias": lambda g, w: K.node2vec_walks_alias(g, 2),
+    "random_walks_alias": lambda g, w: K.random_walks_alias(w, 2),
+    "montecarlo_pagerank":
+        lambda g, w: K.montecarlo_pagerank(g, walk_len=2),
+    "louvain_move": lambda g, w: K.louvain_move(g, rounds=2),
+    "louvain_communities":
+        lambda g, w: K.louvain_communities(g, rounds_per_level=2),
+    "collaborative_filtering":
+        lambda g, w: K.collaborative_filtering(w, iters=2),
+    "k_truss": lambda g, w: K.k_truss(g, 3),
+    "strongly_connected_components":
+        lambda g, w: K.strongly_connected_components(g),
 }
 
 
@@ -360,8 +376,8 @@ _MIGRATED = {
 def test_kernel_leaves_no_cached_blocks(spark, leak_graphs, name):
     """After the call and the release of its result, block-manager
     storage holds the RDDs it held before: superseded states, round
-    intermediates and the final state are all really released. (SCC's
-    result is released inside condensation_layers and bowtie_classes.)"""
+    intermediates, per-round outputs and the final state are all really
+    released."""
     g, w = leak_graphs
     before = _cached_ids(spark)
     out = _MIGRATED[name](g, w)
@@ -375,7 +391,7 @@ def test_kernel_leaves_no_cached_blocks(spark, leak_graphs, name):
 _KERNEL_ROUND_TRIP = re.compile(
     r"^(collect|count|first|take|head) at "
     r"\S*(kcore|landmarks|astar|delta_stepping|bridges|redirects|densest"
-    r"|ego|setcover|influence)\.py:\d+$"
+    r"|ego|setcover|influence|scc|truss)\.py:\d+$"
 )
 
 
@@ -386,9 +402,11 @@ def test_peel_and_bucket_kernels_have_no_round_trips(
     decomposition's next bucket, the landmark frontier size, A*'s
     target distance, both bucket cursors, the bridges BFS's unreached
     count and depth, the unresolved redirects, densest's n and m, the
-    ego frontier, set cover's top bucket and admitted count, and the
-    influence argmax — are observed on each round's materialization:
-    no kernel call runs an action of its own."""
+    ego frontier, set cover's top bucket and admitted count, the
+    influence argmax, k-truss's alive and peel counts, and the SCC
+    peel's intra-class edge, matched and unassigned counts — are
+    observed on each round's materialization: no kernel call runs an
+    action of its own."""
     g, w = leak_graphs
     calls = {
         "k_core": lambda: K.k_core(g, 2),
@@ -404,6 +422,9 @@ def test_peel_and_bucket_kernels_have_no_round_trips(
         "ego_subgraph": lambda: K.ego_subgraph(g, [0], hops=2),
         "set_cover": lambda: K.set_cover(g),
         "influence_max": lambda: K.influence_max(g, k=2),
+        "k_truss": lambda: K.k_truss(g, 3),
+        "strongly_connected_components":
+            lambda: K.strongly_connected_components(g),
     }
     trips = {}
     for name, call in calls.items():
@@ -420,3 +441,29 @@ def test_triangle_count_has_no_ranking_collect(spark, leak_graphs):
     assert not [
         n for n in names if re.match(r"^collect at \S*ranking\.py:\d+$", n)
     ], names
+
+
+_CHECKPOINTS = {"fresh_checkpoint", "counted_checkpoint", "localCheckpoint"}
+
+
+def test_no_kernel_checkpoints_inside_a_loop():
+    """Round loops belong to the superstep driver: no module under
+    ``graphit_spark/kernels/`` names a checkpoint function inside a
+    ``for``/``while`` body (a call or a ``.transform(fresh_checkpoint)``
+    argument alike)."""
+    import ast
+    import pathlib
+
+    import graphit_spark.kernels as kernels_pkg
+
+    found = []
+    for path in sorted(pathlib.Path(kernels_pkg.__file__).parent.glob("*.py")):
+        for loop in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+                continue
+            for stmt in loop.body + loop.orelse:
+                for node in ast.walk(stmt):
+                    name = getattr(node, "id", None) or getattr(node, "attr", None)
+                    if name in _CHECKPOINTS:
+                        found.append(f"{path.name}:{node.lineno}")
+    assert not found, found
