@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphit_spark.graph import LinkGraph
+from graphit_spark.plans.state import counted_checkpoint, superstep
 
 PR_ITERS = 10
 CC_ROUNDS = 8
@@ -2710,9 +2711,9 @@ def q_crawl_budget(spark, sf_dir):
     and a real scheduler carries it to the next cycle).
 
     Scale shape: host ranks from the audited weighted rollup
-    recurrence; each waterfill round is two scalar aggregates (spent,
-    uncapped weight) + one per-host projection — the same
-    driver-scalar loop discipline as delta-stepping's buckets. Never a
+    recurrence; each waterfill round is one per-host superstep, its two
+    scalars (spent, uncapped weight) observed on the round's own job —
+    the same driver-scalar discipline as delta-stepping's buckets. Never a
     pages-sized shuffle: allocation state is one row per host."""
     from graphit_spark.kernels import weighted_pagerank
 
@@ -2721,9 +2722,7 @@ def q_crawl_budget(spark, sf_dir):
     runits = F.floor(
         F.round(F.col("rank"), ROUND_RANK) * F.lit(1000000.0) + F.lit(0.5)
     ).cast("long")
-    ranks = weighted_pagerank(hg, max_iters=PR_ITERS).select(
-        "id", runits.alias("rank_units")
-    )
+    ranks = weighted_pagerank(hg, max_iters=PR_ITERS)
     caps = (
         load(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").cast("long").alias("id"))
@@ -2732,41 +2731,43 @@ def q_crawl_budget(spark, sf_dir):
     total_pages = load(spark, sf_dir, "customer").count()
     budget = int(total_pages) // CRAWL_BUDGET_DEN
 
-    state = (
-        ranks.join(caps, "id", "left")
-        .select(
-            "id", "rank_units",
+    # a round's two scalars, observed on the job that materializes it
+    spent = F.sum("alloc")
+    uw = F.sum(
+        F.when(F.col("alloc") < F.col("cap"), F.col("rank_units"))
+        .otherwise(F.lit(0))
+    )
+    state, seen0 = counted_checkpoint(
+        ranks.join(caps, "id", "left").select(
+            "id", runits.alias("rank_units"),
             F.coalesce("cap", F.lit(0)).cast("long").alias("cap"),
             F.lit(0).cast("long").alias("alloc"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        spent=spent, uw=uw,
     )
-    for _ in range(CRAWL_FILL_ROUNDS):
-        row = state.agg(
-            F.sum("alloc").alias("spent"),
-            F.sum(
-                F.when(F.col("alloc") < F.col("cap"), F.col("rank_units"))
-                .otherwise(F.lit(0))
-            ).alias("uw"),
-        ).first()
-        remaining = budget - int(row["spent"] or 0)
-        uw = int(row["uw"] or 0)
-        if remaining <= 0 or uw == 0:
-            break
+    ranks.unpersist()
+    filled = lambda seen: budget <= seen["spent"] or seen["uw"] == 0  # noqa: E731
+
+    def step(state: DataFrame, rnd) -> DataFrame:
+        seen = rnd.seen or seen0
         give = F.when(
             F.col("alloc") < F.col("cap"),
             F.least(
                 F.col("cap") - F.col("alloc"),
-                F.expr(f"({remaining} * rank_units) div {uw}"),
+                F.expr(
+                    f"({budget - seen['spent']} * rank_units) div {seen['uw']}"
+                ),
             ),
         ).otherwise(F.lit(0))
-        nxt = state.select(
+        return state.select(
             "id", "rank_units", "cap",
             (F.col("alloc") + give).cast("long").alias("alloc"),
-        ).localCheckpoint(eager=True)
-        state.unpersist()
-        state = nxt
-    return state.select("id", "rank_units", "cap", "alloc")
+        )
+
+    return superstep(
+        state, step, rounds=0 if filled(seen0) else CRAWL_FILL_ROUNDS,
+        checkpoint_start=False, until=filled, spent=spent, uw=uw,
+    )
 
 
 def crawl_budget_sql(rounds: int = CRAWL_FILL_ROUNDS) -> str:

@@ -30,6 +30,8 @@ import time
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+
 MERSENNE31 = (1 << 31) - 1
 # deterministic permutation constants (t-th minhash): odd multipliers
 MINHASH_A = [1299721, 15485863, 32452843, 49979687, 67867967, 86028121]
@@ -210,6 +212,9 @@ def lsh_band_stats(
 #: action before giving up (a composed-but-never-executed plan runs no
 #: data, so there is no drop to report — the watcher just expires)
 _WATCH_DEADLINE_SEC = 3600.0
+# duplicate_spans broadcasts its duplicated-key set up to this many gram
+# rows (the set is at most that many 8-byte keys)
+_SPAN_BROADCAST_GRAMS = 1_000_000
 
 
 def _watch_dropped_mass(obs: "Observation", max_bucket: int) -> None:
@@ -293,8 +298,9 @@ def lsh_candidate_pairs(
     # one scan of the signatures: every band key comes out of a single
     # explode, and the materialized band table feeds both join sides —
     # the shingle explosion + minhash aggregation run exactly once, not
-    # once per band per side. localCheckpoint (not persist): blocks are
-    # GC-freed with the result, so one-shot calls don't leak cache.
+    # once per band per side. localCheckpoint (not persist): the
+    # lazy result reads it, so nothing releases it; its blocks go when
+    # the JVM garbage-collects the RDD.
     allb = band_table(df, text_col, k, rows_per_band).localCheckpoint(
         eager=True
     )
@@ -341,7 +347,8 @@ def ngram_jaccard_pairs(
     d = df if max_doc_id is None else df.filter(F.col("doc_id") < max_doc_id)
     # materialized: consumed three times (sizes + both sides of the
     # intersection self-join) — the explosion must run once.
-    # localCheckpoint (not persist): freed with the result, no cache leak.
+    # localCheckpoint (not persist): the lazy result reads it, so nothing
+    # releases it; its blocks go when the JVM garbage-collects the RDD.
     sh = _shingles(d, text_col).localCheckpoint(eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -519,7 +526,7 @@ def duplicate_spans(
     Scale shape: posexplode of n-gram starts → the hot shuffle carries
     (60-bit md5 gram key, doc_id, pos) narrow rows, never gram text →
     map-side-combined count per key → semi-join positions against the
-    duplicated-key set (same key partitioning, AQE coalesces) → per-doc
+    duplicated-key set (broadcast up to a million gram rows) → per-doc
     lag/cumsum island merge in a Window PARTITION BY doc_id (bounded by
     one document's tokens, never corpus-sized). The gram-key space is
     corpus tokens, same cardinality as the minhash shingle path.
@@ -546,13 +553,17 @@ def duplicate_spans(
                    16, 10).cast("long").alias("gkey"),
         )
     )
-    grams = grams.localCheckpoint(eager=True)
+    grams, seen = counted_checkpoint(grams)
     dup_keys = (
         grams.groupBy("gkey")
         .agg(F.count("*").alias("__cnt"))
         .filter(F.col("__cnt") >= int(min_count))
         .select("gkey")
     )
+    if seen["rows"] <= _SPAN_BROADCAST_GRAMS:
+        # a fresh checkpoint carries no size estimate: the planner
+        # would shuffle the small side instead of broadcasting it
+        dup_keys = F.broadcast(dup_keys)
     hits = grams.join(dup_keys, "gkey", "left_semi")
     w = Window.partitionBy("doc_id").orderBy("pos")
     brk = (
@@ -581,7 +592,7 @@ def duplicate_spans(
             ),
         )
     )
-    out = spans.localCheckpoint(eager=True)
+    out = fresh_checkpoint(spans)
     grams.unpersist()
     return out
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graphit_spark.plans.ranking import dense_rank_ids, ordered_prefix_sum
+from graphit_spark.plans.state import fresh_checkpoint
 
 
 def sample_key(col: Column) -> Column:
@@ -48,30 +49,24 @@ def token_budget_sample(
     (id, tokens, <token_col>_cum) with the inclusive running total, so
     callers can audit exactly where the budget landed.
 
-    The result is localCheckpointed: it is a terminal sample (consumed
-    by training-data writers, typically more than once) and truncating
-    lineage lets the internal range-shuffled table be released here.
+    The result is a fresh checkpoint (a terminal sample, typically read
+    more than once): the range-shuffled table is released here, and
+    the result's unpersist() frees it.
     """
     keyed = df.select(
         F.col(id_col),
         F.col(token_col),
         sample_key(F.col(id_col)).alias("skey"),
     )
-    release: list = []
     cum = ordered_prefix_sum(
-        keyed,
-        [F.asc("skey"), F.asc(id_col)],
-        [token_col],
-        release=release,
+        keyed, [F.asc("skey"), F.asc(id_col)], [token_col]
     )
     cum_col = f"{token_col}_cum"
-    out = (
+    out = fresh_checkpoint(
         cum.filter(F.col(cum_col) - F.col(token_col) < F.lit(int(budget)))
         .select(id_col, token_col, cum_col)
-        .localCheckpoint(eager=True)
     )
-    for cached in release:
-        cached.unpersist()
+    cum.unpersist()
     return out
 
 
@@ -177,12 +172,8 @@ def pack_sequences(
         F.col(token_col),
         sample_key(F.col(id_col)).alias("skey"),
     )
-    release: list = []
     cum = ordered_prefix_sum(
-        keyed,
-        [F.asc("skey"), F.asc(id_col)],
-        [token_col],
-        release=release,
+        keyed, [F.asc("skey"), F.asc(id_col)], [token_col]
     )
     L = int(seq_len)
     start = f"({token_col}_cum - {token_col})"
@@ -199,8 +190,7 @@ def pack_sequences(
         )
         .localCheckpoint(eager=True)
     )
-    for cached in release:
-        cached.unpersist()
+    cum.unpersist()
     return out
 
 

@@ -17,6 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from graphit_spark.plans.state import (
+    bind_release, counted_checkpoint, fresh_checkpoint, superstep,
+)
+
 ROUND_SCORE = 4
 
 
@@ -643,6 +647,11 @@ def ivfpq_topk(
     )
 
 
+# mmr_topk broadcasts its selection (a subset of the candidates) up to
+# this many candidate rows
+_MMR_BROADCAST_ROWS = 1_000_000
+
+
 def mmr_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -670,13 +679,15 @@ def mmr_topk(
     candidate pair table is ≤ k² rows per query built by equi-joins on
     query_id, and each of the m greedy rounds is one grouped max +
     one per-query Window over ≤ k rows. No corpus-sized work after
-    retrieval; the driver loop is m scalar-free DataFrame unions.
+    retrieval; rounds 2..m are superstep rounds over the selection, and
+    the result's unpersist() releases all that the call materialized.
     """
     if m < 1 or k < 1:
         raise ValueError("k and m must be >= 1")
-    cands = brute_force_topk(
-        embeddings, queries, k=k, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    cands, seen = counted_checkpoint(
+        brute_force_topk(embeddings, queries, k=k, id_col=id_col,
+                         vec_col=vec_col)
+    )
 
     vecs = embeddings.select(F.col(id_col), F.col(vec_col).alias("__v"))
     ca = cands.select("query_id", F.col(id_col).alias("a")).join(
@@ -685,7 +696,7 @@ def mmr_topk(
     cb = cands.select("query_id", F.col(id_col).alias("b")).join(
         vecs.select(F.col(id_col).alias("b"), F.col("__v").alias("vb")), "b"
     )
-    pairs = (
+    pairs = fresh_checkpoint(
         ca.join(cb, "query_id")
         .filter(F.col("a") != F.col("b"))
         .select(
@@ -693,57 +704,51 @@ def mmr_topk(
             F.round(cosine(F.col("va"), F.col("vb")), ROUND_SCORE)
             .alias("sim"),
         )
-        .localCheckpoint(eager=True)
     )
 
     w_rel = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc(id_col)
     )
-    sel = (
+    first = (
         cands.withColumn("__rn", F.row_number().over(w_rel))
         .filter(F.col("__rn") == 1)
         .select(
             "query_id", id_col,
             F.lit(1).cast("long").alias("mmr_rank"), "score",
         )
-        .localCheckpoint(eager=True)
     )
+    mmr = F.lit(float(lam)) * F.col("score") - F.lit(
+        1.0 - float(lam)
+    ) * F.col("__msim")
+    w_mmr = Window.partitionBy("query_id").orderBy(mmr.desc(), F.asc(id_col))
 
-    for t in range(2, m + 1):
+    def step(sel: DataFrame, rnd) -> DataFrame:
+        picked = sel.select("query_id", id_col)
+        if seen["rows"] <= _MMR_BROADCAST_ROWS:
+            # a fresh checkpoint carries no size estimate: the planner
+            # would shuffle the small side instead of broadcasting it
+            picked = F.broadcast(picked)
         maxsim = (
-            pairs.join(
-                sel.select("query_id", F.col(id_col).alias("b")),
-                ["query_id", "b"],
-            )
+            pairs.join(picked.withColumnRenamed(id_col, "b"),
+                       ["query_id", "b"])
             .groupBy("query_id", F.col("a").alias(id_col))
             .agg(F.max("sim").alias("__msim"))
         )
-        rem = cands.join(
-            sel.select("query_id", id_col), ["query_id", id_col],
-            "left_anti",
-        )
-        mmr = F.lit(float(lam)) * F.col("score") - F.lit(
-            1.0 - float(lam)
-        ) * F.col("__msim")
-        w_mmr = Window.partitionBy("query_id").orderBy(
-            mmr.desc(), F.asc(id_col)
-        )
+        rem = cands.join(picked, ["query_id", id_col], "left_anti")
         pick = (
             rem.join(maxsim, ["query_id", id_col])
             .withColumn("__rn", F.row_number().over(w_mmr))
             .filter(F.col("__rn") == 1)
             .select(
                 "query_id", id_col,
-                F.lit(t).cast("long").alias("mmr_rank"), "score",
+                F.lit(rnd.index + 2).cast("long").alias("mmr_rank"),
+                "score",
             )
         )
-        nxt = sel.unionByName(pick).localCheckpoint(eager=True)
-        sel.unpersist()
-        sel = nxt
+        return sel.unionByName(pick)
 
-    cands.unpersist()
-    pairs.unpersist()
-    return sel
+    sel = superstep(first, step, rounds=m - 1)
+    return bind_release(sel.select("*"), sel, cands, pairs)
 
 
 def top_pc_direction(
@@ -762,9 +767,9 @@ def top_pc_direction(
         raise ValueError("rounds must be >= 1")
     dim = len(embeddings.select(vec_col).first()[0])
 
-    ex = embeddings.select(
+    ex = fresh_checkpoint(embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("ev")
-    ).localCheckpoint(eager=True)
+    ))
 
     mean_rows = (
         ex.select(F.posexplode("ev").alias("i", "x"))
@@ -776,12 +781,12 @@ def top_pc_direction(
     for r in mean_rows:
         mean[r["i"]] = r["m"]
 
-    cx = ex.select(
+    cx = fresh_checkpoint(ex.select(
         F.col(id_col),
         F.zip_with(
             "ev", F.lit(mean).cast("array<double>"), lambda x, m: x - m
         ).alias("cv"),
-    ).localCheckpoint(eager=True)
+    ))
     ex.unpersist()
 
     v = [round(1.0 / dim ** 0.5, 6)] * dim

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graphit_spark.graph import local_frame
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint, superstep
 
 # language-ID marker substrings: (lang, [markers]) — order = tie-break
 # priority (first wins on equal score). Pure substring counting, so the
@@ -703,8 +704,8 @@ def bpe_merges(
          non-overlapping merge: adjacent candidates only arise when
          lhs == rhs, so islands of consecutive candidate positions keep
          every odd-indexed member (gaps-and-islands via pos - row_number).
-      4. Lineage truncated per round (fresh_checkpoint) so round cost is
-         flat; superseded state unpersisted.
+      4. Rounds run on the superstep driver, which stops early once no
+         word holds two symbols (observed, so no scan of its own).
 
     Windows are all PARTITION BY word — no global ordering anywhere; the
     per-round shuffles move a table bounded by total characters of the
@@ -721,7 +722,12 @@ def bpe_merges(
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
-    return _bpe_learn_df(df.sparkSession, words, rounds, top_words)
+    return local_frame(
+        df.sparkSession,
+        _bpe_learn(words, rounds, top_words),
+        "merge_round INT, lhs STRING, rhs STRING, merged STRING, "
+        "pair_count BIGINT",
+    )
 
 
 def _bpe_learn(words: DataFrame, rounds: int, top_words: int) -> list[tuple]:
@@ -729,13 +735,17 @@ def _bpe_learn(words: DataFrame, rounds: int, top_words: int) -> list[tuple]:
     table; returns [(round, lhs, rhs, merged, pair_count), ...]."""
     from pyspark.sql import Window
 
-    from graphit_spark.plans.state import fresh_checkpoint
-
     capped = words.orderBy(F.desc("freq"), F.asc("word")).limit(top_words)
-    syms = fresh_checkpoint(_char_symbols(capped, ["word", "freq"]))
+    # pos is dense from 1, so a table holds an adjacent pair iff some
+    # word has a second symbol
+    longest = F.max("pos")
+    syms, seen = counted_checkpoint(
+        _char_symbols(capped, ["word", "freq"]), longest=longest
+    )
     w_pos = Window.partitionBy("word").orderBy("pos")
     merges: list[tuple] = []
-    for r in range(1, rounds + 1):
+
+    def step(syms: DataFrame, rnd) -> DataFrame:
         best = (
             syms.withColumn("nxt", F.lead("sym").over(w_pos))
             .filter(F.col("nxt").isNotNull())
@@ -743,26 +753,18 @@ def _bpe_learn(words: DataFrame, rounds: int, top_words: int) -> list[tuple]:
             .agg(F.sum("freq").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("lhs"), F.asc("rhs"))
             .limit(1)
-            .collect()
+            .collect()[0]
         )
-        if not best:
-            break
-        lhs, rhs, cnt = best[0]["lhs"], best[0]["rhs"], int(best[0]["cnt"])
-        merges.append((r, lhs, rhs, lhs + rhs, cnt))
-        nxt_syms = fresh_checkpoint(_bpe_apply_merge(syms, lhs, rhs))
-        syms.unpersist()
-        syms = nxt_syms
-    syms.unpersist()
+        lhs, rhs = best["lhs"], best["rhs"]
+        merges.append((rnd.index + 1, lhs, rhs, lhs + rhs, int(best["cnt"])))
+        return _bpe_apply_merge(syms, lhs, rhs)
+
+    no_pair = lambda seen: seen["longest"] < 2  # noqa: E731
+    superstep(
+        syms, step, rounds=0 if no_pair(seen) else rounds,
+        checkpoint_start=False, until=no_pair, longest=longest,
+    ).unpersist()
     return merges
-
-
-def _bpe_learn_df(spark, words, rounds, top_words) -> DataFrame:
-    return local_frame(
-        spark,
-        _bpe_learn(words, rounds, top_words),
-        "merge_round INT, lhs STRING, rhs STRING, merged STRING, "
-        "pair_count BIGINT",
-    )
 
 
 def bpe_tokenize(
@@ -790,13 +792,11 @@ def bpe_tokenize(
     and skip learning entirely. Merges learned on the capped vocabulary are applied
     to EVERY word (standard BPE: out-of-cap words still benefit from
     any merge whose pair they contain; untouched words fall back to
-    character symbols). Per merge: the same island-parity plan as
-    learning, windows PARTITION BY word only; lineage truncated per
-    round. The DuckDB twin extends the learning chain with a parallel
-    application chain over all distinct words (textqueries._tokenize_sql).
+    character symbols). Per merge: one superstep round of the same
+    island-parity plan as learning, windows PARTITION BY word only. The
+    DuckDB twin extends the learning chain with a parallel application
+    chain over all distinct words (textqueries._tokenize_sql).
     """
-    from graphit_spark.plans.state import fresh_checkpoint
-
     doc_words = (
         df.select(
             "doc_id",
@@ -815,20 +815,22 @@ def bpe_tokenize(
             F.sum("c").alias("freq")
         )
         merge_rows = _bpe_learn(word_freqs, rounds, top_words)
-    syms = fresh_checkpoint(
-        _char_symbols(doc_words.select("word").distinct(), ["word"])
-    )
-    norm = [
+    norm = sorted(
         tuple(m[:3]) if isinstance(m, tuple)
         else (m["merge_round"], m["lhs"], m["rhs"])
         for m in merge_rows
-    ]
-    for _, lhs, rhs in sorted(norm):
-        nxt = fresh_checkpoint(_bpe_apply_merge(syms, lhs, rhs))
-        syms.unpersist()
-        syms = nxt
+    )
+
+    def step(syms: DataFrame, rnd) -> DataFrame:
+        _, lhs, rhs = norm[rnd.index]
+        return _bpe_apply_merge(syms, lhs, rhs)
+
+    syms = superstep(
+        _char_symbols(doc_words.select("word").distinct(), ["word"]),
+        step, rounds=len(norm),
+    )
     tokens = syms.groupBy("word").agg(F.count("*").alias("n_sym"))
-    out = (
+    out = fresh_checkpoint(
         doc_words.join(tokens, "word")
         .groupBy("doc_id")
         .agg(
@@ -836,7 +838,6 @@ def bpe_tokenize(
             F.sum(F.col("c") * F.col("n_sym")).alias("n_tokens"),
         )
     )
-    out = out.localCheckpoint(eager=True)
     syms.unpersist()
     doc_words.unpersist()
     return out

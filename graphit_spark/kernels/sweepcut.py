@@ -90,13 +90,13 @@ def sweep_cut(
         .agg(F.sum("delta").alias("delta"))
     )
 
-    swept = ordered_prefix_sum(
+    cum = ordered_prefix_sum(
         base.join(deltas, "r", "left")
         .select("id", "r", "d", F.coalesce("delta", F.lit(0)).alias("delta")),
         [F.asc("r")],
         ["d", "delta"],
-        release=release,
-    ).select(
+    )
+    swept = cum.select(
         "id", "r",
         F.col("d_cum").alias("vol"),
         F.col("delta_cum").alias("crossing"),
@@ -111,7 +111,7 @@ def sweep_cut(
         .limit(1)
         .collect()
     )
-    for cached in release:
+    for cached in (*release, cum):
         cached.unpersist()
     if not top:
         if own_cache:

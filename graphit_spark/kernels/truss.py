@@ -191,9 +191,10 @@ def k_truss(
     """Returns (src, dst, support) for the edges of the k-truss of the
     symmetrized simple graph, src < dst, support = triangles per edge
     within the truss (all >= k-2). ``max_rounds`` counts the scoring
-    pass as round 1 (it always runs); raises if the peel has not reached
-    its fixpoint within it. ``metrics_out["rounds"]`` is the number of
-    rounds run, the scoring pass included."""
+    pass as round 1; raises if the peel has not reached its fixpoint
+    within it, so a budget below 1 always raises.
+    ``metrics_out["rounds"]`` is the number of rounds run, the scoring
+    pass included."""
     own_cache = graph.ensure_persisted()
     sym = graph.symmetrize()
     und = sym.edges.filter(F.col("src") < F.col("dst")).select(
@@ -224,7 +225,7 @@ def k_truss(
     # the unscored edge table is only read by round 1: nothing to
     # materialize before it
     scored = superstep(
-        und, step, max_rounds=max(max_rounds, 1), checkpoint_start=False,
+        und, step, max_rounds=max_rounds, checkpoint_start=False,
         log=log, until=lambda seen: seen["peel"] == 0,
         alive=F.count(F.lit(1)),
         peel=F.count(F.when(F.col("support") < k - 2, 1)),

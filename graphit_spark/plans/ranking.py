@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from graphit_spark.graph import local_frame
+from graphit_spark.plans.state import bind_release
 
 
 def ordered_prefix_sum(
@@ -33,21 +34,18 @@ def ordered_prefix_sum(
     order_cols: list[Column],
     value_cols: list[str],
     num_partitions: int | None = None,
-    release: list | None = None,
 ) -> DataFrame:
     """Append `<v>_cum` = inclusive prefix sum of each value column under
     the global `order_cols` order — same two-phase shape as
     dense_rank_ids (range shuffle → P parallel within-bucket window
     sums → broadcast per-bucket offsets), so no single-partition Window
     ever sees the full table. `order_cols` must form a total order.
-    `release`, if given, collects the internally persisted DataFrame so
-    the caller can unpersist once the result is materialized."""
+    The result's unpersist() releases the internally persisted range
+    table: call it once what reads the result is materialized."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     ranged = df.repartitionByRange(num_partitions, *order_cols).persist()
-    if release is not None:
-        release.append(ranged)
     with_pid = ranged.withColumn("__pid", F.spark_partition_id())
     totals = {
         r["__pid"]: r
@@ -75,7 +73,9 @@ def ordered_prefix_sum(
         out = out.withColumn(
             f"{v}_cum", F.sum(v).over(w) + F.col(f"__off_{v}")
         )
-    return out.drop("__pid", *[f"__off_{v}" for v in value_cols])
+    return bind_release(
+        out.drop("__pid", *[f"__off_{v}" for v in value_cols]), ranged
+    )
 
 
 def dense_rank_ids(

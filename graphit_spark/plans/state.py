@@ -51,6 +51,11 @@ silence once), which is exactly the contract: kernels release only
 SUPERSEDED state, and every consumer of live state holds an EAGER
 checkpoint of its own.
 
+Package rule: a frame that is ever released comes from
+``fresh_checkpoint`` / ``counted_checkpoint``, the superstep driver or
+``bind_release``; a raw ``localCheckpoint`` is only for a terminal frame
+nobody releases. ``tests/test_superstep_jobs.py`` pins the rule.
+
 Round aggregates (``observe``): a superstep's stopping rule and
 direction choice need a few global numbers — an L1 error, a changed-row
 count, a frontier degree sum. Computing them with a ``count()`` or
@@ -322,7 +327,8 @@ def superstep(
       when the stop rule holds, never an error.
     - ``max_rounds=N``: a fixpoint — the stop rule is the answer's
       correctness condition, so running out of budget with changes still
-      pending raises instead of returning a truncated answer.
+      pending raises instead of returning a truncated answer — also when
+      the budget runs no round (``N <= start``).
 
     Returns the last materialized frame itself (``state`` if no round
     ran), so the caller's ``unpersist()`` releases its blocks."""
@@ -359,7 +365,7 @@ def superstep(
         if until is not None and until(seen):
             break
     else:
-        if max_rounds is not None and max_rounds > start:
+        if max_rounds is not None:
             state.unpersist()
             raise RuntimeError(
                 f"fixpoint did not converge within max_rounds={max_rounds} "

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import SparkSession, functions as F
 
 from graphit_spark.checkpoint import SnapshotStore
+from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -65,12 +66,12 @@ def cms_stream(
             ).alias("tok")
         ).filter(F.col("tok") != "")
         # one tokenize pass per batch: checkpoint the ≤ d·w-row delta
-        # grid, then derive the token count from it (each token lands in
-        # exactly d cells, so Σcnt == d·tokens) instead of re-scanning
-        delta = K.count_min_cells(words, d=d, w=w).localCheckpoint(
-            eager=True
+        # grid, with the token count observed on that job (each token
+        # lands in exactly d cells, so Σcnt == d·tokens)
+        delta, seen = counted_checkpoint(
+            K.count_min_cells(words, d=d, w=w), cnt=F.sum("cnt")
         )
-        n_toks = (delta.agg(F.sum("cnt")).first()[0] or 0) // d
+        n_toks = seen["cnt"] // d
         if prev_it is not None:
             prev = store.read(spark, prev_it)
             merged = (
@@ -138,7 +139,7 @@ def hll_stream(
             )
         else:
             merged = delta
-        merged = merged.localCheckpoint(eager=True)
+        merged = fresh_checkpoint(merged)
         est = K.hll_estimate_from_registers(merged, p=p).first()
         store.write(
             merged,

@@ -16,6 +16,7 @@ from graphit_spark.functions import dedup as D
 from graphit_spark.functions import similarity as S
 from graphit_spark.functions import textops as T
 from graphit_spark.functions.urls import TRACKING_PARAM_RE
+from graphit_spark.plans.state import counted_checkpoint
 
 MINHASH_K = 4
 JACCARD_MAX_DOC = 40
@@ -1682,8 +1683,8 @@ def q_corpus_sample_budget(spark, sf_dir):
 
     Scale shape: curation gates (one fused documents pass) → one range
     shuffle of (doc_id, n_tokens, key) rows through the distributed
-    ordered_prefix_sum → filter. The budget is one scalar aggregate.
-    No single-partition Window, no driver iteration."""
+    ordered_prefix_sum → filter. The budget is one scalar, observed on
+    its checkpoint job. No single-partition Window, no driver iteration."""
     return corpus_sample_budget(load(spark, sf_dir, "documents"))
 
 
@@ -1692,9 +1693,10 @@ def corpus_sample_budget(docs: DataFrame) -> DataFrame:
     jobs/run_curation.py spark-submit entry)."""
     from graphit_spark.functions import sampling as SA
 
-    selected = _corpus_selected(docs).localCheckpoint(eager=True)
-    total = selected.agg(F.sum("n_tokens")).first()[0] or 0
-    budget = int(total) // SAMPLE_BUDGET_DIVISOR
+    selected, seen = counted_checkpoint(
+        _corpus_selected(docs), total=F.sum("n_tokens")
+    )
+    budget = int(seen["total"]) // SAMPLE_BUDGET_DIVISOR
     out = SA.token_budget_sample(
         selected.select("doc_id", "n_tokens"), budget
     )
@@ -4453,10 +4455,7 @@ def q_token_percentiles(spark, sf_dir):
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    release: list = []
-    cum = ordered_prefix_sum(
-        counts, [F.col("v").asc()], ["c"], release=release
-    )
+    cum = ordered_prefix_sum(counts, [F.col("v").asc()], ["c"])
     pcts = local_frame(spark, [(float(p),) for p in PCTS], "pct double")
     out = (
         cum.crossJoin(F.broadcast(pcts))
@@ -4467,8 +4466,7 @@ def q_token_percentiles(spark, sf_dir):
         .agg(F.min("v").alias("n_tokens"))
         .localCheckpoint(eager=True)
     )
-    for df in release:
-        df.unpersist()
+    cum.unpersist()
     return out
 
 
@@ -4570,17 +4568,13 @@ def q_corpus_heaps_law(spark, sf_dir):
             F.coalesce("new_words", F.lit(0)).alias("new_words"),
         )
     )
-    release: list = []
-    cum = ordered_prefix_sum(
-        per, [F.col("bucket").asc()], ["toks", "new_words"], release=release
-    )
+    cum = ordered_prefix_sum(per, [F.col("bucket").asc()], ["toks", "new_words"])
     out = cum.select(
         ((F.col("bucket") + 1) * HEAPS_BUCKET).cast("long").alias("n_docs"),
         F.col("toks_cum").cast("long").alias("total_tokens"),
         F.col("new_words_cum").cast("long").alias("vocab_size"),
     ).localCheckpoint(eager=True)
-    for df in release:
-        df.unpersist()
+    cum.unpersist()
     return out
 
 

@@ -378,6 +378,16 @@ class TestKCore:
             k_core(g, 2, max_rounds=1)
         assert sorted(r["id"] for r in k_core(g, 2).collect()) == [0, 1, 2]
 
+    def test_zero_budget_raises(self, spark):
+        """A budget of 0 runs no peel round, so nothing shows the
+        vertex set is the core: it raises instead of returning all 8."""
+        from graphit_spark.kernels import k_core
+
+        edges = [(0, 1), (1, 2), (2, 0)] + [(v, v + 1) for v in range(2, 7)]
+        g = LinkGraph.from_pairs(spark, edges, persist=False)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            k_core(g, 2, max_rounds=0)
+
 
 class TestBetweenness:
     def test_budget_short_of_bfs_depth_raises(self, spark):

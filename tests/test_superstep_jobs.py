@@ -4,9 +4,10 @@ PageRank's L1 error, CC's frontier size and degree sum, and a snapshot's
 manifest ride the job that materializes the round (``observe``), so a
 round launches no count or collect of its own. These tests pin that job
 shape, that reading observed metrics never waits forever, the round
-budget and release contract of ``plans.state.superstep``, and that no
-kernel on the driver leaves cached blocks behind once its result is
-released."""
+budget and release contract of ``plans.state.superstep``, that no
+kernel on the driver and no corpus function leaves cached blocks behind
+once its result is released, and, package-wide, that round loops run on
+the driver and releases target frames that can release."""
 
 import random
 import re
@@ -21,6 +22,10 @@ from graphit_spark import kernels as K
 from graphit_spark.kernels import connected_components, label_propagation, pagerank
 from graphit_spark.kernels.bc import edge_betweenness
 from graphit_spark.kernels.scc import condensation_layers
+from graphit_spark.functions import dedup as D
+from graphit_spark.functions import sampling as SA
+from graphit_spark.functions import similarity as S
+from graphit_spark.functions import textops as T
 from graphit_spark.plans.state import fresh_checkpoint, observe
 
 # a driver round trip started from a kernel or store call site
@@ -252,6 +257,19 @@ def test_max_rounds_raises_with_changes_pending(spark):
         superstep(_counter(spark), _bump(2), max_rounds=3)
 
 
+def test_max_rounds_without_a_round_raises(spark):
+    """A fixpoint budget that runs no round has not tested its stop
+    rule: it raises rather than return the start state, and releases
+    that state's checkpoint."""
+    from graphit_spark.plans.state import superstep
+
+    before = _cached_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        superstep(_counter(spark), _bump(2), max_rounds=0,
+                  changed=_changed())
+    assert _cached_ids(spark) <= before
+
+
 def test_superseded_and_round_checkpoints_are_released(spark):
     from graphit_spark.plans.state import superstep
 
@@ -386,6 +404,53 @@ def test_kernel_leaves_no_cached_blocks(spark, leak_graphs, name):
     assert _cached_ids(spark) <= before, name
 
 
+@pytest.fixture(scope="session")
+def leak_corpus(spark):
+    """(documents, embeddings, token counts): tiny local frames for the
+    corpus and vector functions, built once per session."""
+    from graphit_spark.graph import local_frame
+
+    rng = random.Random(5)
+    words = "the cat sat on a mat with another cat that sat there".split()
+    docs = [
+        (i, " ".join(rng.choice(words) for _ in range(15))
+         + (" shared licence text appears here verbatim" if i % 3 == 0
+            else ""))
+        for i in range(12)
+    ]
+    vecs = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(40)]
+    return (
+        local_frame(spark, docs, "doc_id long, text string"),
+        local_frame(spark, vecs, "vec_id long, embedding array<float>"),
+        local_frame(spark, [(i, 10 + i % 7) for i in range(30)],
+                    "doc_id long, n_tokens long"),
+    )
+
+
+_CORPUS = {
+    "mmr_topk": lambda d, e, t: S.mmr_topk(e, e.filter("vec_id < 5"),
+                                           k=6, m=4),
+    # returns driver lists: nothing for the caller to release
+    "top_pc_direction": lambda d, e, t: S.top_pc_direction(e, rounds=2),
+    "bpe_tokenize": lambda d, e, t: T.bpe_tokenize(d, rounds=4, top_words=8),
+    "duplicate_spans": lambda d, e, t: D.duplicate_spans(d, n=5),
+    "token_budget_sample": lambda d, e, t: SA.token_budget_sample(t, 100),
+    "bpe_merges": lambda d, e, t: T.bpe_merges(d, rounds=4, top_words=8),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CORPUS))
+def test_corpus_function_leaves_no_cached_blocks(spark, leak_corpus, name):
+    """The corpus and vector functions outside ``kernels/`` release what
+    they materialize, and their results release what they read."""
+    before = _cached_ids(spark)
+    out = _CORPUS[name](*leak_corpus)
+    if not isinstance(out, tuple):
+        assert out.count() > 0
+        out.unpersist()
+    assert _cached_ids(spark) <= before, name
+
+
 # a driver round trip started from a peel, bucket or frontier kernel's
 # own module
 _KERNEL_ROUND_TRIP = re.compile(
@@ -446,24 +511,66 @@ def test_triangle_count_has_no_ranking_collect(spark, leak_graphs):
 _CHECKPOINTS = {"fresh_checkpoint", "counted_checkpoint", "localCheckpoint"}
 
 
-def test_no_kernel_checkpoints_inside_a_loop():
-    """Round loops belong to the superstep driver: no module under
-    ``graphit_spark/kernels/`` names a checkpoint function inside a
-    ``for``/``while`` body (a call or a ``.transform(fresh_checkpoint)``
-    argument alike)."""
+def _package_modules():
+    """(path relative to graphit_spark/, parsed module) for every module."""
     import ast
     import pathlib
 
-    import graphit_spark.kernels as kernels_pkg
+    import graphit_spark
+
+    root = pathlib.Path(graphit_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root).as_posix(), ast.parse(path.read_text())
+
+
+def test_no_checkpoints_inside_a_loop():
+    """Round loops belong to the superstep driver: no module outside
+    ``plans/state.py`` names a checkpoint function inside a
+    ``for``/``while`` body (a call or a ``.transform(fresh_checkpoint)``
+    argument alike)."""
+    import ast
 
     found = []
-    for path in sorted(pathlib.Path(kernels_pkg.__file__).parent.glob("*.py")):
-        for loop in ast.walk(ast.parse(path.read_text())):
+    for rel, tree in _package_modules():
+        if rel == "plans/state.py":
+            continue
+        for loop in ast.walk(tree):
             if not isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
                 continue
             for stmt in loop.body + loop.orelse:
                 for node in ast.walk(stmt):
                     name = getattr(node, "id", None) or getattr(node, "attr", None)
                     if name in _CHECKPOINTS:
-                        found.append(f"{path.name}:{node.lineno}")
+                        found.append(f"{rel}:{node.lineno}")
     assert not found, found
+
+
+def test_no_release_of_a_raw_checkpoint():
+    """``unpersist()`` on a raw ``localCheckpoint`` frees nothing (see
+    ``plans/state.py``): no function calls it on a name it binds to
+    one. A frame that is released comes from ``fresh_checkpoint``, the
+    superstep driver or ``bind_release``."""
+    import ast
+
+    found = []
+    for rel, tree in _package_modules():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            raw = {
+                target.id
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Assign)
+                and isinstance(node.value, ast.Call)
+                and getattr(node.value.func, "attr", None) == "localCheckpoint"
+                for target in node.targets
+                if isinstance(target, ast.Name)
+            }
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None) == "unpersist"
+                    and getattr(node.func.value, "id", None) in raw
+                ):
+                    found.append(f"{rel}:{node.lineno}")
+    assert not found, sorted(set(found))
