@@ -153,8 +153,8 @@ def graph(
     fresh: bool = False,
 ) -> LinkGraph:
     """The bench/driver input graph, memoized per (session, dir,
-    variant) and pre-persisted: kernels' ensure_persisted() then
-    reports not-owned, so no kernel releases the shared cache.
+    variant) and pre-persisted: a kernel's ``persisted()`` block then
+    passes it through, so no kernel releases the shared cache.
     ``fresh=True`` bypasses the memo and returns an unpersisted build
     (for plan-shape tests that must see the parquet scan nodes)."""
     builders = {
@@ -168,8 +168,7 @@ def graph(
     hit = _GRAPH_MEMO.get((sf_dir, variant))
     if hit is not None and hit[0] is spark and hit[1]._persisted:
         return hit[1]
-    g = LinkGraph(builders[variant](spark, sf_dir), persist=False)
-    g.ensure_persisted()
+    g = LinkGraph(builders[variant](spark, sf_dir))
     _GRAPH_MEMO[(sf_dir, variant)] = (spark, g)
     return g
 
@@ -1778,7 +1777,6 @@ def q_betweenness_pivots(spark, sf_dir):
     from graphit_spark.kernels import betweenness_centrality
 
     g = graph(spark, sf_dir, "raw")
-    own = g.ensure_persisted()
     n = g.num_vertices
     total = None
     for s in range(BC_PIVOTS):
@@ -1786,8 +1784,6 @@ def q_betweenness_pivots(spark, sf_dir):
             "id", F.col("bc").alias(f"d{s}")
         )
         total = d if total is None else total.join(d, "id")
-    if own:
-        g.unpersist()
     expr = F.col("d0")
     for s in range(1, BC_PIVOTS):
         expr = expr + F.col(f"d{s}")
@@ -3114,14 +3110,11 @@ def q_edge_betweenness(spark, sf_dir):
     from graphit_spark.kernels.bc import edge_betweenness
 
     g = graph(spark, sf_dir, "raw")
-    own = g.ensure_persisted()
     n = g.num_vertices
     total = None
     for s in range(BC_PIVOTS):
         c = edge_betweenness(g, s)
         total = c if total is None else total.unionByName(c)
-    if own:
-        g.unpersist()
     return (
         total.groupBy("src", "dst")
         .agg(F.sum("credit").alias("acc"))
@@ -3226,7 +3219,6 @@ def q_girvan_newman_step(spark, sf_dir):
     from graphit_spark.kernels.bc import edge_betweenness
 
     g = graph(spark, sf_dir, "blocked")
-    own = g.ensure_persisted()
     n = g.num_vertices
     total = None
     for s in range(BC_PIVOTS):
@@ -3250,10 +3242,7 @@ def q_girvan_newman_step(spark, sf_dir):
         persist=False,
         num_vertices=n,
     )
-    res = connected_components(g2)
-    if own:
-        g.unpersist()
-    return res
+    return connected_components(g2)
 
 
 MSF_ROUNDS = 12  # >= ceil(log2(V)) at oracle sf — Boruvka halves comps
@@ -4580,7 +4569,6 @@ def q_community_conductance(spark, sf_dir):
     from graphit_spark.kernels import label_propagation
 
     und = graph(spark, sf_dir, "blocked").symmetrize()
-    own = und.ensure_persisted()
     labels = label_propagation(
         graph(spark, sf_dir, "blocked"), rounds=LPA_ROUNDS
     ).localCheckpoint(eager=True)
@@ -4604,7 +4592,7 @@ def q_community_conductance(spark, sf_dir):
             F.sum(F.coalesce("deg", F.lit(0))).alias("volume"),
         )
     )
-    out = (
+    return (
         comm.join(cut, "label", "left")
         .select(
             "label",
@@ -4622,9 +4610,6 @@ def q_community_conductance(spark, sf_dir):
         )
         .localCheckpoint(eager=True)
     )
-    if own:
-        und.unpersist()
-    return out
 
 
 def community_conductance_sql(rounds: int = LPA_ROUNDS) -> str:

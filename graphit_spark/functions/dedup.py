@@ -30,7 +30,9 @@ import time
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
-from graphit_spark.plans.state import counted_checkpoint, fresh_checkpoint
+from graphit_spark.plans.state import (
+    bind_release, counted_checkpoint, fresh_checkpoint,
+)
 
 MERSENNE31 = (1 << 31) - 1
 # deterministic permutation constants (t-th minhash): odd multipliers
@@ -298,12 +300,10 @@ def lsh_candidate_pairs(
     # one scan of the signatures: every band key comes out of a single
     # explode, and the materialized band table feeds both join sides —
     # the shingle explosion + minhash aggregation run exactly once, not
-    # once per band per side. localCheckpoint (not persist): the
-    # lazy result reads it, so nothing releases it; its blocks go when
-    # the JVM garbage-collects the RDD.
-    allb = band_table(df, text_col, k, rows_per_band).localCheckpoint(
-        eager=True
-    )
+    # once per band per side. The lazy result reads it: its
+    # ``unpersist()`` releases it.
+    bands = fresh_checkpoint(band_table(df, text_col, k, rows_per_band))
+    allb = bands
     if max_bucket is not None:
         # ONE occupancy aggregation serves both the dropped-mass
         # accounting and the filter join below; the accounting rides
@@ -331,11 +331,12 @@ def lsh_candidate_pairs(
         )
     left = allb.select("band", "bkey", F.col("doc_id").alias("doc_a"))
     right = allb.select("band", "bkey", F.col("doc_id").alias("doc_b"))
-    return (
+    return bind_release(
         left.join(right, ["band", "bkey"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
-        .distinct()
+        .distinct(),
+        bands,
     )
 
 
@@ -346,10 +347,9 @@ def ngram_jaccard_pairs(
     quadratic; restrict with max_doc_id or feed LSH candidates."""
     d = df if max_doc_id is None else df.filter(F.col("doc_id") < max_doc_id)
     # materialized: consumed three times (sizes + both sides of the
-    # intersection self-join) — the explosion must run once.
-    # localCheckpoint (not persist): the lazy result reads it, so nothing
-    # releases it; its blocks go when the JVM garbage-collects the RDD.
-    sh = _shingles(d, text_col).localCheckpoint(eager=True)
+    # intersection self-join) — the explosion must run once. The lazy
+    # result reads it: its ``unpersist()`` releases it.
+    sh = fresh_checkpoint(_shingles(d, text_col))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -359,7 +359,7 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
+    return bind_release(
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a")
                    .withColumnRenamed("n", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b")
@@ -370,7 +370,8 @@ def ngram_jaccard_pairs(
             F.round(
                 F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
             ).alias("jaccard"),
-        )
+        ),
+        sh,
     )
 
 

@@ -27,6 +27,8 @@ cache/NUMA segmentation schedules, schedule.h:92-125). The CSR analogue is
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -274,10 +276,10 @@ class LinkGraph:
             squished=True,
             num_partitions=self.num_partitions,
             # derived graphs start UNPERSISTED regardless of the base's
-            # state: kernels own their input caches (ensure_persisted /
-            # own_cache release), and inheriting persist from a shared
-            # long-lived base (e.g. benchqueries' memoized graph) would
-            # persist a new DF per derivation that nobody ever releases.
+            # state: a kernel holds its input's cache in a persisted()
+            # block, and inheriting persist from a shared long-lived
+            # base (e.g. benchqueries' memoized graph) would persist a
+            # new DF per derivation that nobody ever releases.
             persist=False,
             num_vertices=self.num_vertices,
         )
@@ -291,7 +293,7 @@ class LinkGraph:
         already persisted and leave it (and its memoized degree table)
         cached, and ``unpersist()`` releases it with the graph. An
         unpersisted graph returns a fresh, unpersisted view per call,
-        owned by the caller (``ensure_persisted``/``unpersist``). A view
+        which the caller holds in its own ``persisted()`` block. A view
         is its own symmetrization: it returns itself."""
         if self._symmetric:
             return self
@@ -454,17 +456,25 @@ class LinkGraph:
             spark.table(table), squished=True, pre_partitioned=True, **kw
         )
 
-    def ensure_persisted(self) -> bool:
-        """Persist the edge table if the constructor didn't. Iterative
-        kernels call this so a persist=False graph is not re-derived from
-        source (+ re-squished) on every superstep; they unpersist at the
-        end iff this returned True (their results are checkpointed, so
-        releasing the cache is safe)."""
+    @contextmanager
+    def persisted(self):
+        """Hold this graph's edge cache for the ``with`` block. A graph
+        the caller persisted passes through untouched, so nested kernel
+        calls hold nothing. Otherwise the block persists the edges, so a
+        persist=False graph is not re-derived from source (and
+        re-squished) every superstep, and on exit — on return and on
+        raise alike — ``unpersist()`` releases exactly that: the edge
+        cache and the derived tables and view built inside the block.
+        A kernel's result is checkpointed, so it outlives the hold."""
         if self._persisted:
-            return False
+            yield
+            return
         self.edges = self.edges.persist(StorageLevel.MEMORY_AND_DISK)
         self._persisted = True
-        return True
+        try:
+            yield
+        finally:
+            self.unpersist()
 
     def unpersist(self) -> None:
         """Release the edge cache, the memoized derived tables and the
@@ -478,7 +488,7 @@ class LinkGraph:
         if self._undirected is not None:
             self._undirected.unpersist()
             self._undirected = None
-        # let a later ensure_persisted() re-cache (the DataFrames stay
+        # let a later persisted() block re-cache (the DataFrames stay
         # valid — only their cached blocks are dropped)
         self._persisted = False
 

@@ -47,50 +47,48 @@ def astar(
     before the target settles raises."""
     if not graph.weighted:
         raise ValueError("astar requires a weighted graph")
-    own_cache = graph.ensure_persisted()
-    verts = graph.vertices()
-    if heuristic is None:
-        h = verts.select("id", F.lit(0).cast("long").alias("h"))
-    else:
-        h = (
-            verts.join(heuristic.select("id", "h"), "id", "left")
-            .select("id", F.coalesce(F.col("h").cast("long"), F.lit(0)).alias("h"))
-        )
-    prio = F.col("dist") + F.col("h")
-    at_target = F.col("id") == target
-    # the target's tentative distance, observed with every round's state
-    tgt = {
-        "hit": F.count(F.when(at_target, F.col("dist"))),
-        "tgt": F.max(F.when(at_target, F.col("dist"))),
-    }
+    with graph.persisted():
+        verts = graph.vertices()
+        if heuristic is None:
+            h = verts.select("id", F.lit(0).cast("long").alias("h"))
+        else:
+            h = (
+                verts.join(heuristic.select("id", "h"), "id", "left")
+                .select("id", F.coalesce(F.col("h").cast("long"), F.lit(0)).alias("h"))
+            )
+        prio = F.col("dist") + F.col("h")
+        at_target = F.col("id") == target
+        # the target's tentative distance, observed with every round's state
+        tgt = {
+            "hit": F.count(F.when(at_target, F.col("dist"))),
+            "tgt": F.max(F.when(at_target, F.col("dist"))),
+        }
 
-    def settled(bucket: int | None, seen) -> bool:
-        # queue exhausted (target unreachable), or finishedNode(target):
-        # no remaining priority can beat its tentative distance
-        return bucket is None or (seen["hit"] > 0 and bucket * delta > seen["tgt"])
+        def settled(bucket: int | None, seen) -> bool:
+            # queue exhausted (target unreachable), or finishedNode(target):
+            # no remaining priority can beat its tentative distance
+            return bucket is None or (seen["hit"] > 0 and bucket * delta > seen["tgt"])
 
-    # the first bucket (the source's) rides the starting checkpoint job
-    state, seen = counted_checkpoint(
-        h.select(
-            "id", "h",
-            F.when(F.col("id") == source, F.lit(0).cast("long")).alias("dist"),
-        ),
-        first=F.min(F.floor(prio / delta)),
-        reached=F.count("dist"),
-        **tgt,
-    )
-    first = seen["first"] if seen["reached"] else None
-    if not settled(first, seen):
-        step, next_bucket, aggs = bucket_relaxation(
-            graph.edges, delta, prio, first
+        # the first bucket (the source's) rides the starting checkpoint job
+        state, seen = counted_checkpoint(
+            h.select(
+                "id", "h",
+                F.when(F.col("id") == source, F.lit(0).cast("long")).alias("dist"),
+            ),
+            first=F.min(F.floor(prio / delta)),
+            reached=F.count("dist"),
+            **tgt,
         )
-        state = superstep(
-            state, step, max_rounds=max_rounds, checkpoint_start=False,
-            until=lambda seen: settled(next_bucket(seen), seen),
-            **aggs, **tgt,
-        )
-    if own_cache:
-        graph.unpersist()
+        first = seen["first"] if seen["reached"] else None
+        if not settled(first, seen):
+            step, next_bucket, aggs = bucket_relaxation(
+                graph.edges, delta, prio, first
+            )
+            state = superstep(
+                state, step, max_rounds=max_rounds, checkpoint_start=False,
+                until=lambda seen: settled(next_bucket(seen), seen),
+                **aggs, **tgt,
+            )
     return bind_release(state.select("id", "dist"), state)
 
 

@@ -111,10 +111,8 @@ def betweenness_centrality(
 ) -> DataFrame:
     """(id, bc) for every vertex; 0.0 for vertices off any shortest path.
     Raises if the BFS from ``source`` is deeper than ``max_levels``."""
-    own_cache = graph.ensure_persisted()
-    state = _brandes(graph, source, max_levels)
-    if own_cache:
-        graph.unpersist()
+    with graph.persisted():
+        state = _brandes(graph, source, max_levels)
     return bind_release(
         graph.vertices()
         .join(state, "id", "left")
@@ -143,36 +141,34 @@ def edge_betweenness(
     groupBy(src), emitted once from a final edge join against the
     final (id, sigma, depth, delta) state — one extra E-sized join,
     no extra supersteps."""
-    own_cache = graph.ensure_persisted()
-    state = _brandes(graph, source, max_levels)
-    credits = fresh_checkpoint(
-        graph.edges.join(
-            state.select(
-                F.col("id").alias("src"),
-                F.col("sigma").alias("sv"),
-                F.col("depth").alias("du"),
-            ),
-            "src",
+    with graph.persisted():
+        state = _brandes(graph, source, max_levels)
+        credits = fresh_checkpoint(
+            graph.edges.join(
+                state.select(
+                    F.col("id").alias("src"),
+                    F.col("sigma").alias("sv"),
+                    F.col("depth").alias("du"),
+                ),
+                "src",
+            )
+            .join(
+                state.select(
+                    F.col("id").alias("dst"),
+                    F.col("sigma").alias("sw"),
+                    F.col("delta").alias("dw_delta"),
+                    F.col("depth").alias("dw"),
+                ),
+                "dst",
+            )
+            .filter(F.col("dw") == F.col("du") + 1)
+            .select(
+                "src",
+                "dst",
+                (
+                    F.col("sv") / F.col("sw") * (F.lit(1.0) + F.col("dw_delta"))
+                ).alias("credit"),
+            )
         )
-        .join(
-            state.select(
-                F.col("id").alias("dst"),
-                F.col("sigma").alias("sw"),
-                F.col("delta").alias("dw_delta"),
-                F.col("depth").alias("dw"),
-            ),
-            "dst",
-        )
-        .filter(F.col("dw") == F.col("du") + 1)
-        .select(
-            "src",
-            "dst",
-            (
-                F.col("sv") / F.col("sw") * (F.lit(1.0) + F.col("dw_delta"))
-            ).alias("credit"),
-        )
-    )
-    state.unpersist()
-    if own_cache:
-        graph.unpersist()
+        state.unpersist()
     return credits

@@ -162,61 +162,59 @@ def bowtie_classes(
     TENDRIL, DISCONNECTED} relative to the largest SCC (ties on size
     broken by the smaller SCC label — a total order, so the output is
     deterministic)."""
-    own_cache = graph.ensure_persisted()
-    num_edges = graph.num_edges
-    num_verts = graph.num_vertices
+    with graph.persisted():
+        num_edges = graph.num_edges
+        num_verts = graph.num_vertices
 
-    scc = strongly_connected_components(graph, **scc_kw)
-    core_label = int(
-        scc.groupBy("scc")
-        .count()
-        .orderBy(F.desc("count"), F.asc("scc"))
-        .first()["scc"]
-    )
-    corev = (
-        scc.filter(F.col("scc") == core_label)
-        .select("id")
-        .transform(fresh_checkpoint)
-    )
-    scc.unpersist()
-
-    edges = graph.edges.select("src", "dst").transform(fresh_checkpoint)
-    tedges = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    ).transform(fresh_checkpoint)
-
-    fwd = _reachable(edges, corev, num_edges, num_verts, max_iters)
-    bwd = _reachable(tedges, corev, num_edges, num_verts, max_iters)
-    inn = bwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
-    outt = fwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
-    fi = _reachable(edges, inn, num_edges, num_verts, max_iters)
-    bo = _reachable(tedges, outt, num_edges, num_verts, max_iters)
-
-    def flag(df: DataFrame, name: str) -> DataFrame:
-        return df.select("id", F.lit(True).alias(name))
-
-    out = (
-        graph.vertices()
-        .select("id")
-        .join(flag(corev, "is_core"), "id", "left")
-        .join(flag(bwd, "is_b"), "id", "left")
-        .join(flag(fwd, "is_f"), "id", "left")
-        .join(flag(fi, "is_fi"), "id", "left")
-        .join(flag(bo, "is_bo"), "id", "left")
-        .select(
-            "id",
-            F.when(F.col("is_core"), F.lit("CORE"))
-            .when(F.col("is_b"), F.lit("IN"))
-            .when(F.col("is_f"), F.lit("OUT"))
-            .when(F.col("is_fi") & F.col("is_bo"), F.lit("TUBE"))
-            .when(F.col("is_fi") | F.col("is_bo"), F.lit("TENDRIL"))
-            .otherwise(F.lit("DISCONNECTED"))
-            .alias("bowtie"),
+        scc = strongly_connected_components(graph, **scc_kw)
+        core_label = int(
+            scc.groupBy("scc")
+            .count()
+            .orderBy(F.desc("count"), F.asc("scc"))
+            .first()["scc"]
         )
-        .transform(fresh_checkpoint)
-    )
-    for df in (corev, edges, tedges, fwd, bwd, inn, outt, fi, bo):
-        df.unpersist()
-    if own_cache:
-        graph.unpersist()
+        corev = (
+            scc.filter(F.col("scc") == core_label)
+            .select("id")
+            .transform(fresh_checkpoint)
+        )
+        scc.unpersist()
+
+        edges = graph.edges.select("src", "dst").transform(fresh_checkpoint)
+        tedges = edges.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst")
+        ).transform(fresh_checkpoint)
+
+        fwd = _reachable(edges, corev, num_edges, num_verts, max_iters)
+        bwd = _reachable(tedges, corev, num_edges, num_verts, max_iters)
+        inn = bwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
+        outt = fwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
+        fi = _reachable(edges, inn, num_edges, num_verts, max_iters)
+        bo = _reachable(tedges, outt, num_edges, num_verts, max_iters)
+
+        def flag(df: DataFrame, name: str) -> DataFrame:
+            return df.select("id", F.lit(True).alias(name))
+
+        out = (
+            graph.vertices()
+            .select("id")
+            .join(flag(corev, "is_core"), "id", "left")
+            .join(flag(bwd, "is_b"), "id", "left")
+            .join(flag(fwd, "is_f"), "id", "left")
+            .join(flag(fi, "is_fi"), "id", "left")
+            .join(flag(bo, "is_bo"), "id", "left")
+            .select(
+                "id",
+                F.when(F.col("is_core"), F.lit("CORE"))
+                .when(F.col("is_b"), F.lit("IN"))
+                .when(F.col("is_f"), F.lit("OUT"))
+                .when(F.col("is_fi") & F.col("is_bo"), F.lit("TUBE"))
+                .when(F.col("is_fi") | F.col("is_bo"), F.lit("TENDRIL"))
+                .otherwise(F.lit("DISCONNECTED"))
+                .alias("bowtie"),
+            )
+            .transform(fresh_checkpoint)
+        )
+        for df in (corev, edges, tedges, fwd, bwd, inn, outt, fi, bo):
+            df.unpersist()
     return out

@@ -170,56 +170,54 @@ def bridges(graph: LinkGraph, *, max_rounds: int = 24) -> DataFrame:
     graph. max_rounds bounds each fixpoint (labeling, BFS depth) and
     must exceed the graph diameter; the bottom-up fold runs one round
     per BFS level."""
-    own_cache = graph.ensure_persisted()
-    und, sym, depth, parent = _bfs_tree(graph, max_rounds, "bridges")
+    with graph.persisted():
+        und, sym, depth, parent = _bfs_tree(graph, max_rounds, "bridges")
 
-    tree = parent.select(
-        F.least("parent", "id").alias("u"),
-        F.greatest("parent", "id").alias("v"),
-    )
-    nontree = und.join(tree, ["u", "v"], "left_anti")
-    h_rows = nontree.select(
-        F.col("u").alias("id"), _hash60(F.col("u"), F.col("v")).alias("h")
-    ).unionByName(
-        nontree.select(
-            F.col("v").alias("id"), _hash60(F.col("u"), F.col("v")).alias("h")
+        tree = parent.select(
+            F.least("parent", "id").alias("u"),
+            F.greatest("parent", "id").alias("v"),
         )
-    )
-    hv = h_rows.groupBy("id").agg(F.bit_xor("h").alias("h"))
-
-    def fold(state: DataFrame, rnd) -> DataFrame:
-        """XOR level max_depth - rnd.index into the parents above it."""
-        child_x = (
-            state.filter(F.col("depth") == max_depth - rnd.index)
-            .groupBy(F.col("parent").alias("id"))
-            .agg(F.bit_xor("s").alias("child_x"))
-        )
-        return state.join(child_x, "id", "left").select(
-            "id",
-            "depth",
-            "parent",
-            F.when(
-                F.col("child_x").isNotNull(),
-                F.col("s").bitwiseXOR(F.col("child_x")),
+        nontree = und.join(tree, ["u", "v"], "left_anti")
+        h_rows = nontree.select(
+            F.col("u").alias("id"), _hash60(F.col("u"), F.col("v")).alias("h")
+        ).unionByName(
+            nontree.select(
+                F.col("v").alias("id"), _hash60(F.col("u"), F.col("v")).alias("h")
             )
-            .otherwise(F.col("s"))
-            .alias("s"),
         )
+        hv = h_rows.groupBy("id").agg(F.bit_xor("h").alias("h"))
 
-    # the fold's start observes the deepest level: one round per level
-    state, seen = counted_checkpoint(
-        depth.join(parent, "id", "left")
-        .join(hv, "id", "left")
-        .select("id", "depth", "parent", F.coalesce("h", F.lit(0)).alias("s")),
-        max_depth=F.max("depth"),
-    )
-    depth.unpersist()
-    max_depth = int(seen["max_depth"])
-    state = superstep(state, fold, rounds=max_depth, checkpoint_start=False)
-    und.unpersist()
-    sym.unpersist()
-    if own_cache:
-        graph.unpersist()
+        def fold(state: DataFrame, rnd) -> DataFrame:
+            """XOR level max_depth - rnd.index into the parents above it."""
+            child_x = (
+                state.filter(F.col("depth") == max_depth - rnd.index)
+                .groupBy(F.col("parent").alias("id"))
+                .agg(F.bit_xor("s").alias("child_x"))
+            )
+            return state.join(child_x, "id", "left").select(
+                "id",
+                "depth",
+                "parent",
+                F.when(
+                    F.col("child_x").isNotNull(),
+                    F.col("s").bitwiseXOR(F.col("child_x")),
+                )
+                .otherwise(F.col("s"))
+                .alias("s"),
+            )
+
+        # the fold's start observes the deepest level: one round per level
+        state, seen = counted_checkpoint(
+            depth.join(parent, "id", "left")
+            .join(hv, "id", "left")
+            .select("id", "depth", "parent", F.coalesce("h", F.lit(0)).alias("s")),
+            max_depth=F.max("depth"),
+        )
+        depth.unpersist()
+        max_depth = int(seen["max_depth"])
+        state = superstep(state, fold, rounds=max_depth, checkpoint_start=False)
+        und.unpersist()
+        sym.unpersist()
     return bind_release(
         state.filter(F.col("parent").isNotNull() & (F.col("s") == 0)).select(
             F.least("parent", "id").alias("u"),
@@ -240,108 +238,108 @@ def biconnected_components(
     CC (each round = one min-label gather + two doubling hops, log
     convergence); the LCA climb gets 2·max_rounds (≤ 2·depth rounds)."""
     _check_ekey_domain(graph, "biconnected_components")
-    own_cache = graph.ensure_persisted()
-    und, sym, depth, parent = _bfs_tree(graph, max_rounds, "biconnected")
+    with graph.persisted():
+        und, sym, depth, parent = _bfs_tree(graph, max_rounds, "biconnected")
 
-    npt = fresh_checkpoint(
-        depth.join(parent, "id", "left").select("id", "depth", "parent")
-    )
-    depth.unpersist()
-    sym.unpersist()
+        npt = fresh_checkpoint(
+            depth.join(parent, "id", "left").select("id", "depth", "parent")
+        )
+        depth.unpersist()
+        sym.unpersist()
 
-    # tree/nontree derive from the CHECKPOINTED node table — the lazy
-    # `parent` frame would recompute through the released depth blocks
-    tree = npt.filter(F.col("parent").isNotNull()).select(
-        F.least("parent", "id").alias("u"),
-        F.greatest("parent", "id").alias("v"),
-    )
-    nontree = und.join(tree, ["u", "v"], "left_anti")
+        # tree/nontree derive from the CHECKPOINTED node table — the lazy
+        # `parent` frame would recompute through the released depth blocks
+        tree = npt.filter(F.col("parent").isNotNull()).select(
+            F.least("parent", "id").alias("u"),
+            F.greatest("parent", "id").alias("v"),
+        )
+        nontree = und.join(tree, ["u", "v"], "left_anti")
 
-    # --- LCA climb: each non-tree edge walks both endpoints up,
-    # emitting an aux star edge per tree edge on its fundamental cycle
-    na = npt.select(
-        F.col("id").alias("ca"),
-        F.col("depth").alias("da"),
-        F.col("parent").alias("pa"),
-    )
-    nb = npt.select(
-        F.col("id").alias("cb"),
-        F.col("depth").alias("db"),
-        F.col("parent").alias("pb"),
-    )
-    emissions: list[DataFrame] = []
+        # --- LCA climb: each non-tree edge walks both endpoints up,
+        # emitting an aux star edge per tree edge on its fundamental cycle
+        na = npt.select(
+            F.col("id").alias("ca"),
+            F.col("depth").alias("da"),
+            F.col("parent").alias("pa"),
+        )
+        nb = npt.select(
+            F.col("id").alias("cb"),
+            F.col("depth").alias("db"),
+            F.col("parent").alias("pb"),
+        )
+        emissions: list[DataFrame] = []
 
-    def climb(state: DataFrame, rnd) -> DataFrame:
-        joined = state.join(na, "ca").join(nb, "cb")
-        climb_a = F.col("da") >= F.col("db")
-        climb_b = F.col("db") >= F.col("da")
-        emissions.append(
-            joined.filter(climb_a)
-            .select("ek", _ekey(F.col("ca"), F.col("pa")).alias("tek"))
-            .unionByName(
-                joined.filter(climb_b).select(
-                    "ek", _ekey(F.col("cb"), F.col("pb")).alias("tek")
+        def climb(state: DataFrame, rnd) -> DataFrame:
+            joined = state.join(na, "ca").join(nb, "cb")
+            climb_a = F.col("da") >= F.col("db")
+            climb_b = F.col("db") >= F.col("da")
+            emissions.append(
+                joined.filter(climb_a)
+                .select("ek", _ekey(F.col("ca"), F.col("pa")).alias("tek"))
+                .unionByName(
+                    joined.filter(climb_b).select(
+                        "ek", _ekey(F.col("cb"), F.col("pb")).alias("tek")
+                    )
                 )
+                .transform(fresh_checkpoint)
             )
-            .transform(fresh_checkpoint)
+            return joined.select(
+                "ek",
+                F.when(climb_a, F.col("pa")).otherwise(F.col("ca")).alias("ca"),
+                F.when(climb_b, F.col("pb")).otherwise(F.col("cb")).alias("cb"),
+            ).filter(F.col("ca") != F.col("cb"))
+
+        superstep(
+            nontree.select(
+                _ekey(F.col("u"), F.col("v")).alias("ek"),
+                F.col("u").alias("ca"),
+                F.col("v").alias("cb"),
+            ),
+            climb,
+            max_rounds=2 * max_rounds,
+            until=lambda seen: seen["climbers"] == 0,
+            climbers=F.count(F.lit(1)),
+        ).unpersist()
+
+        # the aux edges; releasing them releases every round's emissions
+        aux = bind_release(reduce(DataFrame.unionByName, emissions), *emissions)
+        auxsym = aux.select(
+            F.col("ek").alias("x"), F.col("tek").alias("y")
+        ).unionByName(
+            aux.select(F.col("tek").alias("x"), F.col("ek").alias("y"))
         )
-        return joined.select(
-            "ek",
-            F.when(climb_a, F.col("pa")).otherwise(F.col("ca")).alias("ca"),
-            F.when(climb_b, F.col("pb")).otherwise(F.col("cb")).alias("cb"),
-        ).filter(F.col("ca") != F.col("cb"))
 
-    superstep(
-        nontree.select(
-            _ekey(F.col("u"), F.col("v")).alias("ek"),
-            F.col("u").alias("ca"),
-            F.col("v").alias("cb"),
-        ),
-        climb,
-        max_rounds=2 * max_rounds,
-        until=lambda seen: seen["climbers"] == 0,
-        climbers=F.count(F.lit(1)),
-    ).unpersist()
+        def jump(lab: DataFrame) -> DataFrame:
+            return lab.join(
+                lab.select(F.col("id").alias("comp"), F.col("comp").alias("c2")),
+                "comp",
+            ).select("id", F.col("c2").alias("comp"), "old")
 
-    # the aux edges; releasing them releases every round's emissions
-    aux = bind_release(reduce(DataFrame.unionByName, emissions), *emissions)
-    auxsym = aux.select(F.col("ek").alias("x"), F.col("tek").alias("y")).unionByName(
-        aux.select(F.col("tek").alias("x"), F.col("ek").alias("y"))
-    )
-
-    def jump(lab: DataFrame) -> DataFrame:
-        return lab.join(
-            lab.select(F.col("id").alias("comp"), F.col("comp").alias("c2")),
-            "comp",
-        ).select("id", F.col("c2").alias("comp"), "old")
-
-    def merge(comp: DataFrame, rnd) -> DataFrame:
-        """Aux CC round: min-label gather + two pointer-doubling hops."""
-        comp = comp.select("id", "comp")
-        gathered = (
-            auxsym.join(comp.select(F.col("id").alias("x"), "comp"), "x")
-            .groupBy(F.col("y").alias("id"))
-            .agg(F.min("comp").alias("mn"))
-        )
-        return jump(jump(
-            comp.join(gathered, "id", "left").select(
-                "id",
-                F.least("comp", F.coalesce("mn", "comp")).alias("comp"),
-                F.col("comp").alias("old"),
+        def merge(comp: DataFrame, rnd) -> DataFrame:
+            """Aux CC round: min-label gather + two pointer-doubling hops."""
+            comp = comp.select("id", "comp")
+            gathered = (
+                auxsym.join(comp.select(F.col("id").alias("x"), "comp"), "x")
+                .groupBy(F.col("y").alias("id"))
+                .agg(F.min("comp").alias("mn"))
             )
-        ))
+            return jump(jump(
+                comp.join(gathered, "id", "left").select(
+                    "id",
+                    F.least("comp", F.coalesce("mn", "comp")).alias("comp"),
+                    F.col("comp").alias("old"),
+                )
+            ))
 
-    # every undirected edge is an aux node, labelled by its own key
-    ek = _ekey(F.col("u"), F.col("v"))
-    comp = superstep(
-        und.select(ek.alias("id"), ek.alias("comp")), merge,
-        max_rounds=max_rounds, changed=F.col("comp") != F.col("old"),
-    )
-    aux.unpersist()
-    npt.unpersist()
-    und.unpersist()
-    if own_cache:
-        graph.unpersist()
+        # every undirected edge is an aux node, labelled by its own key
+        ek = _ekey(F.col("u"), F.col("v"))
+        comp = superstep(
+            und.select(ek.alias("id"), ek.alias("comp")), merge,
+            max_rounds=max_rounds, changed=F.col("comp") != F.col("old"),
+        )
+        aux.unpersist()
+        npt.unpersist()
+        und.unpersist()
     # the edge key packs (u, v): min·2^31 + max
     return bind_release(
         comp.select(

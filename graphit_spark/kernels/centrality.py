@@ -36,30 +36,28 @@ def eigenvector_centrality(
 ) -> DataFrame:
     """Returns (id, ec) after `rounds` un-normalized power iterations,
     init ec = 1/n (eigenvector_centrality.gt:6)."""
-    own_cache = graph.ensure_persisted()
-    n = graph.num_vertices
+    with graph.persisted():
+        n = graph.num_vertices
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        sums = (
-            graph.edges.join(
-                state.select(F.col("id").alias("src"), "ec"), "src"
+        def step(state: DataFrame, rnd) -> DataFrame:
+            sums = (
+                graph.edges.join(
+                    state.select(F.col("id").alias("src"), "ec"), "src"
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("ec").alias("s"))
             )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("ec").alias("s"))
-        )
-        return (
-            graph.vertices()
-            .join(sums, "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("ec"))
-        )
+            return (
+                graph.vertices()
+                .join(sums, "id", "left")
+                .select("id", F.coalesce("s", F.lit(0.0)).alias("ec"))
+            )
 
-    state = superstep(
-        graph.vertices()
-        .withColumn("ec", F.lit(1.0 / n)),
-        step, rounds=rounds,
-    )
-    if own_cache:
-        graph.unpersist()
+        state = superstep(
+            graph.vertices()
+            .withColumn("ec", F.lit(1.0 / n)),
+            step, rounds=rounds,
+        )
     return state
 
 
@@ -86,34 +84,32 @@ def katz_centrality(
     round count the output is a finite polynomial in A, so the DuckDB
     twin reproduces it exactly up to the rounding contract.
     """
-    own_cache = graph.ensure_persisted()
-    def step(state: DataFrame, rnd) -> DataFrame:
-        sums = (
-            graph.edges.join(
-                state.select(F.col("id").alias("src"), "katz"), "src"
+    with graph.persisted():
+        def step(state: DataFrame, rnd) -> DataFrame:
+            sums = (
+                graph.edges.join(
+                    state.select(F.col("id").alias("src"), "katz"), "src"
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("katz").alias("s"))
             )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("katz").alias("s"))
-        )
-        return (
-            graph.vertices()
-            .join(sums, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(float(alpha)) * F.coalesce("s", F.lit(0.0))
-                    + F.lit(float(beta))
-                ).alias("katz"),
+            return (
+                graph.vertices()
+                .join(sums, "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.lit(float(alpha)) * F.coalesce("s", F.lit(0.0))
+                        + F.lit(float(beta))
+                    ).alias("katz"),
+                )
             )
-        )
 
-    state = superstep(
-        graph.vertices()
-        .withColumn("katz", F.lit(float(beta))),
-        step, rounds=rounds,
-    )
-    if own_cache:
-        graph.unpersist()
+        state = superstep(
+            graph.vertices()
+            .withColumn("katz", F.lit(float(beta))),
+            step, rounds=rounds,
+        )
     return state
 
 

@@ -34,55 +34,57 @@ def collaborative_filtering(
     """(id, latent: array<double>) after `iters` synchronous GD rounds."""
     if not graph.weighted:
         raise ValueError("cf requires a weighted (rating) edge table")
-    own_cache = graph.ensure_persisted()
-    edges = graph.edges  # (src, dst, weight)
+    with graph.persisted():
+        edges = graph.edges  # (src, dst, weight)
 
-    def gd_round(latent: DataFrame, rnd) -> DataFrame:
-        src_l = latent.select(F.col("id").alias("src"), F.col("latent").alias("l_src"))
-        dst_l = latent.select(F.col("id").alias("dst"), F.col("latent").alias("l_dst"))
-        est = F.aggregate(
-            F.zip_with("l_src", "l_dst", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        msgs = (
-            edges.join(src_l, "src")
-            .join(dst_l, "dst")
-            .withColumn("err", F.col("weight") - est)
-            .select(
-                F.col("dst").alias("id"),
-                F.transform("l_src", lambda x: x * F.col("err")).alias("ev"),
+        def gd_round(latent: DataFrame, rnd) -> DataFrame:
+            src_l = latent.select(
+                F.col("id").alias("src"), F.col("latent").alias("l_src")
             )
-        )
-        errv = msgs.groupBy("id").agg(
-            F.array(
-                *[F.sum(F.element_at("ev", i + 1)) for i in range(k)]
-            ).alias("errv")
-        )
-        return latent.join(errv, "id", "left").select(
-            "id",
-            F.when(
-                F.col("errv").isNull(),
-                F.transform(
-                    "latent", lambda x: x + F.lit(step) * (-F.lit(lam) * x)
-                ),
+            dst_l = latent.select(
+                F.col("id").alias("dst"), F.col("latent").alias("l_dst")
             )
-            .otherwise(
-                F.zip_with(
-                    "latent",
-                    "errv",
-                    lambda x, e: x + F.lit(step) * (-F.lit(lam) * x + e),
+            est = F.aggregate(
+                F.zip_with("l_src", "l_dst", lambda a, b: a * b),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            msgs = (
+                edges.join(src_l, "src")
+                .join(dst_l, "dst")
+                .withColumn("err", F.col("weight") - est)
+                .select(
+                    F.col("dst").alias("id"),
+                    F.transform("l_src", lambda x: x * F.col("err")).alias("ev"),
                 )
             )
-            .alias("latent"),
-        )
+            errv = msgs.groupBy("id").agg(
+                F.array(
+                    *[F.sum(F.element_at("ev", i + 1)) for i in range(k)]
+                ).alias("errv")
+            )
+            return latent.join(errv, "id", "left").select(
+                "id",
+                F.when(
+                    F.col("errv").isNull(),
+                    F.transform(
+                        "latent", lambda x: x + F.lit(step) * (-F.lit(lam) * x)
+                    ),
+                )
+                .otherwise(
+                    F.zip_with(
+                        "latent",
+                        "errv",
+                        lambda x, e: x + F.lit(step) * (-F.lit(lam) * x + e),
+                    )
+                )
+                .alias("latent"),
+            )
 
-    latent = superstep(
-        graph.vertices().select(
-            "id", F.array(*[F.lit(0.5) for _ in range(k)]).alias("latent")
-        ),
-        gd_round, rounds=iters,
-    )
-    if own_cache:
-        graph.unpersist()
+        latent = superstep(
+            graph.vertices().select(
+                "id", F.array(*[F.lit(0.5) for _ in range(k)]).alias("latent")
+            ),
+            gd_round, rounds=iters,
+        )
     return latent

@@ -56,66 +56,64 @@ def greedy_coloring(
     graph — adjacent vertices always get distinct colors, and color ids
     are dense smallest-first. Raises if the fixed round budget leaves
     vertices uncolored (see module docstring)."""
-    own_cache = graph.ensure_persisted()
-    sym = (
-        graph.symmetrize()
-        .edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .transform(fresh_checkpoint)
-    )
-    uncolored = F.col("color").isNull()
+    with graph.persisted():
+        sym = (
+            graph.symmetrize()
+            .edges.select("src", "dst")
+            .filter(F.col("src") != F.col("dst"))
+            .transform(fresh_checkpoint)
+        )
+        uncolored = F.col("color").isNull()
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        open_ = state.filter(uncolored)
-        nbr_min = (
-            sym.join(open_.select(F.col("id").alias("dst"), "pri"), "dst")
-            .join(open_.select(F.col("id").alias("src")), "src")
-            .groupBy("src")
-            .agg(F.min("pri").alias("mn"))
-            .withColumnRenamed("src", "id")
-        )
-        winners = (
-            open_.join(nbr_min, "id", "left")
-            .filter(F.col("mn").isNull() | (F.col("pri") < F.col("mn")))
-            .select("id")
-        )
-        used = (
-            sym.join(winners.withColumnRenamed("id", "src"), "src")
-            .join(
-                state.filter(~uncolored).select(
-                    F.col("id").alias("dst"), "color"
-                ),
-                "dst",
+        def step(state: DataFrame, rnd) -> DataFrame:
+            open_ = state.filter(uncolored)
+            nbr_min = (
+                sym.join(open_.select(F.col("id").alias("dst"), "pri"), "dst")
+                .join(open_.select(F.col("id").alias("src")), "src")
+                .groupBy("src")
+                .agg(F.min("pri").alias("mn"))
+                .withColumnRenamed("src", "id")
             )
-            .select(F.col("src").alias("id"), "color")
-            .distinct()
-        )
-        cand = winners.select(
-            "id", F.lit(0).cast("long").alias("x")
-        ).unionByName(used.select("id", (F.col("color") + 1).alias("x")))
-        new = (
-            cand.join(
-                used,
-                (cand["id"] == used["id"]) & (cand["x"] == used["color"]),
-                "left_anti",
+            winners = (
+                open_.join(nbr_min, "id", "left")
+                .filter(F.col("mn").isNull() | (F.col("pri") < F.col("mn")))
+                .select("id")
             )
-            .groupBy("id")
-            .agg(F.min("x").alias("new"))
-        )
-        return state.join(new, "id", "left").select(
-            "id", "pri", F.coalesce("color", "new").alias("color")
-        )
+            used = (
+                sym.join(winners.withColumnRenamed("id", "src"), "src")
+                .join(
+                    state.filter(~uncolored).select(
+                        F.col("id").alias("dst"), "color"
+                    ),
+                    "dst",
+                )
+                .select(F.col("src").alias("id"), "color")
+                .distinct()
+            )
+            cand = winners.select(
+                "id", F.lit(0).cast("long").alias("x")
+            ).unionByName(used.select("id", (F.col("color") + 1).alias("x")))
+            new = (
+                cand.join(
+                    used,
+                    (cand["id"] == used["id"]) & (cand["x"] == used["color"]),
+                    "left_anti",
+                )
+                .groupBy("id")
+                .agg(F.min("x").alias("new"))
+            )
+            return state.join(new, "id", "left").select(
+                "id", "pri", F.coalesce("color", "new").alias("color")
+            )
 
-    # the uncolored count rides each round's checkpoint job
-    state = superstep(
-        graph.vertices().select(
-            "id", _priority_col().alias("pri"),
-            F.lit(None).cast("long").alias("color"),
-        ),
-        step, max_rounds=rounds, until=lambda seen: seen["left"] == 0,
-        left=F.count(F.when(uncolored, 1)),
-    )
-    sym.unpersist()
-    if own_cache:
-        graph.unpersist()
+        # the uncolored count rides each round's checkpoint job
+        state = superstep(
+            graph.vertices().select(
+                "id", _priority_col().alias("pri"),
+                F.lit(None).cast("long").alias("color"),
+            ),
+            step, max_rounds=rounds, until=lambda seen: seen["left"] == 0,
+            left=F.count(F.when(uncolored, 1)),
+        )
+        sym.unpersist()
     return bind_release(state.select("id", "color"), state)

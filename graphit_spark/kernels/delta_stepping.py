@@ -124,36 +124,33 @@ def sssp_delta_stepping(
     argument as BFS/SSSP)."""
     if not graph.weighted:
         raise ValueError("delta-stepping requires a weighted graph")
-    own_cache = graph.ensure_persisted()
-
-    bucket, start = 0, 0
-    if resume and store is not None and store.latest() is not None:
-        it = store.latest()
-        dist = store.read(graph.spark, it).select("id", "dist")
-        bucket = (store.manifest(it).get("metrics") or {}).get("bucket", 0)
-        start = it + 1
-    else:
-        dist = graph.vertices().select(
-            "id",
-            F.when(F.col("id") == source, F.lit(0).cast("long")).alias(
-                "dist"
-            ),
-        )
-    if bucket is not None:  # else the snapshot's queue was exhausted
-        step, next_bucket, aggs = bucket_relaxation(
-            graph.edges, delta, F.col("dist"), bucket
-        )
-        dist = superstep(
-            dist, step, rounds=max_rounds, start=start,
-            until=lambda seen: next_bucket(seen) is None,
-            materialize=None if store is None else (
-                lambda df, rnd, seen: store.write(df, rnd.index, {
-                    "kernel": "sssp_delta_stepping",
-                    "bucket": lambda: next_bucket(seen),
-                })
-            ),
-            **aggs,
-        )
-    if own_cache:
-        graph.unpersist()
+    with graph.persisted():
+        bucket, start = 0, 0
+        if resume and store is not None and store.latest() is not None:
+            it = store.latest()
+            dist = store.read(graph.spark, it).select("id", "dist")
+            bucket = (store.manifest(it).get("metrics") or {}).get("bucket", 0)
+            start = it + 1
+        else:
+            dist = graph.vertices().select(
+                "id",
+                F.when(F.col("id") == source, F.lit(0).cast("long")).alias(
+                    "dist"
+                ),
+            )
+        if bucket is not None:  # else the snapshot's queue was exhausted
+            step, next_bucket, aggs = bucket_relaxation(
+                graph.edges, delta, F.col("dist"), bucket
+            )
+            dist = superstep(
+                dist, step, rounds=max_rounds, start=start,
+                until=lambda seen: next_bucket(seen) is None,
+                materialize=None if store is None else (
+                    lambda df, rnd, seen: store.write(df, rnd.index, {
+                        "kernel": "sssp_delta_stepping",
+                        "bucket": lambda: next_bucket(seen),
+                    })
+                ),
+                **aggs,
+            )
     return dist

@@ -46,48 +46,45 @@ def densest_subgraph(
     index and the 6-dp-rounded density on every row.
     """
     g = graph.symmetrize()
-    own_cache = g.ensure_persisted()
+    with g.persisted():
+        def peel(state: DataFrame, rnd) -> DataFrame:
+            """Round r: peel with the previous round's n and m (none in
+            round 0), then degrees within the survivors; a vertex peeled
+            here gets gone = r, so prefix r is {gone is null or gone > r}."""
+            if rnd.seen is not None:
+                n, m = rnd.seen["n"], rnd.seen["m2"] // 2
+                # integer-exact peel: survive iff deg > 3 * density
+                peeled = F.col("gone").isNull() & (
+                    F.col("d") * F.lit(n) <= F.lit(3 * m)
+                )
+                state = state.select(
+                    "id",
+                    F.when(peeled, F.lit(rnd.index)).otherwise(F.col("gone"))
+                    .alias("gone"),
+                )
+            keep = state.filter(F.col("gone").isNull()).select("id")
+            deg = (
+                g.edges.join(
+                    keep.select(F.col("id").alias("src")), "src", "left_semi"
+                )
+                .join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.count("*").alias("d"))
+            )
+            return state.select("id", "gone").join(deg, "id", "left").select(
+                "id", "gone", F.coalesce("d", F.lit(0)).alias("d")
+            )
 
-    def peel(state: DataFrame, rnd) -> DataFrame:
-        """Round r: peel with the previous round's n and m (none in
-        round 0), then degrees within the survivors; a vertex peeled
-        here gets gone = r, so prefix r is {gone is null or gone > r}."""
-        if rnd.seen is not None:
-            n, m = rnd.seen["n"], rnd.seen["m2"] // 2
-            # integer-exact peel: survive iff deg > 3 * density
-            peeled = F.col("gone").isNull() & (
-                F.col("d") * F.lit(n) <= F.lit(3 * m)
-            )
-            state = state.select(
-                "id",
-                F.when(peeled, F.lit(rnd.index)).otherwise(F.col("gone"))
-                .alias("gone"),
-            )
-        keep = state.filter(F.col("gone").isNull()).select("id")
-        deg = (
-            g.edges.join(
-                keep.select(F.col("id").alias("src")), "src", "left_semi"
-            )
-            .join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.count("*").alias("d"))
+        log: list = []
+        alive = F.col("gone").isNull()
+        state = superstep(
+            graph.vertices().select("id", F.lit(None).cast("long").alias("gone")),
+            peel,
+            rounds=max_rounds + 1, checkpoint_start=False, log=log,
+            until=lambda seen: seen["n"] == 0 or seen["m2"] == 0,
+            n=F.count(F.when(alive, 1)),
+            m2=F.sum(F.when(alive, F.col("d"))),  # sym holds both directions
         )
-        return state.select("id", "gone").join(deg, "id", "left").select(
-            "id", "gone", F.coalesce("d", F.lit(0)).alias("d")
-        )
-
-    log: list = []
-    alive = F.col("gone").isNull()
-    state = superstep(
-        graph.vertices().select("id", F.lit(None).cast("long").alias("gone")),
-        peel,
-        rounds=max_rounds + 1, checkpoint_start=False, log=log,
-        until=lambda seen: seen["n"] == 0 or seen["m2"] == 0,
-        n=F.count(F.when(alive, 1)),
-        m2=F.sum(F.when(alive, F.col("d"))),  # sym holds both directions
-    )
-    if own_cache:
-        g.unpersist()
     # densest round: compare m/n as exact fractions (no float), ties to
     # the earliest round — a pure driver scalar pass over <= max_rounds
     # observed pairs, never data-sized

@@ -38,46 +38,44 @@ def ego_subgraph(
         raise ValueError("hops must be >= 0")
     if not seeds:
         raise ValueError("seeds must be non-empty")
-    own_cache = graph.ensure_persisted()
-    seeds = sorted({int(s) for s in seeds})
-    # explicit broadcast while the frontier is provably tiny (ego balls
-    # usually are); past the bound, fall back to a shuffle semi-join —
-    # the bfs-style scale path for runaway hub balls.
-    broadcast_bound = 1_000_000
+    with graph.persisted():
+        seeds = sorted({int(s) for s in seeds})
+        # explicit broadcast while the frontier is provably tiny (ego balls
+        # usually are); past the bound, fall back to a shuffle semi-join —
+        # the bfs-style scale path for runaway hub balls.
+        broadcast_bound = 1_000_000
 
-    def expand(reach: DataFrame, rnd) -> DataFrame:
-        """Reached set (id, front): front marks the last hop's vertices."""
-        f_src = reach.filter("front").select(F.col("id").alias("src"))
-        size = len(seeds) if rnd.seen is None else rnd.seen["changed"]
-        if size <= broadcast_bound:
-            f_src = F.broadcast(f_src)
-        nxt = (
-            graph.edges.join(f_src, "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(reach, "id", "left_anti")
-        )
-        return reach.withColumn("front", F.lit(False)).unionByName(
-            nxt.withColumn("front", F.lit(True))
-        )
+        def expand(reach: DataFrame, rnd) -> DataFrame:
+            """Reached set (id, front): front marks the last hop's vertices."""
+            f_src = reach.filter("front").select(F.col("id").alias("src"))
+            size = len(seeds) if rnd.seen is None else rnd.seen["changed"]
+            if size <= broadcast_bound:
+                f_src = F.broadcast(f_src)
+            nxt = (
+                graph.edges.join(f_src, "src", "left_semi")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(reach, "id", "left_anti")
+            )
+            return reach.withColumn("front", F.lit(False)).unionByName(
+                nxt.withColumn("front", F.lit(True))
+            )
 
-    reach = superstep(
-        local_frame(
-            graph.spark, [(s, True) for s in seeds], "id long, front boolean"
-        ),
-        expand,
-        rounds=hops, checkpoint_start=False, changed=F.col("front"),
-    )
-    out = fresh_checkpoint(
-        graph.edges.join(
-            reach.select(F.col("id").alias("src")), "src", "left_semi"
+        reach = superstep(
+            local_frame(
+                graph.spark, [(s, True) for s in seeds], "id long, front boolean"
+            ),
+            expand,
+            rounds=hops, checkpoint_start=False, changed=F.col("front"),
         )
-        .join(reach.select(F.col("id").alias("dst")), "dst", "left_semi")
-        .select("src", "dst")
-    )
-    reach.unpersist()
-    if own_cache:
-        graph.unpersist()
+        out = fresh_checkpoint(
+            graph.edges.join(
+                reach.select(F.col("id").alias("src")), "src", "left_semi"
+            )
+            .join(reach.select(F.col("id").alias("dst")), "dst", "left_semi")
+            .select("src", "dst")
+        )
+        reach.unpersist()
     return out
 
 
@@ -112,45 +110,42 @@ def sample_fanout(
         raise ValueError("fanouts must be >= 1")
     from pyspark.sql import Window
 
-    own_cache = graph.ensure_persisted()
-
-    def layer(frontier: DataFrame, hop: int, f: int) -> DataFrame:
-        e = graph.edges.join(
-            frontier.select(F.col("id").alias("src")), "src", "left_semi"
+    with graph.persisted():
+        def layer(frontier: DataFrame, hop: int, f: int) -> DataFrame:
+            e = graph.edges.join(
+                frontier.select(F.col("id").alias("src")), "src", "left_semi"
+            )
+            hk = F.md5(
+                F.concat_ws(
+                    "_",
+                    F.col("src").cast("string"),
+                    F.col("dst").cast("string"),
+                    F.lit(hop).cast("string"),
+                    F.lit(seed).cast("string"),
+                ).cast("binary")
+            )
+            rn = F.row_number().over(
+                Window.partitionBy("src").orderBy(hk.asc())
+            )
+            return (
+                e.select("src", "dst", rn.alias("rn"))
+                .filter(F.col("rn") <= f)
+                .select("src", "dst")
+            )
+        s1 = layer(seeds, 1, fanout1).transform(fresh_checkpoint)
+        front2 = s1.select(F.col("dst").alias("id")).distinct()
+        s2 = layer(front2, 2, fanout2).transform(fresh_checkpoint)
+        hop1 = s1.select(
+            F.col("src").alias("root"), "src", "dst",
+            F.lit(1).cast("long").alias("hop"),
         )
-        hk = F.md5(
-            F.concat_ws(
-                "_",
-                F.col("src").cast("string"),
-                F.col("dst").cast("string"),
-                F.lit(hop).cast("string"),
-                F.lit(seed).cast("string"),
-            ).cast("binary")
+        hop2 = (
+            s1.select(F.col("src").alias("root"), F.col("dst").alias("mid"))
+            .join(s2.select(F.col("src").alias("mid"), "dst"), "mid")
+            .select(
+                "root", F.col("mid").alias("src"), "dst",
+                F.lit(2).cast("long").alias("hop"),
+            )
         )
-        rn = F.row_number().over(
-            Window.partitionBy("src").orderBy(hk.asc())
-        )
-        return (
-            e.select("src", "dst", rn.alias("rn"))
-            .filter(F.col("rn") <= f)
-            .select("src", "dst")
-        )
-    s1 = layer(seeds, 1, fanout1).transform(fresh_checkpoint)
-    front2 = s1.select(F.col("dst").alias("id")).distinct()
-    s2 = layer(front2, 2, fanout2).transform(fresh_checkpoint)
-    hop1 = s1.select(
-        F.col("src").alias("root"), "src", "dst",
-        F.lit(1).cast("long").alias("hop"),
-    )
-    hop2 = (
-        s1.select(F.col("src").alias("root"), F.col("dst").alias("mid"))
-        .join(s2.select(F.col("src").alias("mid"), "dst"), "mid")
-        .select(
-            "root", F.col("mid").alias("src"), "dst",
-            F.lit(2).cast("long").alias("hop"),
-        )
-    )
-    out = hop1.unionByName(hop2)
-    if own_cache:
-        graph.unpersist()  # s1/s2 are checkpointed; out derives from them
+        out = hop1.unionByName(hop2)
     return out

@@ -34,41 +34,39 @@ def fused_pr_eigenvector(
     reason as kernels/pagerank.py — messages are only evaluated through
     the edge join, and every edge src has out_degree ≥ 1.
     """
-    own_cache = graph.ensure_persisted()
-    n = graph.num_vertices
-    beta = (1.0 - damp) / n
+    with graph.persisted():
+        n = graph.num_vertices
+        beta = (1.0 - damp) / n
 
-    hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
+        hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        gathered = fused_gather(
-            graph.edges,
-            state,
-            {
-                "pr_acc": F.col("rank") / F.col("out_degree"),
-                "ec_acc": F.col("ec"),
-            },
-            hint=hint,
+        def step(state: DataFrame, rnd) -> DataFrame:
+            gathered = fused_gather(
+                graph.edges,
+                state,
+                {
+                    "pr_acc": F.col("rank") / F.col("out_degree"),
+                    "ec_acc": F.col("ec"),
+                },
+                hint=hint,
+            )
+            return state.join(gathered, "id", "left").select(
+                "id",
+                "out_degree",
+                (
+                    F.lit(beta)
+                    + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
+                ).alias("rank"),
+                F.coalesce("ec_acc", F.lit(0.0)).alias("ec"),
+            )
+
+        state = superstep(
+            graph.out_degrees()
+            .withColumn("rank", F.lit(1.0 / n))
+            .withColumn("ec", F.lit(1.0 / n)),
+            step, rounds=rounds,
         )
-        return state.join(gathered, "id", "left").select(
-            "id",
-            "out_degree",
-            (
-                F.lit(beta)
-                + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
-            ).alias("rank"),
-            F.coalesce("ec_acc", F.lit(0.0)).alias("ec"),
-        )
-
-    state = superstep(
-        graph.out_degrees()
-        .withColumn("rank", F.lit(1.0 / n))
-        .withColumn("ec", F.lit(1.0 / n)),
-        step, rounds=rounds,
-    )
-    result = bind_release(state.select("id", "rank", "ec"), state)
-    if own_cache:
-        graph.unpersist()
+        result = bind_release(state.select("id", "rank", "ec"), state)
     return result
 
 
@@ -106,63 +104,61 @@ def fused_trust_spam(
         F.when(F.col("id").isin(seed_ids), F.lit(seed_mass))
         .otherwise(F.lit(0.0))
     )
-    own_cache = graph.ensure_persisted()
-    n = graph.num_vertices
-    pr_beta = (1.0 - damp) / n
-    tr_beta = 1.0 - damp
+    with graph.persisted():
+        n = graph.num_vertices
+        pr_beta = (1.0 - damp) / n
+        tr_beta = 1.0 - damp
 
-    wdeg = (
-        graph.vertices()
-        .join(
-            graph.edges.groupBy(F.col("src").alias("id")).agg(
-                F.sum("weight").alias("out_w")
+        wdeg = (
+            graph.vertices()
+            .join(
+                graph.edges.groupBy(F.col("src").alias("id")).agg(
+                    F.sum("weight").alias("out_w")
+                ),
+                "id",
+                "left",
+            )
+            .select("id", F.coalesce("out_w", F.lit(0)).alias("out_w"))
+        )
+        hint = "shuffle_hash" if n > 500_000 else None
+
+        def step(state: DataFrame, rnd) -> DataFrame:
+            gathered = fused_gather(
+                graph.edges,
+                state.filter(F.col("out_w") > 0),
+                {
+                    "pr_acc": F.col("rank") / F.col("out_w") * F.col("weight"),
+                    "tr_acc": F.col("trust") / F.col("out_w") * F.col("weight"),
+                },
+                hint=hint,
+            )
+            return state.join(gathered, "id", "left").select(
+                "id",
+                "out_w",
+                (
+                    F.lit(pr_beta)
+                    + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
+                ).alias("rank"),
+                (
+                    F.lit(tr_beta) * seed
+                    + F.lit(damp) * F.coalesce("tr_acc", F.lit(0.0))
+                ).alias("trust"),
+            )
+
+        state = superstep(
+            wdeg.withColumn("rank", F.lit(1.0 / n))
+            .withColumn("trust", seed),
+            step, rounds=rounds,
+        )
+        result = bind_release(
+            state.select(
+                "id",
+                "rank",
+                "trust",
+                ((F.col("rank") - F.col("trust")) / F.col("rank")).alias(
+                    "spam_mass"
+                ),
             ),
-            "id",
-            "left",
+            state,
         )
-        .select("id", F.coalesce("out_w", F.lit(0)).alias("out_w"))
-    )
-    hint = "shuffle_hash" if n > 500_000 else None
-
-    def step(state: DataFrame, rnd) -> DataFrame:
-        gathered = fused_gather(
-            graph.edges,
-            state.filter(F.col("out_w") > 0),
-            {
-                "pr_acc": F.col("rank") / F.col("out_w") * F.col("weight"),
-                "tr_acc": F.col("trust") / F.col("out_w") * F.col("weight"),
-            },
-            hint=hint,
-        )
-        return state.join(gathered, "id", "left").select(
-            "id",
-            "out_w",
-            (
-                F.lit(pr_beta)
-                + F.lit(damp) * F.coalesce("pr_acc", F.lit(0.0))
-            ).alias("rank"),
-            (
-                F.lit(tr_beta) * seed
-                + F.lit(damp) * F.coalesce("tr_acc", F.lit(0.0))
-            ).alias("trust"),
-        )
-
-    state = superstep(
-        wdeg.withColumn("rank", F.lit(1.0 / n))
-        .withColumn("trust", seed),
-        step, rounds=rounds,
-    )
-    result = bind_release(
-        state.select(
-            "id",
-            "rank",
-            "trust",
-            ((F.col("rank") - F.col("trust")) / F.col("rank")).alias(
-                "spam_mass"
-            ),
-        ),
-        state,
-    )
-    if own_cache:
-        graph.unpersist()
     return result

@@ -37,47 +37,45 @@ def hits(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
     iterations from hub = auth = 1.0. An edgeless graph collapses to
     all-zero scores after one round (the zero-sum guard only prevents
     division by zero; the SQL twin does the same)."""
-    own_cache = graph.ensure_persisted()
-    verts = graph.vertices()
+    with graph.persisted():
+        verts = graph.vertices()
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        auth_raw = rnd.checkpoint(
-            verts.join(
-                graph.edges.join(
-                    state.select(F.col("id").alias("src"), "hub"), "src"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("hub").alias("a")),
-                "id",
-                "left",
-            ).select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
-        )
-        s_a = auth_raw.agg(F.sum("a")).collect()[0][0] or 1.0
-        auth = auth_raw.select("id", (F.col("a") / F.lit(s_a)).alias("auth"))
-        hub_raw = rnd.checkpoint(
-            verts.join(
-                graph.edges.join(
-                    auth.select(F.col("id").alias("dst"), "auth"), "dst"
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("auth").alias("h")),
-                "id",
-                "left",
-            ).select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
-        )
-        s_h = hub_raw.agg(F.sum("h")).collect()[0][0] or 1.0
-        return (
-            hub_raw.select("id", (F.col("h") / F.lit(s_h)).alias("hub"))
-            .join(auth, "id")
-            .select("id", "hub", "auth")
-        )
+        def step(state: DataFrame, rnd) -> DataFrame:
+            auth_raw = rnd.checkpoint(
+                verts.join(
+                    graph.edges.join(
+                        state.select(F.col("id").alias("src"), "hub"), "src"
+                    )
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum("hub").alias("a")),
+                    "id",
+                    "left",
+                ).select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
+            )
+            s_a = auth_raw.agg(F.sum("a")).collect()[0][0] or 1.0
+            auth = auth_raw.select("id", (F.col("a") / F.lit(s_a)).alias("auth"))
+            hub_raw = rnd.checkpoint(
+                verts.join(
+                    graph.edges.join(
+                        auth.select(F.col("id").alias("dst"), "auth"), "dst"
+                    )
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.sum("auth").alias("h")),
+                    "id",
+                    "left",
+                ).select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
+            )
+            s_h = hub_raw.agg(F.sum("h")).collect()[0][0] or 1.0
+            return (
+                hub_raw.select("id", (F.col("h") / F.lit(s_h)).alias("hub"))
+                .join(auth, "id")
+                .select("id", "hub", "auth")
+            )
 
-    state = superstep(
-        verts.select(
-            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-        ),
-        step, rounds=rounds,
-    )
-    if own_cache:
-        graph.unpersist()
+        state = superstep(
+            verts.select(
+                "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+            ),
+            step, rounds=rounds,
+        )
     return state

@@ -273,21 +273,19 @@ def hyperball_harmonic(
     are no-ops on the result, pinned against ``systolic=False`` in
     tests.
     """
-    own_cache = graph.ensure_persisted()
-    state = _grow(
-        graph, _init_state(graph, p), p, rounds,
-        _pick_join_strategy(graph, join_strategy), systolic,
-    )
-    out = bind_release(
-        state.select(
-            "id",
-            F.col("est").alias("ball"),
-            F.col("harm").alias("harmonic"),
-        ),
-        state,
-    )
-    if own_cache:
-        graph.unpersist()
+    with graph.persisted():
+        state = _grow(
+            graph, _init_state(graph, p), p, rounds,
+            _pick_join_strategy(graph, join_strategy), systolic,
+        )
+        out = bind_release(
+            state.select(
+                "id",
+                F.col("est").alias("ball"),
+                F.col("harm").alias("harmonic"),
+            ),
+            state,
+        )
     return out
 
 
@@ -317,23 +315,21 @@ def neighborhood_function(
     The per-round sum rides the round's checkpoint job as an observed
     aggregate (the pagerank error-norm discipline); the per-round state
     handling is exactly hyperball_harmonic's."""
-    own_cache = graph.ensure_persisted()
-    scale = F.lit(float(10**NF_SCALE))
-    spark = graph.edges.sparkSession
-    est_sum = F.sum(F.floor(F.col("est") * scale))
-    state, seen = observe(_init_state(graph, p), s=est_sum)
-    log: list = []
-    state = _grow(
-        graph, state, p, rounds,
-        _pick_join_strategy(graph, join_strategy), systolic, log, s=est_sum,
-    )
-    sums = [int(s["s"]) for s in [seen, *log]]
-    # past an early stop N(r) is at its fixpoint: every remaining round
-    # repeats the same integer sum
-    sums += sums[-1:] * (rounds + 1 - len(sums))
-    state.unpersist()
-    if own_cache:
-        graph.unpersist()
+    with graph.persisted():
+        scale = F.lit(float(10**NF_SCALE))
+        spark = graph.edges.sparkSession
+        est_sum = F.sum(F.floor(F.col("est") * scale))
+        state, seen = observe(_init_state(graph, p), s=est_sum)
+        log: list = []
+        state = _grow(
+            graph, state, p, rounds,
+            _pick_join_strategy(graph, join_strategy), systolic, log, s=est_sum,
+        )
+        sums = [int(s["s"]) for s in [seen, *log]]
+        # past an early stop N(r) is at its fixpoint: every remaining round
+        # repeats the same integer sum
+        sums += sums[-1:] * (rounds + 1 - len(sums))
+        state.unpersist()
     out = local_frame(spark, list(enumerate(sums)), "r INT, pairs_scaled LONG")
     return out.select(
         "r", (F.col("pairs_scaled") / scale).alias("pairs")

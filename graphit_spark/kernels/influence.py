@@ -56,66 +56,63 @@ def influence_max(
     chosen seed per round with its pre-selection discount score.
     """
     und = graph.symmetrize()
-    own_cache = und.ensure_persisted()
-
-    deg = und.edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("d")
-    )
-    dd_col = (
-        F.col("d").cast("double")
-        - 2.0 * F.col("t")
-        - (F.col("d") - F.col("t")) * F.col("t") * F.lit(float(p))
-    )
-    # the argmax over unchosen vertices; null (observed as 0) once none
-    # is left
-    best = F.max(
-        F.when(
-            F.col("round").isNull(),
-            F.struct(dd_col.alias("dd"), (-F.col("id")).alias("nid")),
+    with und.persisted():
+        deg = und.edges.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("d")
         )
-    )
-    state, first = counted_checkpoint(
-        und.vertices()
-        .join(deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("d", F.lit(0)).cast("long").alias("d"),
-            F.lit(0).cast("long").alias("t"),
-            F.lit(None).cast("int").alias("round"),
-            F.lit(None).cast("double").alias("dd"),
-        ),
-        best=best,
-    )
-
-    def choose(state: DataFrame, rnd) -> DataFrame:
-        """Seed rnd.index + 1 is the observed argmax; bump ``t`` for its
-        neighbors."""
-        top = (first if rnd.seen is None else rnd.seen)["best"]
-        seed = -int(top["nid"])
-        nbrs = und.edges.filter(F.col("src") == seed).select(
-            F.col("dst").alias("id"), F.lit(1).alias("inc")
+        dd_col = (
+            F.col("d").cast("double")
+            - 2.0 * F.col("t")
+            - (F.col("d") - F.col("t")) * F.col("t") * F.lit(float(p))
         )
-        is_seed = F.col("id") == seed
-        return state.join(nbrs, "id", "left").select(
-            "id",
-            "d",
-            (F.col("t") + F.coalesce("inc", F.lit(0))).alias("t"),
-            F.when(is_seed, F.lit(rnd.index + 1)).otherwise(F.col("round"))
-            .alias("round"),
-            F.when(is_seed, F.lit(round(float(top["dd"]), 6)))
-            .otherwise(F.col("dd"))
-            .alias("dd"),
+        # the argmax over unchosen vertices; null (observed as 0) once none
+        # is left
+        best = F.max(
+            F.when(
+                F.col("round").isNull(),
+                F.struct(dd_col.alias("dd"), (-F.col("id")).alias("nid")),
+            )
+        )
+        state, first = counted_checkpoint(
+            und.vertices()
+            .join(deg, "id", "left")
+            .select(
+                "id",
+                F.coalesce("d", F.lit(0)).cast("long").alias("d"),
+                F.lit(0).cast("long").alias("t"),
+                F.lit(None).cast("int").alias("round"),
+                F.lit(None).cast("double").alias("dd"),
+            ),
+            best=best,
         )
 
-    if first["rows"]:  # an empty graph has no seed to pick
-        # fewer than k vertices: stop once none is left unchosen
-        state = superstep(
-            state, choose,
-            rounds=k, checkpoint_start=False,
-            until=lambda seen: not seen["best"], best=best,
-        )
-    if own_cache:
-        und.unpersist()
+        def choose(state: DataFrame, rnd) -> DataFrame:
+            """Seed rnd.index + 1 is the observed argmax; bump ``t`` for its
+            neighbors."""
+            top = (first if rnd.seen is None else rnd.seen)["best"]
+            seed = -int(top["nid"])
+            nbrs = und.edges.filter(F.col("src") == seed).select(
+                F.col("dst").alias("id"), F.lit(1).alias("inc")
+            )
+            is_seed = F.col("id") == seed
+            return state.join(nbrs, "id", "left").select(
+                "id",
+                "d",
+                (F.col("t") + F.coalesce("inc", F.lit(0))).alias("t"),
+                F.when(is_seed, F.lit(rnd.index + 1)).otherwise(F.col("round"))
+                .alias("round"),
+                F.when(is_seed, F.lit(round(float(top["dd"]), 6)))
+                .otherwise(F.col("dd"))
+                .alias("dd"),
+            )
+
+        if first["rows"]:  # an empty graph has no seed to pick
+            # fewer than k vertices: stop once none is left unchosen
+            state = superstep(
+                state, choose,
+                rounds=k, checkpoint_start=False,
+                until=lambda seen: not seen["best"], best=best,
+            )
     return bind_release(
         state.filter(F.col("round").isNotNull()).select(
             F.col("id").alias("seed"), "round", "dd"

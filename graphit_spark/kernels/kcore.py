@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
 from graphit_spark.plans.state import (
-    bind_release, fresh_checkpoint, observe, superstep,
+    bind_release, fresh_checkpoint, observe, release_on_raise, superstep,
 )
 
 
@@ -25,27 +25,24 @@ def k_core(graph: LinkGraph, k: int, *, max_rounds: int = 100) -> DataFrame:
     with >= k neighbors inside the core. ``max_rounds`` is a safety net:
     a peel still dropping vertices when it runs out raises."""
     g = graph.symmetrize()
-    own_cache = g.ensure_persisted()
+    with g.persisted():
+        def step(keep: DataFrame, rnd) -> DataFrame:
+            alive = g.edges.join(
+                keep.select(F.col("id").alias("src")), "src", "left_semi"
+            ).join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
+            deg = alive.groupBy(F.col("src").alias("id")).agg(
+                F.count("*").alias("d")
+            )
+            # the dropped vertices are counted before the filter drops them
+            scored = rnd.observe(
+                keep.join(deg, "id", "left")
+                .select("id", F.coalesce("d", F.lit(0)).alias("d"))
+            )
+            return scored.filter(F.col("d") >= k).select("id")
 
-    def step(keep: DataFrame, rnd) -> DataFrame:
-        alive = g.edges.join(
-            keep.select(F.col("id").alias("src")), "src", "left_semi"
-        ).join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
-        deg = alive.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").alias("d")
+        keep = superstep(
+            graph.vertices(), step, max_rounds=max_rounds, changed=F.col("d") < k
         )
-        # the dropped vertices are counted before the filter drops them
-        scored = rnd.observe(
-            keep.join(deg, "id", "left")
-            .select("id", F.coalesce("d", F.lit(0)).alias("d"))
-        )
-        return scored.filter(F.col("d") >= k).select("id")
-
-    keep = superstep(
-        graph.vertices(), step, max_rounds=max_rounds, changed=F.col("d") < k
-    )
-    if own_cache:
-        g.unpersist()
     return keep
 
 
@@ -69,57 +66,55 @@ def core_decomposition(
     drains, then moves to the next bucket. Returns (id, core).
     """
     g = graph.symmetrize()
-    own_cache = g.ensure_persisted()
-
-    # universe from the ORIGINAL graph: the symmetrized copy re-derives
-    # num_vertices from its squished edges, which loses isolated ids
-    # whose only raw edges were self-loops (FindMaxNodeID runs on the
-    # RAW list, builder.h:210)
-    sym_deg = g.edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("sd")
-    )
-    # the first bucket rides the starting checkpoint job
-    state, first = observe(
-        graph.vertices()
-        .join(sym_deg, "id", "left")
-        .select("id", F.coalesce("sd", F.lit(0)).cast("long").alias("d")),
-        k=F.min("d"),
-    )
-    state = fresh_checkpoint(state)
-    cores: list[DataFrame] = []
-
-    def step(state: DataFrame, rnd) -> DataFrame:
-        k = (first if rnd.seen is None else rnd.seen)["k"]
-        peeled = (
-            state.filter(F.col("d") <= k)
-            .select("id", F.lit(k).cast("long").alias("core"))
-            .transform(fresh_checkpoint)
+    with g.persisted():
+        # universe from the ORIGINAL graph: the symmetrized copy re-derives
+        # num_vertices from its squished edges, which loses isolated ids
+        # whose only raw edges were self-loops (FindMaxNodeID runs on the
+        # RAW list, builder.h:210)
+        sym_deg = g.edges.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("sd")
         )
-        cores.append(peeled)
-        dec = (
-            g.edges.join(
-                peeled.select(F.col("id").alias("src")), "src", "left_semi"
+        # the first bucket rides the starting checkpoint job
+        state, first = observe(
+            graph.vertices()
+            .join(sym_deg, "id", "left")
+            .select("id", F.coalesce("sd", F.lit(0)).cast("long").alias("d")),
+            k=F.min("d"),
+        )
+        state = fresh_checkpoint(state)
+        cores: list[DataFrame] = []
+
+        def step(state: DataFrame, rnd) -> DataFrame:
+            k = (first if rnd.seen is None else rnd.seen)["k"]
+            peeled = (
+                state.filter(F.col("d") <= k)
+                .select("id", F.lit(k).cast("long").alias("core"))
+                .transform(fresh_checkpoint)
             )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.count("*").alias("dec"))
-        )
-        return (
-            state.join(peeled, "id", "left_anti")
-            .join(dec, "id", "left")
-            .select(
-                "id",
-                F.greatest(
-                    F.col("d") - F.coalesce("dec", F.lit(0)), F.lit(k)
-                ).alias("d"),
+            cores.append(peeled)
+            dec = (
+                g.edges.join(
+                    peeled.select(F.col("id").alias("src")), "src", "left_semi"
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.count("*").alias("dec"))
             )
-        )
+            return (
+                state.join(peeled, "id", "left_anti")
+                .join(dec, "id", "left")
+                .select(
+                    "id",
+                    F.greatest(
+                        F.col("d") - F.coalesce("dec", F.lit(0)), F.lit(k)
+                    ).alias("d"),
+                )
+            )
 
-    # pq.finished(): everything dequeued (an empty graph peels nothing)
-    superstep(
-        state, step, max_rounds=max_rounds, checkpoint_start=False,
-        until=lambda seen: seen["rows"] == 0,
-        rows=F.count(F.lit(1)), k=F.min("d"),
-    ).unpersist()
-    if own_cache:
-        g.unpersist()
+        # pq.finished(): everything dequeued (an empty graph peels nothing)
+        with release_on_raise(cores):
+            superstep(
+                state, step, max_rounds=max_rounds, checkpoint_start=False,
+                until=lambda seen: seen["rows"] == 0,
+                rows=F.count(F.lit(1)), k=F.min("d"),
+            ).unpersist()
     return bind_release(reduce(DataFrame.unionByName, cores), *cores)

@@ -44,42 +44,39 @@ def label_propagation(
     recurrence, so replaying from round k is byte-identical to an
     uninterrupted run (integer argmax, no float wobble)."""
     g = graph.symmetrize() if symmetrize else graph
-    own_cache = g.ensure_persisted()
+    with g.persisted():
+        start_round = 0
+        if resume and store is not None and store.latest() is not None:
+            start_round = store.latest() + 1
+            labels = store.read(g.spark, store.latest()).select("id", "label")
+        else:
+            labels = graph.vertices().select("id", F.col("id").alias("label"))
 
-    start_round = 0
-    if resume and store is not None and store.latest() is not None:
-        start_round = store.latest() + 1
-        labels = store.read(g.spark, store.latest()).select("id", "label")
-    else:
-        labels = graph.vertices().select("id", F.col("id").alias("label"))
-
-    def step(labels: DataFrame, rnd) -> DataFrame:
-        counts = (
-            g.edges.join(
-                labels.select(F.col("id").alias("src"), "label"), "src"
+        def step(labels: DataFrame, rnd) -> DataFrame:
+            counts = (
+                g.edges.join(
+                    labels.select(F.col("id").alias("src"), "label"), "src"
+                )
+                .groupBy(F.col("dst").alias("id"), "label")
+                .agg(F.count("*").alias("cnt"))
             )
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.count("*").alias("cnt"))
-        )
-        # argmax by (cnt desc, label asc): max_by over struct(cnt, -label)
-        best = counts.groupBy("id").agg(
-            F.max_by("label", F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias(
-                "best_label"
+            # argmax by (cnt desc, label asc): max_by over struct(cnt, -label)
+            best = counts.groupBy("id").agg(
+                F.max_by("label", F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias(
+                    "best_label"
+                )
             )
-        )
-        return labels.join(best, "id", "left").select(
-            "id", F.coalesce("best_label", "label").alias("label")
-        )
+            return labels.join(best, "id", "left").select(
+                "id", F.coalesce("best_label", "label").alias("label")
+            )
 
-    labels = superstep(
-        labels, step,
-        rounds=rounds, start=start_round,
-        materialize=None if store is None else (
-            lambda df, rnd, seen: store.write(df, rnd.index, {"kernel": "lpa"})
-        ),
-    )
-    if own_cache:
-        g.unpersist()
+        labels = superstep(
+            labels, step,
+            rounds=rounds, start=start_round,
+            materialize=None if store is None else (
+                lambda df, rnd, seen: store.write(df, rnd.index, {"kernel": "lpa"})
+            ),
+        )
     return labels
 
 
@@ -107,33 +104,30 @@ def weighted_label_propagation(
             "weighted_label_propagation requires (src, dst, weight)"
         )
     g = graph.symmetrize() if symmetrize else graph
-    own_cache = g.ensure_persisted()
-
-    def step(labels: DataFrame, rnd) -> DataFrame:
-        votes = (
-            g.edges.join(
-                labels.select(F.col("id").alias("src"), "label"), "src"
+    with g.persisted():
+        def step(labels: DataFrame, rnd) -> DataFrame:
+            votes = (
+                g.edges.join(
+                    labels.select(F.col("id").alias("src"), "label"), "src"
+                )
+                .groupBy(F.col("dst").alias("id"), "label")
+                .agg(F.sum("weight").alias("w"))
             )
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.sum("weight").alias("w"))
-        )
-        best = votes.groupBy("id").agg(
-            F.max_by(
-                "label",
-                F.struct(F.col("w"), (-F.col("label")).alias("neg")),
-            ).alias("best_label")
-        )
-        return labels.join(best, "id", "left").select(
-            "id", F.coalesce("best_label", "label").alias("label")
-        )
+            best = votes.groupBy("id").agg(
+                F.max_by(
+                    "label",
+                    F.struct(F.col("w"), (-F.col("label")).alias("neg")),
+                ).alias("best_label")
+            )
+            return labels.join(best, "id", "left").select(
+                "id", F.coalesce("best_label", "label").alias("label")
+            )
 
-    labels = superstep(
-        graph.vertices()
-        .select("id", F.col("id").alias("label")),
-        step, rounds=rounds,
-    )
-    if own_cache:
-        g.unpersist()
+        labels = superstep(
+            graph.vertices()
+            .select("id", F.col("id").alias("label")),
+            step, rounds=rounds,
+        )
     return labels
 
 
@@ -165,46 +159,43 @@ def label_spreading(
     is outside the graph's vertex universe are ignored.
     """
     g = graph.symmetrize() if symmetrize else graph
-    own_cache = g.ensure_persisted()
-
-    seed_map = seeds.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("label").cast("long").alias("seed_label"),
-    )
-    def step(labels: DataFrame, rnd) -> DataFrame:
-        counts = (
-            g.edges.join(
-                labels.filter(F.col("label").isNotNull()).select(
-                    F.col("id").alias("src"), "label"
-                ),
-                "src",
+    with g.persisted():
+        seed_map = seeds.select(
+            F.col("id").cast("long").alias("id"),
+            F.col("label").cast("long").alias("seed_label"),
+        )
+        def step(labels: DataFrame, rnd) -> DataFrame:
+            counts = (
+                g.edges.join(
+                    labels.filter(F.col("label").isNotNull()).select(
+                        F.col("id").alias("src"), "label"
+                    ),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("id"), "label")
+                .agg(F.count("*").alias("cnt"))
             )
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.count("*").alias("cnt"))
-        )
-        best = counts.groupBy("id").agg(
-            F.max_by(
-                "label",
-                F.struct(F.col("cnt"), (-F.col("label")).alias("neg")),
-            ).alias("best_label")
-        )
-        return (
-            labels.join(seed_map, "id", "left")
-            .join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce("seed_label", "best_label", "label").alias(
-                    "label"
-                ),
+            best = counts.groupBy("id").agg(
+                F.max_by(
+                    "label",
+                    F.struct(F.col("cnt"), (-F.col("label")).alias("neg")),
+                ).alias("best_label")
             )
-        )
+            return (
+                labels.join(seed_map, "id", "left")
+                .join(best, "id", "left")
+                .select(
+                    "id",
+                    F.coalesce("seed_label", "best_label", "label").alias(
+                        "label"
+                    ),
+                )
+            )
 
-    labels = superstep(
-        graph.vertices()
-        .join(seed_map, "id", "left")
-        .select("id", F.col("seed_label").alias("label")),
-        step, rounds=rounds,
-    )
-    if own_cache:
-        g.unpersist()
+        labels = superstep(
+            graph.vertices()
+            .join(seed_map, "id", "left")
+            .select("id", F.col("seed_label").alias("label")),
+            step, rounds=rounds,
+        )
     return labels

@@ -45,45 +45,43 @@ def landmark_distances(
     fixed-iteration budget shared with the twin: the searches stop
     early once no distance changes and never raise.
     """
-    own_cache = graph.ensure_persisted()
-    seeds = (
-        graph.out_degrees()
-        .orderBy(F.desc("out_degree"), F.asc("id"))
-        .limit(n_landmarks)
-        .select(
-            "id", F.col("id").alias("landmark"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(None).cast("long").alias("old"),
-        )
-    )
-    changed = F.col("old").isNull() | (F.col("dist") < F.col("old"))
-
-    def step(state: DataFrame, rnd) -> DataFrame:
-        cand = (
-            graph.edges.join(
-                state.filter(changed).select(
-                    F.col("id").alias("src"), "landmark", "dist"
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"), F.col("landmark"))
-            .agg((F.min("dist") + 1).alias("cand"))
-        )
-        return (
-            state.select("id", "landmark", "dist")
-            .join(cand, ["id", "landmark"], "full")
+    with graph.persisted():
+        seeds = (
+            graph.out_degrees()
+            .orderBy(F.desc("out_degree"), F.asc("id"))
+            .limit(n_landmarks)
             .select(
-                "id",
-                "landmark",
-                F.least(
-                    F.coalesce("dist", F.lit(2**62)),
-                    F.coalesce("cand", F.lit(2**62)),
-                ).alias("dist"),
-                F.col("dist").alias("old"),
+                "id", F.col("id").alias("landmark"),
+                F.lit(0).cast("long").alias("dist"),
+                F.lit(None).cast("long").alias("old"),
             )
         )
+        changed = F.col("old").isNull() | (F.col("dist") < F.col("old"))
 
-    state = superstep(seeds, step, rounds=max_iters, changed=changed)
-    if own_cache:
-        graph.unpersist()
+        def step(state: DataFrame, rnd) -> DataFrame:
+            cand = (
+                graph.edges.join(
+                    state.filter(changed).select(
+                        F.col("id").alias("src"), "landmark", "dist"
+                    ),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("id"), F.col("landmark"))
+                .agg((F.min("dist") + 1).alias("cand"))
+            )
+            return (
+                state.select("id", "landmark", "dist")
+                .join(cand, ["id", "landmark"], "full")
+                .select(
+                    "id",
+                    "landmark",
+                    F.least(
+                        F.coalesce("dist", F.lit(2**62)),
+                        F.coalesce("cand", F.lit(2**62)),
+                    ).alias("dist"),
+                    F.col("dist").alias("old"),
+                )
+            )
+
+        state = superstep(seeds, step, rounds=max_iters, changed=changed)
     return bind_release(state.select("id", "landmark", "dist"), state)

@@ -66,80 +66,77 @@ def link_prediction(
     rank rounding). With ``topk``, keeps the k best candidates per u by
     (cn desc, v asc) — an integer sort key, so the cut is exact.
 
-    ``materialize=False`` skips the cache + eager checkpoint and
-    returns the lazy plan — for plan inspection only (the symmetrize
+    ``materialize=False`` skips the eager checkpoint and returns the
+    lazy plan — for plan inspection only (the symmetrize
     shuffle then re-runs per downstream action).
     """
     # persist the symmetrized graph: sym feeds the wedge self-join
     # (both sides), the adjacency anti-join, AND the degree table —
     # without the cache the E∪Eᵀ squish shuffle re-runs ~4×. The result
-    # is checkpointed below, so a cache made here is released before
-    # returning (a persisted graph's own undirected view stays cached).
+    # is checkpointed inside the block, so a cache the block made is
+    # released on return (a persisted graph's own view stays cached).
     und = graph.symmetrize()
-    own = materialize and und.ensure_persisted()
-    sym = und.edges.select("src", "dst")
-    deg = und.out_degrees().select(
-        F.col("id").alias("w"), F.col("out_degree").alias("w_deg")
-    )
+    with und.persisted():
+        sym = und.edges.select("src", "dst")
+        deg = und.out_degrees().select(
+            F.col("id").alias("w"), F.col("out_degree").alias("w_deg")
+        )
 
-    centers = sym.select(F.col("src").alias("w"), F.col("dst").alias("nbr"))
-    if max_center_degree is not None:
-        centers = centers.join(
-            deg.filter(F.col("w_deg") <= max_center_degree), "w", "left_semi"
+        centers = sym.select(F.col("src").alias("w"), F.col("dst").alias("nbr"))
+        if max_center_degree is not None:
+            centers = centers.join(
+                deg.filter(F.col("w_deg") <= max_center_degree), "w", "left_semi"
+            )
+        # 1/deg(w) attached BEFORE the wedge self-join: one V-sized join on
+        # the edge table instead of a wedge-sized join afterwards.
+        weighted = centers.join(deg, "w").select(
+            "w", "nbr", (F.lit(1.0) / F.col("w_deg")).alias("inv_w")
         )
-    # 1/deg(w) attached BEFORE the wedge self-join: one V-sized join on
-    # the edge table instead of a wedge-sized join afterwards.
-    weighted = centers.join(deg, "w").select(
-        "w", "nbr", (F.lit(1.0) / F.col("w_deg")).alias("inv_w")
-    )
-    left = weighted.select("w", F.col("nbr").alias("u"), "inv_w")
-    right = weighted.select("w", F.col("nbr").alias("v"))
-    cand = (
-        left.join(right, "w")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(
-            F.count("*").cast("long").alias("cn"),
-            F.sum("inv_w").alias("ra_raw"),
+        left = weighted.select("w", F.col("nbr").alias("u"), "inv_w")
+        right = weighted.select("w", F.col("nbr").alias("v"))
+        cand = (
+            left.join(right, "w")
+            .filter(F.col("u") < F.col("v"))
+            .groupBy("u", "v")
+            .agg(
+                F.count("*").cast("long").alias("cn"),
+                F.sum("inv_w").alias("ra_raw"),
+            )
+            .filter(F.col("cn") >= min_cn)
         )
-        .filter(F.col("cn") >= min_cn)
-    )
-    # drop pairs that are already edges: sym holds both directions, so
-    # the (u,v) orientation alone decides adjacency
-    cand = cand.join(
-        sym,
-        (cand["u"] == sym["src"]) & (cand["v"] == sym["dst"]),
-        "left_anti",
-    )
-    du = und.out_degrees().select(
-        F.col("id").alias("u"), F.col("out_degree").alias("du")
-    )
-    dv = und.out_degrees().select(
-        F.col("id").alias("v"), F.col("out_degree").alias("dv")
-    )
-    scored = (
-        cand.join(du, "u")
-        .join(dv, "v")
-        .select(
-            "u",
-            "v",
-            "cn",
-            F.round(
-                F.col("cn") / (F.col("du") + F.col("dv") - F.col("cn")), 6
-            ).alias("jaccard"),
-            F.round(F.col("ra_raw"), 6).alias("ra"),
+        # drop pairs that are already edges: sym holds both directions, so
+        # the (u,v) orientation alone decides adjacency
+        cand = cand.join(
+            sym,
+            (cand["u"] == sym["src"]) & (cand["v"] == sym["dst"]),
+            "left_anti",
         )
-    )
-    if topk is not None:
-        w = Window.partitionBy("u").orderBy(F.desc("cn"), F.asc("v"))
+        du = und.out_degrees().select(
+            F.col("id").alias("u"), F.col("out_degree").alias("du")
+        )
+        dv = und.out_degrees().select(
+            F.col("id").alias("v"), F.col("out_degree").alias("dv")
+        )
         scored = (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= topk)
-            .drop("rk")
+            cand.join(du, "u")
+            .join(dv, "v")
+            .select(
+                "u",
+                "v",
+                "cn",
+                F.round(
+                    F.col("cn") / (F.col("du") + F.col("dv") - F.col("cn")), 6
+                ).alias("jaccard"),
+                F.round(F.col("ra_raw"), 6).alias("ra"),
+            )
         )
-    if not materialize:
-        return scored
-    out = scored.transform(fresh_checkpoint)
-    if own:
-        und.unpersist()
-    return out
+        if topk is not None:
+            w = Window.partitionBy("u").orderBy(F.desc("cn"), F.asc("v"))
+            scored = (
+                scored.withColumn("rk", F.row_number().over(w))
+                .filter(F.col("rk") <= topk)
+                .drop("rk")
+            )
+        if not materialize:
+            return scored
+        return scored.transform(fresh_checkpoint)

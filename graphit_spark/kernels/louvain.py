@@ -119,12 +119,10 @@ def _move_rounds(
     return superstep(comm, step, rounds=rounds)
 
 
-def _level1(graph: LinkGraph, symmetrize: bool, rounds: int):
-    """(g, own_cache, two_m, lvl1): the symmetrized graph, whether this
-    call cached it, 2m, and the level-1 move phase's final (id, c, k)
-    state from singleton communities."""
-    g = graph.symmetrize() if symmetrize else graph
-    own_cache = g.ensure_persisted()
+def _level1(graph: LinkGraph, g: LinkGraph, rounds: int):
+    """(two_m, lvl1): 2m of ``g``, the traversed (symmetrized) view of
+    ``graph`` the caller holds, and the level-1 move phase's final
+    (id, c, k) state from singleton communities."""
     two_m = g.num_edges  # sym rows = 2m undirected edges
     # vertex universe from the ORIGINAL graph — symmetrize() keeps
     # num_vertices, but the degree join below must still cover every
@@ -142,7 +140,7 @@ def _level1(graph: LinkGraph, symmetrize: bool, rounds: int):
         )
     )
     edges_w = g.edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
-    return g, own_cache, two_m, _move_rounds(edges_w, comm0, two_m, rounds)
+    return two_m, _move_rounds(edges_w, comm0, two_m, rounds)
 
 
 def louvain_move(
@@ -154,9 +152,9 @@ def louvain_move(
     """Returns (id, community) after `rounds` synchronous Louvain move
     rounds over the symmetrized simple graph; community ids are vertex
     ids (each vertex starts in its own singleton)."""
-    g, own_cache, _, comm = _level1(graph, symmetrize, rounds)
-    if own_cache:
-        g.unpersist()
+    g = graph.symmetrize() if symmetrize else graph
+    with g.persisted():
+        _, comm = _level1(graph, g, rounds)
     return bind_release(comm.select("id", F.col("c").alias("community")), comm)
 
 
@@ -187,24 +185,24 @@ def louvain_communities(
     host_graph_rollup shape); level 2 runs on a |communities|-sized
     table. At crawl scale level 2 is orders of magnitude smaller than
     level 1 — the classic Louvain speedup."""
-    g, own_cache, two_m, lvl1 = _level1(graph, symmetrize, rounds_per_level)
+    g = graph.symmetrize() if symmetrize else graph
+    with g.persisted():
+        two_m, lvl1 = _level1(graph, g, rounds_per_level)
 
-    # coarsen: communities become vertices, parallel edges sum to
-    # weights, intra-community rows dropped (their weight lives in tot)
-    mapping = lvl1.select("id", F.col("c").alias("group"))
-    coarse_edges = (
-        g.contract(mapping)
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", F.col("weight").cast("long").alias("w"))
-        .transform(fresh_checkpoint)
-    )
-    comm1 = lvl1.groupBy("c").agg(F.sum("k").alias("k")).select(
-        F.col("c").alias("id"), "c", "k"
-    )
-    lvl2 = _move_rounds(coarse_edges, comm1, two_m, rounds_per_level)
-    coarse_edges.unpersist()
-    if own_cache:
-        g.unpersist()
+        # coarsen: communities become vertices, parallel edges sum to
+        # weights, intra-community rows dropped (their weight lives in tot)
+        mapping = lvl1.select("id", F.col("c").alias("group"))
+        coarse_edges = (
+            g.contract(mapping)
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst", F.col("weight").cast("long").alias("w"))
+            .transform(fresh_checkpoint)
+        )
+        comm1 = lvl1.groupBy("c").agg(F.sum("k").alias("k")).select(
+            F.col("c").alias("id"), "c", "k"
+        )
+        lvl2 = _move_rounds(coarse_edges, comm1, two_m, rounds_per_level)
+        coarse_edges.unpersist()
     out = (
         lvl1.select("id", F.col("c").alias("c1"))
         .join(lvl2.select(F.col("id").alias("c1"), "c"), "c1")

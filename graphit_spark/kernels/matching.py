@@ -80,48 +80,46 @@ def maximal_matching(
     self-loop-free graph — mate = matched partner id, or -1 for
     unmatched vertices. Raises if the fixed round budget is exhausted
     with alive edges remaining (see module docstring)."""
-    own_cache = graph.ensure_persisted()
-    matched: list[DataFrame] = []
+    with graph.persisted():
+        matched: list[DataFrame] = []
 
-    def step(alive: DataFrame, rnd) -> DataFrame:
-        ends = alive.select(F.col("u").alias("x"), "epri").unionAll(
-            alive.select(F.col("v").alias("x"), "epri")
-        )
-        vmin = ends.groupBy("x").agg(F.min("epri").alias("mn"))
-        pairs = (
-            alive.join(
-                vmin.select(F.col("x").alias("u"), F.col("mn").alias("mu")),
-                "u",
+        def step(alive: DataFrame, rnd) -> DataFrame:
+            ends = alive.select(F.col("u").alias("x"), "epri").unionAll(
+                alive.select(F.col("v").alias("x"), "epri")
             )
-            .join(
-                vmin.select(F.col("x").alias("v"), F.col("mn").alias("mv")),
-                "v",
+            vmin = ends.groupBy("x").agg(F.min("epri").alias("mn"))
+            pairs = (
+                alive.join(
+                    vmin.select(F.col("x").alias("u"), F.col("mn").alias("mu")),
+                    "u",
+                )
+                .join(
+                    vmin.select(F.col("x").alias("v"), F.col("mn").alias("mv")),
+                    "v",
+                )
+                .filter((F.col("epri") == F.col("mu")) & (F.col("epri") == F.col("mv")))
+                .select("u", "v")
+                .transform(fresh_checkpoint)
             )
-            .filter((F.col("epri") == F.col("mu")) & (F.col("epri") == F.col("mv")))
-            .select("u", "v")
-            .transform(fresh_checkpoint)
-        )
-        matched.append(pairs)
-        mverts = (
-            pairs.select(F.col("u").alias("x"))
-            .unionAll(pairs.select(F.col("v").alias("x")))
-            .distinct()
-        )
-        return alive.join(
-            mverts.withColumnRenamed("x", "u"), "u", "left_anti"
-        ).join(mverts.withColumnRenamed("x", "v"), "v", "left_anti")
+            matched.append(pairs)
+            mverts = (
+                pairs.select(F.col("u").alias("x"))
+                .unionAll(pairs.select(F.col("v").alias("x")))
+                .distinct()
+            )
+            return alive.join(
+                mverts.withColumnRenamed("x", "u"), "u", "left_anti"
+            ).join(mverts.withColumnRenamed("x", "v"), "v", "left_anti")
 
-    # the alive-edge count rides each round's checkpoint job
-    superstep(
-        graph.symmetrize()
-        .edges.filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .withColumn("epri", _edge_priority()),
-        step, max_rounds=rounds, until=lambda seen: seen["rows"] == 0,
-        rows=F.count(F.lit(1)),
-    ).unpersist()
-    if own_cache:
-        graph.unpersist()
+        # the alive-edge count rides each round's checkpoint job
+        superstep(
+            graph.symmetrize()
+            .edges.filter(F.col("src") < F.col("dst"))
+            .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            .withColumn("epri", _edge_priority()),
+            step, max_rounds=rounds, until=lambda seen: seen["rows"] == 0,
+            rows=F.count(F.lit(1)),
+        ).unpersist()
     m = reduce(DataFrame.unionByName, matched)
     pairs = m.select(F.col("u").alias("id"), F.col("v").alias("mate")).unionAll(
         m.select(F.col("v").alias("id"), F.col("u").alias("mate"))

@@ -66,51 +66,49 @@ def maximal_independent_set(
     deterministic priority order, on the symmetrized self-loop-free
     graph. Raises if the fixed round budget is exhausted with vertices
     still undecided (see module docstring)."""
-    own_cache = graph.ensure_persisted()
-    sym = (
-        graph.symmetrize()
-        .edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .transform(fresh_checkpoint)
-    )
-    verts = graph.vertices()
-    winners: list[DataFrame] = []
-
-    def step(active: DataFrame, rnd) -> DataFrame:
-        # min active-neighbor priority per active vertex (both edge
-        # endpoints restricted to the active set, as in the twin)
-        nbr_min = (
-            sym.join(active.select(F.col("id").alias("dst"), "pri"), "dst")
-            .join(active.select(F.col("id").alias("src")), "src")
-            .groupBy("src")
-            .agg(F.min("pri").alias("mn"))
-            .withColumnRenamed("src", "id")
-        )
-        won = (
-            active.join(nbr_min, "id", "left")
-            .filter(F.col("mn").isNull() | (F.col("pri") < F.col("mn")))
-            .select("id")
+    with graph.persisted():
+        sym = (
+            graph.symmetrize()
+            .edges.select("src", "dst")
+            .filter(F.col("src") != F.col("dst"))
             .transform(fresh_checkpoint)
         )
-        winners.append(won)
-        eliminated = (
-            sym.join(won.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        return active.join(won, "id", "left_anti").join(
-            eliminated, "id", "left_anti"
-        )
+        verts = graph.vertices()
+        winners: list[DataFrame] = []
 
-    # the active count rides each round's checkpoint job
-    superstep(
-        verts.select("id", _priority_col().alias("pri")), step,
-        max_rounds=rounds, until=lambda seen: seen["rows"] == 0,
-        rows=F.count(F.lit(1)),
-    ).unpersist()
-    sym.unpersist()
-    if own_cache:
-        graph.unpersist()
+        def step(active: DataFrame, rnd) -> DataFrame:
+            # min active-neighbor priority per active vertex (both edge
+            # endpoints restricted to the active set, as in the twin)
+            nbr_min = (
+                sym.join(active.select(F.col("id").alias("dst"), "pri"), "dst")
+                .join(active.select(F.col("id").alias("src")), "src")
+                .groupBy("src")
+                .agg(F.min("pri").alias("mn"))
+                .withColumnRenamed("src", "id")
+            )
+            won = (
+                active.join(nbr_min, "id", "left")
+                .filter(F.col("mn").isNull() | (F.col("pri") < F.col("mn")))
+                .select("id")
+                .transform(fresh_checkpoint)
+            )
+            winners.append(won)
+            eliminated = (
+                sym.join(won.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+            )
+            return active.join(won, "id", "left_anti").join(
+                eliminated, "id", "left_anti"
+            )
+
+        # the active count rides each round's checkpoint job
+        superstep(
+            verts.select("id", _priority_col().alias("pri")), step,
+            max_rounds=rounds, until=lambda seen: seen["rows"] == 0,
+            rows=F.count(F.lit(1)),
+        ).unpersist()
+        sym.unpersist()
     mis = reduce(DataFrame.unionByName, winners).withColumn("w", F.lit(True))
     out = verts.join(mis, "id", "left").select(
         "id", F.coalesce(F.col("w"), F.lit(False)).alias("in_mis")

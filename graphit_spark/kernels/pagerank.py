@@ -71,97 +71,95 @@ def pagerank(
     metrics_out: if given, filled with {"iterations", "final_err"} — the
     bench harness reads these for the convergence metric.
     """
-    own_cache = graph.ensure_persisted()
-    n = graph.num_vertices
-    beta = (1.0 - damp) / n
+    with graph.persisted():
+        n = graph.num_vertices
+        beta = (1.0 - damp) / n
 
-    start_iter = 0
-    if resume and store is not None and store.latest() is not None:
-        start_iter = store.latest() + 1
-        state = store.read(graph.spark, store.latest())
-    elif init_ranks is not None:
-        state = (
-            graph.out_degrees()
-            .join(init_ranks.select("id", "rank"), "id", "left")
-            .select(
-                "id",
-                "out_degree",
-                F.coalesce("rank", F.lit(1.0 / n)).alias("rank"),
-            )
-        )
-    else:
-        state = graph.out_degrees().withColumn("rank", F.lit(1.0 / n))
-
-    if use_adjacency:
-        adj = graph.adjacency()
-
-    # Join-strategy choice for edges ⋈ contrib (the GraphIt "schedule"):
-    # small vertex sets broadcast cheaply; big ones must NOT broadcast —
-    # broadcast build is single-threaded driver work and is the one
-    # non-scaling component (measured; see BENCH/BASELINE.md).
-    # Shuffle-hash beats sort-merge here: the V-sized contrib side
-    # shuffles to the cached edge partitioning and builds per-partition
-    # hash tables — no global sort of the E-sized side (measured ~2x:
-    # 2.8s vs 5.6s per superstep at 17M edges).
-    if join_strategy is None:
-        hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
-    else:
-        hint = join_strategy
-
-    def step(state: DataFrame, rnd) -> DataFrame:
-        contrib_state = state.filter(F.col("out_degree") > 0).select(
-            F.col("id").alias("src"),
-            (F.col("rank") / F.col("out_degree")).alias("contrib"),
-        )
-        if hint:
-            contrib_state = contrib_state.hint(hint)
-        if use_adjacency:
-            # CSR-like scatter: join V-sized blocks, explode neighbors.
-            sums = (
-                adj.join(contrib_state, "src")
-                .select(F.explode("nbrs").alias("id"), "contrib")
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("gathered"))
+        start_iter = 0
+        if resume and store is not None and store.latest() is not None:
+            start_iter = store.latest() + 1
+            state = store.read(graph.spark, store.latest())
+        elif init_ranks is not None:
+            state = (
+                graph.out_degrees()
+                .join(init_ranks.select("id", "rank"), "id", "left")
+                .select(
+                    "id",
+                    "out_degree",
+                    F.coalesce("rank", F.lit(1.0 / n)).alias("rank"),
+                )
             )
         else:
-            sums = (
-                graph.edges.join(contrib_state, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("contrib").alias("gathered"))
-            )
-        # the error norm reads the old rank, which the state drops
-        return rnd.observe(
-            state.join(sums, "id", "left").select(
-                "id",
-                "out_degree",
-                F.col("rank").alias("old_rank"),
-                (F.lit(beta) + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))).alias("rank"),
-            )
-        ).select("id", "out_degree", "rank")
+            state = graph.out_degrees().withColumn("rank", F.lit(1.0 / n))
 
-    # Materialize once: the checkpoint (or the snapshot write) is the
-    # round's only job, and the error norm is summed inside it — the
-    # PR+error fusion GraphIt gets from fuseApplyFunctions.
-    log: list = []
-    state = superstep(
-        state, step, rounds=max_iters, start=start_iter, log=log,
-        # a snapshot read has no lineage to truncate
-        checkpoint_start=start_iter == 0,
-        l1_error=F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
-        until=None if tol is None else (lambda seen: seen["l1_error"] <= tol),
-        materialize=None if store is None else (
-            lambda df, rnd, seen: store.write(df, rnd.index, {
-                "kernel": "pagerank", "l1_error": lambda: seen["l1_error"],
-            })
-        ),
-    )
-    if metrics_out is not None and log:
-        metrics_out["iterations"] = len(log)
-        metrics_out["final_err"] = log[-1]["l1_error"]
+        if use_adjacency:
+            adj = graph.adjacency()
 
-    result = bind_release(state.select("id", "rank"), state)
-    if own_cache:
-        graph.unpersist()
+        # Join-strategy choice for edges ⋈ contrib (the GraphIt "schedule"):
+        # small vertex sets broadcast cheaply; big ones must NOT broadcast —
+        # broadcast build is single-threaded driver work and is the one
+        # non-scaling component (measured; see BENCH/BASELINE.md).
+        # Shuffle-hash beats sort-merge here: the V-sized contrib side
+        # shuffles to the cached edge partitioning and builds per-partition
+        # hash tables — no global sort of the E-sized side (measured ~2x:
+        # 2.8s vs 5.6s per superstep at 17M edges).
+        if join_strategy is None:
+            hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
+        else:
+            hint = join_strategy
+
+        def step(state: DataFrame, rnd) -> DataFrame:
+            contrib_state = state.filter(F.col("out_degree") > 0).select(
+                F.col("id").alias("src"),
+                (F.col("rank") / F.col("out_degree")).alias("contrib"),
+            )
+            if hint:
+                contrib_state = contrib_state.hint(hint)
+            if use_adjacency:
+                # CSR-like scatter: join V-sized blocks, explode neighbors.
+                sums = (
+                    adj.join(contrib_state, "src")
+                    .select(F.explode("nbrs").alias("id"), "contrib")
+                    .groupBy("id")
+                    .agg(F.sum("contrib").alias("gathered"))
+                )
+            else:
+                sums = (
+                    graph.edges.join(contrib_state, "src")
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum("contrib").alias("gathered"))
+                )
+            # the error norm reads the old rank, which the state drops
+            return rnd.observe(
+                state.join(sums, "id", "left").select(
+                    "id",
+                    "out_degree",
+                    F.col("rank").alias("old_rank"),
+                    (F.lit(beta) + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))).alias("rank"),
+                )
+            ).select("id", "out_degree", "rank")
+
+        # Materialize once: the checkpoint (or the snapshot write) is the
+        # round's only job, and the error norm is summed inside it — the
+        # PR+error fusion GraphIt gets from fuseApplyFunctions.
+        log: list = []
+        state = superstep(
+            state, step, rounds=max_iters, start=start_iter, log=log,
+            # a snapshot read has no lineage to truncate
+            checkpoint_start=start_iter == 0,
+            l1_error=F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
+            until=None if tol is None else (lambda seen: seen["l1_error"] <= tol),
+            materialize=None if store is None else (
+                lambda df, rnd, seen: store.write(df, rnd.index, {
+                    "kernel": "pagerank", "l1_error": lambda: seen["l1_error"],
+                })
+            ),
+        )
+        if metrics_out is not None and log:
+            metrics_out["iterations"] = len(log)
+            metrics_out["final_err"] = log[-1]["l1_error"]
+
+        result = bind_release(state.select("id", "rank"), state)
     return result
 
 
@@ -183,51 +181,49 @@ def weighted_pagerank(
     """
     if not graph.weighted:
         raise ValueError("weighted_pagerank requires (src, dst, weight)")
-    own_cache = graph.ensure_persisted()
-    n = graph.num_vertices
-    beta = (1.0 - damp) / n
+    with graph.persisted():
+        n = graph.num_vertices
+        beta = (1.0 - damp) / n
 
-    wdeg = (
-        graph.vertices()
-        .join(
-            graph.edges.groupBy(F.col("src").alias("id")).agg(
-                F.sum("weight").alias("out_wdeg")
-            ),
-            "id",
-            "left",
+        wdeg = (
+            graph.vertices()
+            .join(
+                graph.edges.groupBy(F.col("src").alias("id")).agg(
+                    F.sum("weight").alias("out_wdeg")
+                ),
+                "id",
+                "left",
+            )
+            .select("id", F.coalesce("out_wdeg", F.lit(0)).alias("out_wdeg"))
         )
-        .select("id", F.coalesce("out_wdeg", F.lit(0)).alias("out_wdeg"))
-    )
-    hint = "shuffle_hash" if n > 500_000 else None
+        hint = "shuffle_hash" if n > 500_000 else None
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        unit = state.filter(F.col("out_wdeg") > 0).select(
-            F.col("id").alias("src"),
-            (F.col("rank") / F.col("out_wdeg")).alias("unit"),
-        )
-        if hint:
-            unit = unit.hint(hint)
-        sums = (
-            graph.edges.join(unit, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("unit") * F.col("weight")).alias("gathered"))
-        )
-        return state.join(sums, "id", "left").select(
-            "id",
-            "out_wdeg",
-            (
-                F.lit(beta)
-                + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
-            ).alias("rank"),
-        )
+        def step(state: DataFrame, rnd) -> DataFrame:
+            unit = state.filter(F.col("out_wdeg") > 0).select(
+                F.col("id").alias("src"),
+                (F.col("rank") / F.col("out_wdeg")).alias("unit"),
+            )
+            if hint:
+                unit = unit.hint(hint)
+            sums = (
+                graph.edges.join(unit, "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(F.col("unit") * F.col("weight")).alias("gathered"))
+            )
+            return state.join(sums, "id", "left").select(
+                "id",
+                "out_wdeg",
+                (
+                    F.lit(beta)
+                    + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
+                ).alias("rank"),
+            )
 
-    state = superstep(
-        wdeg.withColumn("rank", F.lit(1.0 / n)),
-        step, rounds=max_iters,
-    )
-    result = bind_release(state.select("id", "rank"), state)
-    if own_cache:
-        graph.unpersist()
+        state = superstep(
+            wdeg.withColumn("rank", F.lit(1.0 / n)),
+            step, rounds=max_iters,
+        )
+        result = bind_release(state.select("id", "rank"), state)
     return result
 
 
@@ -283,60 +279,58 @@ def trustrank(
         F.when(F.col("id").isin(seed_ids), F.lit(seed_mass))
         .otherwise(F.lit(0.0))
     )
-    own_cache = graph.ensure_persisted()
-    beta = 1.0 - damp
-    weighted = graph.weighted
-    if weighted:
-        deg = (
-            graph.vertices()
-            .join(
-                graph.edges.groupBy(F.col("src").alias("id")).agg(
-                    F.sum("weight").alias("out_w")
-                ),
-                "id",
-                "left",
+    with graph.persisted():
+        beta = 1.0 - damp
+        weighted = graph.weighted
+        if weighted:
+            deg = (
+                graph.vertices()
+                .join(
+                    graph.edges.groupBy(F.col("src").alias("id")).agg(
+                        F.sum("weight").alias("out_w")
+                    ),
+                    "id",
+                    "left",
+                )
+                .select("id", F.coalesce("out_w", F.lit(0)).alias("out_w"))
             )
-            .select("id", F.coalesce("out_w", F.lit(0)).alias("out_w"))
-        )
-    else:
-        deg = graph.out_degrees().withColumnRenamed("out_degree", "out_w")
-    hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
+        else:
+            deg = graph.out_degrees().withColumnRenamed("out_degree", "out_w")
+        hint = "shuffle_hash" if graph.num_vertices > 500_000 else None
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        unit = state.filter(F.col("out_w") > 0).select(
-            F.col("id").alias("src"),
-            (F.col("rank") / F.col("out_w")).alias("unit"),
-        )
-        if hint:
-            unit = unit.hint(hint)
-        gathered = (
-            F.sum(F.col("unit") * F.col("weight"))
-            if weighted
-            else F.sum("unit")
-        )
-        sums = (
-            graph.edges.join(unit, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(gathered.alias("gathered"))
-        )
-        return state.join(sums, "id", "left").select(
-            "id",
-            "out_w",
-            (
-                F.lit(beta) * seed
-                + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
-            ).alias("rank"),
-        )
+        def step(state: DataFrame, rnd) -> DataFrame:
+            unit = state.filter(F.col("out_w") > 0).select(
+                F.col("id").alias("src"),
+                (F.col("rank") / F.col("out_w")).alias("unit"),
+            )
+            if hint:
+                unit = unit.hint(hint)
+            gathered = (
+                F.sum(F.col("unit") * F.col("weight"))
+                if weighted
+                else F.sum("unit")
+            )
+            sums = (
+                graph.edges.join(unit, "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(gathered.alias("gathered"))
+            )
+            return state.join(sums, "id", "left").select(
+                "id",
+                "out_w",
+                (
+                    F.lit(beta) * seed
+                    + F.lit(damp) * F.coalesce("gathered", F.lit(0.0))
+                ).alias("rank"),
+            )
 
-    state = superstep(
-        deg.withColumn("rank", seed),
-        step, rounds=max_iters,
-    )
-    result = bind_release(
-        state.select("id", F.col("rank").alias("trust")), state
-    )
-    if own_cache:
-        graph.unpersist()
+        state = superstep(
+            deg.withColumn("rank", seed),
+            step, rounds=max_iters,
+        )
+        result = bind_release(
+            state.select("id", F.col("rank").alias("trust")), state
+        )
     return result
 
 
@@ -355,63 +349,60 @@ def pagerank_delta(
     (pagerankdelta.gt:15-31). Returns (id, rank) = cur_rank after
     max_iters rounds (reference runs a fixed 10, main loop :50-58).
     """
-    own_cache_d = graph.ensure_persisted()
-    n = graph.num_vertices
-    beta = (1.0 - damp) / n
-    one_over_n = 1.0 / n
+    with graph.persisted():
+        n = graph.num_vertices
+        beta = (1.0 - damp) / n
+        one_over_n = 1.0 / n
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        contribs = state.filter(
-            F.col("in_frontier") & (F.col("out_degree") > 0)
-        ).select(
-            F.col("id").alias("src"),
-            (F.col("delta") / F.col("out_degree")).alias("contrib"),
-        )
-        sums = (
-            graph.edges.join(contribs, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("ngh_sum"))
-        )
-        joined = state.join(sums, "id", "left").withColumn(
-            "ngh_sum", F.coalesce("ngh_sum", F.lit(0.0))
-        )
-        if rnd.index == 1:
-            # delta = damp*ngh_sum + beta; cur += delta; delta -= 1/n
-            joined = (
-                joined.withColumn("new_delta0", F.lit(damp) * F.col("ngh_sum") + F.lit(beta))
-                .withColumn("new_rank", F.col("cur_rank") + F.col("new_delta0"))
-                .withColumn("new_delta", F.col("new_delta0") - F.lit(one_over_n))
+        def step(state: DataFrame, rnd) -> DataFrame:
+            contribs = state.filter(
+                F.col("in_frontier") & (F.col("out_degree") > 0)
+            ).select(
+                F.col("id").alias("src"),
+                (F.col("delta") / F.col("out_degree")).alias("contrib"),
             )
-        else:
-            joined = joined.withColumn(
-                "new_delta", F.col("ngh_sum") * F.lit(damp)
-            ).withColumn("new_rank", F.col("cur_rank") + F.col("new_delta"))
-        return joined.select(
-            "id",
-            "out_degree",
-            F.col("new_rank").alias("cur_rank"),
-            F.col("new_delta").alias("delta"),
-            (F.abs("new_delta") > F.lit(epsilon2) * F.col("new_rank")).alias(
-                "in_frontier"
+            sums = (
+                graph.edges.join(contribs, "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("contrib").alias("ngh_sum"))
+            )
+            joined = state.join(sums, "id", "left").withColumn(
+                "ngh_sum", F.coalesce("ngh_sum", F.lit(0.0))
+            )
+            if rnd.index == 1:
+                # delta = damp*ngh_sum + beta; cur += delta; delta -= 1/n
+                joined = (
+                    joined.withColumn("new_delta0", F.lit(damp) * F.col("ngh_sum") + F.lit(beta))
+                    .withColumn("new_rank", F.col("cur_rank") + F.col("new_delta0"))
+                    .withColumn("new_delta", F.col("new_delta0") - F.lit(one_over_n))
+                )
+            else:
+                joined = joined.withColumn(
+                    "new_delta", F.col("ngh_sum") * F.lit(damp)
+                ).withColumn("new_rank", F.col("cur_rank") + F.col("new_delta"))
+            return joined.select(
+                "id",
+                "out_degree",
+                F.col("new_rank").alias("cur_rank"),
+                F.col("new_delta").alias("delta"),
+                (F.abs("new_delta") > F.lit(epsilon2) * F.col("new_rank")).alias(
+                    "in_frontier"
+                ),
+            )
+
+        # state: id, out_degree, cur_rank, delta, in_frontier
+        state = superstep(
+            graph.out_degrees()
+            .withColumn("cur_rank", F.lit(0.0))
+            .withColumn("delta", F.lit(one_over_n))
+            .withColumn("in_frontier", F.lit(True)),
+            step, start=1, rounds=max_iters + 1,
+            materialize=None if store is None else (
+                lambda df, rnd, seen: store.write(
+                    df, rnd.index, {"kernel": "pagerank_delta"}
+                )
             ),
         )
-
-    # state: id, out_degree, cur_rank, delta, in_frontier
-    state = superstep(
-        graph.out_degrees()
-        .withColumn("cur_rank", F.lit(0.0))
-        .withColumn("delta", F.lit(one_over_n))
-        .withColumn("in_frontier", F.lit(True)),
-        step, start=1, rounds=max_iters + 1,
-        materialize=None if store is None else (
-            lambda df, rnd, seen: store.write(
-                df, rnd.index, {"kernel": "pagerank_delta"}
-            )
-        ),
-    )
-
-    if own_cache_d:
-        graph.unpersist()
     return bind_release(
         state.select("id", F.col("cur_rank").alias("rank")), state
     )
@@ -448,48 +439,46 @@ def personalized_pagerank_batch(
     """
     if not sources:
         raise ValueError("sources must be non-empty")
-    own_cache = graph.ensure_persisted()
-    spark = graph.spark
-    beta = 1.0 - damp
-    seeds_df = (
-        local_frame(
-            spark, [(int(s), int(s)) for s in sources], "seed long, id long"
-        ).distinct()
-    )
-    deg_ck = fresh_checkpoint(
-        graph.out_degrees().filter(F.col("out_degree") > 0)
-    )
-    base = seeds_df.withColumn("base", F.lit(beta))
+    with graph.persisted():
+        spark = graph.spark
+        beta = 1.0 - damp
+        seeds_df = (
+            local_frame(
+                spark, [(int(s), int(s)) for s in sources], "seed long, id long"
+            ).distinct()
+        )
+        deg_ck = fresh_checkpoint(
+            graph.out_degrees().filter(F.col("out_degree") > 0)
+        )
+        base = seeds_df.withColumn("base", F.lit(beta))
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        contrib = state.join(deg_ck, "id").select(
-            "seed",
-            F.col("id").alias("src"),
-            (F.col("rank") / F.col("out_degree")).alias("contrib"),
-        )
-        gather = (
-            graph.edges.join(contrib, "src")
-            .groupBy("seed", F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("gathered"))
-        )
-        return gather.join(base, ["seed", "id"], "full_outer").select(
-            "seed",
-            "id",
-            (
-                F.lit(beta)
-                * F.when(F.col("base").isNotNull(), F.lit(1.0)).otherwise(
-                    F.lit(0.0)
-                )
-                + F.lit(damp)
-                * F.coalesce(F.col("gathered"), F.lit(0.0))
-            ).alias("rank"),
-        )
+        def step(state: DataFrame, rnd) -> DataFrame:
+            contrib = state.join(deg_ck, "id").select(
+                "seed",
+                F.col("id").alias("src"),
+                (F.col("rank") / F.col("out_degree")).alias("contrib"),
+            )
+            gather = (
+                graph.edges.join(contrib, "src")
+                .groupBy("seed", F.col("dst").alias("id"))
+                .agg(F.sum("contrib").alias("gathered"))
+            )
+            return gather.join(base, ["seed", "id"], "full_outer").select(
+                "seed",
+                "id",
+                (
+                    F.lit(beta)
+                    * F.when(F.col("base").isNotNull(), F.lit(1.0)).otherwise(
+                        F.lit(0.0)
+                    )
+                    + F.lit(damp)
+                    * F.coalesce(F.col("gathered"), F.lit(0.0))
+                ).alias("rank"),
+            )
 
-    state = superstep(
-        seeds_df.withColumn("rank", F.lit(1.0)),
-        step, rounds=max_iters,
-    )
-    deg_ck.unpersist()
-    if own_cache:
-        graph.unpersist()
+        state = superstep(
+            seeds_df.withColumn("rank", F.lit(1.0)),
+            step, rounds=max_iters,
+        )
+        deg_ck.unpersist()
     return state

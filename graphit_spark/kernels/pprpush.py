@@ -68,78 +68,76 @@ def approximate_ppr_push(
     ``max_rounds`` is a fixed-iteration budget shared with the twin: the
     push stops early once no vertex is active and never raises."""
     und = graph.symmetrize()
-    own_cache = und.ensure_persisted()
-    degs = und.out_degrees()  # persisted V-sized (id, out_degree)
-    active = (F.col("r") > F.lit(eps_units) * F.col("d")) & (F.col("d") > 0)
+    with und.persisted():
+        degs = und.out_degrees()  # persisted V-sized (id, out_degree)
+        active = (F.col("r") > F.lit(eps_units) * F.col("d")) & (F.col("d") > 0)
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        act = rnd.checkpoint(
-            state.filter(active).select(
-                "id",
-                "d",
-                "r",
-                F.expr(f"(r * {alpha_num}) div {alpha_den}").alias("gain"),
-            ).select(
-                "id",
-                "d",
-                "gain",
-                F.expr("(r - gain) div 2").alias("push_total"),
-            ).select(
-                "id",
-                "gain",
-                "push_total",
-                F.expr("push_total div d").alias("per_nbr"),
+        def step(state: DataFrame, rnd) -> DataFrame:
+            act = rnd.checkpoint(
+                state.filter(active).select(
+                    "id",
+                    "d",
+                    "r",
+                    F.expr(f"(r * {alpha_num}) div {alpha_den}").alias("gain"),
+                ).select(
+                    "id",
+                    "d",
+                    "gain",
+                    F.expr("(r - gain) div 2").alias("push_total"),
+                ).select(
+                    "id",
+                    "gain",
+                    "push_total",
+                    F.expr("push_total div d").alias("per_nbr"),
+                )
             )
-        )
-        recv = (
-            und.edges.join(
-                act.filter(F.col("per_nbr") > 0).select(
-                    F.col("id").alias("src"), "per_nbr"
-                ),
-                "src",
+            recv = (
+                und.edges.join(
+                    act.filter(F.col("per_nbr") > 0).select(
+                        F.col("id").alias("src"), "per_nbr"
+                    ),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("per_nbr").alias("recv"))
             )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("per_nbr").alias("recv"))
-        )
-        merged = (
-            state.join(act, "id", "left")
-            .join(recv, "id", "full_outer")
-            .join(degs, "id", "left")
-        )
-        return merged.select(
-            "id",
-            F.coalesce("d", "out_degree", F.lit(0)).cast("long").alias("d"),
-            (F.coalesce("p", F.lit(0)) + F.coalesce("gain", F.lit(0)))
-            .cast("long")
-            .alias("p"),
-            (
-                F.when(
-                    F.col("gain").isNotNull(),
-                    # keep + remainder = r - gain - per_nbr·d
-                    F.col("r") - F.col("gain")
-                    - F.col("per_nbr") * F.coalesce("d", F.lit(0)),
-                ).otherwise(F.coalesce("r", F.lit(0)))
-                + F.coalesce("recv", F.lit(0))
+            merged = (
+                state.join(act, "id", "left")
+                .join(recv, "id", "full_outer")
+                .join(degs, "id", "left")
             )
-            .cast("long")
-            .alias("r"),
-        )
+            return merged.select(
+                "id",
+                F.coalesce("d", "out_degree", F.lit(0)).cast("long").alias("d"),
+                (F.coalesce("p", F.lit(0)) + F.coalesce("gain", F.lit(0)))
+                .cast("long")
+                .alias("p"),
+                (
+                    F.when(
+                        F.col("gain").isNotNull(),
+                        # keep + remainder = r - gain - per_nbr·d
+                        F.col("r") - F.col("gain")
+                        - F.col("per_nbr") * F.coalesce("d", F.lit(0)),
+                    ).otherwise(F.coalesce("r", F.lit(0)))
+                    + F.coalesce("recv", F.lit(0))
+                )
+                .cast("long")
+                .alias("r"),
+            )
 
-    seed = local_frame(
-        und.spark,
-        [(int(source), 0, int(PUSH_SCALE))],
-        "id long, p long, r long",
-    ).join(degs, "id", "left")
-    state = superstep(
-        seed.select(
-            "id", F.coalesce("out_degree", F.lit(0)).cast("long").alias("d"),
-            "p", "r",
-        ),
-        step, rounds=max_rounds, until=lambda seen: seen["active"] == 0,
-        active=F.count(F.when(active, 1)),
-    )
-    if own_cache:
-        und.unpersist()
+        seed = local_frame(
+            und.spark,
+            [(int(source), 0, int(PUSH_SCALE))],
+            "id long, p long, r long",
+        ).join(degs, "id", "left")
+        state = superstep(
+            seed.select(
+                "id", F.coalesce("out_degree", F.lit(0)).cast("long").alias("d"),
+                "p", "r",
+            ),
+            step, rounds=max_rounds, until=lambda seen: seen["active"] == 0,
+            active=F.count(F.when(active, 1)),
+        )
     out = state.filter(F.col("r") > 0).select(
         "id",
         F.col("p").alias("ppr_units"),

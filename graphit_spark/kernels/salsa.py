@@ -42,70 +42,68 @@ def salsa(graph: LinkGraph, *, rounds: int = 6) -> DataFrame:
     iterations from hub = auth = 1.0. Edgeless graphs collapse to zero
     scores after one round (the zero-sum guard only avoids 0/0, same
     as HITS and the SQL twin)."""
-    own_cache = graph.ensure_persisted()
-    verts = graph.vertices()
-    out_deg = graph.out_degrees().select(
-        F.col("id").alias("src"), F.col("out_degree").alias("od")
-    )
-    in_deg = (
-        graph.edges.groupBy(F.col("dst"))
-        .agg(F.count("*").alias("idg"))
-    )
-    # stochastic edge weights, built once: (src, dst, inv_out, inv_in)
-    eweights = (
-        graph.edges.join(out_deg, "src")
-        .join(in_deg, "dst")
-        .select(
-            "src",
-            "dst",
-            (F.lit(1.0) / F.col("od")).alias("inv_out"),
-            (F.lit(1.0) / F.col("idg")).alias("inv_in"),
+    with graph.persisted():
+        verts = graph.vertices()
+        out_deg = graph.out_degrees().select(
+            F.col("id").alias("src"), F.col("out_degree").alias("od")
         )
-        .transform(fresh_checkpoint)
-    )
+        in_deg = (
+            graph.edges.groupBy(F.col("dst"))
+            .agg(F.count("*").alias("idg"))
+        )
+        # stochastic edge weights, built once: (src, dst, inv_out, inv_in)
+        eweights = (
+            graph.edges.join(out_deg, "src")
+            .join(in_deg, "dst")
+            .select(
+                "src",
+                "dst",
+                (F.lit(1.0) / F.col("od")).alias("inv_out"),
+                (F.lit(1.0) / F.col("idg")).alias("inv_in"),
+            )
+            .transform(fresh_checkpoint)
+        )
 
-    def step(state: DataFrame, rnd) -> DataFrame:
-        # backward step: hub[i] = Σ auth[j]/in_deg(j) over out-edges of i
-        hub_raw = rnd.checkpoint(
-            verts.join(
-                eweights.join(
-                    state.select(F.col("id").alias("dst"), "auth"), "dst"
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum(F.col("auth") * F.col("inv_in")).alias("h")),
+        def step(state: DataFrame, rnd) -> DataFrame:
+            # backward step: hub[i] = Σ auth[j]/in_deg(j) over out-edges of i
+            hub_raw = rnd.checkpoint(
+                verts.join(
+                    eweights.join(
+                        state.select(F.col("id").alias("dst"), "auth"), "dst"
+                    )
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.sum(F.col("auth") * F.col("inv_in")).alias("h")),
+                    "id",
+                    "left",
+                ).select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
+            )
+            s_h = hub_raw.agg(F.sum("h")).collect()[0][0] or 1.0
+            hub = hub_raw.select("id", (F.col("h") / F.lit(s_h)).alias("hub"))
+            # forward step: auth[j] = Σ hub[i]/out_deg(i) over in-edges of j
+            auth_raw = rnd.checkpoint(
+                verts.join(
+                    eweights.join(
+                        hub.select(F.col("id").alias("src"), "hub"), "src"
+                    )
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum(F.col("hub") * F.col("inv_out")).alias("a")),
+                    "id",
+                    "left",
+                ).select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
+            )
+            s_a = auth_raw.agg(F.sum("a")).collect()[0][0] or 1.0
+            return hub.join(
+                auth_raw.select("id", (F.col("a") / F.lit(s_a)).alias("auth")),
                 "id",
-                "left",
-            ).select("id", F.coalesce("h", F.lit(0.0)).alias("h"))
-        )
-        s_h = hub_raw.agg(F.sum("h")).collect()[0][0] or 1.0
-        hub = hub_raw.select("id", (F.col("h") / F.lit(s_h)).alias("hub"))
-        # forward step: auth[j] = Σ hub[i]/out_deg(i) over in-edges of j
-        auth_raw = rnd.checkpoint(
-            verts.join(
-                eweights.join(
-                    hub.select(F.col("id").alias("src"), "hub"), "src"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("hub") * F.col("inv_out")).alias("a")),
-                "id",
-                "left",
-            ).select("id", F.coalesce("a", F.lit(0.0)).alias("a"))
-        )
-        s_a = auth_raw.agg(F.sum("a")).collect()[0][0] or 1.0
-        return hub.join(
-            auth_raw.select("id", (F.col("a") / F.lit(s_a)).alias("auth")),
-            "id",
-        ).select("id", "hub", "auth")
+            ).select("id", "hub", "auth")
 
-    state = superstep(
-        verts.select(
-            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-        ),
-        step, rounds=rounds,
-    )
-    eweights.unpersist()
-    if own_cache:
-        graph.unpersist()
+        state = superstep(
+            verts.select(
+                "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+            ),
+            step, rounds=rounds,
+        )
+        eweights.unpersist()
     return state
 
 

@@ -52,7 +52,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
 from graphit_spark.plans.state import (
-    bind_release, counted_checkpoint, fresh_checkpoint, superstep,
+    bind_release, counted_checkpoint, fresh_checkpoint, release_on_raise,
+    superstep,
 )
 from graphit_spark.plans.traversal import choose_direction
 
@@ -226,87 +227,86 @@ def strongly_connected_components(
     guaranteed; a round that assigns nothing raises (a broken
     fixpoint, not a deep graph). max_outer stays available as an
     explicit fail-fast cap."""
-    own_cache = graph.ensure_persisted()
-    # verts carries a PARTITION KEY alongside each id: the classic
-    # FW-BW divide-and-conquer, flattened into BSP. After a fixpoint,
-    # every SCC has constant (flab, blab) and therefore lies entirely
-    # inside one (pk, flab, blab) class — so the survivors' pk is
-    # refined with the label pair and the next round's fixpoint runs
-    # over INTRA-CLASS edges only, peeling one-or-more SCCs from EVERY
-    # class simultaneously. A depth-d condensation chain that the
-    # plain peel walked in d outer rounds (one "locally minimal" SCC
-    # per round — the round-5 sf0.1 bowtie paid ~150) splits into
-    # singleton classes after one refinement and finishes in 2-3. A
-    # 64-bit hash collision merging two classes costs rounds, never
-    # correctness (a merged class still contains only whole SCCs).
-    # The state is the unassigned vertices (id, pk); the intra-class
-    # edges are derived from the base edges each round (an edge with
-    # an assigned endpoint joins no state row).
-    edges = graph.edges.select("src", "dst")
-    parts: list[DataFrame] = []
-    fixpoints: list[int] = []  # rounds that ran a fixpoint
+    with graph.persisted():
+        # verts carries a PARTITION KEY alongside each id: the classic
+        # FW-BW divide-and-conquer, flattened into BSP. After a fixpoint,
+        # every SCC has constant (flab, blab) and therefore lies entirely
+        # inside one (pk, flab, blab) class — so the survivors' pk is
+        # refined with the label pair and the next round's fixpoint runs
+        # over INTRA-CLASS edges only, peeling one-or-more SCCs from EVERY
+        # class simultaneously. A depth-d condensation chain that the
+        # plain peel walked in d outer rounds (one "locally minimal" SCC
+        # per round — the round-5 sf0.1 bowtie paid ~150) splits into
+        # singleton classes after one refinement and finishes in 2-3. A
+        # 64-bit hash collision merging two classes costs rounds, never
+        # correctness (a merged class still contains only whole SCCs).
+        # The state is the unassigned vertices (id, pk); the intra-class
+        # edges are derived from the base edges each round (an edge with
+        # an assigned endpoint joins no state row).
+        edges = graph.edges.select("src", "dst")
+        parts: list[DataFrame] = []
+        fixpoints: list[int] = []  # rounds that ran a fixpoint
 
-    def peel(verts: DataFrame, rnd) -> DataFrame:
-        n_active = graph.num_vertices if rnd.seen is None else rnd.seen["rows"]
-        cedges, counted = rnd.checkpoint(
-            edges.join(
-                verts.select(F.col("id").alias("src"), F.col("pk").alias("pks")),
-                "src",
-            )
-            .join(
-                verts.select(F.col("id").alias("dst"), F.col("pk").alias("pkd")),
-                "dst",
-            )
-            .filter(F.col("pks") == F.col("pkd"))
-            .select("src", "dst"),
-            rows=F.count(F.lit(1)),
-        )
-        num_cedges = counted["rows"]
-        if num_cedges == 0:
-            # no intra-class edges anywhere: every remaining vertex is
-            # a trivial SCC (an SCC never spans classes)
-            labs = verts.select(
-                "id", F.col("id").alias("flab"), F.col("id").alias("blab")
-            )
-        else:
-            if max_outer is not None and len(fixpoints) >= max_outer:
-                raise RuntimeError(
-                    f"SCC did not finish within max_outer={max_outer} "
-                    f"rounds ({n_active} vertices unassigned)"
+        def peel(verts: DataFrame, rnd) -> DataFrame:
+            n_active = graph.num_vertices if rnd.seen is None else rnd.seen["rows"]
+            cedges, counted = rnd.checkpoint(
+                edges.join(
+                    verts.select(F.col("id").alias("src"), F.col("pk").alias("pks")),
+                    "src",
                 )
-            fixpoints.append(rnd.index)
-            tedges = cedges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
+                .join(
+                    verts.select(F.col("id").alias("dst"), F.col("pk").alias("pkd")),
+                    "dst",
+                )
+                .filter(F.col("pks") == F.col("pkd"))
+                .select("src", "dst"),
+                rows=F.count(F.lit(1)),
             )
-            labs = rnd.own(_fw_bw_fixpoint(
-                cedges, tedges, verts.select("id"), num_cedges, n_active,
-                n_active > 500_000, max_prop,
-            ))
-        matched, got = counted_checkpoint(
-            labs.filter(F.col("flab") == F.col("blab"))
-            .select("id", F.col("flab").alias("scc"))
-        )
-        parts.append(matched)
-        if got["rows"] == 0 and n_active > 0:
-            # every class's converged fixpoint matches at least the
-            # class-minimum's SCC, so zero progress means a broken
-            # fixpoint, never a deep graph — fail instead of spinning
-            raise RuntimeError(
-                "SCC peel made no progress in a converged round "
-                f"({n_active} vertices unassigned)"
+            num_cedges = counted["rows"]
+            if num_cedges == 0:
+                # no intra-class edges anywhere: every remaining vertex is
+                # a trivial SCC (an SCC never spans classes)
+                labs = verts.select(
+                    "id", F.col("id").alias("flab"), F.col("id").alias("blab")
+                )
+            else:
+                if max_outer is not None and len(fixpoints) >= max_outer:
+                    raise RuntimeError(
+                        f"SCC did not finish within max_outer={max_outer} "
+                        f"rounds ({n_active} vertices unassigned)"
+                    )
+                fixpoints.append(rnd.index)
+                tedges = cedges.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
+                labs = rnd.own(_fw_bw_fixpoint(
+                    cedges, tedges, verts.select("id"), num_cedges, n_active,
+                    n_active > 500_000, max_prop,
+                ))
+            matched, got = counted_checkpoint(
+                labs.filter(F.col("flab") == F.col("blab"))
+                .select("id", F.col("flab").alias("scc"))
             )
-        return verts.join(labs.filter(F.col("flab") != F.col("blab")), "id").select(
-            "id", F.xxhash64("pk", "flab", "blab").alias("pk")
-        )
+            parts.append(matched)
+            if got["rows"] == 0 and n_active > 0:
+                # every class's converged fixpoint matches at least the
+                # class-minimum's SCC, so zero progress means a broken
+                # fixpoint, never a deep graph — fail instead of spinning
+                raise RuntimeError(
+                    "SCC peel made no progress in a converged round "
+                    f"({n_active} vertices unassigned)"
+                )
+            return verts.join(labs.filter(F.col("flab") != F.col("blab")), "id").select(
+                "id", F.xxhash64("pk", "flab", "blab").alias("pk")
+            )
 
-    # every round assigns at least one vertex, so n + 1 rounds suffice
-    superstep(
-        graph.vertices().select("id", F.lit(0).cast("long").alias("pk")),
-        peel, max_rounds=graph.num_vertices + 1,
-        until=lambda seen: seen["rows"] == 0, rows=F.count(F.lit(1)),
-    ).unpersist()
-    if own_cache:
-        graph.unpersist()
+        # every round assigns at least one vertex, so n + 1 rounds suffice
+        with release_on_raise(parts):
+            superstep(
+                graph.vertices().select("id", F.lit(0).cast("long").alias("pk")),
+                peel, max_rounds=graph.num_vertices + 1,
+                until=lambda seen: seen["rows"] == 0, rows=F.count(F.lit(1)),
+            ).unpersist()
     if metrics_out is not None:
         metrics_out["outer_rounds"] = len(fixpoints)
     return bind_release(reduce(DataFrame.unionByName, parts), *parts)
@@ -341,53 +341,52 @@ def condensation_layers(
     each component's previous layer, so the change count rides the
     round's checkpoint job.
     """
-    own_cache = graph.ensure_persisted()
-    scc = None
-    if labels is None:
-        labels = scc = strongly_connected_components(graph)
-    labels = labels.transform(fresh_checkpoint)
-    if scc is not None:
-        scc.unpersist()
-    ls = labels.select(F.col("id").alias("src"), F.col("scc").alias("cu"))
-    ld = labels.select(F.col("id").alias("dst"), F.col("scc").alias("cv"))
-    cond = (
-        graph.edges.join(ls, "src")
-        .join(ld, "dst")
-        .filter(F.col("cu") != F.col("cv"))
-        .select("cu", "cv")
-        .distinct()
-        .transform(fresh_checkpoint)
-    )
-
-    def step(layer: DataFrame, rnd) -> DataFrame:
-        cand = (
-            cond.join(layer, cond["cu"] == layer["c"])
-            .groupBy(F.col("cv").alias("c"))
-            .agg((F.max("layer") + 1).alias("cand"))
-        )
-        return layer.join(cand, "c", "left").select(
-            "c",
-            F.greatest(
-                F.col("layer"), F.coalesce("cand", F.lit(0))
-            ).alias("layer"),
-            F.col("layer").alias("old"),
+    with graph.persisted():
+        scc = None
+        if labels is None:
+            labels = scc = strongly_connected_components(graph)
+        labels = labels.transform(fresh_checkpoint)
+        if scc is not None:
+            scc.unpersist()
+        ls = labels.select(F.col("id").alias("src"), F.col("scc").alias("cu"))
+        ld = labels.select(F.col("id").alias("dst"), F.col("scc").alias("cv"))
+        cond = (
+            graph.edges.join(ls, "src")
+            .join(ld, "dst")
+            .filter(F.col("cu") != F.col("cv"))
+            .select("cu", "cv")
+            .distinct()
+            .transform(fresh_checkpoint)
         )
 
-    layer = superstep(
-        labels.select(F.col("scc").alias("c"))
-        .distinct()
-        .withColumn("layer", F.lit(0).cast("long")),
-        step, max_rounds=max_rounds,
-        changed=F.col("layer") != F.col("old"),
-    )
-    out = (
-        labels.join(layer, labels["scc"] == layer["c"])
-        .select("id", "scc", "layer")
-        .transform(fresh_checkpoint)
-    )
-    labels.unpersist()
-    cond.unpersist()
-    layer.unpersist()
-    if own_cache:
-        graph.unpersist()
+        def step(layer: DataFrame, rnd) -> DataFrame:
+            cand = (
+                cond.join(layer, cond["cu"] == layer["c"])
+                .groupBy(F.col("cv").alias("c"))
+                .agg((F.max("layer") + 1).alias("cand"))
+            )
+            return layer.join(cand, "c", "left").select(
+                "c",
+                F.greatest(
+                    F.col("layer"), F.coalesce("cand", F.lit(0))
+                ).alias("layer"),
+                F.col("layer").alias("old"),
+            )
+
+        with release_on_raise([labels, cond]):
+            layer = superstep(
+                labels.select(F.col("scc").alias("c"))
+                .distinct()
+                .withColumn("layer", F.lit(0).cast("long")),
+                step, max_rounds=max_rounds,
+                changed=F.col("layer") != F.col("old"),
+            )
+        out = (
+            labels.join(layer, labels["scc"] == layer["c"])
+            .select("id", "scc", "layer")
+            .transform(fresh_checkpoint)
+        )
+        labels.unpersist()
+        cond.unpersist()
+        layer.unpersist()
     return out

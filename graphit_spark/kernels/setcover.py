@@ -36,6 +36,7 @@ from graphit_spark.graph import LinkGraph
 from graphit_spark.plans.state import (
     bind_release,
     counted_checkpoint,
+    release_on_raise,
     superstep,
 )
 
@@ -105,12 +106,13 @@ def set_cover(
     if not first["rows"]:  # no edges: the empty cover
         live.unpersist()
         return graph.spark.createDataFrame([], "set_id long, round int")
-    superstep(
-        live, admit,
-        max_rounds=max_rounds, checkpoint_start=False,
-        until=lambda seen: seen["rows"] == 0,
-        rows=F.count(F.lit(1)), top=F.max(bucket),
-    ).unpersist()
+    with release_on_raise(cover_parts):
+        superstep(
+            live, admit,
+            max_rounds=max_rounds, checkpoint_start=False,
+            until=lambda seen: seen["rows"] == 0,
+            rows=F.count(F.lit(1)), top=F.max(bucket),
+        ).unpersist()
     return bind_release(
         reduce(DataFrame.union, cover_parts).select(
             F.col("s").alias("set_id"), "round"

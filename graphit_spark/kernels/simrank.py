@@ -42,50 +42,48 @@ def simrank(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    own_cache = graph.ensure_persisted()
-    edges = graph.edges.select("src", "dst")
+    with graph.persisted():
+        edges = graph.edges.select("src", "dst")
 
-    indeg = (
-        edges.groupBy(F.col("dst").alias("id"))
-        .agg(F.count("*").alias("din"))
-        .transform(fresh_checkpoint)
-    )
-
-    diag = graph.vertices().select(
-        F.col("id").alias("a"), F.col("id").alias("b"),
-        F.lit(1.0).alias("s"),
-    )
-    ea = edges.select(F.col("src").alias("a"), F.col("dst").alias("na"))
-    eb = edges.select(F.col("src").alias("b"), F.col("dst").alias("nb"))
-
-    def step(sim: DataFrame, rnd) -> DataFrame:
-        acc = (
-            sim.join(ea, "a")
-            .join(eb, "b")
-            .groupBy(F.col("na").alias("a"), F.col("nb").alias("b"))
-            .agg(F.sum("s").alias("acc"))
+        indeg = (
+            edges.groupBy(F.col("dst").alias("id"))
+            .agg(F.count("*").alias("din"))
+            .transform(fresh_checkpoint)
         )
-        off = (
-            acc.filter(F.col("a") != F.col("b"))
-            .join(indeg.select(F.col("id").alias("a"),
-                               F.col("din").alias("da")), "a")
-            .join(indeg.select(F.col("id").alias("b"),
-                               F.col("din").alias("db")), "b")
-            .select(
-                "a", "b",
-                (F.lit(float(c)) * F.col("acc")
-                 / (F.col("da") * F.col("db"))).alias("s"),
+
+        diag = graph.vertices().select(
+            F.col("id").alias("a"), F.col("id").alias("b"),
+            F.lit(1.0).alias("s"),
+        )
+        ea = edges.select(F.col("src").alias("a"), F.col("dst").alias("na"))
+        eb = edges.select(F.col("src").alias("b"), F.col("dst").alias("nb"))
+
+        def step(sim: DataFrame, rnd) -> DataFrame:
+            acc = (
+                sim.join(ea, "a")
+                .join(eb, "b")
+                .groupBy(F.col("na").alias("a"), F.col("nb").alias("b"))
+                .agg(F.sum("s").alias("acc"))
             )
-        )
-        return off.unionByName(diag)
+            off = (
+                acc.filter(F.col("a") != F.col("b"))
+                .join(indeg.select(F.col("id").alias("a"),
+                                   F.col("din").alias("da")), "a")
+                .join(indeg.select(F.col("id").alias("b"),
+                                   F.col("din").alias("db")), "b")
+                .select(
+                    "a", "b",
+                    (F.lit(float(c)) * F.col("acc")
+                     / (F.col("da") * F.col("db"))).alias("s"),
+                )
+            )
+            return off.unionByName(diag)
 
-    s_last = superstep(diag, step, rounds=rounds)
-    out = (
-        s_last.filter(F.col("a") < F.col("b"))
-        .transform(fresh_checkpoint)
-    )
-    s_last.unpersist()
-    indeg.unpersist()
-    if own_cache:
-        graph.unpersist()
+        s_last = superstep(diag, step, rounds=rounds)
+        out = (
+            s_last.filter(F.col("a") < F.col("b"))
+            .transform(fresh_checkpoint)
+        )
+        s_last.unpersist()
+        indeg.unpersist()
     return out

@@ -65,80 +65,77 @@ def spectral_bisection(
     ``rounds`` deflated power iterations on c·I − L, and the bisection
     side (1 iff the rounded coordinate is positive)."""
     und = graph.symmetrize()
-    own_cache = und.ensure_persisted()
-
-    deg = und.edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("d")
-    )
-    base = (
-        und.vertices()
-        .join(deg, "id", "left")
-        .select("id", F.coalesce("d", F.lit(0)).cast("long").alias("d"))
-        .transform(fresh_checkpoint)
-    )
-    c = 2 * int(base.agg(F.max("d")).collect()[0][0] or 0)
-
-    state = base.select(
-        "id",
-        "d",
-        (
-            ((F.col("id") * F.lit(_INIT_MULT)) % F.lit(_INIT_MOD)).cast(
-                "double"
-            )
-            / F.lit(float(_INIT_MOD))
-            - F.lit(0.5)
-        ).alias("x"),
-    )
-
-    def step(state: DataFrame, rnd) -> DataFrame:
-        gathered = (
-            und.edges.join(
-                state.select(F.col("id").alias("src"), "x"), "src"
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias("s"))
+    with und.persisted():
+        deg = und.edges.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("d")
         )
-        y = state.join(gathered, "id", "left").select(
+        base = (
+            und.vertices()
+            .join(deg, "id", "left")
+            .select("id", F.coalesce("d", F.lit(0)).cast("long").alias("d"))
+            .transform(fresh_checkpoint)
+        )
+        c = 2 * int(base.agg(F.max("d")).collect()[0][0] or 0)
+
+        state = base.select(
             "id",
             "d",
             (
-                (F.lit(float(c)) - F.col("d")) * F.col("x")
-                + F.coalesce("s", F.lit(0.0))
-            ).alias("y"),
-        )
-        stats = y.agg(
-            F.sum("y").alias("s1"),
-            F.sum(F.col("y") * F.col("y")).alias("s2"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-        s1, s2, n = float(stats["s1"]), float(stats["s2"]), int(stats["n"])
-        m = s1 / n
-        # Centered variance can come out a hair negative in floats when
-        # every y is (near-)identical; both engines guard var <= 0 -> 1
-        # identically (the SQL twin's CASE mirrors this line for line).
-        var = s2 - s1 * s1 / n
-        norm = math.sqrt(var) if var > 0 else 1.0
-        return y.select(
-            "id",
-            "d",
-            ((F.col("y") - F.lit(m)) / F.lit(norm)).alias("x"),
+                ((F.col("id") * F.lit(_INIT_MULT)) % F.lit(_INIT_MOD)).cast(
+                    "double"
+                )
+                / F.lit(float(_INIT_MOD))
+                - F.lit(0.5)
+            ).alias("x"),
         )
 
-    state = superstep(state, step, rounds=rounds)
-    base.unpersist()
-    out = bind_release(
-        state.select(
-            "id",
-            (F.round(F.col("x"), 6) + F.lit(0.0)).alias("fiedler"),
-            F.when(F.round(F.col("x"), 6) > 0, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("side"),
-        ),
-        state,
-    )
-    if own_cache:
-        und.unpersist()
+        def step(state: DataFrame, rnd) -> DataFrame:
+            gathered = (
+                und.edges.join(
+                    state.select(F.col("id").alias("src"), "x"), "src"
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("x").alias("s"))
+            )
+            y = state.join(gathered, "id", "left").select(
+                "id",
+                "d",
+                (
+                    (F.lit(float(c)) - F.col("d")) * F.col("x")
+                    + F.coalesce("s", F.lit(0.0))
+                ).alias("y"),
+            )
+            stats = y.agg(
+                F.sum("y").alias("s1"),
+                F.sum(F.col("y") * F.col("y")).alias("s2"),
+                F.count("*").alias("n"),
+            ).collect()[0]
+            s1, s2, n = float(stats["s1"]), float(stats["s2"]), int(stats["n"])
+            m = s1 / n
+            # Centered variance can come out a hair negative in floats when
+            # every y is (near-)identical; both engines guard var <= 0 -> 1
+            # identically (the SQL twin's CASE mirrors this line for line).
+            var = s2 - s1 * s1 / n
+            norm = math.sqrt(var) if var > 0 else 1.0
+            return y.select(
+                "id",
+                "d",
+                ((F.col("y") - F.lit(m)) / F.lit(norm)).alias("x"),
+            )
+
+        state = superstep(state, step, rounds=rounds)
+        base.unpersist()
+        out = bind_release(
+            state.select(
+                "id",
+                (F.round(F.col("x"), 6) + F.lit(0.0)).alias("fiedler"),
+                F.when(F.round(F.col("x"), 6) > 0, F.lit(1))
+                .otherwise(F.lit(0))
+                .cast("int")
+                .alias("side"),
+            ),
+            state,
+        )
     return out
 
 
@@ -163,111 +160,108 @@ def spectral_partition(
     boundary quantizes at round(x, 6) > 0 exactly like the bisection's
     side bit."""
     und = graph.symmetrize()
-    own_cache = und.ensure_persisted()
-
-    def level(part: DataFrame, rnd) -> DataFrame:
-        """One level: every part's deflated power iteration at once, then
-        each part split by the sign of its vector."""
-        pe = rnd.checkpoint(
-            und.edges.join(
-                part.select(
-                    F.col("id").alias("src"), F.col("part").alias("psrc")
-                ),
-                "src",
-            )
-            .join(
-                part.select(
-                    F.col("id").alias("dst"), F.col("part").alias("pdst")
-                ),
-                "dst",
-            )
-            .filter(F.col("psrc") == F.col("pdst"))
-            .select("src", "dst", F.col("psrc").alias("part"))
-        )
-        deg = pe.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").alias("dd")
-        )
-        base = (
-            part.join(deg, "id", "left")
-            .select(
-                "id",
-                "part",
-                F.coalesce("dd", F.lit(0)).cast("long").alias("d"),
-            )
-        )
-        cmax = base.groupBy("part").agg(
-            (F.lit(2) * F.max("d")).cast("long").alias("c")
-        )
-        state = base.join(cmax, "part").select(
-            "id",
-            "part",
-            "d",
-            "c",
-            (
-                ((F.col("id") * F.lit(_INIT_MULT)) % F.lit(_INIT_MOD))
-                .cast("double")
-                / F.lit(float(_INIT_MOD))
-                - F.lit(0.5)
-            ).alias("x"),
-        )
-
-        def step(state: DataFrame, rnd) -> DataFrame:
-            gathered = (
-                pe.join(
-                    state.select(
-                        F.col("id").alias("src"), F.col("x").alias("xs")
+    with und.persisted():
+        def level(part: DataFrame, rnd) -> DataFrame:
+            """One level: every part's deflated power iteration at once, then
+            each part split by the sign of its vector."""
+            pe = rnd.checkpoint(
+                und.edges.join(
+                    part.select(
+                        F.col("id").alias("src"), F.col("part").alias("psrc")
                     ),
                     "src",
                 )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("xs").alias("s"))
+                .join(
+                    part.select(
+                        F.col("id").alias("dst"), F.col("part").alias("pdst")
+                    ),
+                    "dst",
+                )
+                .filter(F.col("psrc") == F.col("pdst"))
+                .select("src", "dst", F.col("psrc").alias("part"))
             )
-            y = state.join(gathered, "id", "left").select(
+            deg = pe.groupBy(F.col("src").alias("id")).agg(
+                F.count("*").alias("dd")
+            )
+            base = (
+                part.join(deg, "id", "left")
+                .select(
+                    "id",
+                    "part",
+                    F.coalesce("dd", F.lit(0)).cast("long").alias("d"),
+                )
+            )
+            cmax = base.groupBy("part").agg(
+                (F.lit(2) * F.max("d")).cast("long").alias("c")
+            )
+            state = base.join(cmax, "part").select(
                 "id",
                 "part",
                 "d",
                 "c",
                 (
-                    (F.col("c") - F.col("d")) * F.col("x")
-                    + F.coalesce("s", F.lit(0.0))
-                ).alias("y"),
-            )
-            st = y.groupBy("part").agg(
-                F.sum("y").alias("s1"),
-                F.sum(F.col("y") * F.col("y")).alias("s2"),
-                F.count("*").alias("n"),
-            )
-            var = F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")
-            return y.join(st, "part").select(
-                "id",
-                "part",
-                "d",
-                "c",
-                (
-                    (F.col("y") - F.col("s1") / F.col("n"))
-                    / F.when(var > 0, F.sqrt(var)).otherwise(F.lit(1.0))
+                    ((F.col("id") * F.lit(_INIT_MULT)) % F.lit(_INIT_MOD))
+                    .cast("double")
+                    / F.lit(float(_INIT_MOD))
+                    - F.lit(0.5)
                 ).alias("x"),
             )
 
-        state = rnd.own(superstep(state, step, rounds=rounds))
-        return part.join(
-            state.select(
-                "id",
-                F.when(F.round(F.col("x"), 6) > 0, F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("side"),
-            ),
-            "id",
-        ).select(
-            "id",
-            (F.col("part") * 2 + F.col("side")).cast("long").alias("part"),
-        )
+            def step(state: DataFrame, rnd) -> DataFrame:
+                gathered = (
+                    pe.join(
+                        state.select(
+                            F.col("id").alias("src"), F.col("x").alias("xs")
+                        ),
+                        "src",
+                    )
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum("xs").alias("s"))
+                )
+                y = state.join(gathered, "id", "left").select(
+                    "id",
+                    "part",
+                    "d",
+                    "c",
+                    (
+                        (F.col("c") - F.col("d")) * F.col("x")
+                        + F.coalesce("s", F.lit(0.0))
+                    ).alias("y"),
+                )
+                st = y.groupBy("part").agg(
+                    F.sum("y").alias("s1"),
+                    F.sum(F.col("y") * F.col("y")).alias("s2"),
+                    F.count("*").alias("n"),
+                )
+                var = F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")
+                return y.join(st, "part").select(
+                    "id",
+                    "part",
+                    "d",
+                    "c",
+                    (
+                        (F.col("y") - F.col("s1") / F.col("n"))
+                        / F.when(var > 0, F.sqrt(var)).otherwise(F.lit(1.0))
+                    ).alias("x"),
+                )
 
-    part = superstep(
-        und.vertices().select("id", F.lit(0).cast("long").alias("part")),
-        level, rounds=levels,
-    )
-    if own_cache:
-        und.unpersist()
+            state = rnd.own(superstep(state, step, rounds=rounds))
+            return part.join(
+                state.select(
+                    "id",
+                    F.when(F.round(F.col("x"), 6) > 0, F.lit(1))
+                    .otherwise(F.lit(0))
+                    .cast("long")
+                    .alias("side"),
+                ),
+                "id",
+            ).select(
+                "id",
+                (F.col("part") * 2 + F.col("side")).cast("long").alias("part"),
+            )
+
+        part = superstep(
+            und.vertices().select("id", F.lit(0).cast("long").alias("part")),
+            level, rounds=levels,
+        )
     return part

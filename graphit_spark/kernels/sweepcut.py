@@ -56,76 +56,72 @@ def sweep_cut(
     best prefix is the first index, matching the reference's exclusive
     cut). metrics_out, if given, receives best_cut / best_conductance /
     best_vol / best_crossing."""
-    own_cache = graph.ensure_persisted()
-    m = graph.num_edges
-    release: list = []
+    with graph.persisted():
+        m = graph.num_edges
+        release: list = []
 
-    ranks = dense_rank_ids(
-        values.select("id", F.col(val_col).alias("val")),
-        [F.desc("val"), F.asc("id")],
-        out_col="r",
-        release=release,
-    ).select("id", "r").transform(fresh_checkpoint)
+        ranks = dense_rank_ids(
+            values.select("id", F.col(val_col).alias("val")),
+            [F.desc("val"), F.asc("id")],
+            out_col="r",
+            release=release,
+        ).select("id", "r").transform(fresh_checkpoint)
 
-    deg = graph.out_degrees()
-    base = ranks.join(deg, "id", "left").select(
-        "id", "r", F.coalesce("out_degree", F.lit(0)).alias("d")
-    )
-
-    ru = ranks.select(F.col("id").alias("src"), F.col("r").alias("ru"))
-    rv = ranks.select(F.col("id").alias("dst"), F.col("r").alias("rv"))
-    # each edge row scanned once, at its source's insertion rank:
-    # +1 toward a later-ranked or out-of-subset dst, -1 toward an
-    # already-inserted one (intrinsics.h:387-390)
-    deltas = (
-        graph.edges.join(ru, "src")
-        .join(rv, "dst", "left")
-        .select(
-            F.col("ru").alias("r"),
-            F.when(
-                F.col("rv").isNull() | (F.col("rv") > F.col("ru")), 1
-            ).otherwise(-1).alias("delta"),
+        deg = graph.out_degrees()
+        base = ranks.join(deg, "id", "left").select(
+            "id", "r", F.coalesce("out_degree", F.lit(0)).alias("d")
         )
-        .groupBy("r")
-        .agg(F.sum("delta").alias("delta"))
-    )
 
-    cum = ordered_prefix_sum(
-        base.join(deltas, "r", "left")
-        .select("id", "r", "d", F.coalesce("delta", F.lit(0)).alias("delta")),
-        [F.asc("r")],
-        ["d", "delta"],
-    )
-    swept = cum.select(
-        "id", "r",
-        F.col("d_cum").alias("vol"),
-        F.col("delta_cum").alias("crossing"),
-    )
-    denom = F.least(F.col("vol"), F.lit(m) - F.col("vol"))
-    cond = F.when(
-        (F.col("crossing") == 0) | (denom == 0), F.lit(1.0)
-    ).otherwise(F.col("crossing") / denom)
-    top = (
-        swept.select("r", "vol", "crossing", cond.alias("cond"))
-        .orderBy(F.asc("cond"), F.asc("r"))
-        .limit(1)
-        .collect()
-    )
-    for cached in (*release, cum):
-        cached.unpersist()
-    if not top:
-        if own_cache:
-            graph.unpersist()
-        return ranks.select("id").limit(0)
-    best = top[0]
-    if metrics_out is not None:
-        metrics_out.update(
-            best_cut=int(best["r"]),
-            best_conductance=float(best["cond"]),
-            best_vol=int(best["vol"]),
-            best_crossing=int(best["crossing"]),
+        ru = ranks.select(F.col("id").alias("src"), F.col("r").alias("ru"))
+        rv = ranks.select(F.col("id").alias("dst"), F.col("r").alias("rv"))
+        # each edge row scanned once, at its source's insertion rank:
+        # +1 toward a later-ranked or out-of-subset dst, -1 toward an
+        # already-inserted one (intrinsics.h:387-390)
+        deltas = (
+            graph.edges.join(ru, "src")
+            .join(rv, "dst", "left")
+            .select(
+                F.col("ru").alias("r"),
+                F.when(
+                    F.col("rv").isNull() | (F.col("rv") > F.col("ru")), 1
+                ).otherwise(-1).alias("delta"),
+            )
+            .groupBy("r")
+            .agg(F.sum("delta").alias("delta"))
         )
-    out = ranks.filter(F.col("r") < best["r"]).select("id")
-    if own_cache:
-        graph.unpersist()
+
+        cum = ordered_prefix_sum(
+            base.join(deltas, "r", "left")
+            .select("id", "r", "d", F.coalesce("delta", F.lit(0)).alias("delta")),
+            [F.asc("r")],
+            ["d", "delta"],
+        )
+        swept = cum.select(
+            "id", "r",
+            F.col("d_cum").alias("vol"),
+            F.col("delta_cum").alias("crossing"),
+        )
+        denom = F.least(F.col("vol"), F.lit(m) - F.col("vol"))
+        cond = F.when(
+            (F.col("crossing") == 0) | (denom == 0), F.lit(1.0)
+        ).otherwise(F.col("crossing") / denom)
+        top = (
+            swept.select("r", "vol", "crossing", cond.alias("cond"))
+            .orderBy(F.asc("cond"), F.asc("r"))
+            .limit(1)
+            .collect()
+        )
+        for cached in (*release, cum):
+            cached.unpersist()
+        if not top:
+            return ranks.select("id").limit(0)
+        best = top[0]
+        if metrics_out is not None:
+            metrics_out.update(
+                best_cut=int(best["r"]),
+                best_conductance=float(best["cond"]),
+                best_vol=int(best["vol"]),
+                best_crossing=int(best["crossing"]),
+            )
+        out = ranks.filter(F.col("r") < best["r"]).select("id")
     return out

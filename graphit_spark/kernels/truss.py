@@ -195,43 +195,41 @@ def k_truss(
     within it, so a budget below 1 always raises.
     ``metrics_out["rounds"]`` is the number of rounds run, the scoring
     pass included."""
-    own_cache = graph.ensure_persisted()
-    sym = graph.symmetrize()
-    und = sym.edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-    # orientation key table: the initial graph's memoized degrees, reused
-    # every round (see _decrement_round/_full_support: any fixed total
-    # order is correct; currency only tunes constant factors)
-    deg0 = sym.out_degrees()
+    with graph.persisted():
+        sym = graph.symmetrize()
+        und = sym.edges.filter(F.col("src") < F.col("dst")).select(
+            F.col("src").alias("u"), F.col("dst").alias("v")
+        )
+        # orientation key table: the initial graph's memoized degrees, reused
+        # every round (see _decrement_round/_full_support: any fixed total
+        # order is correct; currency only tunes constant factors)
+        deg0 = sym.out_degrees()
 
-    def step(scored: DataFrame, rnd) -> DataFrame:
-        if rnd.seen is None:
-            # round 1, the scoring pass: every edge's support
-            return _full_support(und, deg0)
-        if rnd.seen["peel"] * DENSE_FRACTION >= rnd.seen["alive"]:
-            # dense round: recount on the survivor set (one full
-            # enumeration of the residual graph — the avalanche regime)
-            surv_edges = scored.filter(F.col("support") >= k - 2).select(
-                "u", "v"
-            )
-            return _full_support(surv_edges, deg0)
-        # peel is a filter over the materialized state — cheap to
-        # re-evaluate, no checkpoint needed
-        peel = scored.filter(F.col("support") < k - 2).select("u", "v")
-        return _decrement_round(scored, peel, k, deg0)
+        def step(scored: DataFrame, rnd) -> DataFrame:
+            if rnd.seen is None:
+                # round 1, the scoring pass: every edge's support
+                return _full_support(und, deg0)
+            if rnd.seen["peel"] * DENSE_FRACTION >= rnd.seen["alive"]:
+                # dense round: recount on the survivor set (one full
+                # enumeration of the residual graph — the avalanche regime)
+                surv_edges = scored.filter(F.col("support") >= k - 2).select(
+                    "u", "v"
+                )
+                return _full_support(surv_edges, deg0)
+            # peel is a filter over the materialized state — cheap to
+            # re-evaluate, no checkpoint needed
+            peel = scored.filter(F.col("support") < k - 2).select("u", "v")
+            return _decrement_round(scored, peel, k, deg0)
 
-    log: list = []
-    # the unscored edge table is only read by round 1: nothing to
-    # materialize before it
-    scored = superstep(
-        und, step, max_rounds=max_rounds, checkpoint_start=False,
-        log=log, until=lambda seen: seen["peel"] == 0,
-        alive=F.count(F.lit(1)),
-        peel=F.count(F.when(F.col("support") < k - 2, 1)),
-    )
-    if own_cache:
-        graph.unpersist()
+        log: list = []
+        # the unscored edge table is only read by round 1: nothing to
+        # materialize before it
+        scored = superstep(
+            und, step, max_rounds=max_rounds, checkpoint_start=False,
+            log=log, until=lambda seen: seen["peel"] == 0,
+            alive=F.count(F.lit(1)),
+            peel=F.count(F.when(F.col("support") < k - 2, 1)),
+        )
     if metrics_out is not None:
         metrics_out["rounds"] = len(log)
     return bind_release(

@@ -51,8 +51,7 @@ def _starts(graph: LinkGraph, starts: DataFrame | None) -> DataFrame:
     return starts.select(first.alias("walk_id"), first.alias("v"))
 
 
-def _walk(graph: LinkGraph, own_cache: bool, start: DataFrame,
-          walk_len: int, draw, scratch=()) -> DataFrame:
+def _walk(start: DataFrame, walk_len: int, draw, scratch=()) -> DataFrame:
     """The walk loop every sampler shares: (walk_id, step, vertex) rows
     for steps 0..walk_len. ``start`` holds step 0's positions
     (walk_id, v, ...); ``draw(positions, rnd)`` builds step
@@ -64,8 +63,7 @@ def _walk(graph: LinkGraph, own_cache: bool, start: DataFrame,
     result; the driver holds a view of each that is bound to no owner,
     so its release of the superseded step frees nothing. The result's
     ``unpersist()`` releases every step. Once the walk has run, the
-    ``scratch`` frames its draws read are released, and the graph's
-    cache if ``own_cache``."""
+    ``scratch`` frames its draws read are released."""
     steps = [fresh_checkpoint(start)]
 
     def keep(df: DataFrame, rnd, seen) -> DataFrame:
@@ -78,8 +76,6 @@ def _walk(graph: LinkGraph, own_cache: bool, start: DataFrame,
     )
     for df in scratch:
         df.unpersist()
-    if own_cache:
-        graph.unpersist()
     out = reduce(DataFrame.unionByName, [
         df.select("walk_id", F.lit(t).alias("step"), F.col("v").alias("vertex"))
         for t, df in enumerate(steps)
@@ -186,30 +182,29 @@ def weighted_random_walks(
     baseline."""
     if not graph.weighted:
         raise ValueError("weighted_random_walks requires a weighted graph")
-    own_cache = graph.ensure_persisted()
     from pyspark.sql import Window
 
-    wsrc = Window.partitionBy("src").orderBy("dst").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum_edges = (
-        graph.edges.withColumn("cumw", F.sum("weight").over(wsrc))
-        .withColumn("totw", F.sum("weight").over(Window.partitionBy("src")))
-        .transform(fresh_checkpoint)
-    )
-
-    def draw(cur: DataFrame, rnd) -> DataFrame:
-        target = _hash_mod(F.col("walk_id"), rnd.index, seed, F.col("totw"))
-        return (
-            cur.join(cum_edges, cur["v"] == cum_edges["src"])
-            .filter(F.col("cumw") > target)
-            .groupBy("walk_id")
-            .agg(F.min(F.struct("cumw", "dst")).alias("pick"))
-            .select("walk_id", F.col("pick.dst").alias("v"))
+    with graph.persisted():
+        wsrc = Window.partitionBy("src").orderBy("dst").rowsBetween(
+            Window.unboundedPreceding, 0
+        )
+        cum_edges = (
+            graph.edges.withColumn("cumw", F.sum("weight").over(wsrc))
+            .withColumn("totw", F.sum("weight").over(Window.partitionBy("src")))
+            .transform(fresh_checkpoint)
         )
 
-    return _walk(graph, own_cache, _starts(graph, starts), walk_len, draw,
-                 [cum_edges])
+        def draw(cur: DataFrame, rnd) -> DataFrame:
+            target = _hash_mod(F.col("walk_id"), rnd.index, seed, F.col("totw"))
+            return (
+                cur.join(cum_edges, cur["v"] == cum_edges["src"])
+                .filter(F.col("cumw") > target)
+                .groupBy("walk_id")
+                .agg(F.min(F.struct("cumw", "dst")).alias("pick"))
+                .select("walk_id", F.col("pick.dst").alias("v"))
+            )
+
+        return _walk(_starts(graph, starts), walk_len, draw, [cum_edges])
 
 
 def node2vec_walks(
@@ -239,49 +234,49 @@ def node2vec_walks(
     unbiased weighted walk pays, plus one equi-join. Same hub caveat
     as weighted_random_walks: a step at a hub costs that hub's degree
     in one walk's window partition (never |E|)."""
-    own_cache = graph.ensure_persisted()
     from pyspark.sql import Window
 
-    adj = graph.adjacency()
-    prev_edges = graph.edges.select(
-        F.col("src").alias("prev"), F.col("dst"), F.lit(1).alias("conn")
-    ).dropDuplicates(["prev", "dst"])
-    wtot = Window.partitionBy("walk_id")
-    wcum = wtot.orderBy("dst").rowsBetween(Window.unboundedPreceding, 0)
-    bias = (
-        F.when(F.col("dst") == F.col("prev"), F.lit(1.0 / p))
-        .when(F.col("conn").isNotNull(), F.lit(1.0))
-        .otherwise(F.lit(1.0 / q))
-    )
+    with graph.persisted():
+        adj = graph.adjacency()
+        prev_edges = graph.edges.select(
+            F.col("src").alias("prev"), F.col("dst"), F.lit(1).alias("conn")
+        ).dropDuplicates(["prev", "dst"])
+        wtot = Window.partitionBy("walk_id")
+        wcum = wtot.orderBy("dst").rowsBetween(Window.unboundedPreceding, 0)
+        bias = (
+            F.when(F.col("dst") == F.col("prev"), F.lit(1.0 / p))
+            .when(F.col("conn").isNotNull(), F.lit(1.0))
+            .otherwise(F.lit(1.0 / q))
+        )
 
-    def draw(state: DataFrame, rnd) -> DataFrame:
-        t = rnd.index
-        if t == 1:
-            # uniform draw (no previous vertex yet) — same as random_walks
-            return _uniform_hop(state, adj, 1, seed, F.col("v").alias("prev"))
-        frac = _hash_mod(F.col("walk_id"), t, seed, F.lit(_PREC)) / F.lit(
-            float(_PREC)
-        )
-        cand = (
-            state.join(graph.edges, state["v"] == graph.edges["src"])
-            .join(prev_edges, ["prev", "dst"], "left")
-            .select("walk_id", F.col("v").alias("newprev"), "dst",
-                    bias.alias("bias"))
-        )
-        return (
-            cand.withColumn("cumw", F.sum("bias").over(wcum))
-            .withColumn("target", frac * F.sum("bias").over(wtot))
-            .filter(F.col("cumw") > F.col("target"))
-            .groupBy("walk_id")
-            .agg(F.min(F.struct("cumw", "dst", "newprev")).alias("pick"))
-            .select(
-                "walk_id",
-                F.col("pick.newprev").alias("prev"),
-                F.col("pick.dst").alias("v"),
+        def draw(state: DataFrame, rnd) -> DataFrame:
+            t = rnd.index
+            if t == 1:
+                # uniform draw (no previous vertex yet) — same as random_walks
+                return _uniform_hop(state, adj, 1, seed, F.col("v").alias("prev"))
+            frac = _hash_mod(F.col("walk_id"), t, seed, F.lit(_PREC)) / F.lit(
+                float(_PREC)
             )
-        )
+            cand = (
+                state.join(graph.edges, state["v"] == graph.edges["src"])
+                .join(prev_edges, ["prev", "dst"], "left")
+                .select("walk_id", F.col("v").alias("newprev"), "dst",
+                        bias.alias("bias"))
+            )
+            return (
+                cand.withColumn("cumw", F.sum("bias").over(wcum))
+                .withColumn("target", frac * F.sum("bias").over(wtot))
+                .filter(F.col("cumw") > F.col("target"))
+                .groupBy("walk_id")
+                .agg(F.min(F.struct("cumw", "dst", "newprev")).alias("pick"))
+                .select(
+                    "walk_id",
+                    F.col("pick.newprev").alias("prev"),
+                    F.col("pick.dst").alias("v"),
+                )
+            )
 
-    return _walk(graph, own_cache, _starts(graph, starts), walk_len, draw)
+        return _walk(_starts(graph, starts), walk_len, draw)
 
 
 def random_walks(
@@ -300,12 +295,12 @@ def random_walks(
     Per step: frontier ⋈ adjacency on the current vertex, pick
     nbrs[H mod degree]. walk_len joins total; each materialized step is
     walk-count-sized, never edge-sized."""
-    own_cache = graph.ensure_persisted()
-    adj = graph.adjacency()
-    return _walk(
-        graph, own_cache, _starts(graph, starts), walk_len,
-        lambda cur, rnd: _uniform_hop(cur, adj, rnd.index, seed),
-    )
+    with graph.persisted():
+        adj = graph.adjacency()
+        return _walk(
+            _starts(graph, starts), walk_len,
+            lambda cur, rnd: _uniform_hop(cur, adj, rnd.index, seed),
+        )
 
 
 def _alias_build(dsts, weights):
@@ -483,43 +478,42 @@ def node2vec_walks_alias(
     random_walks_alias; construction floats are bit-reproducible in
     SQL (dyadic biases for the default p=4, q=0.25 make every partial
     sum exact), so the query gets a real DuckDB twin."""
-    own_cache = graph.ensure_persisted()
-    adj = graph.adjacency()
-    memo: list[DataFrame] = []  # the blocks built so far, materialized
+    with graph.persisted():
+        adj = graph.adjacency()
+        memo: list[DataFrame] = []  # the blocks built so far, materialized
 
-    def draw(state: DataFrame, rnd) -> DataFrame:
-        t = rnd.index
-        if t == 1:
-            # uniform draw (no previous vertex yet) — same as node2vec_walks
-            return _uniform_hop(state, adj, 1, seed, F.col("v").alias("prev"))
-        at = alias_tables
-        if at is None:
-            pairs = state.select(
-                "prev", F.col("v").alias("cur")
-            ).dropDuplicates(["prev", "cur"])
-            # the superseded memo is released with the round
-            old = rnd.own(memo.pop()) if memo else None
-            if old is not None:
-                pairs = pairs.join(
-                    old.select("prev", "cur"), ["prev", "cur"], "left_anti"
-                )
-            built = build_node2vec_alias_tables(graph, pairs, p=p, q=q)
-            memo.append(fresh_checkpoint(
-                built if old is None else old.unionByName(built)
-            ))
-            at = memo[0]
-        at = at.select(
-            F.col("prev").alias("aprev"), F.col("cur").alias("acur"),
-            "nbrs", "prob", "alias",
-        )
-        return state.join(
-            at, (state["prev"] == at["aprev"]) & (state["v"] == at["acur"]),
-        ).select(
-            "walk_id", F.col("v").alias("prev"), _alias_pick(t, seed).alias("v")
-        )
+        def draw(state: DataFrame, rnd) -> DataFrame:
+            t = rnd.index
+            if t == 1:
+                # uniform draw (no previous vertex yet) — same as node2vec_walks
+                return _uniform_hop(state, adj, 1, seed, F.col("v").alias("prev"))
+            at = alias_tables
+            if at is None:
+                pairs = state.select(
+                    "prev", F.col("v").alias("cur")
+                ).dropDuplicates(["prev", "cur"])
+                # the superseded memo is released with the round
+                old = rnd.own(memo.pop()) if memo else None
+                if old is not None:
+                    pairs = pairs.join(
+                        old.select("prev", "cur"), ["prev", "cur"], "left_anti"
+                    )
+                built = build_node2vec_alias_tables(graph, pairs, p=p, q=q)
+                memo.append(fresh_checkpoint(
+                    built if old is None else old.unionByName(built)
+                ))
+                at = memo[0]
+            at = at.select(
+                F.col("prev").alias("aprev"), F.col("cur").alias("acur"),
+                "nbrs", "prob", "alias",
+            )
+            return state.join(
+                at, (state["prev"] == at["aprev"]) & (state["v"] == at["acur"]),
+            ).select(
+                "walk_id", F.col("v").alias("prev"), _alias_pick(t, seed).alias("v")
+            )
 
-    return _walk(graph, own_cache, _starts(graph, starts), walk_len, draw,
-                 memo)
+        return _walk(_starts(graph, starts), walk_len, draw, memo)
 
 
 def random_walks_alias(
@@ -537,19 +531,19 @@ def random_walks_alias(
     but a DIFFERENT deterministic sampler (alias construction fixes a
     different mapping), so seeds are not interchangeable between the
     two. Exact pick parity vs the pure-Python mirror is tested."""
-    own_cache = graph.ensure_persisted()
-    at = (
-        alias_tables
-        if alias_tables is not None
-        else build_alias_tables(graph).transform(fresh_checkpoint)
-    )
-    return _walk(
-        graph, own_cache, _starts(graph, starts), walk_len,
-        lambda cur, rnd: cur.join(at, cur["v"] == at["src"]).select(
-            "walk_id", _alias_pick(rnd.index, seed).alias("v")
-        ),
-        [] if alias_tables is not None else [at],
-    )
+    with graph.persisted():
+        at = (
+            alias_tables
+            if alias_tables is not None
+            else build_alias_tables(graph).transform(fresh_checkpoint)
+        )
+        return _walk(
+            _starts(graph, starts), walk_len,
+            lambda cur, rnd: cur.join(at, cur["v"] == at["src"]).select(
+                "walk_id", _alias_pick(rnd.index, seed).alias("v")
+            ),
+            [] if alias_tables is not None else [at],
+        )
 
 
 def walk_cooccurrence(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -621,21 +615,21 @@ def montecarlo_pagerank(
     independent of iteration-to-convergence, which is the point of the
     MC path at crawl scale."""
     R = walks_per_vertex
-    own_cache = graph.ensure_persisted()
-    adj = graph.adjacency()
-    n = graph.num_vertices
-    start = graph.vertices().select(
-        F.explode(F.sequence(F.lit(0), F.lit(R - 1))).alias("r"),
-        F.col("id").alias("v"),
-    ).select((F.col("v") * R + F.col("r")).alias("walk_id"), "v")
+    with graph.persisted():
+        adj = graph.adjacency()
+        n = graph.num_vertices
+        start = graph.vertices().select(
+            F.explode(F.sequence(F.lit(0), F.lit(R - 1))).alias("r"),
+            F.col("id").alias("v"),
+        ).select((F.col("v") * R + F.col("r")).alias("walk_id"), "v")
 
-    def draw(cur: DataFrame, rnd) -> DataFrame:
-        alive = cur.filter(
-            _hash_mod(F.col("walk_id"), rnd.index, seed + 101, F.lit(20)) < 17
-        )
-        return _uniform_hop(alive, adj, rnd.index, seed)
+        def draw(cur: DataFrame, rnd) -> DataFrame:
+            alive = cur.filter(
+                _hash_mod(F.col("walk_id"), rnd.index, seed + 101, F.lit(20)) < 17
+            )
+            return _uniform_hop(alive, adj, rnd.index, seed)
 
-    walks = _walk(graph, own_cache, start, walk_len, draw)
+        walks = _walk(start, walk_len, draw)
     counts = walks.groupBy("vertex").agg(F.count("*").cast("long").alias("visits"))
     out = (
         graph.vertices()

@@ -52,43 +52,40 @@ def wl_refinement(
     rounds, starting from the (symmetric) degree. Vertices with equal
     color are structurally indistinguishable at radius ``rounds``."""
     g = graph.symmetrize() if symmetrize else graph
-    own_cache = g.ensure_persisted()
-
-    def step(colors: DataFrame, rnd) -> DataFrame:
-        digest = (
-            g.edges.join(
-                colors.select(F.col("id").alias("src"),
-                              F.col("color").alias("c")),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(
-                F.count("*").alias("cnt"),
-                F.expr("bit_xor(c)").alias("x"),
-                F.sum(F.col("c") % WL_SUM_MOD).alias("s"),
-            )
-        )
-        return colors.join(digest, "id", "left").select(
-            "id",
-            _h60(
-                F.concat_ws(
-                    "|",
-                    F.col("color").cast("string"),
-                    F.coalesce("cnt", F.lit(0)).cast("string"),
-                    F.coalesce("x", F.lit(0)).cast("string"),
-                    F.coalesce("s", F.lit(0)).cast("string"),
+    with g.persisted():
+        def step(colors: DataFrame, rnd) -> DataFrame:
+            digest = (
+                g.edges.join(
+                    colors.select(F.col("id").alias("src"),
+                                  F.col("color").alias("c")),
+                    "src",
                 )
-            ).alias("color"),
-        )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(
+                    F.count("*").alias("cnt"),
+                    F.expr("bit_xor(c)").alias("x"),
+                    F.sum(F.col("c") % WL_SUM_MOD).alias("s"),
+                )
+            )
+            return colors.join(digest, "id", "left").select(
+                "id",
+                _h60(
+                    F.concat_ws(
+                        "|",
+                        F.col("color").cast("string"),
+                        F.coalesce("cnt", F.lit(0)).cast("string"),
+                        F.coalesce("x", F.lit(0)).cast("string"),
+                        F.coalesce("s", F.lit(0)).cast("string"),
+                    )
+                ).alias("color"),
+            )
 
-    colors = superstep(
-        g.out_degrees()
-        .select(
-            "id",
-            _h60(F.col("out_degree").cast("string")).alias("color"),
-        ),
-        step, rounds=rounds,
-    )
-    if own_cache:
-        g.unpersist()
+        colors = superstep(
+            g.out_degrees()
+            .select(
+                "id",
+                _h60(F.col("out_degree").cast("string")).alias("color"),
+            ),
+            step, rounds=rounds,
+        )
     return colors

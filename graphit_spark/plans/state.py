@@ -54,7 +54,11 @@ checkpoint of its own.
 Package rule: a frame that is ever released comes from
 ``fresh_checkpoint`` / ``counted_checkpoint``, the superstep driver or
 ``bind_release``; a raw ``localCheckpoint`` is only for a terminal frame
-nobody releases. ``tests/test_superstep_jobs.py`` pins the rule.
+nobody releases. A kernel holds the cache of the graph it traverses in
+a ``with graph.persisted():`` block — never an ``unpersist()`` of the
+graph — so the hold ends on return and on raise alike, and frames it
+keeps across the driver's rounds are released on raise by
+``release_on_raise``. ``tests/test_superstep_jobs.py`` pins the rule.
 
 Round aggregates (``observe``): a superstep's stopping rule and
 direction choice need a few global numbers — an L1 error, a changed-row
@@ -76,6 +80,7 @@ the one statement of that lifecycle contract.
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
@@ -221,6 +226,20 @@ def bind_release(df: DataFrame, *owners: DataFrame) -> DataFrame:
     return df
 
 
+@contextmanager
+def release_on_raise(frames: list[DataFrame]):
+    """Release every frame in ``frames`` if the block raises — the
+    materialized frames a kernel keeps across its driver's rounds (the
+    tables its rounds read, the result parts they append). On return the
+    kernel keeps them."""
+    try:
+        yield
+    except BaseException:
+        for df in frames:
+            df.unpersist()
+        raise
+
+
 class Round:
     """One superstep, as its step function sees it.
 
@@ -319,6 +338,10 @@ def superstep(
       so the release is real — and every round checkpoint.
     - The loop stops when ``until(seen)`` holds; with ``changed`` and no
       ``until``, when ``changed`` counts 0.
+    - When ``step`` or ``materialize`` raises — a nested ``superstep``
+      out of budget among them — or the budget below runs out, the
+      driver releases the state it holds and the round's checkpoints
+      and owned frames, then re-raises.
 
     The budget is one of two contracts, named by the keyword:
 
@@ -345,31 +368,38 @@ def superstep(
         state.unpersist()
         state = start_ck
     seen = None
-    for i in range(start, rounds if max_rounds is None else max_rounds):
-        rnd = Round(i, seen, aggs)
-        new = step(state, rnd)
-        adopted, seen = rnd._observed(new)
-        if seen is None and aggs:
-            new, seen = observe(new, **aggs)
-        if materialize is not None:
-            new = materialize(new, rnd, seen)
-        elif not adopted:
-            new = fresh_checkpoint(new)
-        state.unpersist()
-        for ck, _ in rnd._cks:
-            if ck is not new:
-                ck.unpersist()
-        state = new
-        if log is not None:
-            log.append(seen)
-        if until is not None and until(seen):
-            break
-    else:
-        if max_rounds is not None:
+    rnd = None
+    try:
+        for i in range(start, rounds if max_rounds is None else max_rounds):
+            rnd = Round(i, seen, aggs)
+            new = step(state, rnd)
+            adopted, seen = rnd._observed(new)
+            if seen is None and aggs:
+                new, seen = observe(new, **aggs)
+            if materialize is not None:
+                new = materialize(new, rnd, seen)
+            elif not adopted:
+                new = fresh_checkpoint(new)
             state.unpersist()
-            raise RuntimeError(
-                f"fixpoint did not converge within max_rounds={max_rounds} "
-                "rounds: changes are still pending, so the state is not "
-                "the answer — raise the budget above the graph's depth"
-            )
+            for ck, _ in rnd._cks:
+                if ck is not new:
+                    ck.unpersist()
+            state, rnd = new, None
+            if log is not None:
+                log.append(seen)
+            if until is not None and until(seen):
+                break
+        else:
+            if max_rounds is not None:
+                raise RuntimeError(
+                    f"fixpoint did not converge within max_rounds={max_rounds} "
+                    "rounds: changes are still pending, so the state is not "
+                    "the answer — raise the budget above the graph's depth"
+                )
+    except BaseException:
+        state.unpersist()
+        if rnd is not None:  # the round that raised
+            for ck, _ in rnd._cks:
+                ck.unpersist()
+        raise
     return state

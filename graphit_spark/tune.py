@@ -216,32 +216,30 @@ def autotune(
     "best": config} and writes it as JSON to out_path if given.
     """
     spark = graph.spark
-    own_cache = graph.ensure_persisted()
-    parallelism = spark.sparkContext.defaultParallelism
-    stats = measure_stats(graph)
-    cands = candidate_schedules(stats, kernel, parallelism=parallelism)
+    with graph.persisted():
+        parallelism = spark.sparkContext.defaultParallelism
+        stats = measure_stats(graph)
+        cands = candidate_schedules(stats, kernel, parallelism=parallelism)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    results = []
-    try:
-        for config in cands:
-            if measure_fn is not None:
-                best = float(measure_fn(graph, kernel, config, rounds))
-            else:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(config["shuffle_partitions"]),
-                )
-                best = float("inf")
-                for _ in range(trials):
-                    t0 = time.monotonic()
-                    _run_kernel(graph, kernel, config, rounds, source)
-                    best = min(best, time.monotonic() - t0)
-            results.append({"config": config, "best_sec": best})
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if own_cache:
-            graph.unpersist()
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        results = []
+        try:
+            for config in cands:
+                if measure_fn is not None:
+                    best = float(measure_fn(graph, kernel, config, rounds))
+                else:
+                    spark.conf.set(
+                        "spark.sql.shuffle.partitions",
+                        str(config["shuffle_partitions"]),
+                    )
+                    best = float("inf")
+                    for _ in range(trials):
+                        t0 = time.monotonic()
+                        _run_kernel(graph, kernel, config, rounds, source)
+                        best = min(best, time.monotonic() - t0)
+                results.append({"config": config, "best_sec": best})
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     winner = min(results, key=lambda r: r["best_sec"])
     report = {

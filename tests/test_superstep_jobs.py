@@ -6,8 +6,10 @@ round launches no count or collect of its own. These tests pin that job
 shape, that reading observed metrics never waits forever, the round
 budget and release contract of ``plans.state.superstep``, that no
 kernel on the driver and no corpus function leaves cached blocks behind
-once its result is released, and, package-wide, that round loops run on
-the driver and releases target frames that can release."""
+once its result is released, nor a kernel whose budget runs out once it
+raises, and, package-wide, that round loops run on the driver, that
+releases target frames that can release, and that no kernel releases
+its graph."""
 
 import random
 import re
@@ -404,6 +406,93 @@ def test_kernel_leaves_no_cached_blocks(spark, leak_graphs, name):
     assert _cached_ids(spark) <= before, name
 
 
+# a budget each kernel runs out of on the leak fixture
+_RAISING = {
+    "k_core": lambda g, w: K.k_core(g, 2, max_rounds=1),
+    "bridges": lambda g, w: K.bridges(g, max_rounds=1),
+    "biconnected_components":
+        lambda g, w: K.biconnected_components(g, max_rounds=1),
+    "articulation_points":
+        lambda g, w: K.articulation_points(g, max_rounds=1),
+    "strongly_connected_components":
+        lambda g, w: K.strongly_connected_components(g, max_prop=1),
+    "condensation_layers": lambda g, w: condensation_layers(g, max_rounds=1),
+    "core_decomposition": lambda g, w: K.core_decomposition(g, max_rounds=1),
+    "set_cover": lambda g, w: K.set_cover(g, max_rounds=1),
+    "astar": lambda g, w: K.astar(w, 0, 4, max_rounds=1),
+    "betweenness_centrality":
+        lambda g, w: K.betweenness_centrality(g, 0, max_levels=1),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RAISING))
+def test_kernel_releases_on_raise(spark, leak_graphs, name):
+    """A kernel whose round budget runs out raises, and leaves the
+    block-manager storage as it found it: the graph cache it held, the
+    driver's state and round frames, and the frames it made before the
+    driver started are all released on the raise path."""
+    g, w = leak_graphs
+    before = _cached_ids(spark)
+    with pytest.raises(RuntimeError):
+        _RAISING[name](g, w)
+    assert _cached_ids(spark) <= before, name
+
+
+def _graph_names(fn) -> set[str]:
+    """The names a function binds to a graph: its ``LinkGraph``
+    parameters, and names assigned from their ``symmetrize()`` or
+    ``transpose()`` (either branch of a conditional expression)."""
+    import ast
+
+    names = {
+        a.arg
+        for a in fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs
+        if a.annotation is not None and "LinkGraph" in ast.unparse(a.annotation)
+    }
+
+    def is_graph(node) -> bool:
+        if isinstance(node, ast.Name):
+            return node.id in names
+        if isinstance(node, ast.IfExp):
+            return is_graph(node.body) or is_graph(node.orelse)
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) in ("symmetrize", "transpose")
+            and is_graph(node.func.value)
+        )
+
+    for node in ast.walk(fn):  # assignments in source order
+        if isinstance(node, ast.Assign) and is_graph(node.value):
+            names |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+    return names
+
+
+def test_no_kernel_releases_its_graph():
+    """A kernel holds the cache of the graph it traverses in a
+    ``LinkGraph.persisted()`` block, which releases exactly what it
+    persisted, on return and on raise: no function under ``kernels/``
+    calls ``unpersist()`` on a graph parameter or on that parameter's
+    ``symmetrize()``/``transpose()``."""
+    import ast
+
+    found = []
+    for rel, tree in _package_modules():
+        if not rel.startswith("kernels/"):
+            continue
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            graphs = _graph_names(fn)
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None) == "unpersist"
+                    and getattr(node.func.value, "id", None) in graphs
+                ):
+                    found.append(f"{rel}:{node.lineno}")
+    assert not found, sorted(set(found))
+
+
 @pytest.fixture(scope="session")
 def leak_corpus(spark):
     """(documents, embeddings, token counts): tiny local frames for the
@@ -436,6 +525,9 @@ _CORPUS = {
     "duplicate_spans": lambda d, e, t: D.duplicate_spans(d, n=5),
     "token_budget_sample": lambda d, e, t: SA.token_budget_sample(t, 100),
     "bpe_merges": lambda d, e, t: T.bpe_merges(d, rounds=4, top_words=8),
+    "ngram_jaccard_pairs": lambda d, e, t: D.ngram_jaccard_pairs(d),
+    "lsh_candidate_pairs":
+        lambda d, e, t: D.lsh_candidate_pairs(d, rows_per_band=1),
 }
 
 

@@ -38,7 +38,6 @@ def _counts(df) -> dict[str, int]:
 @pytest.fixture(scope="module")
 def golden(spark, golden_edges):
     g = LinkGraph(spark.createDataFrame(golden_edges, "src long, dst long"))
-    g.ensure_persisted()
     yield g
     g.unpersist()
 
@@ -49,7 +48,6 @@ def golden_weighted(spark, golden_edges):
     g = LinkGraph(
         spark.createDataFrame(rows, "src long, dst long, weight long")
     )
-    g.ensure_persisted()
     yield g
     g.unpersist()
 
